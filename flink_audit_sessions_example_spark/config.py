@@ -10,7 +10,9 @@ a dict copy.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
+from datetime import datetime
 from pathlib import Path
 
 
@@ -58,7 +60,7 @@ class AppConfig:
             for k, v in props.items()
             if k.startswith("kafka.") and k != "kafka.topic"
         }
-        return cls(
+        cfg = cls(
             audit_path=props["audit.path"],
             audit_poll_seconds=int(props.get("audit.poll", "240")),
             audit_min_date=props.get("audit.min_date"),
@@ -68,7 +70,47 @@ class AppConfig:
             kafka_options=kafka_options,
             checkpoint_dir=props.get("session.checkpoint"),
         )
+        cfg.validate()
+        return cfg
+
+    def validate(self) -> None:
+        """Reject a config the job cannot run, so it fails before a JVM
+        starts; ``from_properties`` and ``start_session_query`` call it."""
+        if self.audit_min_date is not None and not _is_basic_iso_date(
+            self.audit_min_date
+        ):
+            # DateFileFilter.java parses with BASIC_ISO_DATE; any other
+            # spelling would compare as a string and keep every date dir
+            raise ValueError(
+                "audit.min_date must be a real YYYYMMDD date, "
+                f"got {self.audit_min_date!r}"
+            )
+        for key, seconds in (
+            ("audit.poll", self.audit_poll_seconds),
+            ("session.duration", self.session_gap_seconds),
+        ):
+            if seconds <= 0:
+                raise ValueError(f"{key} must be positive, got {seconds}")
+        if self.session_output not in ("kafka", "print"):
+            raise ValueError(
+                "session.output must be 'kafka' or 'print', "
+                f"got {self.session_output!r}"
+            )
+        if self.session_output == "kafka" and not self.kafka_topic:
+            raise ValueError("kafka.topic is required for kafka output")
 
     @classmethod
     def from_properties_file(cls, path: str | Path) -> "AppConfig":
         return cls.from_properties(load_properties(path))
+
+
+def _is_basic_iso_date(value: str) -> bool:
+    """``YYYYMMDD`` with exactly 8 ASCII digits forming a real date
+    (``strptime`` alone also accepts unpadded fields such as ``2024328``)."""
+    if not re.fullmatch(r"[0-9]{8}", value):
+        return False
+    try:
+        datetime.strptime(value, "%Y%m%d")
+    except ValueError:
+        return False
+    return True

@@ -1,24 +1,15 @@
 """Query registry — the engine's public query surface.
 
-``QUERIES`` maps every implemented operator key from SURVEY.md §2 to a
-callable ``(spark, sf_dir) -> DataFrame``; ``ORACLES`` maps the same keys to
-equivalent DuckDB SQL. ``__spark_entry__.py`` re-exports both for the
-driver's correctness gate.
+``QUERIES`` maps every registered operator key to a callable
+``(spark, sf_dir) -> DataFrame``; ``ORACLES`` maps the same keys to
+equivalent DuckDB SQL. ``__spark_entry__.py`` re-exports both, and
+``tests/test_oracle_parity.py`` replays every pair against DuckDB.
 
-MERGE DISCIPLINE (r15 modularization — r14 verdict #6): the named
-batches below are the hand-written cores; every ``staged_r<N>.py``
-queue is merged by the SAME filesystem-glob discovery the HUGEINT
-gate, the window math and the capacity simulator already use
-(``plans/staging.py``). Draining a staged queue is therefore a
-ZERO-diff event here — the module is discovered the day it lands, and
-"staged" vs "live" is decided purely by ``_FRONT_KEYS`` + the
-per-queue gate test flipping from shadow-check to merge-identity
-(see tests/test_staged_r24.py for the promoted shape). A queue that
-must stay OUT of the live registry until its gate is green lists its
-round in ``_HELD_ROUNDS``.
+Each module below contributes one ``(queries, oracles)`` pair of dicts;
+they are merged in the listed order. A key defined by two modules would
+let one silently shadow the other, so that raises at import.
 """
 
-from ..sources.tables import load_table  # noqa: F401
 from .queries import ORACLES as _CORE_ORACLES
 from .queries import QUERIES as _CORE_QUERIES
 from .queries import flagship  # noqa: F401
@@ -26,175 +17,59 @@ from .extended import EXTENDED_ORACLES, EXTENDED_QUERIES
 from .round10 import ROUND10_ORACLES, ROUND10_QUERIES
 from .round12 import ROUND12_ORACLES, ROUND12_QUERIES
 from .staged import STAGED_ORACLES, STAGED_QUERIES
-from .staging import staged_queues
+from .staged_r11 import STAGED_R11_ORACLES, STAGED_R11_QUERIES
+from .staged_r12 import STAGED_R12_ORACLES, STAGED_R12_QUERIES
+from .staged_r13 import STAGED_R13_ORACLES, STAGED_R13_QUERIES
+from .staged_r14 import STAGED_R14_ORACLES, STAGED_R14_QUERIES
+from .staged_r15 import STAGED_R15_ORACLES, STAGED_R15_QUERIES
+from .staged_r16 import STAGED_R16_ORACLES, STAGED_R16_QUERIES
+from .staged_r17 import STAGED_R17_ORACLES, STAGED_R17_QUERIES
+from .staged_r18 import STAGED_R18_ORACLES, STAGED_R18_QUERIES
+from .staged_r19 import STAGED_R19_ORACLES, STAGED_R19_QUERIES
+from .staged_r20 import STAGED_R20_ORACLES, STAGED_R20_QUERIES
+from .staged_r21 import STAGED_R21_ORACLES, STAGED_R21_QUERIES
+from .staged_r22 import STAGED_R22_ORACLES, STAGED_R22_QUERIES
+from .staged_r23 import STAGED_R23_ORACLES, STAGED_R23_QUERIES
+from .staged_r24 import STAGED_R24_ORACLES, STAGED_R24_QUERIES
+from .staged_r25 import STAGED_R25_ORACLES, STAGED_R25_QUERIES
+from .staged_r26 import STAGED_R26_ORACLES, STAGED_R26_QUERIES
+from .staged_r27 import STAGED_R27_ORACLES, STAGED_R27_QUERIES
+from .staged_r28 import STAGED_R28_ORACLES, STAGED_R28_QUERIES
 
-#: staged rounds NOT yet promoted into the live registry (their gate
-#: test still runs the full parity replay and pins no-shadowing).
-#: Promotion = remove the round number here + flip its gate test to
-#: the merge-identity shape. r25–r28 drained in r15; r29/r30 queued
-#: for the r16 window.
-_HELD_ROUNDS: frozenset = frozenset({29, 30})
-
-#: The driver's correctness gate covers a bounded prefix of the registry
-#: (observed: the first 50 entries), so keys that have not yet earned a
-#: driver-green CORRECTNESS row are ordered FIRST; long-stable keys (green
-#: since r1 and still covered by tests/test_oracle_parity.py locally) rotate
-#: to the back. Keep any NEWLY ADDED query key in this list until it has a
-#: driver-green row.
-#:
-#: ROTATION PROTOCOL (no key goes two consecutive rounds unverified): at
-#: the start of round N, front-load (a) every key new or plan-changed in
-#: round N, then (b) every key whose last driver row is round N-2 (i.e.
-#: the keys rotated OUT of the N-1 window), computed from
-#: CORRECTNESS_r{N-1}.json keys — the ground truth, not registry order.
-#:
-#: DRAIN PLAN (r13 ladder — the registry exceeds 3×window so strict
-#: 2-round rotation is arithmetically impossible; r8 verdict #4, r10
-#: verdict #1): §2 / reference-surface keys KEEP the 2-round invariant;
-#: extended keys stretch as their green driver-row STREAK deepens —
-#: the four-rung ladder ``window_math.LADDER``: streak ≥1 → 5-round
-#: cycle, ≥3 → 5-round, ≥5 → 6-round, ≥7 → 8-round (calibrated by
-#: ``scripts/simulate_rotation.py`` against the real CORRECTNESS
-#: history — the only candidate with ZERO slipped key-rounds at the
-#: 206-key r13 horizon, re-checked at the 221-key r14 horizon and the
-#: 226-key r15 horizon). Every rung is sound: driver-vs-local
-#: divergence for a (plan, oracle) pair only surfaces on its FIRST
-#: driver row (r10's sole red — the HUGEINT oracle typing — was
-#: exactly that) or after the pair CHANGES, and changed keys
-#: re-front-load as new while red rows reset the streak and
-#: front-load with priority 0; unchanged pairs are replayed against
-#: DuckDB on every local suite run and before every commit. Per-round
-#: recipe stays mechanical (``scripts/window_math.py <next_round>``):
-#: front = (new/changed + never-verified) + due keys per the ladder
-#: (fresh failures FIRST, then staleness order) + queue drains +
-#: PULL-FORWARD of next round's oldest due keys into any spare slots
-#: (desynchronizes the cohorts).
-#:
-#: The r15 front below executes the FULL plan (window_math.py 15,
-#: output committed verbatim — zero red rows in r14, so no priority-0
-#: key): the 20 r25–r28 staged keys drained this round lead as
-#: never-verified (this completes the TPC-H star sweep —
-#: Q5/Q7/Q9/Q12/Q15/Q20 — plus the staged LLM ops), then
-#: ``rel_revenue_by_nation`` — its deep streak puts it on the 8-round
-#: rung (due r17 by the ladder), but the r14 verdict mandates it in
-#: THIS window as the registry's only pre-r10 row, so it is promoted
-#: by hand over one pull-forward slot — then the 16 stretched keys at
-#: their 5-round deadline (the entire r10 cohort: ``sim_topk_pq``,
-#: ``text_clean``, ``text_containment``, ``xform_cdc_apply``,
-#: ``xform_scd2``, …), then 13 pull-forwards of r16's oldest due keys
-#: (window_math.py 15 printed 14; ``rel_above_avg`` yields its slot
-#: to the mandate above). The 11 §2 reference-surface keys were all
-#: verified r14, so their strict 2-round deadline is r16 — zero core
-#: dues this round. 20 + 1 + 16 + 13 = 50 exactly; post-r15 the
-#: staleness-histogram floor is r11.
-_FRONT_KEYS = [
-    # r15 DRAIN: the r25/r26/r27/r28 staged queues earn their first
-    # driver rows, queue order (never-verified → outrank stale keys)
-    "rel_local_volume",
-    "rel_shipping_volume",
-    "rel_product_profit",
-    "rel_shipdelay_priority",
-    "rel_top_supplier",
-    "rel_part_promotion",
-    "lm_freq_profile",
-    "text_zipf_ratio",
-    "embed_dim_stats",
-    "dedup_prefix",
-    "lm_count_of_counts",
-    "win_seasonal_error",
-    "embed_quantize_error",
-    "dedup_suffix",
-    "rel_order_gap_median",
-    "win_holt",
-    "win_burstiness",
-    "rel_pareto_share",
-    "dedup_wordset",
-    "corpus_length_gini",
-    # verdict-mandated: the registry's only pre-r10 driver row (r9)
-    "rel_revenue_by_nation",
-    # 16 stretched keys at their 5-round deadline, oldest first —
-    # retires the whole r10 staleness cohort (window_math.py 15)
-    "sim_topk_pq",
-    "text_char_diversity",
-    "text_clean",
-    "text_containment",
-    "text_hashed_features",
-    "text_split_sentences",
-    "text_tfidf_topk",
-    "win_funnel_stages",
-    "win_gapfill",
-    "win_pattern_match",
-    "win_time_decay",
-    "xform_cdc_apply",
-    "xform_scd2",
-    "xform_snapshot_diff",
-    "xform_unpivot",
-    "xform_winsorize",
-    # 13 PULL-FORWARDS of r16's oldest due keys (window_math.py 15) —
-    # verifying them a round early desynchronizes the drain cohorts
-    "agg_exact_distinct",
-    "agg_mode",
-    "dedup_chunk",
-    "dedup_embed_cluster",
-    "dedup_keep_best",
-    "dq_expectations",
-    "join_pit",
-    "join_salted",
-    "join_semi",
-    "lm_train_counts",
-    "multimodal_features",
-    "multimodal_phash",
-    "multimodal_phash_pairs",
+_BATCHES = [
+    (_CORE_QUERIES, _CORE_ORACLES),
+    (EXTENDED_QUERIES, EXTENDED_ORACLES),
+    (STAGED_QUERIES, STAGED_ORACLES),
+    (ROUND10_QUERIES, ROUND10_ORACLES),
+    (ROUND12_QUERIES, ROUND12_ORACLES),
+    (STAGED_R11_QUERIES, STAGED_R11_ORACLES),
+    (STAGED_R12_QUERIES, STAGED_R12_ORACLES),
+    (STAGED_R13_QUERIES, STAGED_R13_ORACLES),
+    (STAGED_R14_QUERIES, STAGED_R14_ORACLES),
+    (STAGED_R15_QUERIES, STAGED_R15_ORACLES),
+    (STAGED_R16_QUERIES, STAGED_R16_ORACLES),
+    (STAGED_R17_QUERIES, STAGED_R17_ORACLES),
+    (STAGED_R18_QUERIES, STAGED_R18_ORACLES),
+    (STAGED_R19_QUERIES, STAGED_R19_ORACLES),
+    (STAGED_R20_QUERIES, STAGED_R20_ORACLES),
+    (STAGED_R21_QUERIES, STAGED_R21_ORACLES),
+    (STAGED_R22_QUERIES, STAGED_R22_ORACLES),
+    (STAGED_R23_QUERIES, STAGED_R23_ORACLES),
+    (STAGED_R24_QUERIES, STAGED_R24_ORACLES),
+    (STAGED_R25_QUERIES, STAGED_R25_ORACLES),
+    (STAGED_R26_QUERIES, STAGED_R26_ORACLES),
+    (STAGED_R27_QUERIES, STAGED_R27_ORACLES),
+    (STAGED_R28_QUERIES, STAGED_R28_ORACLES),
 ]
 
-# Hand-written cores first (stable since r10–r12), then every staged
-# queue the glob discovers, ascending by round — draining a queue is a
-# no-op here; only _HELD_ROUNDS and the gate tests change shape.
-_batches = [
-    _CORE_QUERIES,
-    EXTENDED_QUERIES,
-    STAGED_QUERIES,
-    ROUND10_QUERIES,
-    ROUND12_QUERIES,
-]
-_oracle_batches = [
-    _CORE_ORACLES,
-    EXTENDED_ORACLES,
-    STAGED_ORACLES,
-    ROUND10_ORACLES,
-    ROUND12_ORACLES,
-]
-for _rnd, _staged_q, _staged_o in staged_queues():
-    if _rnd in _HELD_ROUNDS:
-        continue
-    _batches.append(_staged_q)
-    _oracle_batches.append(_staged_o)
-
-_ALL_QUERIES = {k: v for b in _batches for k, v in b.items()}
-_ALL_ORACLES = {k: v for b in _oracle_batches for k, v in b.items()}
-
-_overlap = {
-    k
-    for i, a in enumerate(_batches)
-    for b in _batches[i + 1:]
-    for k in set(a) & set(b)
-}
-if _overlap:
-    raise ValueError(f"registry batches shadow each other: {_overlap}")
-
-# every front-of-window name must be a real registry key — a typo or a
-# not-yet-landed key would otherwise silently lose its driver slot.
-# A hard raise, not an assert: `python -O` strips asserts, and this is
-# exactly the integrity check that must survive optimized runs.
-_unresolved = [k for k in _FRONT_KEYS if k not in _ALL_QUERIES]
-if _unresolved:
-    raise ValueError(f"_FRONT_KEYS not in registry: {_unresolved}")
-
-QUERIES = {
-    **{k: _ALL_QUERIES[k] for k in _FRONT_KEYS},
-    **{k: v for k, v in _ALL_QUERIES.items() if k not in _FRONT_KEYS},
-}
-ORACLES = {
-    **{k: _ALL_ORACLES[k] for k in _FRONT_KEYS if k in _ALL_ORACLES},
-    **{k: v for k, v in _ALL_ORACLES.items() if k not in _FRONT_KEYS},
-}
+QUERIES: dict = {}
+ORACLES: dict = {}
+for _queries, _oracles in _BATCHES:
+    # a hard raise, not an assert: `python -O` strips asserts
+    _shadowed = (QUERIES.keys() & _queries.keys()) | (
+        ORACLES.keys() & _oracles.keys()
+    )
+    if _shadowed:
+        raise ValueError(f"registry batches shadow each other: {_shadowed}")
+    QUERIES.update(_queries)
+    ORACLES.update(_oracles)

@@ -1,21 +1,9 @@
-"""The r9 staging batch — LIVE since the r10 drain.
+"""Registry batch r9: text, corpus, sketch and change-data operators.
 
-Every entry here is a COMPLETE driver registration (query callable +
-DuckDB oracle, vacuity-checked). They were built and parity-gated in r9
-while waiting for driver-window slots, and r10's window had room for
-the whole queue: ``plans/__init__.py`` now merges STAGED_QUERIES /
-STAGED_ORACLES into the live registry, so every key below is covered by
-``tests/test_oracle_parity.py`` like any other registered query.
-
-The module keeps its name because ~16 test files single-source their
-oracle SQL from the constants defined here (the r9 review killed the
-drifting duplicates); "staged" is historical, not a status.
-``tests/test_staged_registrations.py`` now pins the merge invariant:
-every key here resolves in the live registry to the IDENTICAL objects.
-
-Key naming follows the live registry's family prefixes; the order below
-is the r9 drain-plan priority order (user-facing capabilities first,
-sketch bound-checks last).
+Each key is a complete (query callable, DuckDB oracle) pair;
+``tests/test_oracle_parity.py`` replays every pair with hash parity +
+non-vacuity. Several test files single-source their oracle SQL from the
+constants defined here, so the module keeps its historical name.
 """
 
 from __future__ import annotations

@@ -1,13 +1,6 @@
-"""Staged registrations for the r11 window — five new capability
-families, each a COMPLETE driver registration (query callable + DuckDB
-oracle + registered parameters) waiting for window slots: at 135 live
-keys the steady-state rotation arithmetic (2-round core cadence,
-3-round stretch for long-green extended keys, 50-slot window) leaves
-roughly five first-registration slots per round, and this module is
-exactly that batch. ``tests/test_staged_r11.py`` replays every pair
-with hash parity + non-vacuity on every suite run, so the queue cannot
-rot while it waits (the r9 ``plans/staged.py`` protocol — that batch
-drained green in r10).
+"""Registry batch r11: five capability families. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity.
 
 Families: point-in-time join (feature-store enrichment against SCD2
 history), activity streaks (gaps-and-islands retention), word

@@ -1,8 +1,6 @@
-"""Staged registrations for the r12 window — five more complete driver
-registrations (query + DuckDB oracle + registered parameters) queued
-behind the r11 batch (``plans/staged_r11.py``), same protocol: gated by
-``tests/test_staged_r12.py`` with hash parity + non-vacuity on every
-suite run, drained when window slots free up.
+"""Registry batch r12: five more registrations. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity.
 
 Families: exact n-gram LM model counts (the language-model half of the
 LM family goes oracle-checked; scoring stays pytest-gated — its

@@ -1,9 +1,6 @@
-"""Staged registrations for the r13 window — five new capability
-families, each a COMPLETE driver registration (query callable + DuckDB
-oracle + registered parameters) waiting for window slots, per the
-staging protocol that drained green in r10 and r11:
-``tests/test_staged_r13.py`` replays every pair with hash parity +
-non-vacuity on every suite run, so the queue cannot rot while it waits.
+"""Registry batch r13: five capability families. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity.
 
 Families: gap-based sessionization (the batch relation of the
 reference's session-window semantics — flink-audit-sessions-example

@@ -1,11 +1,6 @@
-"""Staged registrations for the r14 window — five new capability
-families, each a COMPLETE driver registration (query callable + DuckDB
-oracle + registered parameters) behind the r13 queue, per the staging
-protocol that drained green in r10 and r11: ``tests/test_staged_r14.py``
-replays every pair with hash parity + non-vacuity on every suite run
-(discovered automatically by ``plans/staging.py`` — the HUGEINT gate,
-window math and the capacity simulator all cover this queue the day
-the module lands).
+"""Registry batch r14: five capability families. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity.
 
 Families: JSON schema profiling (key/cardinality discovery over
 semi-structured payloads), per-node triangle counts (near-dup-cluster

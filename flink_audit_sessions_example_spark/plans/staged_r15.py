@@ -1,9 +1,7 @@
-"""Staged registrations for the r15 window — five new capability
-families, each a COMPLETE driver registration (query callable + DuckDB
-oracle + registered parameters) waiting for window slots, per the
-staging protocol that drained green in r10, r11 and r12:
-``tests/test_staged_r15.py`` replays every pair with hash parity +
-non-vacuity on every suite run, so the queue cannot rot while it waits.
+"""Registry batch r15: five capability families. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity, and
+``tests/test_staged_r15.py`` holds its content checks.
 
 Families: URL canonicalization (crawl curation's first join key),
 HTML/boilerplate stripping (regex-only, the ``clean_text``

@@ -1,8 +1,7 @@
-"""Staged registrations for the r17 window — five new capability
-families queued behind the r16 batch, per the staging protocol that
-drained green in r10–r12: ``tests/test_staged_r17.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r17: five capability families. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity, and
+``tests/test_staged_r17.py`` holds its content checks.
 
 Families: iterative PageRank promoted into the ORACLED class (fixed
 5-iteration sweep with per-iteration quantization, unrolled-CTE

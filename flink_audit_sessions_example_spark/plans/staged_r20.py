@@ -1,8 +1,7 @@
-"""Staged registrations for the r20 window — five new capability
-families queued behind the r19 batch, per the staging protocol that
-drained green in r10–r12: ``tests/test_staged_r20.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r20: five capability families. Each key is a complete
+(query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
+replays every pair with hash parity + non-vacuity, and
+``tests/test_staged_r20.py`` holds its content checks.
 
 Families: the AUDIO modality joins the multimodal column family (real
 WAV payloads built in Catalyst, Arrow-decoded, exact integer frame

@@ -1,8 +1,8 @@
-"""Staged registrations for the r21 window — five lean compositions of
-already-registered machinery (no new operator code), queued behind the
-r20 batch per the staging protocol that drained green in r10–r12:
-``tests/test_staged_r21.py`` replays every (query, oracle) pair with
-hash parity + non-vacuity on every suite run.
+"""Registry batch r21: five compositions of already-registered machinery
+(no new operator code). Each key is a complete (query callable, DuckDB
+oracle) pair; ``tests/test_oracle_parity.py`` replays every pair with
+hash parity + non-vacuity, and ``tests/test_staged_r21.py`` holds its
+content checks.
 
 Families: the TPC-H Q10 returned-item revenue shape (exact cent
 money math), a day-of-week × hour seasonality profile (the activity

@@ -1,8 +1,7 @@
-"""Staged registrations for the r22 window — five new capabilities
-queued per the staging protocol that drained green in r10–r13:
-``tests/test_staged_r22.py`` replays every (query, oracle) pair with
-hash parity + non-vacuity on every suite run, so the queue cannot rot
-while it waits.
+"""Registry batch r22: five capabilities. Each key is a complete (query
+callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
+every pair with hash parity + non-vacuity, and
+``tests/test_staged_r22.py`` holds its content checks.
 
 Families: the TPC-H Q11 "important stock" shape (a per-key aggregate
 filtered against a broadcast GLOBAL scalar — exact integer-rational

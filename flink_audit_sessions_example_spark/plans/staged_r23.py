@@ -1,8 +1,7 @@
-"""Staged registrations for the r23 window — five new capabilities
-queued behind the r22 batch per the staging protocol that drained
-green in r10–r13: ``tests/test_staged_r23.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r23: five capabilities. Each key is a complete (query
+callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
+every pair with hash parity + non-vacuity, and
+``tests/test_staged_r23.py`` holds its content checks.
 
 Families: the TPC-H Q8 market-share shape (a conditional share of a
 multi-dim join's revenue, exact cent math end-to-end), per-source

@@ -1,8 +1,7 @@
-"""Staged registrations for the r24 window — five new capabilities
-queued behind the r23 batch per the staging protocol that drained
-green in r10–r13: ``tests/test_staged_r24.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r24: five capabilities. Each key is a complete (query
+callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
+every pair with hash parity + non-vacuity, and
+``tests/test_staged_r24.py`` holds its content checks.
 
 Families: the TPC-H Q19 disjunctive-predicate shape (an OR-of-ANDs
 bracket join — the predicate-normalization stress every BI layer

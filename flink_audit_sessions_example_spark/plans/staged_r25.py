@@ -1,8 +1,8 @@
-"""Staged registrations for the r25 window — the remaining TPC-H
-multi-join star shapes, queued per the staging protocol that drained
-green in r10–r14: ``tests/test_staged_r25.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r25: the remaining TPC-H multi-join star shapes. Each
+key is a complete (query callable, DuckDB oracle) pair;
+``tests/test_oracle_parity.py`` replays every pair with hash parity +
+non-vacuity, and ``tests/test_staged_r25.py`` holds its content
+checks.
 
 Families (r13 verdict #4/#6 — the TPC-H sweep's last gaps): Q5 local
 supplier volume (the canonical 6-table star with the

@@ -1,8 +1,7 @@
-"""Staged registrations for the r26 window — five new capabilities
-queued behind the r25 batch per the staging protocol that drained
-green in r10–r14: ``tests/test_staged_r26.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r26: five capabilities. Each key is a complete (query
+callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
+every pair with hash parity + non-vacuity, and
+``tests/test_staged_r26.py`` holds its content checks.
 
 Families: the TPC-H Q20 part-promotion semi-join (suppliers filtered
 through an AGGREGATED lineitem relation — this catalog has no

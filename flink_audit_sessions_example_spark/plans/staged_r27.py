@@ -1,8 +1,7 @@
-"""Staged registrations for the r27 window — five new capabilities
-queued behind the r26 batch per the staging protocol that drained
-green in r10–r14: ``tests/test_staged_r27.py`` replays every
-(query, oracle) pair with hash parity + non-vacuity on every suite
-run, so the queue cannot rot while it waits.
+"""Registry batch r27: five capabilities. Each key is a complete (query
+callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
+every pair with hash parity + non-vacuity, and
+``tests/test_staged_r27.py`` holds its content checks.
 
 Families: count-of-counts (the Good–Turing / Kneser–Ney smoothing
 ingredient — how many distinct n-grams occur exactly r times; the

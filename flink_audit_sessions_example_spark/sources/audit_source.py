@@ -8,23 +8,20 @@ Reference surface:
   the trigger interval; the batch analog is ``spark.read.text``.
 - ``src_file_datefilter`` — skips directories whose basename parses as
   ``YYYYMMDD`` older than ``audit.min_date``; non-date path components are
-  always kept (``DateFileFilter.java:11-39``). Re-expressed declaratively: a
-  ``file_date`` column derived from ``input_file_name()`` + a filter, which
-  Catalyst prunes at the source when the layout is Hive-partitioned
-  (``date=YYYYMMDD/``). Hidden/underscore files are skipped by Spark's file
-  listing by default, matching Flink's default filter.
+  always kept (``DateFileFilter.java:11-39``). Re-expressed as a column
+  filter: ``file_date`` is the first ``/YYYYMMDD/`` component of
+  ``input_file_name()``, and rows from older date dirs are dropped.
+  Hidden/underscore files are skipped by Spark's file listing by default,
+  matching Flink's default filter.
 - ``xform_parse_json`` — lenient per-line JSON parse; malformed line → null
   record; unknown keys ignored (``Audit.java:39-47``).
 - ``flt_valid_user`` — drop unparseable records and null ``reqUser``
   (``App.java:52-53``).
 
-Scale note: at 100 TB the date filter MUST prune at file-listing time, not
-post-scan — ``read_audit_lines`` therefore also derives a ``pathGlobFilter``
-when possible and, for Hive layouts, relies on partition pruning; the
-``file_date`` column filter is the correctness backstop for bare
-``YYYYMMDD/`` trees (Catalyst evaluates ``input_file_name``-derived filters
-before the line parse, keeping the scan cheap but still listing files —
-production layouts should be Hive-partitioned).
+Scale note: the date filter runs after listing, not at it — every file
+under ``audit.path`` is listed and opened, and the ``file_date`` filter
+then drops the rows of older date dirs. Pruning the paths at listing time
+with the reference's per-basename rule is ROADMAP.md item 1.
 """
 
 from __future__ import annotations

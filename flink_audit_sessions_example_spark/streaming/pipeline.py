@@ -266,12 +266,13 @@ def start_session_query(
     available_now: bool = False,
 ) -> StreamingQuery:
     """Assemble and start the full job; sink dispatch on
-    ``cfg.session_output`` ∈ {"kafka", "print"} (``App.java:150-159``)."""
+    ``cfg.session_output`` ∈ {"kafka", "print"} (``App.java:150-159``).
+    ``cfg.validate()`` rejects any other sink, or kafka without a topic,
+    before the query is built."""
+    cfg.validate()
     sessions = stream_denied_sessions(spark, cfg)
     formatted = format_session_result(sessions)
     if cfg.session_output == "kafka":
-        if not cfg.kafka_topic:
-            raise ValueError("kafka.topic is required for kafka output")
         return write_kafka(
             formatted,
             topic=cfg.kafka_topic,
@@ -280,13 +281,9 @@ def start_session_query(
             poll_seconds=cfg.audit_poll_seconds,
             available_now=available_now,
         )
-    if cfg.session_output == "print":
-        return write_console(
-            formatted,
-            checkpoint_dir=checkpoint_dir,
-            poll_seconds=cfg.audit_poll_seconds,
-            available_now=available_now,
-        )
-    raise ValueError(
-        f"session.output must be 'kafka' or 'print', got {cfg.session_output!r}"
+    return write_console(
+        formatted,
+        checkpoint_dir=checkpoint_dir,
+        poll_seconds=cfg.audit_poll_seconds,
+        available_now=available_now,
     )

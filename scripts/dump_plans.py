@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for the given query keys (construction
-only — no actions) to plans/<tag>/<key>_<suffix>.txt, plus a one-line
-structural summary per key: Exchange count, Python-eval node count,
-join strategies, scan count. Iterative keys (bench ITERATIVE_QUERIES)
-are skipped unless --iterative is passed, because their construction
-runs Spark actions.
+only — no actions) to <dir>/<key>_<suffix>.txt (--dir, default the
+git-ignored .plans/), plus a one-line structural summary per key:
+Exchange count, Python-eval node count, join strategies, scan count.
+Iterative keys (bench ITERATIVE_QUERIES) are skipped unless --iterative
+is passed, because their construction runs Spark actions.
 
-Usage: python scripts/dump_plans.py --dir plans/r15 --suffix before key...
-       python scripts/dump_plans.py --dir plans/r15 --suffix before --top N
+Usage: python scripts/dump_plans.py --suffix before key...
+       python scripts/dump_plans.py --suffix after --top N
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import sys
 
 def main() -> int:
     args = sys.argv[1:]
-    out_dir, suffix, top_n, allow_iter = "plans/r15", "before", None, False
+    out_dir, suffix, top_n, allow_iter = ".plans", "before", None, False
     keys = []
     i = 0
     while i < len(args):

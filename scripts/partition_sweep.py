@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Partition-invariance sweep — every (query, oracle) pair, live AND
-staged, replayed under a partitioning that shares no divisor structure
+"""Partition-invariance sweep — every registered (query, oracle) pair
+replayed under a partitioning that shares no divisor structure
 with the standard configs (local[5], spark.sql.shuffle.partitions=7 vs
 the suite's local[8]/8 and the bench's local[32]/32).
 
@@ -45,30 +45,20 @@ def main() -> int:
     from oracle_utils import assert_parity
 
     from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
-    from flink_audit_sessions_example_spark.plans.staging import (
-        staged_queues,
-    )
-
-    pairs: "dict[str, tuple]" = {
-        k: (QUERIES[k], ORACLES[k]) for k in QUERIES if k in ORACLES
-    }
-    for _rnd, staged, oracles in staged_queues():
-        for k, fn in staged.items():
-            if k not in pairs:
-                pairs[k] = (fn, oracles[k])
 
     failed: "list[str]" = []
-    for key in sorted(pairs):
-        fn, sql = pairs[key]
+    for key in sorted(ORACLES):
         try:
-            assert_parity(fn(spark, sf_dir), sql, sf_dir, min_rows=1)
+            assert_parity(
+                QUERIES[key](spark, sf_dir), ORACLES[key], sf_dir, min_rows=1
+            )
             print(f"OK {key}", flush=True)
         except Exception as exc:  # noqa: BLE001 — report-all sweep
             failed.append(key)
             print(f"FAIL {key}: {exc}", flush=True)
     spark.stop()
     print(
-        f"# sweep: {len(pairs) - len(failed)}/{len(pairs)} pairs "
+        f"# sweep: {len(ORACLES) - len(failed)}/{len(ORACLES)} pairs "
         f"invariant under local[5]/7"
     )
     if failed:

@@ -2,7 +2,8 @@
 """Per-query profiler for the optimization rounds (guide §1).
 
 For each query key given on argv: build the plan, dump
-``.explain("formatted")`` to ``plans/r15/<key>_<tag>.txt``, run the noop
+``.explain("formatted")`` to the git-ignored ``.plans/<key>_<tag>.txt``
+(under ``.plans/$SPARK_GRAFT_PLAN_DIR/`` when that is set), run the noop
 sink three times (same methodology as bench.py), and print a per-run
 job/stage breakdown from the live Spark REST API — wall per job, task
 counts, shuffle read/write bytes — so the expensive stage is identified
@@ -85,7 +86,7 @@ def main() -> int:
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r16"),
+        ".plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", ""),
     )
     os.makedirs(out_dir, exist_ok=True)
 

@@ -287,26 +287,6 @@ def test_r7_sample_per_group_window_group_limit(spark):
     )
 
 
-def test_front_window_fits_driver_and_resolves():
-    """Rotation-protocol invariants: every front key resolves in the
-    registry (also asserted at import), the front list fits the
-    driver's 50-row correctness window, and the registry leads with
-    exactly the front keys in order."""
-    from flink_audit_sessions_example_spark.plans import (
-        ORACLES,
-        QUERIES,
-        _FRONT_KEYS,
-    )
-
-    assert len(_FRONT_KEYS) <= 50, (
-        f"{len(_FRONT_KEYS)} front keys overflow the 50-row driver window"
-    )
-    assert len(_FRONT_KEYS) == len(set(_FRONT_KEYS))
-    assert list(QUERIES)[: len(_FRONT_KEYS)] == _FRONT_KEYS
-    # every oracle key is a query key
-    assert set(ORACLES) <= set(QUERIES)
-
-
 def test_r8_hashed_features_pure_scan_projection(spark):
     """text_hashed_features scale gate: hashing-trick featurization is a
     pure scan-side projection — no exchange of any kind, no Python, no

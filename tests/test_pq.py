@@ -2,7 +2,7 @@
 parity vs a pure-Python reference, ADC-distance correctness, planted
 exact-duplicate retrieval, IVF+PQ composite shape, validation, and the
 plan gates. The full-pipeline DuckDB hash parity lives in
-test_staged_registrations.py (staged key sim_topk_pq)."""
+test_oracle_parity.py (key sim_topk_pq)."""
 
 from __future__ import annotations
 

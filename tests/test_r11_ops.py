@@ -1,7 +1,7 @@
 """Contract tests for the r11 staged operators (PIT join, activity
 streaks, co-occurrence, expectations audit, keep-best survivor
 election). DuckDB hash parity for the full registrations is pinned by
-tests/test_staged_r11.py; these pin goldens, edge semantics, validation
+tests/test_oracle_parity.py; these pin goldens, edge semantics, validation
 and the claimed plan topologies."""
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 merge, OHLC resample, readability; lm_train_counts and
 dedup_embed_cluster are compositions of operators already under their
 own suites). Hash parity for the registrations is pinned by
-tests/test_staged_r12.py."""
+tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 """Contract tests for the r13 staged operators (gap sessionization,
 temperature mixture sampling, freshness audit, exact k-NN graph, event
 transition matrix). DuckDB hash parity for the full registrations is
-pinned by tests/test_staged_r13.py; these pin goldens, edge semantics,
+pinned by tests/test_oracle_parity.py; these pin goldens, edge semantics,
 validation and the claimed plan topologies."""
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Contract tests for the r14 staged operators (JSON schema profiling,
 triangle counts, bot-regularity audit, k-NN classification, association
 rules). DuckDB hash parity for the full registrations is pinned by
-tests/test_staged_r14.py; these pin goldens, edge semantics, validation
+tests/test_oracle_parity.py; these pin goldens, edge semantics, validation
 and the claimed plan topologies."""
 
 from __future__ import annotations

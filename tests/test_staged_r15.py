@@ -1,39 +1,17 @@
-"""The r15 staged→live merge gate. The r15 staging batch
-(``plans/staged_r15.py``) went LIVE in the r13 drain: hash parity +
-non-vacuity are covered per-key by ``tests/test_oracle_parity.py``
-like any other registration. What remains pinned here is the merge
-itself (every staged key must resolve in the live registry to the
-IDENTICAL callable and oracle string — a divergent copy would
-silently shadow the tested object with an untested one) and detection
-non-vacuity for the audit relations (a planted burst that flags
-nothing, or a calibration table with zero duplicates, would
-hash-match a broken detector — the dq_freshness planted-defect
-rule)."""
+"""Detection checks for ``plans/staged_r15.py``. Hash parity and
+non-vacuity are covered per key by ``tests/test_oracle_parity.py``;
+these tests check that the audit relations detect something (a
+planted burst that flags nothing, or a calibration table with zero
+duplicates, would hash-match a broken detector — the dq_freshness
+planted-defect rule)."""
 
 from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
 from flink_audit_sessions_example_spark.plans.staged_r15 import (
-    STAGED_R15_ORACLES,
     STAGED_R15_QUERIES,
 )
-
-
-def test_staged_r15_sets_are_consistent():
-    assert set(STAGED_R15_QUERIES) == set(STAGED_R15_ORACLES)
-
-
-def test_staged_r15_keys_are_live_and_identical():
-    for key, fn in STAGED_R15_QUERIES.items():
-        assert key in QUERIES, f"staged key not drained into registry: {key}"
-        assert QUERIES[key] is fn, f"live registry shadows staged query: {key}"
-    for key, sql in STAGED_R15_ORACLES.items():
-        assert key in ORACLES, f"staged oracle not drained: {key}"
-        assert ORACLES[key] is sql, (
-            f"live registry shadows staged oracle: {key}"
-        )
 
 
 def test_staged_r15_detection_is_nonvacuous(spark):

@@ -1,12 +1,7 @@
-"""The r20 staged→live merge gate. The r20 staging batch
-(``plans/staged_r20.py``) went LIVE in the r13 drain: hash parity +
-non-vacuity are covered per-key by ``tests/test_oracle_parity.py``
-like any other registration. What remains pinned here is the merge
-itself (every staged key must resolve in the live registry to the
-IDENTICAL callable and oracle string — a divergent copy would
-silently shadow the tested object with an untested one) and the
-content non-vacuity checks for degenerate-but-hash-matching
-variants."""
+"""Content checks for ``plans/staged_r20.py``. Hash parity and
+non-vacuity are covered per key by ``tests/test_oracle_parity.py``;
+these tests catch degenerate variants that would still hash-match
+a broken producer."""
 
 from __future__ import annotations
 
@@ -16,28 +11,11 @@ from conftest import SF_DIR
 from flink_audit_sessions_example_spark.operators.multimodal import (
     AUDIO_N_SAMPLES,
 )
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
 from flink_audit_sessions_example_spark.plans.staged_r20 import (
     AUDIO_FRAME,
     VOCAB_DECILES,
-    STAGED_R20_ORACLES,
     STAGED_R20_QUERIES,
 )
-
-
-def test_staged_r20_sets_are_consistent():
-    assert set(STAGED_R20_QUERIES) == set(STAGED_R20_ORACLES)
-
-
-def test_staged_r20_keys_are_live_and_identical():
-    for key, fn in STAGED_R20_QUERIES.items():
-        assert key in QUERIES, f"staged key not drained into registry: {key}"
-        assert QUERIES[key] is fn, f"live registry shadows staged query: {key}"
-    for key, sql in STAGED_R20_ORACLES.items():
-        assert key in ORACLES, f"staged oracle not drained: {key}"
-        assert ORACLES[key] is sql, (
-            f"live registry shadows staged oracle: {key}"
-        )
 
 
 def test_staged_r20_content_is_nonvacuous(spark):

@@ -1,38 +1,16 @@
-"""The r28 staged→live merge gate. The r28 staging batch
-(``plans/staged_r28.py``) went LIVE in the r15 drain: hash parity +
-non-vacuity are covered per-key by ``tests/test_oracle_parity.py``
-like any other registration. What remains pinned here is the merge
-itself (every staged key must resolve in the live registry to the
-IDENTICAL callable and oracle string — a divergent copy would
-silently shadow the tested object with an untested one) and the
-content non-vacuity checks for degenerate-but-hash-matching
-variants."""
+"""Content checks for ``plans/staged_r28.py``. Hash parity and
+non-vacuity are covered per key by ``tests/test_oracle_parity.py``;
+these tests catch degenerate variants that would still hash-match
+a broken producer."""
 
 from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
 from flink_audit_sessions_example_spark.plans.staged_r28 import (
     PARETO_PCTS,
-    STAGED_R28_ORACLES,
     STAGED_R28_QUERIES,
 )
-
-
-def test_staged_r28_sets_are_consistent():
-    assert set(STAGED_R28_QUERIES) == set(STAGED_R28_ORACLES)
-
-
-def test_staged_r28_keys_are_live_and_identical():
-    for key, fn in STAGED_R28_QUERIES.items():
-        assert key in QUERIES, f"staged key not drained into registry: {key}"
-        assert QUERIES[key] is fn, f"live registry shadows staged query: {key}"
-    for key, sql in STAGED_R28_ORACLES.items():
-        assert key in ORACLES, f"staged oracle not drained: {key}"
-        assert ORACLES[key] is sql, (
-            f"live registry shadows staged oracle: {key}"
-        )
 
 
 def test_staged_r28_content_is_nonvacuous(spark):
