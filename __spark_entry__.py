@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 / §2.2."""
+    """One entry per reference-pipeline operator from SURVEY.md §2 (11 keys)."""
     return dict(QUERIES)
 
 

@@ -18,24 +18,6 @@ import sys
 import time
 
 
-#: Queries whose CONSTRUCTION runs Spark actions (iterative fixpoints,
-#: sketch-side collects, eager checkpoints) — timed
-#: construction-inclusive; everything else is timed exec-only. Every
-#: member matches its BASELINE.md anchor's stated class (r13: the
-#: staged r17–r19 drains added graph_pagerank / agg_kmv_intersect /
-#: multimodal_phash_cluster / corpus_soft_dedup, and xform_scd2_merge
-#: — whose anchor was always construction-inclusive — joined the set
-#: so the recorded number covers its base-dimension build + pin).
-ITERATIVE_QUERIES = frozenset(
-    {"dedup_cluster", "dedup_keep_best", "dedup_embed_cluster",
-     "dedup_cluster_stats", "graph_pagerank", "agg_kmv_intersect",
-     "multimodal_phash_cluster", "corpus_soft_dedup",
-     "xform_scd2_merge",
-     # staged r22 (listed ahead of its drain — absent keys never hit)
-     "agg_kmv_difference"}
-)
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -59,62 +41,25 @@ def main() -> int:
     from flink_audit_sessions_example_spark.sources.tables import load_table
 
     # warmup (untimed): JVM + codegen startup via the flagship, plus one
-    # pass over every table so parquet footers/OS page cache are hot and
-    # per-query numbers reflect steady-state throughput
+    # pass over the events table (the only table the registry reads) so
+    # its parquet footer/OS page cache are hot and per-query numbers
+    # reflect steady-state throughput
     flagship(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    # spawn the Arrow Python worker pool once, untimed: the first
-    # mapInPandas-bearing query otherwise pays one worker fork per core
-    def _identity(batches):
-        yield from batches
-
-    (
-        spark.range(0, 10_000, 1, int(cpus))
-        .mapInPandas(_identity, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    load_table(spark, sf_dir, "events").write.format("noop").mode("overwrite").save()
 
     # min over repeated runs, reporting steady-state plan throughput: the
-    # first run pays one-time whole-stage-codegen compilation + Python-
-    # worker spin-up, which amortize to ~zero over any real workload.
+    # first run pays one-time whole-stage-codegen compilation, which
+    # amortizes to ~zero over any real workload. Plan construction is
+    # driver-side expression building a real workload pays once per job,
+    # so it stays outside the timer.
     timings: dict[str, float] = {}
     for key in sorted(QUERIES):
         best = float("inf")
-        runs = 0
-        # three runs for EVERYONE (r5): the r4->r3 "regressions" on
-        # dedup_ngram / agg_multi_distinct / src_file_monitor were all
-        # best-of-2 sampling noise — a 12-rep study
-        # (scripts/variance_study.py) showed steady-state spreads that
-        # cover both rounds' numbers, with first-run codegen outliers up
-        # to 3x. A third run costs ~0.2 s for cheap queries and removes
-        # most of that tail from the recorded artifact.
-        while runs < 3:
-            # Lazy plans: construction is driver-side Python/py4j
-            # expression building (measured up to ~2 s for the widest
-            # expression trees) that a real workload pays once per JOB,
-            # not per executed query — kept OUTSIDE the timer, as in
-            # r1-r3. ITERATIVE operators are the exception: their
-            # construction runs the actual fixpoint actions
-            # (dedup_cluster's label propagation), so for those the
-            # timer covers construction too — else the bench would time
-            # only a checkpoint read.
-            if key in ITERATIVE_QUERIES:
-                t0 = time.perf_counter()
-                df = QUERIES[key](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df = QUERIES[key](spark, sf_dir)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
+        for _ in range(3):
+            df = QUERIES[key](spark, sf_dir)
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
-            runs += 1
         timings[key] = round(best, 4)
 
     total = round(sum(timings.values()), 4)

@@ -24,19 +24,17 @@ executor loss makes the blocks unrecoverable and fails the job
   survives executor loss after lineage truncation; the choice for
   long iterative jobs on preemptible fleets.
 
-Set via ``SPARK_GRAFT_PIN_MODE`` at import time or assign
-``operators._pins.PIN_MODE`` before building a query. The default
-keeps the bench/driver behavior byte-identical to r15.
+Assign ``operators._pins.PIN_MODE`` before building a query; there is
+no environment switch. The default keeps the bench/driver behavior
+byte-identical to r15.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: "local" | "disk" | "reliable" — see module docstring.
-PIN_MODE: str = os.environ.get("SPARK_GRAFT_PIN_MODE", "local")
+PIN_MODE: str = "local"
 
 _VALID = ("local", "disk", "reliable")
 

@@ -1175,7 +1175,7 @@ def q_win_rank_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (category the reference lacks entirely; SURVEY.md §2.1)."""
     from pyspark.sql.window import Window
 
-    from .queries import q_win_session
+    from flink_audit_sessions_example_spark.plans.queries import q_win_session
 
     sessions = q_win_session(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(
@@ -1194,7 +1194,7 @@ def q_win_rank_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _win_rank_oracle() -> str:
-    from .queries import _SESSION_ORACLE
+    from flink_audit_sessions_example_spark.plans.queries import _SESSION_ORACLE
 
     return f"""
 WITH base AS ({_SESSION_ORACLE}),

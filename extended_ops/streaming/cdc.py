@@ -484,7 +484,7 @@ def materialize_cdc_stream_partitioned(
     """Start the partitioned (MERGE-shaped) materializer; returns the
     StreamingQuery. Read with :func:`read_materialized_partitioned`
     (or ``target.read()`` for a custom :class:`MergeIntoTarget`)."""
-    from .pipeline import write_foreach_batch
+    from flink_audit_sessions_example_spark.streaming.pipeline import write_foreach_batch
 
     fn = make_partitioned_cdc_batch_applier(
         changelog.sparkSession,
@@ -562,7 +562,7 @@ def materialize_cdc_stream(
     """Start the materializer: a foreachBatch query folding the
     changelog stream into ``target_dir``. Returns the StreamingQuery.
     Read the current table with :func:`read_materialized`."""
-    from .pipeline import write_foreach_batch
+    from flink_audit_sessions_example_spark.streaming.pipeline import write_foreach_batch
 
     fn = make_cdc_batch_applier(
         changelog.sparkSession,

@@ -1,9 +1,8 @@
-"""flink_audit_sessions_example_spark — a PySpark-native analytics engine.
+"""flink_audit_sessions_example_spark — the reference audit-session job on Spark.
 
-A brand-new engine with the query and data-processing capabilities of the
-reference (WillDyson/flink-audit-sessions-example — a Flink streaming job
-that sessionizes Ranger audit logs by user and counts denied events per
-session), re-expressed Spark-first:
+A PySpark re-expression of the reference (WillDyson/flink-audit-sessions-example
+— a Flink streaming job that sessionizes Ranger audit logs by user and counts
+denied events per session), Spark-first:
 
 - every operator is a pure ``DataFrame -> DataFrame`` transform that works
   identically under ``spark.read`` (batch) and ``spark.readStream``
@@ -11,18 +10,22 @@ session), re-expressed Spark-first:
 - declarative logical plans only — Catalyst plans the physical execution
   (partial aggregation, shuffle placement, predicate pushdown, whole-stage
   codegen); no RDDs and no row-at-a-time Python in the hot path;
-- designed for 100 TB scale: partition-pruned sources, broadcast joins for
-  dimension tables, LSH (not cross-joins) for near-dedup / similarity.
+- the file source, watermark and session windows are Spark built-ins
+  (``readStream.text``, ``withWatermark``, ``session_window``).
 
 Package layout:
 
-- :mod:`.schemas`    — typed record schemas (Audit, result shapes)
+- :mod:`.schemas`    — the typed Ranger audit record schema
 - :mod:`.config`     — Java-properties config loader (reference parity)
 - :mod:`.sources`    — file/JSON-lines sources with date pruning
-- :mod:`.operators`  — sessionization, dedup, similarity, text, relational
-- :mod:`.functions`  — scalar helpers (formatting, hashing)
+- :mod:`.operators`  — per-user session windows with the denied count
+- :mod:`.functions`  — the sink-side result formatting
 - :mod:`.streaming`  — streaming pipeline assembly + sinks
-- :mod:`.plans`      — the query registry exported via ``__spark_entry__``
+- :mod:`.plans`      — the 11 reference keys exported via ``__spark_entry__``
+
+The extended operator surface lives outside this package, in the
+top-level ``extended_ops`` package, which imports this one and is never
+imported by it.
 """
 
 __version__ = "0.1.0"

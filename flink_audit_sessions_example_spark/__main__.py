@@ -7,7 +7,9 @@ Usage (mirrors ``readme.md:15-16`` of the reference)::
 Reads the same properties keys the reference documents (``readme.md:5-13``):
 ``audit.path``, ``audit.poll``, ``audit.min_date``, ``session.duration``,
 ``session.output`` (kafka|print), ``kafka.topic`` + pass-through ``kafka.*``
-producer options. Starts the streaming job and blocks until terminated.
+producer options, plus the required ``session.checkpoint`` (the streaming
+checkpoint dir; one per job). Starts the streaming job and blocks until
+terminated.
 """
 
 from __future__ import annotations
@@ -35,9 +37,7 @@ def main(argv: list[str]) -> int:
         .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )
-    query = start_session_query(
-        spark, cfg, checkpoint_dir=cfg.checkpoint_dir or "/tmp/audit-sessions-ckpt"
-    )
+    query = start_session_query(spark, cfg)
     query.awaitTermination()
     return 0
 

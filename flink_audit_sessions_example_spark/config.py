@@ -50,7 +50,8 @@ class AppConfig:
     kafka_options: dict[str, str] = field(default_factory=dict)
     watermark_delay: str = "2 days"  # hard-coded in the reference, App.java:57
     #: Spark addition (no reference analog — Flink savepoints are cluster
-    #: config): streaming checkpoint location, key ``session.checkpoint``.
+    #: config): streaming checkpoint location, key ``session.checkpoint``;
+    #: ``validate`` requires it.
     checkpoint_dir: str | None = None
 
     @classmethod
@@ -98,6 +99,10 @@ class AppConfig:
             )
         if self.session_output == "kafka" and not self.kafka_topic:
             raise ValueError("kafka.topic is required for kafka output")
+        if not self.checkpoint_dir:
+            # a shared default would let a second job resume the first
+            # job's file offsets and session state
+            raise ValueError("session.checkpoint is required")
 
     @classmethod
     def from_properties_file(cls, path: str | Path) -> "AppConfig":

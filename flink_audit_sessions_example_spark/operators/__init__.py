@@ -1,23 +1,11 @@
 """Operators — pure ``DataFrame -> DataFrame`` transforms.
 
-Every operator from SURVEY.md §2 (reference parity) plus the §2.2 extended
-surface (dedup / similarity / text / multimodal). All transforms are
-streaming-compatible unless documented otherwise.
+The reference's session core (SURVEY.md §2): per-user event-time session
+windows with a denied-count aggregate, streaming-compatible.
 """
 
 from .sessionize import (  # noqa: F401
     sessionize_denied_counts,
     audit_denied_sessions,
     with_event_time,
-)
-from . import (  # noqa: F401
-    asof,
-    corpus,
-    dedup,
-    groupsets,
-    multimodal,
-    similarity,
-    sketches,
-    skew,
-    text,
 )

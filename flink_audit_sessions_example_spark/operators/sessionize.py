@@ -108,9 +108,7 @@ def audit_denied_sessions(
     ``Audit.result`` / ``Audit.event_count`` are *primitive* ints in the
     reference (``Audit.java:23,34``) — a missing JSON key deserializes to 0,
     i.e. denied with weight 0 events. Spark's ``from_json`` yields NULL for
-    missing keys, so both columns are coalesced to 0 to match; this also keeps
-    the built-in path bit-identical to the custom-state twin
-    (``streaming/custom_state.py``), which already does ``fillna(0)``.
+    missing keys, so both columns are coalesced to 0 to match.
     """
     return sessionize_denied_counts(
         audits,

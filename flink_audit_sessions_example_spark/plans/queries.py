@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from ..functions.formatting import format_session_result
 from ..operators.sessionize import sessionize_denied_counts
+from ..sources.audit_source import read_audit_lines, read_audits
+from ..sources.audit_tree import audit_tree_path
 from ..sources.tables import load_table
 
 #: Session gap used by all event-session queries (readme.md:8 uses 600 s).
@@ -255,9 +257,6 @@ def q_src_file_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once into the reference's ``YYYYMMDD/`` layout
     (sources/audit_tree.py), scanned back with the recursive text source,
     leniently parsed, and aggregated by allow/deny result."""
-    from ..sources.audit_source import read_audits
-    from ..sources.audit_tree import audit_tree_path
-
     audits = read_audits(spark, audit_tree_path(sf_dir))
     return audits.groupBy("result").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -279,9 +278,6 @@ def q_src_file_datefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``src_file_datefilter`` — date-directory pruning
     (``DateFileFilter.java:11-39``): scan the same tree keeping only
     ``YYYYMMDD`` dirs >= 2024-01-15, count raw lines per kept day."""
-    from ..sources.audit_source import read_audit_lines
-    from ..sources.audit_tree import audit_tree_path
-
     lines = read_audit_lines(
         spark, audit_tree_path(sf_dir), min_date="20240115", keep_file_date=True
     )

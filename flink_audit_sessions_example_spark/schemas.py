@@ -52,14 +52,3 @@ AUDIT_JSON_OPTIONS = {
     "timestampFormat": "yyyy-MM-dd HH:mm:ss.SSS",
     "mode": "PERMISSIVE",
 }
-
-#: Output record of the core query — ``UserSessionCountResult.java:5-9``:
-#: (reqUser, count, window) with the window flattened to start/end bounds.
-SESSION_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("reqUser", T.StringType()),
-        T.StructField("denies", T.LongType()),
-        T.StructField("start", T.TimestampType()),
-        T.StructField("end", T.TimestampType()),
-    ]
-)

@@ -24,20 +24,6 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 @lru_cache(maxsize=256)
 def _nanos_columns(path: str) -> tuple[str, ...]:
     """Column names stored as timestamp[ns] in the parquet footer."""
@@ -52,29 +38,8 @@ def _nanos_columns(path: str) -> tuple[str, ...]:
     )
 
 
-#: Tables whose downstream operators are compute-bound per row (Arrow
-#: tokenizer passes, BLAS scoring, per-doc text expressions). Their
-#: parquet files are small enough at test SFs to arrive as a SINGLE scan
-#: split, which would serialize every mapInPandas / codegen pass on one
-#: core of a local[32] runner — so `load_table` spreads them to cluster
-#: parallelism. At production scale the input already has ≥ parallelism
-#: splits and the spread is a no-op (no exchange is added).
-_COMPUTE_HEAVY = ("documents", "embeddings")
-
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, *, spread: bool | None = None
-) -> DataFrame:
-    """Load ``{sf_dir}/{name}.parquet`` with nanos-timestamp repair.
-
-    ``spread`` (default: True for compute-heavy tables) repartitions a
-    coarser-than-cluster scan up to ``defaultParallelism`` — one tiny
-    round-robin exchange that unlocks full-core execution of the
-    per-document compute that follows. Pass ``spread=False`` for plans
-    that are pure scan-side aggregation where the extra exchange would
-    outweigh the parallelism (or when asserting scan-pushdown plan
-    shapes).
-    """
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load ``{sf_dir}/{name}.parquet`` with nanos-timestamp repair."""
     path = f"{sf_dir}/{name}.parquet"
     ns_cols = _nanos_columns(path)
     if ns_cols:
@@ -82,10 +47,4 @@ def load_table(
     df = spark.read.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    if spread is None:
-        spread = name in _COMPUTE_HEAVY
-    if spread:
-        parallelism = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < parallelism:
-            df = df.repartition(parallelism)
     return df

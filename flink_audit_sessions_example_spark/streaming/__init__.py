@@ -3,24 +3,12 @@
 The batch operators in :mod:`..operators` and :mod:`..sources` are pure
 ``DataFrame -> DataFrame`` transforms, so this package only adds the
 streaming-specific edges: the ``readStream`` composition, watermarking,
-sink dispatch (console / Kafka / memory), and the query lifecycle
-(``App.java:136-162``'s ``main``).
+sink dispatch (console / Kafka / memory / ``foreachBatch``), and the query
+lifecycle (``App.java:136-162``'s ``main``). Sessions come from Spark's
+built-in ``withWatermark`` + ``session_window``; there is no hand-written
+state machine.
 """
 
-from .attribution import stream_first_touch
-from .backlog import stream_backlog
-from .cdc import (
-    make_cdc_batch_applier,
-    materialize_cdc_stream,
-    read_materialized,
-)
-from .custom_state import audit_denied_sessions_custom_state
-from .dedup_stream import stream_minhash_candidates
-from .enrichment import stream_pit_enrich
-from .funnel import stream_funnel_stages
-from .gap_sessions import stream_gap_sessions
-from .heavy_hitters import stream_heavy_hitters
-from .joins import denied_near_allowed, stream_interval_join
 from .pipeline import (
     start_session_query,
     stream_denied_sessions,
@@ -28,31 +16,10 @@ from .pipeline import (
     write_kafka,
     write_memory,
 )
-from .cusum import stream_cusum
-from .quantile_sketch import stream_quantile_sketch
-from .time_decay import stream_time_decay
-from .transitions import stream_transitions
 
 __all__ = [
-    "stream_quantile_sketch",
-    "stream_cusum",
-    "stream_backlog",
-    "audit_denied_sessions_custom_state",
-    "stream_first_touch",
-    "stream_heavy_hitters",
-    "stream_minhash_candidates",
-    "stream_funnel_stages",
-    "stream_gap_sessions",
-    "stream_pit_enrich",
-    "stream_time_decay",
-    "stream_transitions",
-    "denied_near_allowed",
-    "stream_interval_join",
     "stream_denied_sessions",
     "start_session_query",
-    "make_cdc_batch_applier",
-    "materialize_cdc_stream",
-    "read_materialized",
     "write_console",
     "write_kafka",
     "write_memory",

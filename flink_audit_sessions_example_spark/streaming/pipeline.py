@@ -262,13 +262,13 @@ def start_session_query(
     spark: SparkSession,
     cfg: AppConfig,
     *,
-    checkpoint_dir: str,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Assemble and start the full job; sink dispatch on
-    ``cfg.session_output`` ∈ {"kafka", "print"} (``App.java:150-159``).
-    ``cfg.validate()`` rejects any other sink, or kafka without a topic,
-    before the query is built."""
+    ``cfg.session_output`` ∈ {"kafka", "print"} (``App.java:150-159``),
+    checkpointed at ``cfg.checkpoint_dir``. ``cfg.validate()`` rejects any
+    other sink, kafka without a topic, or a missing checkpoint, before the
+    query is built."""
     cfg.validate()
     sessions = stream_denied_sessions(spark, cfg)
     formatted = format_session_result(sessions)
@@ -277,13 +277,13 @@ def start_session_query(
             formatted,
             topic=cfg.kafka_topic,
             kafka_options=cfg.kafka_options,
-            checkpoint_dir=checkpoint_dir,
+            checkpoint_dir=cfg.checkpoint_dir,
             poll_seconds=cfg.audit_poll_seconds,
             available_now=available_now,
         )
     return write_console(
         formatted,
-        checkpoint_dir=checkpoint_dir,
+        checkpoint_dir=cfg.checkpoint_dir,
         poll_seconds=cfg.audit_poll_seconds,
         available_now=available_now,
     )

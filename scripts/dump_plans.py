@@ -3,8 +3,6 @@
 only — no actions) to <dir>/<key>_<suffix>.txt (--dir, default the
 git-ignored .plans/), plus a one-line structural summary per key:
 Exchange count, Python-eval node count, join strategies, scan count.
-Iterative keys (bench ITERATIVE_QUERIES) are skipped unless --iterative
-is passed, because their construction runs Spark actions.
 
 Usage: python scripts/dump_plans.py --suffix before key...
        python scripts/dump_plans.py --suffix after --top N
@@ -19,7 +17,7 @@ import sys
 
 def main() -> int:
     args = sys.argv[1:]
-    out_dir, suffix, top_n, allow_iter = ".plans", "before", None, False
+    out_dir, suffix, top_n = ".plans", "before", None
     keys = []
     i = 0
     while i < len(args):
@@ -29,8 +27,6 @@ def main() -> int:
             suffix = args[i + 1]; i += 2
         elif args[i] == "--top":
             top_n = int(args[i + 1]); i += 2
-        elif args[i] == "--iterative":
-            allow_iter = True; i += 1
         else:
             keys.append(args[i]); i += 1
 
@@ -52,19 +48,15 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from flink_audit_sessions_example_spark.plans import QUERIES
-    from bench import ITERATIVE_QUERIES
 
     if top_n is not None:
         import json
         rec = json.load(open("BENCH_SELF_sf0.1.json"))
         ordered = sorted(rec["queries"], key=lambda k: -rec["queries"][k])
-        keys = [k for k in ordered if allow_iter or k not in ITERATIVE_QUERIES][:top_n]
+        keys = ordered[:top_n]
 
     os.makedirs(out_dir, exist_ok=True)
     for key in keys:
-        if key in ITERATIVE_QUERIES and not allow_iter:
-            print(f"{key}: skipped (iterative construction)")
-            continue
         df = QUERIES[key](spark, sf_dir)
         txt = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

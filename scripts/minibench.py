@@ -35,25 +35,9 @@ def main() -> int:
 
     from flink_audit_sessions_example_spark.plans import QUERIES, flagship
     from flink_audit_sessions_example_spark.sources.tables import load_table
-    from bench import ITERATIVE_QUERIES
 
     flagship(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    def _identity(batches):
-        yield from batches
-
-    (
-        spark.range(0, 10_000, 1, int(cpus))
-        .mapInPandas(_identity, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    load_table(spark, sf_dir, "events").write.format("noop").mode("overwrite").save()
 
     args = sys.argv[1:]
     if args and args[0] == "--first":
@@ -72,14 +56,9 @@ def main() -> int:
         best = float("inf")
         per = []
         for _ in range(3):
-            if key in ITERATIVE_QUERIES:
-                t0 = time.perf_counter()
-                df = QUERIES[key](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df = QUERIES[key](spark, sf_dir)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
+            df = QUERIES[key](spark, sf_dir)
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             per.append(round(dt, 3))
             best = min(best, dt)

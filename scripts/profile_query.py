@@ -67,30 +67,13 @@ def main() -> int:
 
     # warmup identical to bench.py
     flagship(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    def _identity(batches):
-        yield from batches
-
-    (
-        spark.range(0, 10_000, 1, int(cpus))
-        .mapInPandas(_identity, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    load_table(spark, sf_dir, "events").write.format("noop").mode("overwrite").save()
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", ""),
     )
     os.makedirs(out_dir, exist_ok=True)
-
-    from bench import ITERATIVE_QUERIES  # noqa: E402  (repo root on path)
 
     for key in keys:
         if key not in QUERIES:
@@ -101,14 +84,9 @@ def main() -> int:
         for run in range(3):
             jobs_before = {j["jobId"] for j in _rest(base, f"applications/{app_id}/jobs")}
             spark.sparkContext.setJobDescription(f"{key} run{run}")
-            if key in ITERATIVE_QUERIES:
-                t0 = time.perf_counter()
-                df = QUERIES[key](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df = QUERIES[key](spark, sf_dir)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
+            df = QUERIES[key](spark, sf_dir)
+            t0 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             spark.sparkContext.setJobDescription(None)
             runs.append(dt)

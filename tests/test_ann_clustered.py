@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators import similarity as S
+from extended_ops.operators import similarity as S
 
 from ann_fixture import PLANT_OFFSET, as_spark_df, clustered_embeddings
 

@@ -8,7 +8,7 @@ import datetime as dt
 
 from pyspark.sql import Row
 
-from flink_audit_sessions_example_spark.operators.asof import (
+from extended_ops.operators.asof import (
     asof_join,
     asof_prior_value,
 )

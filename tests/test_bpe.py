@@ -9,13 +9,13 @@ from collections import Counter
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.bpe import (
+from extended_ops.operators.bpe import (
     END_TOKEN,
     bpe_encode_words,
     learn_bpe_merges,
     word_freq_table,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 
 def _py_learn(word_freqs, n_merges, min_count=2):
@@ -132,7 +132,7 @@ def test_pair_count_plan_shape(spark):
     compiles to TakeOrderedAndProject (no global sort)."""
     import pyspark.sql.functions as F
 
-    from flink_audit_sessions_example_spark.operators.bpe import _pairs
+    from extended_ops.operators.bpe import _pairs
 
     words = load_table(spark, SF_DIR, "documents").select("text")
     vocab = word_freq_table(words).select(
@@ -185,7 +185,7 @@ def test_tokenize_documents_matches_python_reference(spark):
     re-encoded identically, NULL/empty docs kept with empty arrays."""
     import re
 
-    from flink_audit_sessions_example_spark.operators.bpe import (
+    from extended_ops.operators.bpe import (
         learn_bpe_merges,
         tokenize_documents,
         word_freq_table,
@@ -224,12 +224,12 @@ def test_tokenize_documents_real_corpus_and_plan(spark):
     is broadcast (nothing corpus-sized shuffles on the word key), no
     cartesian product, and the output is row-aligned with the input."""
     from conftest import SF_DIR
-    from flink_audit_sessions_example_spark.operators.bpe import (
+    from extended_ops.operators.bpe import (
         learn_bpe_merges,
         tokenize_documents,
         word_freq_table,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents", spread=False).select(
         "doc_id", "text"
@@ -259,7 +259,7 @@ def test_vocab_ids_and_roundtrip(spark):
     """piece_vocab assigns dense, frequency-descending, deterministic
     ids; encode_piece_ids round-trips (ids decode back to the exact
     piece sequences) and stays row-aligned on empty/NULL docs."""
-    from flink_audit_sessions_example_spark.operators.bpe import (
+    from extended_ops.operators.bpe import (
         encode_piece_ids,
         learn_bpe_merges,
         piece_vocab,
@@ -302,7 +302,7 @@ def test_encode_ids_oov_contract(spark):
     """Unknown pieces fail loudly by default; oov_id maps them."""
     import pytest as _pytest
 
-    from flink_audit_sessions_example_spark.operators.bpe import (
+    from extended_ops.operators.bpe import (
         encode_piece_ids,
     )
 
@@ -323,15 +323,15 @@ def test_pack_by_count_matches_python_replay(spark):
     shard's id-ordered count sequence (the pack_sequences rule applied
     to REAL per-doc counts), completing raw text -> token ids -> packed
     training sequences entirely in-engine."""
-    from flink_audit_sessions_example_spark.operators.bpe import (
+    from extended_ops.operators.bpe import (
         learn_bpe_merges,
         tokenize_documents,
         word_freq_table,
     )
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         pack_by_count,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     from conftest import SF_DIR
 
@@ -363,14 +363,14 @@ def test_encode_piece_ids_plan_gates(spark):
     """The topology the docstring claims, gated: vocab joins broadcast
     (never sort-merge), no Python stage beyond the pinned tokenize
     lineage, no cartesian product."""
-    from flink_audit_sessions_example_spark.operators.bpe import (
+    from extended_ops.operators.bpe import (
         encode_piece_ids,
         learn_bpe_merges,
         piece_vocab,
         tokenize_documents,
         word_freq_table,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents", spread=False).select(
         "doc_id", "text"

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from flink_audit_sessions_example_spark.operators import bucketing as B
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators import bucketing as B
+from extended_ops.sources.tables import load_table
 
 from conftest import SF_DIR
 

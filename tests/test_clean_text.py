@@ -11,12 +11,12 @@ import pyspark.sql.functions as F
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.text import (
+from extended_ops.operators.text import (
     _CLEAN_FROM,
     _CLEAN_TO,
     clean_text,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # dirty wrapper injected around every corpus document, shared by both
 # engines: decomposed e+acute (NFC composes), CRLF, C0/C1 controls,
@@ -93,7 +93,7 @@ def test_nfc_kernel_canary_rejects_broken_pyarrow():
     import pyarrow as pa
     from pyarrow import compute as pc
 
-    from flink_audit_sessions_example_spark.operators import text as T
+    from extended_ops.operators import text as T
 
     assert hasattr(pc, "utf8_normalize")  # present...
     kernel_out = pc.utf8_normalize(
@@ -111,7 +111,7 @@ def test_nfc_batch_matches_unicodedata_reference():
 
     import pandas as pd
 
-    from flink_audit_sessions_example_spark.operators.text import _nfc_batch
+    from extended_ops.operators.text import _nfc_batch
 
     samples = [
         "cafe\u0301 plain",           # decomposed -> composed

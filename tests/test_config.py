@@ -15,6 +15,7 @@ session.output=kafka
 kafka.topic=audit-sessions
 kafka.bootstrap.servers=broker:9093
 kafka.security.protocol=SASL_SSL
+session.checkpoint=/data/ckpt/audit-sessions
 """
 
 
@@ -43,10 +44,13 @@ def test_app_config(tmp_path):
         "kafka.security.protocol": "SASL_SSL",
     }
     assert cfg.watermark_delay == "2 days"
+    assert cfg.checkpoint_dir == "/data/ckpt/audit-sessions"
 
 
 def test_defaults():
-    cfg = AppConfig.from_properties({"audit.path": "/x", "kafka.topic": "t"})
+    cfg = AppConfig.from_properties(
+        {"audit.path": "/x", "kafka.topic": "t", "session.checkpoint": "/c"}
+    )
     assert cfg.audit_poll_seconds == 240
     assert cfg.session_gap_seconds == 600
     # reference default: params.get(PARAM_SESSION_OUTPUT, "kafka"), App.java:150
@@ -66,6 +70,7 @@ def test_defaults():
         ("session.duration", "-600"),
         ("session.output", "elastic"),
         ("kafka.topic", None),  # kafka output (the default) with no topic
+        ("session.checkpoint", None),  # no shared default checkpoint
     ],
 )
 def test_bad_config_is_rejected_at_load(key, value):
@@ -74,6 +79,7 @@ def test_bad_config_is_rejected_at_load(key, value):
         "audit.min_date": "20240328",
         "session.output": "kafka",
         "kafka.topic": "t",
+        "session.checkpoint": "/c",
     }
     AppConfig.from_properties(props)  # the baseline itself is valid
     props[key] = value

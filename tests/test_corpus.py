@@ -7,10 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row, functions as F
 
-from flink_audit_sessions_example_spark.operators import corpus as C
-from flink_audit_sessions_example_spark.operators import similarity as S
-from flink_audit_sessions_example_spark.operators import text as X
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators import corpus as C
+from extended_ops.operators import similarity as S
+from extended_ops.operators import text as X
+from extended_ops.sources.tables import load_table
 
 from conftest import SF_DIR
 
@@ -226,7 +226,7 @@ def test_domain_mix_rejects_bad_mode(spark):
 
 
 def test_chunk_dedup_scrubs_planted_duplicates(spark):
-    from flink_audit_sessions_example_spark.operators import dedup as D
+    from extended_ops.operators import dedup as D
 
     chunk = " ".join(f"w{i}" for i in range(20))  # one full chunk
     rows = [
@@ -251,7 +251,7 @@ def test_chunk_dedup_scrubs_planted_duplicates(spark):
 
 
 def test_chunk_dedup_all_chunks_duplicated_yields_null_text(spark):
-    from flink_audit_sessions_example_spark.operators import dedup as D
+    from extended_ops.operators import dedup as D
 
     body = " ".join(f"t{i}" for i in range(40))  # exactly two chunks
     rows = [Row(doc_id=10, text=body), Row(doc_id=11, text=body)]
@@ -288,7 +288,7 @@ def test_latest_by_key_planted_fixture(spark):
     record pass through, and the payload never decides the winner."""
     import datetime as dt
 
-    from flink_audit_sessions_example_spark.operators.dedup import latest_by_key
+    from extended_ops.operators.dedup import latest_by_key
 
     t = dt.datetime
     rows = [
@@ -323,8 +323,8 @@ def test_latest_by_key_matches_window_formulation(spark):
     """Against the textbook row_number()=1 window on real events data."""
     from pyspark.sql import Window, functions as F
 
-    from flink_audit_sessions_example_spark.operators.dedup import latest_by_key
-    from flink_audit_sessions_example_spark.sources.tables import load_table
+    from extended_ops.operators.dedup import latest_by_key
+    from extended_ops.sources.tables import load_table
 
     from conftest import SF_DIR
 

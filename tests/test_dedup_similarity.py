@@ -7,10 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row, functions as F
 
-from flink_audit_sessions_example_spark.operators import dedup as D
-from flink_audit_sessions_example_spark.operators import multimodal as M
-from flink_audit_sessions_example_spark.operators import similarity as S
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators import dedup as D
+from extended_ops.operators import multimodal as M
+from extended_ops.operators import similarity as S
+from extended_ops.sources.tables import load_table
 
 from conftest import SF_DIR
 
@@ -674,7 +674,7 @@ def test_minhash_oracle_parity_on_planted_dup_corpus(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
+    from extended_ops.plans import ORACLES, QUERIES
     from oracle_utils import assert_parity
 
     base = [

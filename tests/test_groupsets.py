@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
-from flink_audit_sessions_example_spark.operators import groupsets as G
+from extended_ops.operators import groupsets as G
 
 ROWS = [
     Row(a="x", b="p", v=1.5),

@@ -19,7 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from conftest import SF_DIR
-from flink_audit_sessions_example_spark.operators.sketches import (
+from extended_ops.operators.sketches import (
     heavy_hitters,
 )
 
@@ -122,10 +122,10 @@ def test_corpus_words_vs_duckdb_exact(spark):
     i.e. `within_bound` pins TRUE for every exact-top-10 row."""
     import duckdb
 
-    from flink_audit_sessions_example_spark.plans.extended import (
+    from extended_ops.plans.extended import (
         _SQL_WORDS,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     con = duckdb.connect()
     con.execute(
@@ -158,7 +158,7 @@ def test_plan_pinned_single_scan(spark):
     PINNED summary — the finalized plan has no parquet scan and no
     Python stage (unpinned, the full corpus scan would run twice), and
     the only exchanges move summary-sized data."""
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
     words = docs.selectExpr(

@@ -10,16 +10,16 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.sketches import (
+from extended_ops.operators.sketches import (
     hll_estimate,
     hll_merge,
     hll_table,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _AGG_HLL_TABLE_ORACLE as HLL_BOUND_ORACLE,
 )
 

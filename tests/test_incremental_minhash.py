@@ -9,11 +9,11 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.dedup import (
+from extended_ops.operators.dedup import (
     incremental_minhash_pairs,
     minhash_signatures,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 THRESH = 0.35
 

@@ -10,16 +10,16 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.sketches import (
+from extended_ops.operators.sketches import (
     kmv_estimate,
     kmv_intersect_estimate,
     kmv_table,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _AGG_KMV_SKETCH_ORACLE as KMV_BOUND_ORACLE,
 )
 
@@ -142,7 +142,7 @@ def test_kmv_difference_exact_when_unsaturated(spark):
     """Both sketches unsaturated (theta = 1, whole hash space): the
     A-not-B estimate IS the exact |A \\ B| — sketches hold the full
     sets. Constructed overlap: A = 0..59, B = 40..99 -> |A\\B| = 40."""
-    from flink_audit_sessions_example_spark.operators.sketches import (
+    from extended_ops.operators.sketches import (
         kmv_difference_estimate,
     )
 
@@ -165,7 +165,7 @@ def test_kmv_inclusion_exclusion_consistency(spark):
     |A∩B| + |A\\B| must reconstruct |A| within the combined estimator
     noise (both estimates read the SAME sub-theta sample, so their sum
     telescopes to |a_below| / theta = the KMV |A| estimate)."""
-    from flink_audit_sessions_example_spark.operators.sketches import (
+    from extended_ops.operators.sketches import (
         kmv_difference_estimate,
     )
 

@@ -12,12 +12,12 @@ from collections import Counter
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.lm import (
+from extended_ops.operators.lm import (
     BACKOFF,
     score_documents,
     train_ngram_counts,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 _TOK = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9\s]")
 

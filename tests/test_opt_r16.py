@@ -7,10 +7,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators import _pins
-from flink_audit_sessions_example_spark.operators import dedup as D
-from flink_audit_sessions_example_spark.operators.graph import pagerank
-from flink_audit_sessions_example_spark.operators.quantiles import (
+from extended_ops.operators import _pins
+from extended_ops.operators import dedup as D
+from extended_ops.operators.graph import pagerank
+from extended_ops.operators.quantiles import (
     _MAX_RANGE_PARTITIONS,
     _derived_range_partitions,
     exact_grouped_percentiles,
@@ -105,7 +105,7 @@ def test_cooccurrence_hot_token_stays_linear(spark):
     ``n·window − window·(window+1)/2`` self-pairs, all collapsing
     map-side into ONE (w,w) group — never the n²/2 a posting-list
     self-join would emit."""
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         cooccurrence_pairs,
     )
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from flink_audit_sessions_example_spark.plans import ORACLES, QUERIES
+from extended_ops.plans import ORACLES, QUERIES
 
 from conftest import SF_DIR
 from oracle_utils import assert_parity

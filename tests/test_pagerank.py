@@ -11,8 +11,8 @@ from collections import Counter, defaultdict
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.graph import pagerank
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators.graph import pagerank
+from extended_ops.sources.tables import load_table
 
 
 def _py_pagerank(edges, d=0.85, iters=20):

@@ -10,10 +10,10 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     pattern_match_topk,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # query shape: one up-step. z-normalized in python; the oracle inlines
 # the same z-scores as literals (computed in the test, see below).

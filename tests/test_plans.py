@@ -6,7 +6,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
-from flink_audit_sessions_example_spark.plans import QUERIES
+from extended_ops.plans import QUERIES
 
 from conftest import SF_DIR
 
@@ -147,7 +147,7 @@ def test_corpus_freq_reuses_the_tokenize_subtree(spark):
     """corpus_freq_score derives vocabulary and total from the per-(doc,
     word) aggregate; at runtime AQE's ReuseExchange must compute that
     shared subtree once instead of re-scanning the corpus per branch."""
-    from flink_audit_sessions_example_spark.plans import QUERIES
+    from extended_ops.plans import QUERIES
 
     df = QUERIES["text_corpus_freq"](spark, SF_DIR)
     df.collect()
@@ -191,9 +191,9 @@ def test_ngram_dedup_single_scan_single_python_stage(spark):
         plan: at small SF the blacklist is empty, so AQE's
         empty-relation propagation legitimately deletes the anti-join
         from the final plan."""
-    from flink_audit_sessions_example_spark.operators import dedup as D
-    from flink_audit_sessions_example_spark.plans import QUERIES
-    from flink_audit_sessions_example_spark.sources.tables import load_table
+    from extended_ops.operators import dedup as D
+    from extended_ops.plans import QUERIES
+    from extended_ops.sources.tables import load_table
 
     # (a) the pre-pin subtree, uncapped: structural single scan + stage
     uncapped = D.ngram_jaccard_pairs(

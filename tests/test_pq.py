@@ -10,14 +10,14 @@ import numpy as np
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.similarity import (
+from extended_ops.operators.similarity import (
     ivf_probe_candidates,
     pq_codebooks,
     pq_codebooks_trained,
     pq_encode,
     pq_topk,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 M, NCODES, K = 8, 16, 10
 

@@ -8,14 +8,14 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.profile import (
+from extended_ops.operators.profile import (
     profile_columns,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _REL_PROFILE_COLUMNS_ORACLE as PROFILE_ORACLE,
 )
 
@@ -120,7 +120,7 @@ def test_json_key_stats_approx_within_hll_bound(spark):
     an HLL++ estimate within the documented 5% default error, and the
     plan collapses to ONE exchange (no second (key, value) distinct
     rollup)."""
-    from flink_audit_sessions_example_spark.operators.profile import (
+    from extended_ops.operators.profile import (
         json_key_stats,
     )
 

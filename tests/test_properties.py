@@ -16,11 +16,11 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators.asof import asof_join
+from extended_ops.operators.asof import asof_join
 from flink_audit_sessions_example_spark.operators.sessionize import (
     audit_denied_sessions,
 )
-from flink_audit_sessions_example_spark.streaming.custom_state import (
+from extended_ops.streaming.custom_state import (
     _merge_sessions,
 )
 
@@ -212,7 +212,7 @@ def test_latest_by_key_matches_reference(spark, rows):
     row keys) against a pure-Python argmax under the documented
     semantics: order by (ts, event_id) with NULLs sorting below
     non-NULLs; ties impossible because event_id is unique."""
-    from flink_audit_sessions_example_spark.operators.dedup import latest_by_key
+    from extended_ops.operators.dedup import latest_by_key
 
     # unique event ids (the determinism contract callers must provide)
     # event ids assigned by enumeration: the unique order tiebreak the
@@ -292,7 +292,7 @@ def test_funnel_stages_matches_reference(spark, events, within):
     stage automaton, with and without a conversion window, over
     adversarial shapes: duplicate timestamps, events before any stage-1,
     interleaved users, exact-window-boundary gaps."""
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         funnel_stages,
     )
 
@@ -382,7 +382,7 @@ def test_tfidf_top_terms_matches_reference(spark, texts, k):
     adversarial corpora: empty documents (count toward N, emit no
     rows), every-doc terms (df = N, score = tf), tied scores resolved
     by term order, k larger than the vocabulary."""
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         tfidf_top_terms,
     )
 
@@ -462,7 +462,7 @@ def test_duplicated_spans_matches_reference(spark, texts, k, scope):
     """duplicated_spans against an independent pure-Python span merger
     over a tiny alphabet (maximal shingle collisions): island boundary
     arithmetic, scope semantics, within-doc repeats, sub-k docs."""
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         duplicated_spans,
     )
 

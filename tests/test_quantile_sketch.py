@@ -13,12 +13,12 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.sketches import (
+from extended_ops.operators.sketches import (
     quantile_sketch_estimate,
     quantile_sketch_merge,
     quantile_sketch_table,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 K = 256
 

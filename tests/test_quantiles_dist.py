@@ -9,10 +9,10 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators.quantiles import (
+from extended_ops.operators.quantiles import (
     exact_grouped_percentiles,
 )
-from flink_audit_sessions_example_spark.sources.tables import load_table
+from extended_ops.sources.tables import load_table
 
 from conftest import SF_DIR
 

@@ -13,12 +13,12 @@ import datetime as dt
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
-from flink_audit_sessions_example_spark.operators.asof import pit_join
-from flink_audit_sessions_example_spark.operators.history import (
+from extended_ops.operators.asof import pit_join
+from extended_ops.operators.history import (
     scd2_history,
     scd2_merge,
 )
-from flink_audit_sessions_example_spark.operators.skyline import skyline_2d
+from extended_ops.operators.skyline import skyline_2d
 
 _SETTINGS = dict(
     max_examples=12,
@@ -185,7 +185,7 @@ def test_time_decay_stream_equals_batch_random(spark, events):
     micro-batch of 7) against the batch operator."""
     import pandas as pd
 
-    from flink_audit_sessions_example_spark.streaming.time_decay import (
+    from extended_ops.streaming.time_decay import (
         _make_decay_fn,
     )
 
@@ -198,7 +198,7 @@ def test_time_decay_stream_equals_batch_random(spark, events):
     batch = {
         r.k: (r.n_events, r.decayed_sum, r.decayed_weight)
         for r in __import__(
-            "flink_audit_sessions_example_spark.operators.timeseries",
+            "extended_ops.operators.timeseries",
             fromlist=["time_decay_stats"],
         ).time_decay_stats(
             spark.createDataFrame(

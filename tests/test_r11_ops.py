@@ -12,20 +12,20 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.asof import pit_join
-from flink_audit_sessions_example_spark.operators.dedup import (
+from extended_ops.operators.asof import pit_join
+from extended_ops.operators.dedup import (
     keep_best_per_cluster,
 )
-from flink_audit_sessions_example_spark.operators.quality import (
+from extended_ops.operators.quality import (
     expectations_audit,
 )
-from flink_audit_sessions_example_spark.operators.text import (
+from extended_ops.operators.text import (
     cooccurrence_pairs,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     activity_streaks,
 )
-from flink_audit_sessions_example_spark.plans.staged_r11 import (
+from extended_ops.plans.staged_r11 import (
     STAGED_R11_QUERIES,
 )
 
@@ -309,7 +309,7 @@ def test_time_decay_null_values_excluded_like_oracle(spark):
     term would poison Spark's fold to NULL while DuckDB's list_sum
     skips it — the contract pins both engines to exclusion."""
     base = _ts("2024-01-10 00:00:00")
-    from flink_audit_sessions_example_spark.operators.timeseries import (
+    from extended_ops.operators.timeseries import (
         time_decay_stats,
     )
     df = spark.createDataFrame(

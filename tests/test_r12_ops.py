@@ -12,20 +12,20 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.history import (
+from extended_ops.operators.history import (
     scd2_history,
     scd2_merge,
 )
-from flink_audit_sessions_example_spark.operators.text import (
+from extended_ops.operators.text import (
     with_readability,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     ohlc_resample,
 )
-from flink_audit_sessions_example_spark.plans.staged_r12 import (
+from extended_ops.plans.staged_r12 import (
     STAGED_R12_QUERIES,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 
 def _ts(s):

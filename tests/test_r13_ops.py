@@ -12,20 +12,20 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.corpus import (
+from extended_ops.operators.corpus import (
     mixture_sample,
 )
-from flink_audit_sessions_example_spark.operators.quality import (
+from extended_ops.operators.quality import (
     freshness_audit,
 )
-from flink_audit_sessions_example_spark.operators.similarity import (
+from extended_ops.operators.similarity import (
     knn_graph,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     event_transitions,
     gap_sessions,
 )
-from flink_audit_sessions_example_spark.plans.staged_r13 import (
+from extended_ops.plans.staged_r13 import (
     STAGED_R13_QUERIES,
 )
 

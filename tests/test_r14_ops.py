@@ -12,22 +12,22 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.baskets import (
+from extended_ops.operators.baskets import (
     association_rules,
 )
-from flink_audit_sessions_example_spark.operators.graph import (
+from extended_ops.operators.graph import (
     triangle_counts,
 )
-from flink_audit_sessions_example_spark.operators.profile import (
+from extended_ops.operators.profile import (
     json_key_stats,
 )
-from flink_audit_sessions_example_spark.operators.quality import (
+from extended_ops.operators.quality import (
     regularity_audit,
 )
-from flink_audit_sessions_example_spark.operators.similarity import (
+from extended_ops.operators.similarity import (
     knn_classify,
 )
-from flink_audit_sessions_example_spark.plans.staged_r14 import (
+from extended_ops.plans.staged_r14 import (
     STAGED_R14_QUERIES,
 )
 

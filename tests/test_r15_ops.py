@@ -11,14 +11,14 @@ from conftest import SF_DIR
 
 import pyspark.sql.functions as F
 
-from flink_audit_sessions_example_spark.operators.dedup import (
+from extended_ops.operators.dedup import (
     edit_distance_pairs,
 )
-from flink_audit_sessions_example_spark.operators.web import (
+from extended_ops.operators.web import (
     canonicalize_urls,
     strip_html,
 )
-from flink_audit_sessions_example_spark.plans.staged_r15 import (
+from extended_ops.plans.staged_r15 import (
     STAGED_R15_QUERIES,
 )
 
@@ -158,7 +158,7 @@ def test_quality_calibration_partition_of_corpus(spark):
     and every decile label is in range."""
     out = STAGED_R15_QUERIES["dq_quality_calibration"](spark, SF_DIR).collect()
     assert all(1 <= r.decile <= 10 for r in out)
-    from flink_audit_sessions_example_spark.sources.tables import load_table
+    from extended_ops.sources.tables import load_table
 
     n = (
         load_table(spark, SF_DIR, "documents")

@@ -12,14 +12,14 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.corpus import (
+from extended_ops.operators.corpus import (
     stratified_kfold,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     next_touch_attribution,
     rolling_distinct,
 )
-from flink_audit_sessions_example_spark.plans.staged_r16 import (
+from extended_ops.plans.staged_r16 import (
     STAGED_R16_QUERIES,
 )
 
@@ -116,7 +116,7 @@ def test_rolling_distinct_golden(spark):
 
 
 def test_kfold_exact_balance_and_determinism(spark):
-    from flink_audit_sessions_example_spark.sources.tables import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
     out = stratified_kfold(
@@ -147,7 +147,7 @@ def test_kfold_exact_balance_and_determinism(spark):
 def test_domain_stats_cover_all_hosts(spark):
     """Every source maps to exactly one host row and doc counts sum to
     the corpus size."""
-    from flink_audit_sessions_example_spark.sources.tables import load_table
+    from extended_ops.sources.tables import load_table
 
     rows = STAGED_R16_QUERIES["web_domain_stats"](spark, SF_DIR).collect()
     docs = load_table(spark, SF_DIR, "documents").where(

@@ -9,20 +9,20 @@ import datetime as dt
 
 import pytest
 
-from flink_audit_sessions_example_spark.operators.graph import pagerank
-from flink_audit_sessions_example_spark.operators.lm import (
+from extended_ops.operators.graph import pagerank
+from extended_ops.operators.lm import (
     backoff_tier_counts,
     score_documents,
     train_ngram_counts,
 )
-from flink_audit_sessions_example_spark.operators.quality import (
+from extended_ops.operators.quality import (
     BENFORD_SHARES,
     benford_audit,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     cusum_changepoints,
 )
-from flink_audit_sessions_example_spark.plans.staged_r17 import (
+from extended_ops.plans.staged_r17 import (
     only_late_supplier_counts,
 )
 

@@ -9,14 +9,14 @@ import datetime as dt
 
 import pytest
 
-from flink_audit_sessions_example_spark.operators.bpe import (
+from extended_ops.operators.bpe import (
     bpe_pair_counts,
     learn_bpe_merges,
 )
-from flink_audit_sessions_example_spark.operators.profile import (
+from extended_ops.operators.profile import (
     profile_drift,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     ewma_smooth,
 )
 
@@ -207,7 +207,7 @@ def _py_holt(xs, alpha, beta, window):
 
 @pytest.mark.parametrize("window", [3, 12])
 def test_holt_matches_direct_recursion(spark, window):
-    from flink_audit_sessions_example_spark.operators.timeseries import (
+    from extended_ops.operators.timeseries import (
         holt_smooth,
     )
 
@@ -226,7 +226,7 @@ def test_holt_matches_direct_recursion(spark, window):
 
 
 def test_holt_constant_series_has_zero_trend(spark):
-    from flink_audit_sessions_example_spark.operators.timeseries import (
+    from extended_ops.operators.timeseries import (
         holt_smooth,
     )
 
@@ -235,7 +235,7 @@ def test_holt_constant_series_has_zero_trend(spark):
 
 
 def test_holt_partition_invariant_and_validation(spark):
-    from flink_audit_sessions_example_spark.operators.timeseries import (
+    from extended_ops.operators.timeseries import (
         holt_smooth,
     )
 
@@ -265,7 +265,7 @@ def test_holt_beta_zero_is_exactly_ewma(spark):
     operators must agree BIT-FOR-BIT (same fold machinery, same frame,
     same literals), not approximately. A tolerance here would hide a
     divergence in either fold's op stream."""
-    from flink_audit_sessions_example_spark.operators.timeseries import (
+    from extended_ops.operators.timeseries import (
         ewma_smooth,
         holt_smooth,
     )

@@ -10,7 +10,7 @@ import math
 
 import pytest
 
-from flink_audit_sessions_example_spark.operators import sketches as K
+from extended_ops.operators import sketches as K
 
 
 def test_zscore_matches_float_reference(spark):
@@ -63,7 +63,7 @@ def test_quantile_merge_invariant_under_coarser_grouping(spark):
     guarantee, checked under a grouping the registration doesn't
     use)."""
     from conftest import SF_DIR
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -90,7 +90,7 @@ def test_small_quantity_threshold_boundary(spark):
     (1, 9) has avg 5, so only the 1 qualifies."""
     from pyspark.sql import functions as F
 
-    from flink_audit_sessions_example_spark.plans.staged_r19 import (
+    from extended_ops.plans.staged_r19 import (
         SMALLQTY_FRAC_DEN,
     )
 

@@ -11,7 +11,7 @@ import wave
 import numpy as np
 import pytest
 
-from flink_audit_sessions_example_spark.operators.multimodal import (
+from extended_ops.operators.multimodal import (
     AUDIO_N_SAMPLES,
     AUDIO_SAMPLE_RATE,
     audio_frame_features,

@@ -9,9 +9,9 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators import corpus as C
-from flink_audit_sessions_example_spark.operators import similarity as S
-from flink_audit_sessions_example_spark.operators import text as X
+from extended_ops.operators import corpus as C
+from extended_ops.operators import similarity as S
+from extended_ops.operators import text as X
 
 
 def _chunks(spark, text, chunk_size=5, stride=3):
@@ -103,7 +103,7 @@ def test_perceptual_hash_hand_computed(spark):
     """8×8 image, left half 0 / right half 255: bit k set iff the pixel
     beats the mean, so each row contributes 00001111 → every 16-bit
     band is 0xF0F0 and the digest is f0f0 repeated."""
-    from flink_audit_sessions_example_spark.operators import multimodal as M
+    from extended_ops.operators import multimodal as M
 
     raster = (b"\x00" * 4 + b"\xff" * 4) * 8
     payload = b"P5\n8 8\n255\n" + raster
@@ -131,7 +131,7 @@ def test_perceptual_hash_p6_and_degenerate(spark):
     """P6/RGB payloads hash via exact per-pixel channel sums (no crash,
     same geometry as P5 — r7 review fix); zero-dimension images yield
     NULL bands/phash instead of killing the task."""
-    from flink_audit_sessions_example_spark.operators import multimodal as M
+    from extended_ops.operators import multimodal as M
 
     rgb = (b"\x00\x00\x00" * 4 + b"\xff\xff\xff" * 4) * 8
     p6 = b"P6\n8 8\n255\n" + rgb
@@ -177,7 +177,7 @@ def test_phash_near_dup_pairs_banded_hamming(spark):
     not appear even though verification would pass it at a high
     threshold, because it collides on no band (the documented recall
     contract is exact only for hamming <= 3)."""
-    from flink_audit_sessions_example_spark.operators.multimodal import (
+    from extended_ops.operators.multimodal import (
         phash_near_dup_pairs,
     )
 
@@ -202,7 +202,7 @@ def test_phash_near_dup_pairs_banded_hamming(spark):
     }
     assert got == {(1, 2): 0, (1, 3): 2, (2, 3): 2}
     # e2e through real images: identical payloads pair at hamming 0
-    from flink_audit_sessions_example_spark.operators import multimodal as M
+    from extended_ops.operators import multimodal as M
 
     raster = (b"\x00" * 4 + b"\xff" * 4) * 8
     payload = b"P5\n8 8\n255\n" + raster
@@ -219,10 +219,10 @@ def test_phash_pairs_compose_into_image_dedup_clusters(spark):
     near_dup_clusters. Two planted groups (one transitive A≈B≈C chain
     via 1-bit steps, one exact pair) cluster to their min-id
     representatives; the outlier image forms no cluster."""
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         near_dup_clusters,
     )
-    from flink_audit_sessions_example_spark.operators.multimodal import (
+    from extended_ops.operators.multimodal import (
         phash_near_dup_pairs,
     )
 
@@ -254,7 +254,7 @@ def test_multimodal_on_error_null_survives_corrupt_payload(spark):
     With on_error='null' every decode op keeps the corrupt row with
     NULL derived fields and processes its batch neighbors normally;
     the default ('fail') still raises loudly."""
-    from flink_audit_sessions_example_spark.operators import multimodal as M
+    from extended_ops.operators import multimodal as M
 
     good = b"P5\n2 2\n255\nABCD"
     rows = [
@@ -293,7 +293,7 @@ def test_multimodal_on_error_null_survives_corrupt_payload(spark):
 
 
 def test_sample_k_per_group_deterministic_and_growth_stable(spark):
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         sample_k_per_group,
     )
 
@@ -314,7 +314,7 @@ def test_sample_k_per_group_deterministic_and_growth_stable(spark):
 def test_copurchase_basket_cap_drops_degenerate_orders(spark):
     """An over-cap basket (a 'buy everything' order) contributes no
     pairs; normal baskets pair up."""
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         _pair_explode,
         bounded_posting_lists,
     )
@@ -376,7 +376,7 @@ def test_scan_side_ops_are_streaming_safe(spark, tmp_path):
     perceptual_hash) run unchanged on a streaming DataFrame — no
     aggregation state, so append mode with availableNow reproduces the
     batch answer exactly."""
-    from flink_audit_sessions_example_spark.operators import multimodal as M
+    from extended_ops.operators import multimodal as M
 
     from conftest import SF_DIR
 
@@ -423,7 +423,7 @@ def test_stream_first_touch_matches_batch_with_retroactive_event(spark, tmp_path
     batch min(struct)+rollup aggregate over the union."""
     import datetime as dt
 
-    from flink_audit_sessions_example_spark.streaming import (
+    from extended_ops.streaming import (
         stream_first_touch,
     )
 
@@ -541,7 +541,7 @@ def test_stream_minhash_candidates_cross_batch(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from flink_audit_sessions_example_spark.streaming import (
+    from extended_ops.streaming import (
         stream_minhash_candidates,
     )
 
@@ -590,11 +590,11 @@ def test_quality_tiers_boundaries_path_matches_registered(spark):
     identical tiers as the registered compute-the-quartiles shape, via
     a SINGLE scan (no aggregate, no join in the plan)."""
     from conftest import SF_DIR
-    from flink_audit_sessions_example_spark.plans import QUERIES
-    from flink_audit_sessions_example_spark.plans.extended import (
+    from extended_ops.plans import QUERIES
+    from extended_ops.plans.extended import (
         quality_tiers,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     registered = QUERIES["text_quality_tiers"](spark, SF_DIR)
     expected = {r.doc_id: r.tier for r in registered.collect()}
@@ -615,7 +615,7 @@ def test_quality_tiers_boundaries_path_matches_registered(spark):
 
 
 def test_agg_mode_tie_breaks_lexicographically(spark):
-    from flink_audit_sessions_example_spark.plans.extended import q_agg_mode
+    from extended_ops.plans.extended import q_agg_mode
 
     # build a tiny events-shaped relation through the registered query's
     # operator shape: counts 2-2 tie between 'b' and 'a' -> 'a' wins

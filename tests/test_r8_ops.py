@@ -13,10 +13,10 @@ import pytest
 
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.streaming.attribution import (
+from extended_ops.streaming.attribution import (
     _first_touch_fn,
 )
-from flink_audit_sessions_example_spark.streaming.dedup_stream import (
+from extended_ops.streaming.dedup_stream import (
     _make_bucket_fn,
     stream_minhash_candidates,
 )
@@ -231,7 +231,7 @@ def test_first_touch_normalizes_non_ns_ts_dtype():
 def test_ngram_novelty_planted_semantics(spark):
     """Hand-checkable novelty: shared shingles score down, exact dups
     score 0, short docs get NULL novelty with zero counts."""
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         ngram_novelty_score,
     )
 
@@ -264,11 +264,11 @@ def test_ngram_novelty_matches_duckdb(spark):
     from conftest import SF_DIR
     from oracle_utils import assert_parity
 
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         ngram_novelty_score,
     )
-    from flink_audit_sessions_example_spark.plans.extended import _sql_shingles
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.plans.extended import _sql_shingles
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     sql = f"""
@@ -296,7 +296,7 @@ def test_custom_state_session_fn_normalizes_non_ns_ts_dtype():
     """Same guard as the first-touch fn: a datetime64[us] evtTime column
     must yield epoch-MILLI session bounds, not second-of-milli values
     1000x off."""
-    from flink_audit_sessions_example_spark.streaming.custom_state import (
+    from extended_ops.streaming.custom_state import (
         _make_session_fn,
     )
 
@@ -347,7 +347,7 @@ def test_rel_quantiles_approx_bound_check_shape(spark):
     from conftest import SF_DIR
     from oracle_utils import assert_parity
 
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     acc = 10_000
     probs = (0.25, 0.5, 0.75)
@@ -404,7 +404,7 @@ def test_tfidf_top_terms_planted_semantics(spark):
     """Hand-checkable tf-idf ranking: a term unique to one doc outranks
     a corpus-wide term at equal tf; rank<=k enforced; rounded-score
     ties break by term ascending."""
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         tfidf_top_terms,
     )
 
@@ -436,11 +436,11 @@ def test_tfidf_top_terms_matches_duckdb_and_plan(spark):
     from conftest import SF_DIR
     from oracle_utils import assert_parity
 
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         tfidf_top_terms,
     )
-    from flink_audit_sessions_example_spark.plans.extended import _SQL_WORDS
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.plans.extended import _SQL_WORDS
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     out = tfidf_top_terms(docs, k=3)
@@ -475,7 +475,7 @@ def test_tfidf_top_terms_matches_duckdb_and_plan(spark):
 def test_ngram_novelty_id_col_named_id(spark):
     """id_col='id' must not collide with shingle_rows' internal 'id'
     output column (regression: AMBIGUOUS_REFERENCE in the left join)."""
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         ngram_novelty_score,
     )
 
@@ -492,7 +492,7 @@ def test_funnel_stages_planted_semantics(spark):
     stalls a too-slow stage."""
     from datetime import datetime as dt
 
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         funnel_stages,
     )
 
@@ -546,10 +546,10 @@ def test_funnel_stages_matches_duckdb_and_single_exchange(spark):
     from conftest import SF_DIR
     from oracle_utils import assert_parity
 
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         funnel_stages,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     ev = load_table(spark, SF_DIR, "events")
     out = funnel_stages(
@@ -593,7 +593,7 @@ def test_stream_funnel_fn_advances_and_is_order_exact():
     """Unit drive of the funnel state fn: advance across batches,
     ignore wrong-stage / out-of-order rows, honor the conversion
     window, emit only on advancement."""
-    from flink_audit_sessions_example_spark.streaming.funnel import (
+    from extended_ops.streaming.funnel import (
         _make_funnel_fn,
     )
 
@@ -646,10 +646,10 @@ def test_stream_funnel_matches_batch_twin(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         funnel_stages,
     )
-    from flink_audit_sessions_example_spark.streaming import (
+    from extended_ops.streaming import (
         stream_funnel_stages,
     )
 
@@ -741,7 +741,7 @@ def test_stream_funnel_rejects_calendar_intervals(spark):
     non-positive widths."""
     import pytest
 
-    from flink_audit_sessions_example_spark.streaming import (
+    from extended_ops.streaming import (
         stream_funnel_stages,
     )
 
@@ -771,10 +771,10 @@ def test_ngram_novelty_pin_plan_shape(spark):
     is exactly what the pin exists to prevent."""
     from conftest import SF_DIR
 
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         ngram_novelty_score,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
 

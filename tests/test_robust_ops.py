@@ -10,17 +10,17 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.corpus import (
+from extended_ops.operators.corpus import (
     reservoir_sample,
 )
-from flink_audit_sessions_example_spark.operators.quantiles import (
+from extended_ops.operators.quantiles import (
     mad_outliers,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _AGG_MAD_OUTLIERS_ORACLE as MAD_ORACLE,
     _CORPUS_RESERVOIR_ORACLE as RESERVOIR_ORACLE,
     _CORPUS_WEIGHTED_RESERVOIR_ORACLE as WEIGHTED_RESERVOIR_ORACLE,
@@ -160,7 +160,7 @@ def test_reservoir_plan_take_ordered_and_validation(spark):
 
 
 def test_weighted_reservoir_matches_duckdb(spark):
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         weighted_reservoir_sample,
     )
 

@@ -13,25 +13,25 @@ import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.dedup import (
+from extended_ops.operators.dedup import (
     ngram_containment_pairs,
 )
-from flink_audit_sessions_example_spark.operators.history import scd2_history
-from flink_audit_sessions_example_spark.operators.quality import (
+from extended_ops.operators.history import scd2_history
+from extended_ops.operators.quality import (
     referential_audit,
 )
-from flink_audit_sessions_example_spark.operators.reshape import (
+from extended_ops.operators.reshape import (
     unpivot_metrics,
 )
-from flink_audit_sessions_example_spark.operators.skyline import skyline_2d
-from flink_audit_sessions_example_spark.operators.text import (
+from extended_ops.operators.skyline import skyline_2d
+from extended_ops.operators.text import (
     char_diversity_rows,
 )
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     time_decay_stats,
 )
-from flink_audit_sessions_example_spark.plans.round10 import ROUND10_QUERIES
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.plans.round10 import ROUND10_QUERIES
+from extended_ops.sources.tables import load_table
 
 
 def _final_plan(df):
@@ -221,7 +221,7 @@ def test_containment_flags_subset_that_jaccard_misses(spark):
     # every 3-shingle of the quote appears in the page -> containment 1
     assert out == {(1, 2): 1.0}
     # ...while Jaccard on the same pair is far below any dedup threshold
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         ngram_jaccard_pairs,
     )
     jac = ngram_jaccard_pairs(df, k=3, threshold=0.5).collect()

@@ -8,16 +8,16 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.runtime_filters import (
+from extended_ops.operators.runtime_filters import (
     bloom_filter_rows,
     bloom_pruned_join,
     build_bloom,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _JOIN_BLOOM_ORACLE as PRUNED_JOIN_ORACLE,
 )
 

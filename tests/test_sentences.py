@@ -8,15 +8,15 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.text import (
+from extended_ops.operators.text import (
     chunk_by_sentences,
     split_sentences,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _TEXT_CHUNK_SENTENCES_ORACLE as CHUNK_ORACLE,
     _TEXT_SPLIT_SENTENCES_ORACLE as SPLIT_ORACLE,
 )

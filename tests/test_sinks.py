@@ -12,7 +12,7 @@ from flink_audit_sessions_example_spark.sources.audit_source import (
     read_audits,
     stream_audits,
 )
-from flink_audit_sessions_example_spark.sources.sinks import (
+from extended_ops.sources.sinks import (
     read_partitioned_parquet,
     stream_partitioned_parquet,
     write_partitioned_parquet,
@@ -97,10 +97,10 @@ def test_write_sized_parquet_bounds_files_per_partition(spark, tmp_path):
     survive byte-exact, and the assignment is deterministic."""
     import os
 
-    from flink_audit_sessions_example_spark.sources.sinks import (
+    from extended_ops.sources.sinks import (
         write_sized_parquet,
     )
-    from flink_audit_sessions_example_spark.sources.tables import load_table
+    from extended_ops.sources.tables import load_table
 
     from conftest import SF_DIR
 

@@ -9,8 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_audit_sessions_example_spark.operators import sketches as K
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators import sketches as K
+from extended_ops.sources.tables import load_table
 
 from conftest import SF_DIR_001
 
@@ -76,7 +76,7 @@ def test_registered_quantiles_twin_tracks_exact(spark):
     registered ``rel_quantiles_approx`` key is the RANK bound check
     itself, asserted all-TRUE below (the driver hash-checks the same
     booleans against a TRUE-emitting oracle)."""
-    from flink_audit_sessions_example_spark.plans import QUERIES
+    from extended_ops.plans import QUERIES
 
     exact = {
         r.l_returnflag: (r.p25, r.p50, r.p75)

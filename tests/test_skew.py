@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
-from flink_audit_sessions_example_spark.operators.skew import salted_join
+from extended_ops.operators.skew import salted_join
 
 
 def test_salted_join_matches_plain_join_on_skewed_keys(spark):

@@ -8,12 +8,12 @@ import pyspark.sql.functions as F
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.dedup import snapshot_diff
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators.dedup import snapshot_diff
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _XFORM_SNAPSHOT_DIFF_ORACLE as DIFF_ORACLE,
 )
 

@@ -14,10 +14,10 @@ island merge reusing the window's partitioning.
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.dedup import (
+from extended_ops.operators.dedup import (
     duplicated_spans,
 )
-from flink_audit_sessions_example_spark.operators.text import (
+from extended_ops.operators.text import (
     positioned_shingle_rows,
 )
 
@@ -116,7 +116,7 @@ def test_duplicated_spans_scope(spark):
 def _span_oracle_sql(k: int) -> str:
     """DuckDB twin of duplicated_spans(k) over `documents` — shared by
     the detect parity test and the detect→strip composition test."""
-    from flink_audit_sessions_example_spark.plans.extended import (
+    from extended_ops.plans.extended import (
         _SQL_WORDS,
     )
 
@@ -158,7 +158,7 @@ def test_duplicated_spans_matches_duckdb(spark):
     it non-vacuous: 45 maximal spans, lengths 10-95 tokens)."""
     from oracle_utils import assert_parity
 
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     assert_parity(duplicated_spans(docs, k=8), _span_oracle_sql(8), SF_DIR)
@@ -176,7 +176,7 @@ def test_duplicated_spans_plan_shape(spark):
       agg, join probe — AQE may turn it into a broadcast — and the
       per-doc window).
     """
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     out = duplicated_spans(docs, k=8)
@@ -195,7 +195,7 @@ def test_strip_spans_planted(spark):
     """Exact string surgery: given spans are removed token-wise, docs
     without spans pass through (whitespace-normalized), casing is
     preserved, a whole-doc span empties the text."""
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         strip_spans,
     )
 
@@ -223,7 +223,7 @@ def test_strip_spans_planted(spark):
 def test_detect_strip_composition_removes_planted_region(spark):
     """duplicated_spans -> strip_spans: the shared region disappears
     from BOTH documents and the survivors keep their unique content."""
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         strip_spans,
     )
 
@@ -244,10 +244,10 @@ def test_detect_strip_matches_duckdb(spark):
     token filter (nested list lambdas)."""
     from oracle_utils import assert_parity
 
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         strip_spans,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     k = 8
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")

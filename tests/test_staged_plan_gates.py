@@ -9,17 +9,17 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r17 import (
+from extended_ops.plans.staged_r17 import (
     q_dq_benford,
     q_lm_backoff_tiers,
     q_rel_supplier_delay,
     q_win_changepoint,
 )
-from flink_audit_sessions_example_spark.plans.staged_r18 import (
+from extended_ops.plans.staged_r18 import (
     q_text_bpe_pairs,
     q_win_ewma,
 )
-from flink_audit_sessions_example_spark.plans.staged_r19 import (
+from extended_ops.plans.staged_r19 import (
     q_graph_degree_stats,
     q_rel_small_quantity,
     q_win_zscore,
@@ -94,7 +94,7 @@ def test_degree_stats_no_cartesian(spark):
 
 
 def test_top_terms_compiles_to_window_group_limit(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r22 import (
+    from extended_ops.plans.staged_r22 import (
         q_text_top_terms,
     )
 
@@ -106,7 +106,7 @@ def test_top_terms_compiles_to_window_group_limit(spark):
 
 
 def test_greedy_acc_broadcasts_the_modal_table(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r22 import (
+    from extended_ops.plans.staged_r22 import (
         q_lm_greedy_acc,
     )
 
@@ -120,7 +120,7 @@ def test_greedy_acc_broadcasts_the_modal_table(spark):
 
 
 def test_important_stock_attaches_scalar_broadcast(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r22 import (
+    from extended_ops.plans.staged_r22 import (
         q_rel_important_stock,
     )
 
@@ -133,7 +133,7 @@ def test_important_stock_attaches_scalar_broadcast(spark):
 
 
 def test_market_share_broadcasts_every_dim(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r23 import (
+    from extended_ops.plans.staged_r23 import (
         q_rel_market_share,
     )
 
@@ -144,7 +144,7 @@ def test_market_share_broadcasts_every_dim(spark):
 
 
 def test_centroid_assign_broadcasts_centroids_and_stays_jvm(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r23 import (
+    from extended_ops.plans.staged_r23 import (
         q_sim_centroid_assign,
     )
 
@@ -161,7 +161,7 @@ def test_centroid_assign_broadcasts_centroids_and_stays_jvm(spark):
 
 
 def test_disjunctive_revenue_pushes_or_into_one_broadcast_join(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r24 import (
+    from extended_ops.plans.staged_r24 import (
         q_rel_disjunctive_revenue,
     )
 
@@ -174,7 +174,7 @@ def test_disjunctive_revenue_pushes_or_into_one_broadcast_join(spark):
 
 
 def test_session_lengths_single_scan_stacked_windows(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r24 import (
+    from extended_ops.plans.staged_r24 import (
         q_win_session_lengths,
     )
 
@@ -187,7 +187,7 @@ def test_session_lengths_single_scan_stacked_windows(spark):
 
 
 def test_ngram_coverage_heads_are_per_task_heaps(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r24 import (
+    from extended_ops.plans.staged_r24 import (
         COVERAGE_KS,
         q_text_ngram_coverage,
     )
@@ -202,7 +202,7 @@ def test_ngram_coverage_heads_are_per_task_heaps(spark):
 
 
 def test_top_parts_concat_prunes_topk_partial_side(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r24 import (
+    from extended_ops.plans.staged_r24 import (
         q_rel_top_parts_concat,
     )
 
@@ -213,7 +213,7 @@ def test_top_parts_concat_prunes_topk_partial_side(spark):
 
 
 def test_norm_hist_is_one_scan_one_exchange(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r24 import (
+    from extended_ops.plans.staged_r24 import (
         q_embed_norm_hist,
     )
 
@@ -228,7 +228,7 @@ def test_local_volume_broadcasts_every_dim(spark):
     region all broadcast — the only shuffled joins are the fact-side
     lineitem⨝orders and the hint-free customer attach (which AQE
     broadcasts at real scale when the filtered slice is small)."""
-    from flink_audit_sessions_example_spark.plans.staged_r25 import (
+    from extended_ops.plans.staged_r25 import (
         q_rel_local_volume,
     )
 
@@ -241,7 +241,7 @@ def test_shipping_volume_broadcasts_both_nation_roles(spark):
     """Q7 (r25): supplier and BOTH nation roles (ns/nc — the two-role
     dimension) broadcast; the pair filter reaches the dimension scans
     so the fact shuffle only carries matchable rows."""
-    from flink_audit_sessions_example_spark.plans.staged_r25 import (
+    from extended_ops.plans.staged_r25 import (
         q_rel_shipping_volume,
     )
 
@@ -256,7 +256,7 @@ def test_shipping_volume_broadcasts_both_nation_roles(spark):
 def test_product_profit_part_slice_semifilters_first(spark):
     """Q9 (r25): the LIKE-filtered part slice, supplier and nation all
     broadcast — orders is the ONLY join that may shuffle the fact."""
-    from flink_audit_sessions_example_spark.plans.staged_r25 import (
+    from extended_ops.plans.staged_r25 import (
         q_rel_product_profit,
     )
 
@@ -269,7 +269,7 @@ def test_shipdelay_priority_two_pruned_scans_no_window(spark):
     """Q12 (r25): exactly the two fact scans, both column-pruned to
     the 2–3 columns the query reads; conditional counts collapse
     map-side — no window operator anywhere."""
-    from flink_audit_sessions_example_spark.plans.staged_r25 import (
+    from extended_ops.plans.staged_r25 import (
         q_rel_shipdelay_priority,
     )
 
@@ -286,7 +286,7 @@ def test_top_supplier_argmax_never_sorts_globally(spark):
     """Q15 (r25): the global max attaches as a 1-row broadcast and the
     supplier dim broadcasts — no global sort (rangepartitioning), no
     second fact scan beyond the view's own."""
-    from flink_audit_sessions_example_spark.plans.staged_r25 import (
+    from extended_ops.plans.staged_r25 import (
         q_rel_top_supplier,
     )
 
@@ -300,7 +300,7 @@ def test_part_promotion_aggregate_semijoin_shape(spark):
     """Q20 (r26): the name-filtered part slice and the supplier dim
     broadcast; the dominance test runs on the O(supplier, part)
     aggregate, never a second lineitem scan."""
-    from flink_audit_sessions_example_spark.plans.staged_r26 import (
+    from extended_ops.plans.staged_r26 import (
         q_rel_part_promotion,
     )
 
@@ -322,7 +322,7 @@ def test_freq_profile_single_tokenize_jvm_side(spark):
     """lm_freq_profile (r26): one documents scan (the ntile window
     rides the O(vocab) re-aggregation of the same tf relation) and the
     whole tokenize/explode path stays JVM-side."""
-    from flink_audit_sessions_example_spark.plans.staged_r26 import (
+    from extended_ops.plans.staged_r26 import (
         q_lm_freq_profile,
     )
 
@@ -335,7 +335,7 @@ def test_zipf_ratio_head_is_per_task_heap(spark):
     """text_zipf_ratio (r26): the rank head compiles to
     TakeOrderedAndProject (per-task heaps + single merge), never a
     global sort of the vocabulary."""
-    from flink_audit_sessions_example_spark.plans.staged_r26 import (
+    from extended_ops.plans.staged_r26 import (
         q_text_zipf_ratio,
     )
 
@@ -345,7 +345,7 @@ def test_zipf_ratio_head_is_per_task_heap(spark):
 
 
 def test_dim_stats_one_scan_one_exchange(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r26 import (
+    from extended_ops.plans.staged_r26 import (
         q_embed_dim_stats,
     )
 
@@ -357,7 +357,7 @@ def test_dim_stats_one_scan_one_exchange(spark):
 
 
 def test_dedup_prefix_one_scan_one_exchange(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r26 import (
+    from extended_ops.plans.staged_r26 import (
         q_dedup_prefix,
     )
 
@@ -371,7 +371,7 @@ def test_dedup_prefix_one_scan_one_exchange(spark):
 def test_count_of_counts_single_gram_scan(spark):
     """lm_count_of_counts (r27): rides train_ngram_counts' one-scan
     gram relation; the count-of-counts re-aggregation is O(vocab)."""
-    from flink_audit_sessions_example_spark.plans.staged_r27 import (
+    from extended_ops.plans.staged_r27 import (
         q_lm_count_of_counts,
     )
 
@@ -385,7 +385,7 @@ def test_seasonal_error_fact_scanned_once(spark):
     consumers: current + lagged leg — unpinned, the events scan
     planned twice, observed); the join and both aggregates ride
     O(types × days)."""
-    from flink_audit_sessions_example_spark.plans.staged_r27 import (
+    from extended_ops.plans.staged_r27 import (
         q_win_seasonal_error,
     )
 
@@ -395,7 +395,7 @@ def test_seasonal_error_fact_scanned_once(spark):
 
 
 def test_quantize_error_one_scan_one_exchange(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r27 import (
+    from extended_ops.plans.staged_r27 import (
         q_embed_quantize_error,
     )
 
@@ -407,7 +407,7 @@ def test_quantize_error_one_scan_one_exchange(spark):
 
 
 def test_dedup_suffix_one_scan_one_exchange(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r27 import (
+    from extended_ops.plans.staged_r27 import (
         q_dedup_suffix,
     )
 
@@ -422,7 +422,7 @@ def test_order_gap_median_single_exchange_stacked_windows(spark):
     """rel_order_gap_median (r27): the date-ordered lag window, the
     gap ranking AND the closing aggregate all ride ONE custkey
     exchange (same-key windows stack — the win_session_lengths rule)."""
-    from flink_audit_sessions_example_spark.plans.staged_r27 import (
+    from extended_ops.plans.staged_r27 import (
         q_rel_order_gap_median,
     )
 
@@ -435,7 +435,7 @@ def test_order_gap_median_single_exchange_stacked_windows(spark):
 def test_holt_single_scan(spark):
     """win_holt (r28): the ewma class — one events scan collapsed
     map-side to O(types × hours); frame/collect/fold ride it."""
-    from flink_audit_sessions_example_spark.plans.staged_r28 import (
+    from extended_ops.plans.staged_r28 import (
         q_win_holt,
     )
 
@@ -445,7 +445,7 @@ def test_holt_single_scan(spark):
 
 
 def test_burstiness_single_scan_no_window(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r28 import (
+    from extended_ops.plans.staged_r28 import (
         q_win_burstiness,
     )
 
@@ -460,7 +460,7 @@ def test_pareto_share_windows_ride_the_dimension(spark):
     O(customers) BEFORE the single-partition rank window (the
     documented rel_quantiles_dist class — the global sort touches the
     dimension-sized aggregate, never the fact table)."""
-    from flink_audit_sessions_example_spark.plans.staged_r28 import (
+    from extended_ops.plans.staged_r28 import (
         q_rel_pareto_share,
     )
 
@@ -470,7 +470,7 @@ def test_pareto_share_windows_ride_the_dimension(spark):
 
 
 def test_wordset_one_scan_one_exchange(spark):
-    from flink_audit_sessions_example_spark.plans.staged_r28 import (
+    from extended_ops.plans.staged_r28 import (
         q_dedup_wordset,
     )
 
@@ -484,7 +484,7 @@ def test_wordset_one_scan_one_exchange(spark):
 def test_length_gini_single_exchange_stacked(spark):
     """corpus_length_gini (r28): the rank window, the count window and
     the closing aggregate all ride ONE source-keyed exchange."""
-    from flink_audit_sessions_example_spark.plans.staged_r28 import (
+    from extended_ops.plans.staged_r28 import (
         q_corpus_length_gini,
     )
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r15 import (
+from extended_ops.plans.staged_r15 import (
     STAGED_R15_QUERIES,
 )
 

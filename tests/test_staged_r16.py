@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r16 import (
+from extended_ops.plans.staged_r16 import (
     STAGED_R16_QUERIES,
 )
 

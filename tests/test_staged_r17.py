@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r17 import (
+from extended_ops.plans.staged_r17 import (
     STAGED_R17_QUERIES,
 )
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r18 import (
+from extended_ops.plans.staged_r18 import (
     KMV_I_K,
     STAGED_R18_QUERIES,
 )

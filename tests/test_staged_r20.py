@@ -8,10 +8,10 @@ from __future__ import annotations
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.multimodal import (
+from extended_ops.operators.multimodal import (
     AUDIO_N_SAMPLES,
 )
-from flink_audit_sessions_example_spark.plans.staged_r20 import (
+from extended_ops.plans.staged_r20 import (
     AUDIO_FRAME,
     VOCAB_DECILES,
     STAGED_R20_QUERIES,

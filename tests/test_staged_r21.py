@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r21 import (
+from extended_ops.plans.staged_r21 import (
     RETURNED_TOP_N,
     STAGED_R21_QUERIES,
 )
@@ -51,7 +51,7 @@ def test_staged_r21_content_is_nonvacuous(spark):
     ).collect()
     assert len(weekly) >= 5
     # mass conservation: weekly sums equal the raw event count
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     raw = (
         load_table(spark, SF_DIR, "events")

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r22 import (
+from extended_ops.plans.staged_r22 import (
     TOP_TERMS_K,
     STAGED_R22_QUERIES,
 )
@@ -25,7 +25,7 @@ def test_staged_r22_content_is_nonvacuous(spark):
     ).collect()
     assert len(stock) >= 1
     # selective: strictly fewer important parts than parts with sales
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     n_parts = (
         load_table(spark, SF_DIR, "lineitem")
@@ -57,7 +57,7 @@ def test_staged_r22_content_is_nonvacuous(spark):
     ).collect()[0]
     assert kmv.within_bound
     assert kmv.true_only_a >= 1
-    from flink_audit_sessions_example_spark.plans.staged_r18 import (
+    from extended_ops.plans.staged_r18 import (
         KMV_I_K,
     )
 

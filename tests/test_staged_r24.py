@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r24 import (
+from extended_ops.plans.staged_r24 import (
     COVERAGE_KS,
     Q19_BRACKETS,
     TOP_PARTS_K,
@@ -88,7 +88,7 @@ def test_embed_norm_hist_flags_unnormalized_batches(spark):
     operator body on a constructed frame."""
     from pyspark.sql import functions as F
 
-    from flink_audit_sessions_example_spark.plans.staged_r24 import (
+    from extended_ops.plans.staged_r24 import (
         NORM_BUCKET_SCALE,
     )
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r25 import (
+from extended_ops.plans.staged_r25 import (
     Q7_NATION_A,
     Q7_NATION_B,
     Q12_BANDS,
@@ -22,7 +22,7 @@ def test_staged_r25_content_is_nonvacuous(spark):
     leak, a Q9 profit that is never negative (the signed aggregate
     untested), a Q12 band that swallowed the whole line, and a Q15
     argmax returning a non-maximal supplier."""
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     local = STAGED_R25_QUERIES["rel_local_volume"](spark, SF_DIR).collect()
     assert len(local) >= 1

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r26 import (
+from extended_ops.plans.staged_r26 import (
     DEDUP_PREFIX_LEN,
     FREQ_PROFILE_NTILES,
     ZIPF_KS,
@@ -24,10 +24,10 @@ def test_staged_r26_content_is_nonvacuous(spark):
     table with singleton groups."""
     from pyspark.sql import functions as F
 
-    from flink_audit_sessions_example_spark.operators.text import (
+    from extended_ops.operators.text import (
         pattern_tokens,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     dom = STAGED_R26_QUERIES["rel_part_promotion"](
         spark, SF_DIR

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r27 import (
+from extended_ops.plans.staged_r27 import (
     CC_MAX_R,
     CC_ORDER,
     DEDUP_SUFFIX_LEN,
@@ -25,7 +25,7 @@ def test_staged_r27_content_is_nonvacuous(spark):
     negative or ignores even-count interpolation."""
     from pyspark.sql import functions as F
 
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     cc = STAGED_R27_QUERIES["lm_count_of_counts"](spark, SF_DIR).collect()
     orders_seen = {r.gram_order for r in cc}

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.plans.staged_r28 import (
+from extended_ops.plans.staged_r28 import (
     PARETO_PCTS,
     STAGED_R28_QUERIES,
 )
@@ -21,7 +21,7 @@ def test_staged_r28_content_is_nonvacuous(spark):
     never fires, and a Gini outside [0, 1) or losing document mass."""
     from pyspark.sql import functions as F
 
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     holt = STAGED_R28_QUERIES["win_holt"](spark, SF_DIR).collect()
     assert len(holt) >= 100

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pandas as pd
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.streaming.backlog import (
+from extended_ops.streaming.backlog import (
     _make_backlog_fn,
     stream_backlog,
 )
@@ -77,10 +77,10 @@ def test_stream_equals_batch_sweep_over_closed_days(spark, tmp_path):
 
     from conftest import SF_DIR
     from stream_utils import collect_stream_batches
-    from flink_audit_sessions_example_spark.plans.staged_r22 import (
+    from extended_ops.plans.staged_r22 import (
         q_rel_order_backlog,
     )
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
     from pyspark.sql import functions as F
 
     li = load_table(spark, SF_DIR, "lineitem").where(

@@ -11,8 +11,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from flink_audit_sessions_example_spark.operators.dedup import cdc_apply
-from flink_audit_sessions_example_spark.streaming.cdc import (
+from extended_ops.operators.dedup import cdc_apply
+from extended_ops.streaming.cdc import (
     make_cdc_batch_applier,
     materialize_cdc_stream,
     read_materialized,

@@ -13,8 +13,8 @@ import re
 
 import pytest
 
-from flink_audit_sessions_example_spark.operators.dedup import cdc_apply
-from flink_audit_sessions_example_spark.streaming.cdc import (
+from extended_ops.operators.dedup import cdc_apply
+from extended_ops.streaming.cdc import (
     make_partitioned_cdc_batch_applier,
     materialize_cdc_stream_partitioned,
     read_materialized_partitioned,
@@ -199,7 +199,7 @@ def test_partitioned_gc_keeps_two_generations(spark, tmp_path):
 def test_partitioned_matches_full_rewrite_twin(spark, tmp_path):
     """Same log, both materializers, identical readable views — the
     partitioned path is an OPTIMIZATION, never a semantics change."""
-    from flink_audit_sessions_example_spark.streaming.cdc import (
+    from extended_ops.streaming.cdc import (
         make_cdc_batch_applier,
         read_materialized,
     )
@@ -303,7 +303,7 @@ def test_empty_first_batch_reads_empty_like_full_rewrite_twin(
     materializes no bucket, so its reader reconstructs the empty view
     from the state schema the pointer records (r14 advice: the
     FileNotFoundError here was the twins' only behavioral asymmetry)."""
-    from flink_audit_sessions_example_spark.streaming.cdc import (
+    from extended_ops.streaming.cdc import (
         make_cdc_batch_applier,
         read_materialized,
     )
@@ -351,7 +351,7 @@ def test_custom_merge_target_inherits_law(spark, tmp_path):
     ACID table format's MERGE INTO would take."""
     import random
 
-    from flink_audit_sessions_example_spark.streaming.cdc import (
+    from extended_ops.streaming.cdc import (
         MergeIntoTarget,
     )
 

@@ -13,10 +13,10 @@ import pandas as pd
 import pytest
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     cusum_changepoints,
 )
-from flink_audit_sessions_example_spark.streaming.cusum import (
+from extended_ops.streaming.cusum import (
     _make_cusum_fn,
     stream_cusum,
 )
@@ -130,7 +130,7 @@ def test_stream_snapshot_equals_batch_over_closed_buckets(spark, tmp_path):
 
     from conftest import SF_DIR
     from stream_utils import collect_stream_batches
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     target = 3
     events = (

@@ -10,13 +10,13 @@ from conftest import SF_DIR
 
 import pyspark.sql.functions as F
 
-from flink_audit_sessions_example_spark.operators.asof import pit_join
-from flink_audit_sessions_example_spark.plans.staged_r11 import (
+from extended_ops.operators.asof import pit_join
+from extended_ops.plans.staged_r11 import (
     pit_dim,
     pit_facts,
 )
-from flink_audit_sessions_example_spark.sources import load_table
-from flink_audit_sessions_example_spark.streaming.enrichment import (
+from extended_ops.sources.tables import load_table
+from extended_ops.streaming.enrichment import (
     stream_pit_enrich,
 )
 

@@ -13,10 +13,10 @@ import datetime as dt
 import pyarrow as pa
 from stream_utils import collect_stream_batches
 
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     gap_sessions,
 )
-from flink_audit_sessions_example_spark.streaming.gap_sessions import (
+from extended_ops.streaming.gap_sessions import (
     stream_gap_sessions,
 )
 
@@ -114,7 +114,7 @@ def test_finalized_sessions_equal_batch_on_real_events(spark, tmp_path):
     n_events, duration_secs) — with the batch side fed the LOADER's
     NTZ rows directly, so dtype parity is part of the assertion."""
     from conftest import SF_DIR
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     events_df = load_table(spark, SF_DIR, "events").select("user_id", "ts")
     events = events_df.orderBy("ts").collect()

@@ -19,7 +19,7 @@ import pytest
 
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.streaming.heavy_hitters import (
+from extended_ops.streaming.heavy_hitters import (
     _make_hh_fn,
     stream_heavy_hitters,
 )

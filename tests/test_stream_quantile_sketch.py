@@ -11,11 +11,11 @@ import pytest
 
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.operators.sketches import (
+from extended_ops.operators.sketches import (
     quantile_sketch_estimate,
     quantile_sketch_table,
 )
-from flink_audit_sessions_example_spark.streaming.quantile_sketch import (
+from extended_ops.streaming.quantile_sketch import (
     _make_qs_fn,
     _py_draw,
     stream_quantile_sketch,
@@ -38,7 +38,7 @@ def test_py_draw_matches_spark_md5_draw(spark):
     bit-identical — the whole stream-equals-batch claim rests on it."""
     from pyspark.sql import functions as F
 
-    from flink_audit_sessions_example_spark.operators.text import md5_draw
+    from extended_ops.operators.text import md5_draw
 
     keys = ["0", "17", "doc-42", "", "ünïcode"]
     df = spark.createDataFrame([(k2,) for k2 in keys], "k string")
@@ -74,7 +74,7 @@ def test_stream_equals_batch_sketch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from conftest import SF_DIR
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     docs = [
         (r.doc_id, r.lang, float(r.n_chars))

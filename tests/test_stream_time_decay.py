@@ -15,10 +15,10 @@ import pytest
 
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     time_decay_stats,
 )
-from flink_audit_sessions_example_spark.streaming.time_decay import (
+from extended_ops.streaming.time_decay import (
     _make_decay_fn,
     stream_time_decay,
 )
@@ -100,7 +100,7 @@ def test_stream_equals_batch_bit_for_bit(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from conftest import SF_DIR
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     events = (
         load_table(spark, SF_DIR, "events")

@@ -8,10 +8,10 @@ from __future__ import annotations
 import pandas as pd
 from conftest import FakeState
 
-from flink_audit_sessions_example_spark.operators.timeseries import (
+from extended_ops.operators.timeseries import (
     event_transitions,
 )
-from flink_audit_sessions_example_spark.streaming.transitions import (
+from extended_ops.streaming.transitions import (
     _make_transitions_fn,
     stream_transitions,
 )
@@ -83,7 +83,7 @@ def test_stream_counts_equal_batch_exactly(spark, tmp_path):
 
     from conftest import SF_DIR
     from stream_utils import collect_stream_batches
-    from flink_audit_sessions_example_spark.sources import load_table
+    from extended_ops.sources.tables import load_table
 
     events = (
         load_table(spark, SF_DIR, "events")

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import shutil
+from pathlib import Path
 
 import pytest
 
@@ -173,7 +175,7 @@ def test_custom_state_sessionizer_matches_builtin(spark, audit_tree):
     from flink_audit_sessions_example_spark.sources.audit_source import (
         stream_audits,
     )
-    from flink_audit_sessions_example_spark.streaming import (
+    from extended_ops.streaming import (
         audit_denied_sessions_custom_state,
     )
 
@@ -216,8 +218,7 @@ def test_start_session_query_print_path(spark, audit_tree, tmp_path):
     runs to completion on an availableNow trigger."""
     query = start_session_query(
         spark,
-        _cfg(audit_tree),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        _cfg(audit_tree, checkpoint_dir=str(tmp_path / "ckpt")),
         available_now=True,
     )
     query.awaitTermination(120)
@@ -228,8 +229,11 @@ def test_start_session_query_rejects_bad_sink(spark, audit_tree, tmp_path):
     with pytest.raises(ValueError, match="kafka' or 'print"):
         start_session_query(
             spark,
-            _cfg(audit_tree, session_output="elastic"),
-            checkpoint_dir=str(tmp_path / "ckpt2"),
+            _cfg(
+                audit_tree,
+                session_output="elastic",
+                checkpoint_dir=str(tmp_path / "ckpt2"),
+            ),
             available_now=True,
         )
 
@@ -238,8 +242,11 @@ def test_kafka_sink_requires_topic(spark, audit_tree, tmp_path):
     with pytest.raises(ValueError, match="kafka.topic"):
         start_session_query(
             spark,
-            _cfg(audit_tree, session_output="kafka"),
-            checkpoint_dir=str(tmp_path / "ckpt3"),
+            _cfg(
+                audit_tree,
+                session_output="kafka",
+                checkpoint_dir=str(tmp_path / "ckpt3"),
+            ),
             available_now=True,
         )
 
@@ -264,6 +271,7 @@ def test_kafka_option_contract_reference_passthrough(tmp_path):
         "\n".join(
             [
                 "audit.path=/ranger/audit",
+                "session.checkpoint=/ckpt/sessions",
                 "kafka.topic=audit-sessions",
                 "kafka.bootstrap.servers=broker-1:9093,broker-2:9093",
                 "kafka.security.protocol=SASL_SSL",
@@ -388,6 +396,81 @@ def test_session_state_recovers_across_restart(spark, tmp_path):
     assert end == dt.datetime(2022, 9, 29, 11, 30, 0)  # last event + 1200 s
 
 
+#: Session-state checkpoint written by an earlier engine (see the test).
+FIXTURE_CKPT = Path(__file__).parent / "fixtures" / "session_state_ckpt"
+
+
+def test_checkpoint_from_earlier_engine_resumes(spark, tmp_path):
+    """A checkpoint written by an earlier engine must still resume, with
+    its open session state merging into new events.
+
+    ``fixtures/session_state_ckpt`` was written at commit 4089059 by
+    ``stream_denied_sessions`` → ``format_session_result`` →
+    ``write_kafka_file_twin`` with an availableNow trigger, ``local[2]``,
+    ``spark.sql.shuffle.partitions=2``, AQE on, UTC session time zone,
+    ``audit.min_date=20220101`` and ``session.duration=1200``. Its input
+    was one file, ``20220926/a.log``, holding the first run of
+    :func:`test_session_state_recovers_across_restart`: alice denied 5 + 2
+    on 9/26, carol denied 3 at 9/29 11:00 and an allowed clock event at
+    9/29 12:00. That run emitted alice's session; carol's stayed open in
+    the state store.
+
+    The resume reads a fresh input dir holding only new files: carol
+    denied 4 at 11:10, then a clock event that moves the watermark past
+    her session. The one emitted session must count both carol events,
+    and the state keeps the 2 partitions the checkpoint froze."""
+    from flink_audit_sessions_example_spark.functions.formatting import (
+        format_session_result,
+    )
+    from flink_audit_sessions_example_spark.streaming.pipeline import (
+        write_kafka_file_twin,
+    )
+
+    ckpt = tmp_path / "ckpt"
+    shutil.copytree(FIXTURE_CKPT, ckpt)
+    day = tmp_path / "audit" / "20220930"
+    day.mkdir(parents=True)
+    (day / "b.log").write_text(
+        "\n".join(
+            [
+                _line("carol", 0, 4, "2022-09-29 11:10:00.000"),
+                _line("clock", 1, 1, "2022-10-03 12:00:00.000"),
+            ]
+        )
+        + "\n"
+    )
+    out = str(tmp_path / "out")
+    query = write_kafka_file_twin(
+        format_session_result(
+            stream_denied_sessions(spark, _cfg(tmp_path / "audit"))
+        ),
+        out_dir=out,
+        checkpoint_dir=str(ckpt),
+        available_now=True,
+    )
+    query.awaitTermination(180)
+    assert query.exception() is None
+
+    def ms(ts):
+        return int(ts.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+
+    start, end = dt.datetime(2022, 9, 29, 11, 0), dt.datetime(2022, 9, 29, 11, 30)
+    assert [r.value for r in spark.read.parquet(out).collect()] == [
+        f"user='carol' denies=7 start={ms(start)} end={ms(end)}"
+    ]
+    partitions = {
+        op["numShufflePartitions"]
+        for progress in query.recentProgress
+        for op in progress["stateOperators"]
+    }
+    assert partitions == {2}
+    assert sorted(p.name for p in (ckpt / "state" / "0").iterdir()) == [
+        "0",
+        "1",
+        "_metadata",
+    ]
+
+
 def test_foreach_batch_redelivers_failed_batch_with_same_id(spark, tmp_path):
     """At-least-once across a KILL for ``snk_foreach_batch``: a batch
     whose ``batch_fn`` dies mid-write (sink outage) is re-run after
@@ -469,7 +552,7 @@ def test_stream_dedup_drops_redeliveries(spark, tmp_path):
     records (same `id`) in a later micro-batch; the watermark-bounded
     dedup keeps the first arrival only. Batch path degrades to plain
     dropDuplicates."""
-    from flink_audit_sessions_example_spark.operators.dedup import (
+    from extended_ops.operators.dedup import (
         stream_dedup,
     )
     from flink_audit_sessions_example_spark.sources.audit_source import (
@@ -536,7 +619,7 @@ def test_stream_interval_join_rejects_overlapping_columns(spark):
     a consumer references the duplicate name."""
     import pytest
 
-    from flink_audit_sessions_example_spark.streaming.joins import (
+    from extended_ops.streaming.joins import (
         stream_interval_join,
     )
 
@@ -560,7 +643,7 @@ def test_stream_stream_interval_join_matches_batch(spark, audit_tree, tmp_path):
     ±20 min per user) produces exactly the pairs the equivalent batch
     join computes over the same files."""
     from flink_audit_sessions_example_spark.sources import read_audits, stream_audits
-    from flink_audit_sessions_example_spark.streaming.joins import (
+    from extended_ops.streaming.joins import (
         denied_near_allowed,
     )
 
@@ -618,7 +701,7 @@ def test_stream_compact_latest_by_key_across_batches(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from flink_audit_sessions_example_spark.operators.dedup import latest_by_key
+    from extended_ops.operators.dedup import latest_by_key
 
     d = tmp_path / "ev"
     d.mkdir()

@@ -11,8 +11,8 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
-from flink_audit_sessions_example_spark.operators import text as X
-from flink_audit_sessions_example_spark.plans.extended import (
+from extended_ops.operators import text as X
+from extended_ops.plans.extended import (
     _langid_oracle,
     _TEXT_QUALITY_ORACLE,
     _TEXT_STATS_ORACLE,

@@ -10,19 +10,19 @@ import pyspark.sql.functions as F
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.corpus import (
+from extended_ops.operators.corpus import (
     sample_k_per_group,
     weighted_sample_k,
 )
-from flink_audit_sessions_example_spark.operators.dedup import (
+from extended_ops.operators.dedup import (
     cdc_apply,
     latest_by_key,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _CORPUS_WEIGHTED_SAMPLE_ORACLE as WEIGHTED_SAMPLE_ORACLE,
     _XFORM_CDC_APPLY_ORACLE as CDC_ORACLE,
 )
@@ -53,7 +53,7 @@ def test_weighted_sample_matches_duckdb(spark):
 def test_weighted_sample_matches_python_reference(spark):
     """Exact selection parity against an independent A-ES implementation
     (same md5 draw, math.pow) over adversarial weights."""
-    from flink_audit_sessions_example_spark.operators.corpus import (
+    from extended_ops.operators.corpus import (
         _DRAW_SPACE,
     )
 

@@ -7,12 +7,12 @@ import pytest
 from conftest import SF_DIR
 from oracle_utils import assert_parity
 
-from flink_audit_sessions_example_spark.operators.quantiles import winsorize
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.operators.quantiles import winsorize
+from extended_ops.sources.tables import load_table
 
 # oracle SQL: single source of truth = the staged registration
 # (plans/staged.py) — review r9 killed the drifting duplicates
-from flink_audit_sessions_example_spark.plans.staged import (  # noqa: E501
+from extended_ops.plans.staged import (  # noqa: E501
     _XFORM_WINSORIZE_ORACLE as WINSORIZE_ORACLE,
 )
 

@@ -15,11 +15,11 @@ from __future__ import annotations
 import pytest
 from conftest import SF_DIR
 
-from flink_audit_sessions_example_spark.operators.bucketing import (
+from extended_ops.operators.bucketing import (
     zorder_key,
     zorder_layout,
 )
-from flink_audit_sessions_example_spark.sources import load_table
+from extended_ops.sources.tables import load_table
 
 
 def _py_bucket(v, bnds):
