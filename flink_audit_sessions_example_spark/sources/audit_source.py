@@ -8,62 +8,107 @@ Reference surface:
   the trigger interval; the batch analog is ``spark.read.text``.
 - ``src_file_datefilter`` — skips directories whose basename parses as
   ``YYYYMMDD`` older than ``audit.min_date``; non-date path components are
-  always kept (``DateFileFilter.java:11-39``). Re-expressed as a column
-  filter: ``file_date`` is the first ``/YYYYMMDD/`` component of
-  ``input_file_name()``, and rows from older date dirs are dropped.
-  Hidden/underscore files are skipped by Spark's file listing by default,
-  matching Flink's default filter.
+  always kept (``DateFileFilter.java:11-39``). The rule is
+  :func:`_is_pruned`, applied to every directory below ``audit.path``
+  (never to the root's own components). Batch reads apply it while
+  listing; the streaming source applies it as a filter on
+  ``_metadata.file_path``, because new date dirs appear after the query
+  starts. Hidden/underscore names are skipped, matching Flink's default
+  filter and Spark's own listing.
 - ``xform_parse_json`` — lenient per-line JSON parse; malformed line → null
   record; unknown keys ignored (``Audit.java:39-47``).
 - ``flt_valid_user`` — drop unparseable records and null ``reqUser``
   (``App.java:52-53``).
 
-Scale note: the date filter runs after listing, not at it — every file
-under ``audit.path`` is listed and opened, and the ``file_date`` filter
-then drops the rows of older date dirs. Pruning the paths at listing time
-with the reference's per-basename rule is ROADMAP.md item 1.
+Scale note: with ``min_date`` set, a batch read walks the tree once,
+before the job starts, through the root's Hadoop ``FileSystem`` (so HDFS
+and S3 roots work) and never lists or opens a pruned dir. Spark gets the
+smallest path set that covers what is kept: a dir with nothing pruned
+beneath it is one path, so Spark's distributed listing job (over 32 root
+paths) stays off for the usual one-level date layout. Without
+``min_date`` the read is a plain recursive scan of the root.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import _is_basic_iso_date
 from ..schemas import AUDIT_JSON_OPTIONS, AUDIT_SCHEMA
 
-#: Regex capturing a YYYYMMDD path component (BASIC_ISO_DATE,
-#: ``DateFileFilter.java:27``) anywhere in the file path.
-_DATE_COMPONENT = r"/((?:19|20)\d{6})/"
+
+def _is_pruned(name: str, min_date: str) -> bool:
+    """``DateFileFilter``'s rule for one directory basename
+    (``DateFileFilter.java:19-38``): prune a real ``BASIC_ISO_DATE`` older
+    than ``min_date``; a name that does not parse as a date is kept."""
+    return _is_basic_iso_date(name) and name < min_date
 
 
-def with_file_date(df: DataFrame) -> DataFrame:
-    """Attach ``file_date`` (YYYYMMDD string, nullable) parsed from the
-    source file path — the declarative analog of ``DateFileFilter``'s
-    per-path date extraction (``DateFileFilter.java:24-33``).
-    """
-    return df.withColumn(
-        "file_date",
-        F.regexp_extract(F.input_file_name(), _DATE_COMPONENT, 1),
+def _is_date_col(name: Column) -> Column:
+    """Column twin of ``_is_basic_iso_date``. ``try_`` because Spark runs
+    with ANSI on, where ``to_date('20241399')`` raises."""
+    return name.rlike("^[0-9]{8}$") & F.try_to_timestamp(
+        name, F.lit("yyyyMMdd")
+    ).isNotNull()
+
+
+def _hadoop_root(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` of ``path`` and ``path`` qualified by it."""
+    root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(root)
+
+
+def _kept_paths(fs, root, min_date: str) -> list:
+    """Walk ``root`` once, never listing a pruned dir, and return the
+    smallest list of paths that covers every kept file: ``[root]``
+    when nothing is pruned, ``[]`` when everything is."""
+
+    def walk(d):
+        files, dirs, whole = [], [], True
+        for status in fs.listStatus(d):
+            path = status.getPath()
+            name = path.getName()
+            if name.startswith((".", "_")):
+                continue
+            if not status.isDirectory():
+                files.append(path)
+            elif _is_pruned(name, min_date):
+                whole = False
+            else:
+                kept, kept_whole = walk(path)
+                dirs += kept
+                whole = whole and kept_whole
+        return ([d], True) if whole else (files + dirs, False)
+
+    # Spark reads each path as a glob pattern, so escape the listed names
+    return [
+        re.sub(r"([\\{}\[\]*?])", r"\\\1", p.toString())
+        for p in walk(root)[0]
+    ]
+
+
+def _dirs_below(spark: SparkSession, path: str) -> Column:
+    """The directory names between ``path`` and each row's file, outermost
+    first. Only slashes are counted, so the scheme, authority and
+    percent-encoding of ``_metadata.file_path`` need not match ``path``."""
+    _, root = _hadoop_root(spark, path)
+    depth = root.toUri().getRawPath().rstrip("/").count("/") + 1
+    parts = F.split(
+        F.regexp_replace("_metadata.file_path", "^[^:/]+:(//[^/]*)?", ""), "/"
     )
+    return F.filter(parts, lambda _, i: (i >= depth) & (i < F.size(parts) - 1))
 
 
-def _apply_min_date(
-    lines: DataFrame, min_date: str | None, keep_file_date: bool = False
-) -> DataFrame:
-    """Keep files in date dirs >= min_date; keep non-date paths.
-
-    Mirrors ``DateFileFilter.java:19-38``: a directory that does not parse
-    as a date is NOT filtered (returns false → kept), and files in dated
-    dirs are kept only when ``date >= min_date``.
-    """
-    if min_date is None and not keep_file_date:
-        return lines
-    lines = with_file_date(lines)
-    if min_date is not None:
-        lines = lines.where(
-            (F.col("file_date") == "") | (F.col("file_date") >= min_date)
-        )
-    return lines if keep_file_date else lines.drop("file_date")
+def with_file_date(lines: DataFrame, path: str) -> DataFrame:
+    """Attach ``file_date``: the nearest directory below ``path`` whose name
+    is a real ``YYYYMMDD`` date, null when there is none
+    (``DateFileFilter.java:24-33``)."""
+    dated = F.filter(_dirs_below(lines.sparkSession, path), _is_date_col)
+    return lines.withColumn("file_date", F.try_element_at(dated, F.lit(-1)))
 
 
 def read_audit_lines(
@@ -72,13 +117,15 @@ def read_audit_lines(
     min_date: str | None = None,
     keep_file_date: bool = False,
 ) -> DataFrame:
-    """Batch: recursive text scan of the audit tree (one row per line)."""
-    lines = (
-        spark.read.format("text")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
-    return _apply_min_date(lines, min_date, keep_file_date)
+    """Batch: recursive text scan of the audit tree (one row per line),
+    date dirs older than ``min_date`` pruned while listing."""
+    reader = spark.read.format("text").option("recursiveFileLookup", "true")
+    if min_date is None:
+        lines = reader.load(path)
+    else:
+        fs, root = _hadoop_root(spark, path)
+        lines = reader.load(_kept_paths(fs, root, min_date))
+    return with_file_date(lines, path) if keep_file_date else lines
 
 
 def stream_audit_lines(
@@ -117,7 +164,13 @@ def stream_audit_lines(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return _apply_min_date(reader.load(path), min_date)
+    lines = reader.load(path)
+    if min_date is None:
+        return lines
+    pruned = F.exists(
+        _dirs_below(spark, path), lambda d: _is_date_col(d) & (d < min_date)
+    )
+    return lines.where(~pruned)
 
 
 def parse_audit_json(lines: DataFrame, value_col: str = "value") -> DataFrame:

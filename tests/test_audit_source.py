@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from urllib.parse import unquote
 
 import pytest
 
@@ -133,3 +134,128 @@ def test_min_date_pruning(spark, audit_tree):
 def test_line_counts(spark, audit_tree):
     assert read_audit_lines(spark, audit_tree).count() == 6
     assert read_audit_lines(spark, audit_tree, min_date="20220601").count() == 5
+
+
+# DateFileFilter edge cases as (root below tmp_path, min_date, kept files,
+# pruned files). Each file holds one line, its own path below the root, so
+# the kept lines name the kept files.
+PRUNE_CASES = {
+    # a date-named component of the root itself decides nothing
+    "dated_root": (
+        "20200101/audit",
+        "20220601",
+        ["20220915/a.log", "misc/b.log", "top.log"],
+        ["20220101/c.log"],
+    ),
+    "nested_older_date": (
+        "",
+        "20220601",
+        ["20220915/a.log"],
+        ["20220915/20200101/b.log"],
+    ),
+    # not real BASIC_ISO_DATEs, so never pruned
+    "non_dates": (
+        "",
+        "20250101",
+        ["20241399/a.log", "2024032/b.log", "20250102/c.log"],
+        ["20241231/d.log"],
+    ),
+    "hidden": (
+        "",
+        "20220101",
+        ["20250101/a.log"],
+        [".staging/20250101/b.log", "_tmp/c.log", "20250101/.inflight.log"],
+    ),
+    # listed paths reach Spark as glob patterns
+    "glob_names": (
+        "",
+        "20220101",
+        ["20220915/a[1].log", "b{c}.log"],
+        ["20200101/d.log"],
+    ),
+    "all_pruned": ("", "20220101", [], ["20200101/a.log", "20200102/b.log"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PRUNE_CASES))
+def test_min_date_edge_cases_batch_and_stream(spark, tmp_path, case):
+    from flink_audit_sessions_example_spark.sources import stream_audit_lines
+    from flink_audit_sessions_example_spark.streaming import write_memory
+
+    sub, min_date, kept, dropped = PRUNE_CASES[case]
+    root = tmp_path / sub
+    for rel in kept + dropped:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(rel + "\n")
+
+    batch = read_audit_lines(spark, str(root), min_date=min_date)
+    assert batch.columns == ["value"]
+    assert sorted(r.value for r in batch.collect()) == sorted(kept)
+    # pruned dirs are never listed, so no file under one reaches the scan
+    listed = {
+        unquote(f).split(str(root) + "/", 1)[1] for f in batch.inputFiles()
+    }
+    assert listed == set(kept)
+
+    query = write_memory(
+        stream_audit_lines(spark, str(root), min_date=min_date),
+        query_name=f"t_prune_{case}",
+    )
+    query.awaitTermination(120)
+    assert query.exception() is None
+    stream = spark.table(f"t_prune_{case}")
+    assert stream.columns == ["value"]
+    assert sorted(r.value for r in stream.collect()) == sorted(kept)
+
+
+def test_walk_lists_each_kept_dir_once(spark, tmp_path):
+    from flink_audit_sessions_example_spark.sources.audit_source import (
+        _hadoop_root,
+        _kept_paths,
+    )
+
+    for rel in (
+        "20200101/x/a.log",
+        "20220915/20200101/b.log",
+        "20220915/c.log",
+        "20221001/d.log",
+        "misc/e.log",
+    ):
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text("x\n")
+
+    class CountingFs:
+        def __init__(self, fs):
+            self.fs, self.listed = fs, []
+
+        def listStatus(self, path):
+            self.listed.append(path.toString())
+            return self.fs.listStatus(path)
+
+    fs, root = _hadoop_root(spark, str(tmp_path))
+    counting = CountingFs(fs)
+    paths = _kept_paths(counting, root, "20220601")
+    top = root.toString()
+    assert sorted(counting.listed) == sorted(
+        [top] + [f"{top}/{d}" for d in ("20220915", "20221001", "misc")]
+    )
+    # a dir with nothing pruned beneath it is one path
+    assert sorted(paths) == sorted(
+        f"{top}/{p}" for p in ("20220915/c.log", "20221001", "misc")
+    )
+    assert _kept_paths(fs, root, "20000101") == [top]
+
+
+def test_file_date_is_nearest_dated_dir_below_root(spark, tmp_path):
+    root = tmp_path / "20200101" / "audit"
+    for rel in ("20220915/x/a.log", "20220915/20221001/b.log", "misc/c.log"):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(rel + "\n")
+    rows = read_audit_lines(
+        spark, str(root), min_date="20000101", keep_file_date=True
+    ).collect()
+    assert {r.value: r.file_date for r in rows} == {
+        "20220915/x/a.log": "20220915",
+        "20220915/20221001/b.log": "20221001",
+        "misc/c.log": None,
+    }
