@@ -19,21 +19,24 @@ from pathlib import Path
 def load_properties(path: str | Path) -> dict[str, str]:
     """Parse a Java ``.properties`` file into a dict.
 
-    Supports the subset the reference relies on: ``key=value`` lines,
-    ``#``/``!`` comments, blank lines, and surrounding whitespace. (Parity
-    with ``ParameterTool.fromPropertiesFile`` at ``App.java:141``.)
+    Parity with ``java.util.Properties.load``, which
+    ``ParameterTool.fromPropertiesFile`` (``App.java:141``) uses: ``#``/``!``
+    comments and blank lines are skipped; the key ends at the first ``=``,
+    ``:`` or whitespace, and the value starts after any whitespace and at
+    most one ``=``/``:`` that follow it. Backslash escapes and line
+    continuations are not supported.
     """
     props: dict[str, str] = {}
     for raw in Path(path).read_text().splitlines():
         line = raw.strip()
         if not line or line.startswith(("#", "!")):
             continue
-        for sep in ("=", ":"):
-            if sep in line:
-                key, _, value = line.partition(sep)
-                props[key.strip()] = value.strip()
-                break
+        key, value = _PROPERTY.fullmatch(line).groups()
+        props[key] = value
     return props
+
+
+_PROPERTY = re.compile(r"([^=:\s]*)\s*[=:]?\s*(.*)")
 
 
 @dataclass
@@ -48,7 +51,6 @@ class AppConfig:
     # is kafka: ``params.get(PARAM_SESSION_OUTPUT, "kafka")``, App.java:150)
     kafka_topic: str | None = None
     kafka_options: dict[str, str] = field(default_factory=dict)
-    watermark_delay: str = "2 days"  # hard-coded in the reference, App.java:57
     #: Spark addition (no reference analog — Flink savepoints are cluster
     #: config): streaming checkpoint location, key ``session.checkpoint``;
     #: ``validate`` requires it.

@@ -1,8 +1,9 @@
 """``xform_format_string`` — the reference's sink-side string projection.
 
 ``App.java:69-73`` (stdout) and ``App.java:102-106`` (Kafka) both format
-each result as ``user='%s' denies=%d start=%d end=%d`` with epoch-millis
-window bounds. Pure Catalyst ``format_string`` — no Python UDF.
+each session of :func:`..operators.sessionize.audit_denied_sessions` as
+``user='%s' denies=%d start=%d end=%d`` with epoch-millis window bounds.
+Pure Catalyst ``format_string`` — no Python UDF.
 """
 
 from __future__ import annotations
@@ -11,15 +12,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def format_session_result(
-    sessions: DataFrame,
-    user_col: str = "reqUser",
-    count_col: str = "denies",
-    start_col: str = "start",
-    end_col: str = "end",
-    out_col: str = "value",
-) -> DataFrame:
-    """Project sessions to the reference's single-string sink format."""
+def format_session_result(sessions: DataFrame) -> DataFrame:
+    """Project ``(reqUser, denies, start, end)`` sessions to the reference's
+    single-string sink format, one ``value`` column."""
 
     def millis(c: str) -> Column:
         # unix_millis accepts only TIMESTAMP (LTZ); the cast makes the
@@ -31,9 +26,9 @@ def format_session_result(
     return sessions.select(
         F.format_string(
             "user='%s' denies=%d start=%d end=%d",
-            F.col(user_col),
-            F.col(count_col).cast("long"),
-            millis(start_col),
-            millis(end_col),
-        ).alias(out_col)
+            F.col("reqUser"),
+            F.col("denies").cast("long"),
+            millis("start"),
+            millis("end"),
+        ).alias("value")
     )

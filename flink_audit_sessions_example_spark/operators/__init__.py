@@ -5,7 +5,6 @@ windows with a denied-count aggregate, streaming-compatible.
 """
 
 from .sessionize import (  # noqa: F401
-    sessionize_denied_counts,
+    WATERMARK_DELAY,
     audit_denied_sessions,
-    with_event_time,
 )

@@ -2,10 +2,8 @@
 
 Every query is a pure function ``(spark, sf_dir) -> DataFrame`` over the
 driver's parquet tables. Keys follow SURVEY.md §2's operator inventory; the
-reference's audit pipeline maps onto the ``events`` table
-(``user_id`` ≈ ``reqUser``, ``ts`` ≈ ``evtTime``, ``event_type == 'error'``
-≈ ``result != 1`` denied predicate, ``floor(value)`` ≈ ``event_count``
-weight — FIXTURES.md §3).
+session keys feed the ``events`` table through :func:`_events_as_audits`
+(FIXTURES.md §3) into the same operator and formatter as the real job.
 
 Oracle-matching rules observed throughout:
 
@@ -26,27 +24,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.formatting import format_session_result
-from ..operators.sessionize import sessionize_denied_counts
-from ..sources.audit_source import read_audit_lines, read_audits
+from ..operators.sessionize import (
+    WATERMARK_DELAY,
+    audit_denied_sessions,
+    denied_count,
+)
+from ..sources.audit_source import read_audit_lines, read_audits, with_file_date
 from ..sources.audit_tree import audit_tree_path
 from ..sources.tables import load_table
 
 #: Session gap used by all event-session queries (readme.md:8 uses 600 s).
 GAP_SECONDS = 600
 
-def _denied() -> "F.Column":
-    """The denied-event predicate analog on the events table (FIXTURES.md §3).
 
-    Lazy (a function, not a module-level Column) because classic PySpark
-    requires an active SparkContext to build Column expressions.
-    """
-    return F.col("event_type") == "error"
+def _events_as_audits(events: DataFrame) -> DataFrame:
+    """The ``events`` table as audit records (FIXTURES.md §3): ``user_id`` →
+    ``reqUser``, ``ts`` → ``evtTime``, an ``'error'`` event is denied
+    (``result`` 0, else 1), and ``floor(value)`` is the ``event_count`` —
+    integral, so sums are exact and order-independent in both engines."""
+    return events.select(
+        F.col("user_id").alias("reqUser"),
+        F.col("ts").alias("evtTime"),
+        F.when(F.col("event_type") == "error", 0).otherwise(1).alias("result"),
+        F.floor(F.col("value")).alias("event_count"),
+    )
 
 
-def _weight() -> "F.Column":
-    """The event_count-weight analog: floor(value) — integral, so sums are
-    exact and order-independent in both engines."""
-    return F.floor(F.col("value"))
+def _event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(reqUser, denies, start, end)`` sessions of the ``events`` table."""
+    return audit_denied_sessions(
+        _events_as_audits(load_table(spark, sf_dir, "events")),
+        gap_seconds=GAP_SECONDS,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -59,16 +68,7 @@ def q_win_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user event-time session windows (gap 600 s), denied-weight sum,
     HAVING != 0. Reference core ``App.java:126-134``.
     """
-    return sessionize_denied_counts(
-        load_table(spark, sf_dir, "events"),
-        user_col="user_id",
-        time_col="ts",
-        denied=_denied(),
-        weight=_weight(),
-        gap_seconds=GAP_SECONDS,
-        user_alias="user_id",
-        count_alias="denies",
-    )
+    return _event_sessions(spark, sf_dir).withColumnRenamed("reqUser", "user_id")
 
 
 #: Gaps-and-islands sessionization — DuckDB has no session_window, so the
@@ -126,9 +126,7 @@ FROM base
 def q_xform_format_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``xform_format_string`` — the reference's sink projection
     ``user='%s' denies=%d start=%d end=%d`` (``App.java:69-73``)."""
-    return format_session_result(
-        q_win_session(spark, sf_dir), user_col="user_id"
-    )
+    return format_session_result(_event_sessions(spark, sf_dir))
 
 
 _FORMAT_ORACLE = f"""
@@ -178,13 +176,11 @@ def q_agg_denied_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``agg_denied_sum`` — the incremental UDAF collapsed to pure Catalyst:
     sum of weight over denied events (``AggregateDeniedCounts.java:5-34``),
     here per user without windows to isolate the aggregation semantics."""
-    events = load_table(spark, sf_dir, "events")
+    audits = _events_as_audits(load_table(spark, sf_dir, "events"))
     return (
-        events.where(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(_denied(), _weight()).otherwise(F.lit(0))).alias("denies")
-        )
+        audits.where(F.col("reqUser").isNotNull())
+        .groupBy(F.col("reqUser").alias("user_id"))
+        .agg(denied_count().alias("denies"))
     )
 
 
@@ -233,7 +229,7 @@ def q_time_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max event time - 2 days), i.e. what a final watermark would discard."""
     events = load_table(spark, sf_dir, "events")
     cutoff = events.agg(
-        (F.max("ts") - F.expr("INTERVAL 2 DAYS")).alias("cutoff")
+        (F.max("ts") - F.expr(f"INTERVAL {WATERMARK_DELAY}")).alias("cutoff")
     )
     return (
         events.join(F.broadcast(cutoff))
@@ -278,9 +274,8 @@ def q_src_file_datefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``src_file_datefilter`` — date-directory pruning
     (``DateFileFilter.java:11-39``): scan the same tree keeping only
     ``YYYYMMDD`` dirs >= 2024-01-15, count raw lines per kept day."""
-    lines = read_audit_lines(
-        spark, audit_tree_path(sf_dir), min_date="20240115", keep_file_date=True
-    )
+    path = audit_tree_path(sf_dir)
+    lines = with_file_date(read_audit_lines(spark, path, "20240115"), path)
     return lines.groupBy("file_date").agg(F.count(F.lit(1)).alias("n_lines"))
 
 

@@ -112,20 +112,15 @@ def with_file_date(lines: DataFrame, path: str) -> DataFrame:
 
 
 def read_audit_lines(
-    spark: SparkSession,
-    path: str,
-    min_date: str | None = None,
-    keep_file_date: bool = False,
+    spark: SparkSession, path: str, min_date: str | None = None
 ) -> DataFrame:
     """Batch: recursive text scan of the audit tree (one row per line),
     date dirs older than ``min_date`` pruned while listing."""
     reader = spark.read.format("text").option("recursiveFileLookup", "true")
     if min_date is None:
-        lines = reader.load(path)
-    else:
-        fs, root = _hadoop_root(spark, path)
-        lines = reader.load(_kept_paths(fs, root, min_date))
-    return with_file_date(lines, path) if keep_file_date else lines
+        return reader.load(path)
+    fs, root = _hadoop_root(spark, path)
+    return reader.load(_kept_paths(fs, root, min_date))
 
 
 def stream_audit_lines(
@@ -173,7 +168,7 @@ def stream_audit_lines(
     return lines.where(~pruned)
 
 
-def parse_audit_json(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_audit_json(lines: DataFrame) -> DataFrame:
     """``xform_parse_json`` + ``flt_valid_user``.
 
     ``from_json`` in PERMISSIVE mode reproduces the reference's lenient
@@ -183,7 +178,7 @@ def parse_audit_json(lines: DataFrame, value_col: str = "value") -> DataFrame:
     Null records and null ``reqUser`` are dropped (``App.java:52-53``).
     """
     parsed = lines.select(
-        F.from_json(F.col(value_col), AUDIT_SCHEMA, AUDIT_JSON_OPTIONS).alias(
+        F.from_json(F.col("value"), AUDIT_SCHEMA, AUDIT_JSON_OPTIONS).alias(
             "audit"
         )
     )
@@ -193,48 +188,6 @@ def parse_audit_json(lines: DataFrame, value_col: str = "value") -> DataFrame:
         )
         .select("audit.*")
     )
-
-
-def kafka_source_options(
-    *,
-    topic: str,
-    kafka_options: dict[str, str],
-    starting_offsets: str = "latest",
-) -> dict[str, str]:
-    """The EXACT option map handed to the Kafka ``DataStreamReader``:
-    ``subscribe`` + ``startingOffsets`` plus every ``kafka.``-prefixed
-    config property VERBATIM — the same pass-through contract as
-    :func:`..streaming.pipeline.kafka_sink_options` (``App.java:112-124``).
-    Pure function, pinned by the no-broker contract test."""
-    return {
-        "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        **kafka_options,
-    }
-
-
-def stream_audits_from_kafka(
-    spark: SparkSession,
-    *,
-    topic: str,
-    kafka_options: dict[str, str],
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """Kafka *source* twin of the engine's Kafka sink: subscribe to the
-    audit topic, treat each record value as one JSON audit line, parse
-    leniently. The reference only reads files (``App.java:45``), but its
-    deployment feeds Ranger audits through Kafka (``readme.md``), so a
-    complete replacement needs the read side too. ``kafka_options`` uses
-    the same ``kafka.``-prefix pass-through convention as the sink."""
-    reader = spark.readStream.format("kafka").options(
-        **kafka_source_options(
-            topic=topic,
-            kafka_options=kafka_options,
-            starting_offsets=starting_offsets,
-        )
-    )
-    lines = reader.load().selectExpr("CAST(value AS STRING) AS value")
-    return parse_audit_json(lines)
 
 
 def read_audits(

@@ -10,10 +10,14 @@ Reference pipeline (``App.java:136-162``):
 
 Spark re-expression: one streaming DataFrame plan; the file stream source
 discovers new files per micro-batch (trigger interval = the reference's
-poll interval); ``withWatermark`` + ``session_window`` replace the
-hand-written merge-able accumulator; the Kafka sink with a
-``checkpointLocation`` gives the same at-least-once guarantee
-(``DeliveryGuarantee.AT_LEAST_ONCE``, ``App.java:97``).
+poll interval); the session operator
+(:func:`..operators.sessionize.audit_denied_sessions`) watermarks a
+streaming input itself, and ``withWatermark`` + ``session_window`` replace
+the hand-written merge-able accumulator. :func:`start_session_query` builds
+the console or Kafka sink; the Kafka sink with a ``checkpointLocation``
+gives the same at-least-once guarantee (``DeliveryGuarantee.AT_LEAST_ONCE``,
+``App.java:97``). The memory, ``foreachBatch`` and Kafka file-twin sinks
+below serve tests and the benchmark.
 
 Streaming semantics notes (SURVEY.md §4 deltas):
 
@@ -57,35 +61,12 @@ def stream_denied_sessions(
         min_date=cfg.audit_min_date,
         max_files_per_trigger=max_files_per_trigger,
     )
-    return audit_denied_sessions(
-        audits,
-        gap_seconds=cfg.session_gap_seconds,
-        watermark_delay=cfg.watermark_delay,
-    )
+    return audit_denied_sessions(audits, gap_seconds=cfg.session_gap_seconds)
 
 
 # --------------------------------------------------------------------------
 # Sinks
 # --------------------------------------------------------------------------
-
-
-def write_console(
-    df: DataFrame,
-    *,
-    checkpoint_dir: str,
-    poll_seconds: int | None = None,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """``snk_stdout`` (``App.java:64-77``): append-mode console sink."""
-    writer = (
-        df.writeStream.format("console")
-        .outputMode("append")
-        .option("truncate", "false")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("audit-denied-sessions-print")
-    )
-    writer = _with_trigger(writer, poll_seconds, available_now)
-    return writer.start()
 
 
 def kafka_sink_options(
@@ -114,7 +95,7 @@ def kafka_payload(df: DataFrame) -> DataFrame:
     (message key → partition routing), both cast to string here. The
     reference serializes value-only (``App.java:89-96``, a
     SimpleStringSchema over the formatted result). Shared by
-    :func:`write_kafka` and the no-broker file twin
+    :func:`start_session_query`'s Kafka sink and the no-broker file twin
     (:func:`write_kafka_file_twin`) so the two payloads can never
     drift — the twin's e2e test therefore pins the real sink's wire
     schema."""
@@ -125,41 +106,6 @@ def kafka_payload(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def write_kafka(
-    df: DataFrame,
-    *,
-    topic: str,
-    kafka_options: dict[str, str],
-    checkpoint_dir: str,
-    poll_seconds: int | None = None,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """``snk_kafka`` (``App.java:79-110``): at-least-once Kafka sink.
-
-    ``df`` must carry a string ``value`` column (the formatted result;
-    an optional ``key`` column becomes the message key). Options come
-    from :func:`kafka_sink_options` (verbatim ``kafka.``-prefix
-    pass-through). At-least-once comes from checkpointed offsets +
-    non-transactional producer — the same guarantee as
-    ``DeliveryGuarantee.AT_LEAST_ONCE``. See README for a manual broker
-    smoke recipe (no broker exists in CI).
-    """
-    writer = (
-        kafka_payload(df)
-        .writeStream.format("kafka")
-        .options(
-            **kafka_sink_options(
-                topic=topic,
-                kafka_options=kafka_options,
-                checkpoint_dir=checkpoint_dir,
-            )
-        )
-        .queryName("audit-denied-sessions-kafka")
-    )
-    writer = _with_trigger(writer, poll_seconds, available_now)
-    return writer.start()
-
-
 def write_kafka_file_twin(
     df: DataFrame,
     *,
@@ -168,7 +114,7 @@ def write_kafka_file_twin(
     poll_seconds: int | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """No-broker end-to-end twin of :func:`write_kafka` (the one
+    """No-broker end-to-end twin of the Kafka sink (the one
     reference surface — ``App.java:79-110`` — a brokerless sandbox
     cannot drive for real): the IDENTICAL payload projection
     (:func:`kafka_payload`) rides the identical delivery machinery
@@ -270,20 +216,30 @@ def start_session_query(
     other sink, kafka without a topic, or a missing checkpoint, before the
     query is built."""
     cfg.validate()
-    sessions = stream_denied_sessions(spark, cfg)
-    formatted = format_session_result(sessions)
+    formatted = format_session_result(stream_denied_sessions(spark, cfg))
     if cfg.session_output == "kafka":
-        return write_kafka(
-            formatted,
-            topic=cfg.kafka_topic,
-            kafka_options=cfg.kafka_options,
-            checkpoint_dir=cfg.checkpoint_dir,
-            poll_seconds=cfg.audit_poll_seconds,
-            available_now=available_now,
+        # ``snk_kafka`` (App.java:79-110): at-least-once from checkpointed
+        # offsets + a non-transactional producer, the same guarantee as
+        # ``DeliveryGuarantee.AT_LEAST_ONCE``. No broker exists in CI; see
+        # README for a manual smoke recipe.
+        writer = (
+            kafka_payload(formatted)
+            .writeStream.format("kafka")
+            .options(
+                **kafka_sink_options(
+                    topic=cfg.kafka_topic,
+                    kafka_options=cfg.kafka_options,
+                    checkpoint_dir=cfg.checkpoint_dir,
+                )
+            )
         )
-    return write_console(
-        formatted,
-        checkpoint_dir=cfg.checkpoint_dir,
-        poll_seconds=cfg.audit_poll_seconds,
-        available_now=available_now,
-    )
+    else:
+        # ``snk_stdout`` (App.java:64-77): append-mode console sink
+        writer = (
+            formatted.writeStream.format("console")
+            .outputMode("append")
+            .option("truncate", "false")
+            .option("checkpointLocation", cfg.checkpoint_dir)
+        )
+    writer = writer.queryName(f"audit-denied-sessions-{cfg.session_output}")
+    return _with_trigger(writer, cfg.audit_poll_seconds, available_now).start()

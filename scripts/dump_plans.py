@@ -4,8 +4,7 @@ only — no actions) to <dir>/<key>_<suffix>.txt (--dir, default the
 git-ignored .plans/), plus a one-line structural summary per key:
 Exchange count, Python-eval node count, join strategies, scan count.
 
-Usage: python scripts/dump_plans.py --suffix before key...
-       python scripts/dump_plans.py --suffix after --top N
+Usage: python scripts/dump_plans.py [--dir D] --suffix before key...
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ import sys
 
 def main() -> int:
     args = sys.argv[1:]
-    out_dir, suffix, top_n = ".plans", "before", None
+    out_dir, suffix = ".plans", "before"
     keys = []
     i = 0
     while i < len(args):
@@ -25,8 +24,6 @@ def main() -> int:
             out_dir = args[i + 1]; i += 2
         elif args[i] == "--suffix":
             suffix = args[i + 1]; i += 2
-        elif args[i] == "--top":
-            top_n = int(args[i + 1]); i += 2
         else:
             keys.append(args[i]); i += 1
 
@@ -48,12 +45,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from flink_audit_sessions_example_spark.plans import QUERIES
-
-    if top_n is not None:
-        import json
-        rec = json.load(open("BENCH_SELF_sf0.1.json"))
-        ordered = sorted(rec["queries"], key=lambda k: -rec["queries"][k])
-        keys = ordered[:top_n]
 
     os.makedirs(out_dir, exist_ok=True)
     for key in keys:

@@ -13,6 +13,7 @@ from flink_audit_sessions_example_spark.sources import (
     parse_audit_json,
     read_audit_lines,
     read_audits,
+    with_file_date,
 )
 
 #: The reference's golden fixture, read VERBATIM from the reference
@@ -251,8 +252,8 @@ def test_file_date_is_nearest_dated_dir_below_root(spark, tmp_path):
     for rel in ("20220915/x/a.log", "20220915/20221001/b.log", "misc/c.log"):
         (root / rel).parent.mkdir(parents=True, exist_ok=True)
         (root / rel).write_text(rel + "\n")
-    rows = read_audit_lines(
-        spark, str(root), min_date="20000101", keep_file_date=True
+    rows = with_file_date(
+        read_audit_lines(spark, str(root), min_date="20000101"), str(root)
     ).collect()
     assert {r.value: r.file_date for r in rows} == {
         "20220915/x/a.log": "20220915",

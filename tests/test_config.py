@@ -4,6 +4,9 @@
 import pytest
 
 from flink_audit_sessions_example_spark.config import AppConfig, load_properties
+from flink_audit_sessions_example_spark.operators.sessionize import (
+    WATERMARK_DELAY,
+)
 
 EXAMPLE = """\
 # example config (readme.md:5-13)
@@ -28,6 +31,34 @@ def test_load_properties(tmp_path):
     assert "# example config (readme.md:5-13)" not in props
 
 
+@pytest.mark.parametrize(
+    "line, key, value",
+    [
+        # whitespace separates key and value (java.util.Properties.load)
+        ("audit.path /data/audit", "audit.path", "/data/audit"),
+        ("audit.path\t/data/audit", "audit.path", "/data/audit"),
+        # the first separator ends the key; a later '=' or ':' is value
+        (
+            'kafka.sasl.jaas.config:org.Foo required user="a=b";',
+            "kafka.sasl.jaas.config",
+            'org.Foo required user="a=b";',
+        ),
+        (
+            "session.checkpoint hdfs://nn:8020/ckpt",
+            "session.checkpoint",
+            "hdfs://nn:8020/ckpt",
+        ),
+        # whitespace, then at most one separator, then whitespace
+        ("kafka.topic  :=t", "kafka.topic", "=t"),
+    ],
+    ids=["space", "tab", "colon_before_equals", "space_before_colon", "one_sep"],
+)
+def test_load_properties_separators(tmp_path, line, key, value):
+    p = tmp_path / "app.properties"
+    p.write_text(line + "\n")
+    assert load_properties(p) == {key: value}
+
+
 def test_app_config(tmp_path):
     p = tmp_path / "app.properties"
     p.write_text(EXAMPLE)
@@ -43,7 +74,8 @@ def test_app_config(tmp_path):
         "kafka.bootstrap.servers": "broker:9093",
         "kafka.security.protocol": "SASL_SSL",
     }
-    assert cfg.watermark_delay == "2 days"
+    # hard-coded in the reference (App.java:57), not a properties key
+    assert WATERMARK_DELAY == "2 days"
     assert cfg.checkpoint_dir == "/data/ckpt/audit-sessions"
 
 
