@@ -16,22 +16,31 @@ Reference semantics (``App.java:126-134``):
 - ``flt_nonzero``     — drop sessions with 0 denies (``App.java:132-133``)
 
 Spark-first design: the whole pipeline is one declarative plan —
-``groupBy(session_window(evtTime, gap), reqUser).agg(denied_count())`` — so
-Catalyst plans partial (map-side) + final aggregation and the streaming
-state store keeps the O(1) mergeable accumulator the reference hand-wrote.
-The only shuffle is the exchange on the grouping key, exactly the
-reference's one ``keyBy`` shuffle. At 100 TB the session-window aggregation
-shuffles once on (user) and AQE handles skewed users; no event buffering
-beyond what session merge requires.
+``groupBy(session_window(evtTime, gap), reqUser).agg(denied_count())`` —
+and the streaming state store keeps the O(1) mergeable accumulator the
+reference hand-wrote. The only shuffle is the exchange on the user key,
+exactly the reference's one ``keyBy`` shuffle, and
+:func:`session_partitions` sizes it: one partition per core, in batch
+(here) and in every stream the engine starts (``streaming/pipeline.py``).
+Spark's default of 200 makes every batch map task write 200 shuffle files
+and every micro-batch load and commit 200 state stores, whatever the data
+size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: The reference's hard-coded bounded out-of-orderness (``App.java:57``).
 WATERMARK_DELAY = "2 days"
+
+
+def session_partitions(spark: SparkSession) -> int:
+    """Partition count of the session shuffle: one per core of the
+    cluster. A streaming checkpoint keeps the count it was first started
+    with, so an older checkpoint resumes at its own count."""
+    return spark.sparkContext.defaultParallelism
 
 
 def denied_count() -> Column:
@@ -60,6 +69,9 @@ def audit_denied_sessions(audits: DataFrame, gap_seconds: int) -> DataFrame:
     - a streaming input is watermarked on ``evtTime`` by
       :data:`WATERMARK_DELAY`; on a batch input watermarks are meaningless
       (the data is complete), so the same operator serves both modes;
+    - a batch input is hash-partitioned on ``reqUser`` into
+      :func:`session_partitions` partitions; that is the plan's one
+      exchange (a stream's count is set where the query starts);
     - a session window is [first event, last event + gap): every event
       spawns [ts, ts+gap) and overlapping windows per user merge — Spark's
       ``session_window`` (3.2+) has identical merge semantics to Flink's
@@ -70,6 +82,10 @@ def audit_denied_sessions(audits: DataFrame, gap_seconds: int) -> DataFrame:
     keyed = audits.where(F.col("reqUser").isNotNull())
     if keyed.isStreaming:
         keyed = keyed.withWatermark("evtTime", WATERMARK_DELAY)
+    else:
+        keyed = keyed.repartition(
+            session_partitions(keyed.sparkSession), "reqUser"
+        )
     return (
         keyed.groupBy(
             F.session_window(F.col("evtTime"), f"{int(gap_seconds)} seconds")

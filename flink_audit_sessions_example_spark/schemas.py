@@ -47,8 +47,10 @@ AUDIT_SCHEMA = T.StructType(
 #: ``from_json`` options reproducing the reference's lenient Jackson parse
 #: (``Audit.java:39-47``): PERMISSIVE mode ignores unknown keys and yields a
 #: null struct for malformed lines; the timestamp format matches
-#: ``Audit.java:17``.
+#: ``Audit.java:17``, read in UTC as Jackson does (its ``@JsonFormat``
+#: default zone), not in ``spark.sql.session.timeZone``.
 AUDIT_JSON_OPTIONS = {
     "timestampFormat": "yyyy-MM-dd HH:mm:ss.SSS",
+    "timeZone": "UTC",
     "mode": "PERMISSIVE",
 }

@@ -174,7 +174,8 @@ def parse_audit_json(lines: DataFrame) -> DataFrame:
     ``from_json`` in PERMISSIVE mode reproduces the reference's lenient
     Jackson config exactly (``Audit.java:40,44-45``): unknown keys ignored,
     malformed row → null struct, missing keys → null fields. The timestamp
-    format option preserves ``yyyy-MM-dd HH:mm:ss.SSS`` (``Audit.java:17``).
+    options preserve ``yyyy-MM-dd HH:mm:ss.SSS`` (``Audit.java:17``), read
+    in UTC whatever the session time zone.
     Null records and null ``reqUser`` are dropped (``App.java:52-53``).
     """
     parsed = lines.select(

@@ -17,7 +17,8 @@ the hand-written merge-able accumulator. :func:`start_session_query` builds
 the console or Kafka sink; the Kafka sink with a ``checkpointLocation``
 gives the same at-least-once guarantee (``DeliveryGuarantee.AT_LEAST_ONCE``,
 ``App.java:97``). The memory, ``foreachBatch`` and Kafka file-twin sinks
-below serve tests and the benchmark.
+below serve tests and the benchmark. Every query starts through
+:func:`_start`, which gives its session state one partition per core.
 
 Streaming semantics notes (SURVEY.md §4 deltas):
 
@@ -38,8 +39,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import AppConfig
 from ..functions.formatting import format_session_result
-from ..operators.sessionize import audit_denied_sessions
+from ..operators.sessionize import audit_denied_sessions, session_partitions
 from ..sources.audit_source import stream_audits
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def stream_denied_sessions(
@@ -159,8 +162,7 @@ def write_memory(
         .outputMode("append")
         .queryName(query_name)
     )
-    writer = _with_trigger(writer, None, available_now)
-    return writer.start()
+    return _start(df, writer, None, available_now)
 
 
 def write_foreach_batch(
@@ -187,21 +189,55 @@ def write_foreach_batch(
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
     )
-    writer = _with_trigger(writer, poll_seconds, available_now)
-    return writer.start()
+    return _start(df, writer, poll_seconds, available_now)
 
 
-def _with_trigger(writer, poll_seconds: int | None, available_now: bool):
+def _start(
+    df: DataFrame, writer, poll_seconds: int | None, available_now: bool
+) -> StreamingQuery:
+    """Apply the trigger and start ``writer``, the stream of ``df``, with
+    :func:`session_partitions` shuffle partitions, so the session state
+    has one store per core. ``start()`` clones ``df``'s session and the
+    query keeps the clone's count, so the caller's
+    ``spark.sql.shuffle.partitions`` is changed only while ``start()``
+    runs. A checkpoint's count, frozen at its first start, still wins."""
     if available_now:
-        return writer.trigger(availableNow=True)
-    if poll_seconds is not None:
-        return writer.trigger(processingTime=f"{poll_seconds} seconds")
-    return writer
+        writer = writer.trigger(availableNow=True)
+    elif poll_seconds is not None:
+        writer = writer.trigger(processingTime=f"{poll_seconds} seconds")
+    conf = df.sparkSession.conf
+    caller = conf.get(_SHUFFLE_PARTITIONS, None)
+    conf.set(_SHUFFLE_PARTITIONS, str(session_partitions(df.sparkSession)))
+    try:
+        return writer.start()
+    finally:
+        if caller is None:
+            conf.unset(_SHUFFLE_PARTITIONS)
+        else:
+            conf.set(_SHUFFLE_PARTITIONS, caller)
 
 
 # --------------------------------------------------------------------------
 # App entry (``main``, App.java:136-162)
 # --------------------------------------------------------------------------
+
+#: The Kafka sink's provider; it ships in ``spark-sql-kafka-0-10``, not in
+#: Spark's own jars.
+_KAFKA_PROVIDER = "org.apache.spark.sql.kafka010.KafkaSourceProvider"
+
+
+def _require_kafka_connector(spark: SparkSession) -> None:
+    """Fail with the package to add when the Kafka connector is not on
+    Spark's classpath; Spark's own error names only its integration guide."""
+    jvm = spark.sparkContext._jvm
+    if jvm.org.apache.spark.util.Utils.classIsLoadable(_KAFKA_PROVIDER):
+        return
+    scala = jvm.scala.util.Properties.versionNumberString().rsplit(".", 1)[0]
+    raise RuntimeError(
+        "session.output=kafka needs the Kafka connector, which is not on "
+        "Spark's classpath: start the job with --packages "
+        f"org.apache.spark:spark-sql-kafka-0-10_{scala}:{spark.version}"
+    )
 
 
 def start_session_query(
@@ -214,10 +250,12 @@ def start_session_query(
     ``cfg.session_output`` ∈ {"kafka", "print"} (``App.java:150-159``),
     checkpointed at ``cfg.checkpoint_dir``. ``cfg.validate()`` rejects any
     other sink, kafka without a topic, or a missing checkpoint, before the
-    query is built."""
+    query is built; kafka without the connector on Spark's classpath
+    raises ``RuntimeError`` naming the package to add."""
     cfg.validate()
     formatted = format_session_result(stream_denied_sessions(spark, cfg))
     if cfg.session_output == "kafka":
+        _require_kafka_connector(spark)
         # ``snk_kafka`` (App.java:79-110): at-least-once from checkpointed
         # offsets + a non-transactional producer, the same guarantee as
         # ``DeliveryGuarantee.AT_LEAST_ONCE``. No broker exists in CI; see
@@ -242,4 +280,4 @@ def start_session_query(
             .option("checkpointLocation", cfg.checkpoint_dir)
         )
     writer = writer.queryName(f"audit-denied-sessions-{cfg.session_output}")
-    return _with_trigger(writer, cfg.audit_poll_seconds, available_now).start()
+    return _start(formatted, writer, cfg.audit_poll_seconds, available_now)

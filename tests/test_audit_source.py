@@ -112,6 +112,35 @@ def test_parse_reference_golden_file_verbatim(spark, tmp_path):
     assert recon == actual
 
 
+def test_evt_time_parsed_in_utc_whatever_the_session_zone(spark, tmp_path):
+    """``evtTime`` carries no zone; Jackson reads it in UTC, its
+    ``@JsonFormat`` default, whatever the JVM zone. A session's ``start``
+    must not move with ``spark.sql.session.timeZone``."""
+    from flink_audit_sessions_example_spark.functions.formatting import (
+        format_session_result,
+    )
+    from flink_audit_sessions_example_spark.operators import (
+        audit_denied_sessions,
+    )
+
+    (tmp_path / "audit.log").write_text(json.dumps({**KAFKA_1, "result": 0}))
+    key = "spark.sql.session.timeZone"
+    zone = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        sessions = audit_denied_sessions(
+            read_audits(spark, str(tmp_path)), gap_seconds=600
+        )
+        values = [r.value for r in format_session_result(sessions).collect()]
+    finally:
+        spark.conf.set(key, zone)
+    start = dt.datetime(2022, 9, 15, 11, 0, 16, 271000, tzinfo=dt.timezone.utc)
+    start_ms = int(start.timestamp() * 1000)
+    assert values == [
+        f"user='wdyson' denies=1 start={start_ms} end={start_ms + 600_000}"
+    ]
+
+
 def test_malformed_and_null_user_dropped(spark, audit_tree):
     users = {r["reqUser"] for r in read_audits(spark, audit_tree).collect()}
     assert users == {"wdyson", "bob", "ancient", "undated"}

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 import shutil
 from pathlib import Path
 
@@ -97,6 +98,15 @@ def audit_tree(tmp_path):
         _line("flush", 1, 1, "2022-09-29 12:00:00.000") + "\n"
     )
     return tmp_path
+
+
+def _state_partitions(query) -> set:
+    """The state partition counts a query's progress reports show."""
+    return {
+        op["numShufflePartitions"]
+        for progress in query.recentProgress
+        for op in progress["stateOperators"]
+    }
 
 
 def _cfg(audit_tree, **over):
@@ -254,6 +264,60 @@ def test_kafka_sink_requires_topic(spark, audit_tree, tmp_path):
         )
 
 
+def test_kafka_sink_names_missing_connector(spark, audit_tree, tmp_path):
+    """pyspark's own jars hold no Kafka connector; the Kafka job fails
+    before its query starts, naming the package to add, where Spark
+    alone would name only its integration guide."""
+    with pytest.raises(RuntimeError, match="spark-sql-kafka-0-10_2.13:"):
+        start_session_query(
+            spark,
+            _cfg(
+                audit_tree,
+                session_output="kafka",
+                kafka_topic="audit-sessions",
+                checkpoint_dir=str(tmp_path / "ckpt4"),
+            ),
+            available_now=True,
+        )
+    assert not spark.streams.active
+
+
+def test_session_shuffle_is_one_partition_per_core(spark, audit_tree):
+    """The session shuffle has one partition per core in batch and in a
+    started stream, and neither changes the caller's
+    ``spark.sql.shuffle.partitions``."""
+    from flink_audit_sessions_example_spark.operators import (
+        audit_denied_sessions,
+    )
+    from flink_audit_sessions_example_spark.sources import read_audits
+
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        sessions = audit_denied_sessions(
+            read_audits(spark, str(audit_tree)), gap_seconds=1200
+        )
+        plan = sessions._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert re.search(
+            rf"Exchange hashpartitioning\(reqUser#\d+, {cores}\)", plan
+        ), plan
+        assert spark.conf.get(key) == "7"
+
+        query = write_memory(
+            stream_denied_sessions(spark, _cfg(audit_tree)),
+            query_name="t_stream_partitions",
+        )
+        assert spark.conf.get(key) == "7"
+        query.awaitTermination(120)
+        assert query.exception() is None
+    finally:
+        spark.conf.set(key, caller)
+    assert _state_partitions(query) == {cores}
+
+
 def test_kafka_option_contract_reference_passthrough(tmp_path):
     """No-broker contract test for the Kafka boundary (``App.java:112-124``
     parity): a reference-style properties file's ``kafka.``-prefixed keys
@@ -302,7 +366,7 @@ def test_kafka_option_contract_reference_passthrough(tmp_path):
     }
 
 
-def test_session_state_recovers_across_restart(spark, tmp_path):
+def test_session_state_recovers_across_restart(spark, tmp_path, monkeypatch):
     """Checkpointed session-window STATE must survive a stop/start and
     MERGE with post-restart events — the Spark analog of the Flink
     savepoint recovery the reference's ``uid()``s exist for
@@ -314,7 +378,12 @@ def test_session_state_recovers_across_restart(spark, tmp_path):
     checkpoint. Run 2 — a NEW query resumed from the same checkpoint —
     adds a second carol event 10 min later (inside the 1200 s gap) and a
     clock event that advances the watermark: carol must emit ONE merged
-    session counting BOTH events, with bounds spanning them."""
+    session counting BOTH events, with bounds spanning them.
+
+    Run 1 starts at Spark's default of 200 state partitions, as engines
+    before the one-partition-per-core rule did; run 2 starts under that
+    rule and must keep the 200 the checkpoint froze."""
+    from flink_audit_sessions_example_spark.streaming import pipeline
     from flink_audit_sessions_example_spark.streaming.pipeline import (
         stream_denied_sessions,
         write_foreach_batch,
@@ -349,12 +418,14 @@ def test_session_state_recovers_across_restart(spark, tmp_path):
         return fn
 
     run1: list = []
-    q1 = write_foreach_batch(
-        stream_denied_sessions(spark, cfg),
-        collect_into(run1),
-        checkpoint_dir=ckpt,
-        available_now=True,
-    )
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "session_partitions", lambda _: 200)
+        q1 = write_foreach_batch(
+            stream_denied_sessions(spark, cfg),
+            collect_into(run1),
+            checkpoint_dir=ckpt,
+            available_now=True,
+        )
     q1.awaitTermination(120)
     assert [(u, n) for u, n, *_ in run1] == [("alice", 7)]
 
@@ -383,6 +454,7 @@ def test_session_state_recovers_across_restart(spark, tmp_path):
     _, _, start, end = run2[0]
     assert start == dt.datetime(2022, 9, 29, 11, 0, 0)
     assert end == dt.datetime(2022, 9, 29, 11, 30, 0)  # last event + 1200 s
+    assert _state_partitions(q1) == _state_partitions(q2) == {200}
 
 
 #: Session-state checkpoint written by an earlier engine (see the test).
@@ -447,12 +519,7 @@ def test_checkpoint_from_earlier_engine_resumes(spark, tmp_path):
     assert [r.value for r in spark.read.parquet(out).collect()] == [
         f"user='carol' denies=7 start={ms(start)} end={ms(end)}"
     ]
-    partitions = {
-        op["numShufflePartitions"]
-        for progress in query.recentProgress
-        for op in progress["stateOperators"]
-    }
-    assert partitions == {2}
+    assert _state_partitions(query) == {2}
     assert sorted(p.name for p in (ckpt / "state" / "0").iterdir()) == [
         "0",
         "1",
