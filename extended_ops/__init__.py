@@ -5,7 +5,7 @@ The audit package (:mod:`flink_audit_sessions_example_spark`) holds only
 what the reference pipeline reaches: the file source, the sessionizer,
 the streaming job and the 11 SURVEY.md §2 registry keys. Everything
 else the engine grew — dedup / similarity / text / corpus / sketch /
-time-series operators, their ~215 registry keys, the hand-written
+time-series operators, their ~212 registry keys, the hand-written
 streaming state machines and the parquet sinks — lives here, imports the
 audit package but is never imported by it.
 

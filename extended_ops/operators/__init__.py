@@ -1,2 +1,2 @@
 """Extended batch operators: dedup, similarity, text, corpus, sketches,
-time series, quantiles, quality, graph and relational helpers."""
+time series, quantiles, quality and relational helpers."""

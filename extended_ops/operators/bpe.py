@@ -18,9 +18,8 @@ DataFrame jobs:
   (``aggregate`` higher-order function — greedy left-to-right
   non-overlapping, the exact Sennrich semantics, measured) applied only
   to words whose symbol arrays contain the pair. ``localCheckpoint``
-  per iteration cuts the lineage (the ``pagerank`` lesson: the next
-  iteration's top-1 action would otherwise re-execute every
-  uncheckpointed merge).
+  per iteration cuts the lineage: the next iteration's top-1 action
+  would otherwise re-execute every uncheckpointed merge.
 - Determinism: ties on pair count break by pair lexicographic order —
   the same corpus always learns the same merge list, on any
   partitioning.

@@ -1,10 +1,9 @@
-"""Registry batch r14: five capability families. Each key is a complete
+"""Registry batch r14: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity.
 
 Families: JSON schema profiling (key/cardinality discovery over
-semi-structured payloads), per-node triangle counts (near-dup-cluster
-density / clustering-coefficient numerator), behavioral-regularity
+semi-structured payloads), behavioral-regularity
 audit (planted periodic bots), leave-one-out k-NN classification (the
 embedding-quality evaluation, consuming the r13 k-NN graph), and
 size-2 association rules (support/confidence/lift over order baskets).
@@ -19,11 +18,9 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as S
 from ..operators.baskets import association_rules
-from ..operators.graph import triangle_counts
 from ..operators.profile import json_key_stats
 from ..operators.quality import regularity_audit
 from ..sources.tables import load_table
-from .extended import DEDUP_EMBED_TAU, _DEDUP_EMBED_ORACLE
 from .staged_r13 import KNN_K, _SIM_KNN_GRAPH_ORACLE
 
 # --------------------------------------------------------------------------
@@ -102,40 +99,6 @@ SELECT key,
        CAST(COUNT(*) AS BIGINT) AS n_distinct_values
 FROM per_kv, total
 GROUP BY key, total.n_rows
-"""
-
-# --------------------------------------------------------------------------
-# graph_triangles — near-dup-graph density
-# --------------------------------------------------------------------------
-
-
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``graph_triangles`` — per-node triangle counts on the
-    embedding-cosine near-dup graph (the registered ``dedup_embed``
-    pair relation as edges): cliques are true duplicate groups,
-    triangle-free stars are threshold artifacts
-    (:func:`~..operators.graph.triangle_counts` — the ordered-wedge
-    join, each triangle found exactly once)."""
-    pairs = S.cosine_pairs_above(
-        load_table(spark, sf_dir, "embeddings", spread=False),
-        threshold=DEDUP_EMBED_TAU,
-    ).select("id_a", "id_b")
-    return triangle_counts(pairs).withColumnRenamed("node", "vec_id")
-
-
-_GRAPH_TRIANGLES_ORACLE = f"""
-WITH e AS (
-  SELECT id_a, id_b FROM ({_DEDUP_EMBED_ORACLE})
-), w AS (
-  SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
-  FROM e e1 JOIN e e2 ON e2.id_a = e1.id_b
-), t AS (
-  SELECT a, b, c FROM w JOIN e e3 ON e3.id_a = w.a AND e3.id_b = w.c
-), corners AS (
-  SELECT unnest([a, b, c]) AS vec_id FROM t
-)
-SELECT vec_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
-FROM corners GROUP BY 1
 """
 
 # --------------------------------------------------------------------------
@@ -355,7 +318,6 @@ CROSS JOIN nb
 
 STAGED_R14_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "xform_props_schema": q_xform_props_schema,
-    "graph_triangles": q_graph_triangles,
     "dq_bot_regularity": q_dq_bot_regularity,
     "sim_knn_classify": q_sim_knn_classify,
     "rel_assoc_rules": q_rel_assoc_rules,
@@ -363,7 +325,6 @@ STAGED_R14_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 STAGED_R14_ORACLES: dict[str, str] = {
     "xform_props_schema": _XFORM_PROPS_SCHEMA_ORACLE,
-    "graph_triangles": _GRAPH_TRIANGLES_ORACLE,
     "dq_bot_regularity": _DQ_BOT_REGULARITY_ORACLE,
     "sim_knn_classify": _SIM_KNN_CLASSIFY_ORACLE,
     "rel_assoc_rules": _REL_ASSOC_RULES_ORACLE,

@@ -1,12 +1,9 @@
-"""Registry batch r17: five capability families. Each key is a complete
+"""Registry batch r17: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r17.py`` holds its content checks.
 
-Families: iterative PageRank promoted into the ORACLED class (fixed
-5-iteration sweep with per-iteration quantization, unrolled-CTE
-oracle — the first fixpoint registration whose every iteration
-hash-checks), LM backoff-tier coverage (the hash-exact face of
+Families: LM backoff-tier coverage (the hash-exact face of
 stupid-backoff scoring — integer tier counts, no libm in the oracle
 path), CUSUM level-shift detection (the prefix-sum identity, exact
 integer-scaled arithmetic), the TPC-H Q21 "only-late supplier" shape
@@ -24,134 +21,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import pagerank
 from ..operators.lm import backoff_tier_counts, train_ngram_counts
 from ..operators.quality import BENFORD_SHARES, benford_audit
 from ..operators.text import TOKEN_PATTERN
 from ..operators.timeseries import cusum_changepoints
 from ..sources.tables import load_table
-
-# --------------------------------------------------------------------------
-# graph_pagerank — iterative authority scoring, oracled
-# --------------------------------------------------------------------------
-
-PR_ITERS = 5
-PR_DAMPING = 0.85
-#: scaled-integer iteration (see pagerank ``exact_scale``): ranks are
-#: BIGINTs in units of 1e-9, per-edge contributions are integral
-#: divisions and per-vertex sums exact BIGINT sums — summation order
-#: cannot perturb a bit, so cross-engine hash parity holds BY
-#: CONSTRUCTION (the former per-iteration 9dp rounding pinned ranks
-#: only with high probability: a contribution sum within float noise
-#: of a rounding boundary could round apart — r12 advice #2).
-PR_SCALE = 10**9
-
-
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``graph_pagerank`` — 5-iteration PageRank over the SYMMETRIZED
-    customer–part co-purchase graph (vertex ``2·custkey`` for
-    customers, ``2·partkey+1`` for parts; every distinct (customer,
-    part) order relationship contributes both directions). Symmetric
-    by construction means NO dangling vertices, so the dangling-mass
-    scalar is exactly 0 on both engines and the whole per-iteration
-    recurrence is rank_s' = 150000000 + floor(0.85·Σ rank_s div
-    outdeg) in exact scaled-BIGINT arithmetic — the unrolled-CTE
-    oracle replays it term for term bit-exactly
-    (:func:`~..operators.graph.pagerank` with ``exact_scale``;
-    iterative-construction bench class, like ``dedup_cluster``).
-
-    Scale: per iteration ONE keyed shuffle join (O(V) ranks ⨝ O(E)
-    edges) + one map-side-combining aggregation; lineage cut per round
-    by localCheckpoint. At 100 TB the edge relation is the crawl link
-    graph — same plan, AQE handling hub skew."""
-    orders = load_table(spark, sf_dir, "orders", spread=False)
-    li = load_table(spark, sf_dir, "lineitem", spread=False)
-    cp = (
-        orders.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(
-            F.col("o_custkey").isNotNull()
-            & F.col("l_partkey").isNotNull()
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("cv"),
-            (F.col("l_partkey") * 2 + 1).alias("pv"),
-        )
-        .distinct()
-    )
-    # both directions via ONE explode (r15): the self-union form
-    # referenced the cp join+distinct subtree twice
-    edges = cp.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("cv").alias("src"), F.col("pv").alias("dst")),
-                F.struct(F.col("pv").alias("src"), F.col("cv").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    ranks = pagerank(
-        edges,
-        damping=PR_DAMPING,
-        max_iter=PR_ITERS,
-        exact_scale=PR_SCALE,
-    )
-    return ranks.select(
-        "vertex", F.round(F.col("rank"), 6).alias("rank")
-    )
-
-
-def _pr_oracle() -> str:
-    base = """
-WITH cp AS (
-  SELECT DISTINCT o.o_custkey * 2 AS cv, l.l_partkey * 2 + 1 AS pv
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  WHERE o.o_custkey IS NOT NULL AND l.l_partkey IS NOT NULL
-), edges AS (
-  SELECT cv AS src, pv AS dst FROM cp UNION ALL SELECT pv, cv FROM cp
-), vertices AS (
-  SELECT DISTINCT src AS vertex FROM edges
-), outdeg AS (
-  SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY 1
-), r0 AS (
-  SELECT vertex, CAST({scale} AS BIGINT) AS rank FROM vertices
-)"""
-    # scaled-BIGINT recurrence, term for term the exact_scale loop:
-    # integral division per edge (DuckDB `//` == Spark `div` for
-    # nonnegative ranks), BIGINT sums (cast back down: DuckDB types
-    # SUM(BIGINT) as HUGEINT — the r10 red-row class), one
-    # correctly-rounded double multiply, FLOOR back to BIGINT.
-    step = """
-, r{k} AS (
-  SELECT v.vertex,
-         CAST({base_s} AS BIGINT)
-           + CAST(FLOOR(CAST({damping} AS DOUBLE)
-                        * COALESCE(c.c, CAST(0 AS BIGINT)))
-                  AS BIGINT) AS rank
-  FROM vertices v
-  LEFT JOIN (
-    SELECT e.dst AS vertex, CAST(SUM(r.rank // o.outdeg) AS BIGINT) AS c
-    FROM r{p} r
-    JOIN edges e ON r.vertex = e.src
-    JOIN outdeg o ON o.src = e.src
-    GROUP BY e.dst
-  ) c ON c.vertex = v.vertex
-)"""
-    sql = base.format(scale=PR_SCALE)
-    for k in range(1, PR_ITERS + 1):
-        sql += step.format(
-            k=k,
-            p=k - 1,
-            base_s=round((1.0 - PR_DAMPING) * PR_SCALE),
-            damping=PR_DAMPING,
-        )
-    sql += (
-        f"\nSELECT vertex, "
-        f"ROUND(rank / CAST({PR_SCALE} AS DOUBLE), 6) AS rank "
-        f"FROM r{PR_ITERS}"
-    )
-    return sql
-
-
-_GRAPH_PAGERANK_ORACLE = _pr_oracle()
 
 # --------------------------------------------------------------------------
 # lm_backoff_tiers — hash-exact LM coverage scoring
@@ -504,7 +378,6 @@ _DQ_BENFORD_ORACLE = _benford_oracle()
 # --------------------------------------------------------------------------
 
 STAGED_R17_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "graph_pagerank": q_graph_pagerank,
     "lm_backoff_tiers": q_lm_backoff_tiers,
     "win_changepoint": q_win_changepoint,
     "rel_supplier_delay": q_rel_supplier_delay,
@@ -512,7 +385,6 @@ STAGED_R17_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 STAGED_R17_ORACLES: dict[str, str] = {
-    "graph_pagerank": _GRAPH_PAGERANK_ORACLE,
     "lm_backoff_tiers": _LM_BACKOFF_TIERS_ORACLE,
     "win_changepoint": _WIN_CHANGEPOINT_ORACLE,
     "rel_supplier_delay": _REL_SUPPLIER_DELAY_ORACLE,

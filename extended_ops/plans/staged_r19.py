@@ -1,4 +1,4 @@
-"""Registry batch r19: five capability families. Each key is a complete
+"""Registry batch r19: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r19.py`` holds its content checks.
@@ -9,9 +9,8 @@ sketches hash-check row-for-row against a direct build over the union
 cross-engine), the TPC-H Q17 small-quantity revenue shape in exact
 cent arithmetic, soft deduplication (per-document sampling weights
 1/|cluster| — the keep-all-downweight-duplicates policy pretraining
-mixtures actually use), integer-exact per-bucket z-score anomalies,
-and co-purchase graph degree statistics (the structural profile read
-before running ``graph_pagerank``).
+mixtures actually use), and integer-exact per-bucket z-score
+anomalies.
 """
 
 from __future__ import annotations
@@ -287,84 +286,12 @@ FROM zs
 """
 
 # --------------------------------------------------------------------------
-# graph_degree_stats — structural profile of the co-purchase graph
-# --------------------------------------------------------------------------
-
-
-def q_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``graph_degree_stats`` — per vertex side of the symmetrized
-    customer–part co-purchase graph (the ``graph_pagerank`` relation):
-    vertex count, min/max/mean degree — the structural profile that
-    decides iteration counts and skew handling BEFORE running the
-    expensive ranking (a hub with degree ≈ |V| calls for AQE skew
-    splits; a mean degree near 1 means components are tiny and CC
-    converges in 2 rounds). Exact integers plus one rounded mean."""
-    orders = load_table(spark, sf_dir, "orders", spread=False)
-    li = load_table(spark, sf_dir, "lineitem", spread=False)
-    cp = (
-        orders.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .where(
-            F.col("o_custkey").isNotNull()
-            & F.col("l_partkey").isNotNull()
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("cv"),
-            (F.col("l_partkey") * 2 + 1).alias("pv"),
-        )
-        .distinct()
-    )
-    # both vertex sides via ONE explode (r15): the self-union form
-    # referenced the cp join+distinct subtree twice
-    deg = (
-        cp.select(
-            F.explode(F.array(F.col("cv"), F.col("pv"))).alias("vertex")
-        )
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-    )
-    side = F.when(
-        F.col("vertex") % 2 == 0, F.lit("customer")
-    ).otherwise(F.lit("part"))
-    return (
-        deg.groupBy(side.alias("side"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vertices"),
-            F.min("_deg").alias("min_degree"),
-            F.max("_deg").alias("max_degree"),
-            F.round(
-                F.sum("_deg") / F.count(F.lit(1)).cast("double"), 6
-            ).alias("mean_degree"),
-        )
-    )
-
-
-_GRAPH_DEGREE_STATS_ORACLE = """
-WITH cp AS (
-  SELECT DISTINCT o.o_custkey * 2 AS cv, l.l_partkey * 2 + 1 AS pv
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  WHERE o.o_custkey IS NOT NULL AND l.l_partkey IS NOT NULL
-), deg AS (
-  SELECT vertex, COUNT(*) AS d
-  FROM (
-    SELECT cv AS vertex FROM cp UNION ALL SELECT pv FROM cp
-  ) GROUP BY vertex
-)
-SELECT CASE WHEN vertex % 2 = 0 THEN 'customer' ELSE 'part' END AS side,
-       COUNT(*) AS n_vertices,
-       MIN(d) AS min_degree,
-       MAX(d) AS max_degree,
-       ROUND(SUM(d) / CAST(COUNT(*) AS DOUBLE), 6) AS mean_degree
-FROM deg GROUP BY 1
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R19_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "agg_quantile_merge": q_agg_quantile_merge,
     "rel_small_quantity": q_rel_small_quantity,
     "corpus_soft_dedup": q_corpus_soft_dedup,
     "win_zscore": q_win_zscore,
-    "graph_degree_stats": q_graph_degree_stats,
 }
 
 STAGED_R19_ORACLES: dict[str, str] = {
@@ -372,5 +299,4 @@ STAGED_R19_ORACLES: dict[str, str] = {
     "rel_small_quantity": _REL_SMALL_QUANTITY_ORACLE,
     "corpus_soft_dedup": _CORPUS_SOFT_DEDUP_ORACLE,
     "win_zscore": _WIN_ZSCORE_ORACLE,
-    "graph_degree_stats": _GRAPH_DEGREE_STATS_ORACLE,
 }

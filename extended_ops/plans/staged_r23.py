@@ -444,8 +444,8 @@ def q_sim_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     double cannot straddle a boundary), and each vector goes to the
     centroid minimizing the exact BIGINT squared distance (ties to the
     smaller label — deterministic argmin, the cusum rule). No float
-    enters any comparison: parity is by construction, the
-    ``graph_pagerank`` exact_scale argument applied to geometry.
+    enters any comparison: parity is by construction (scaled-integer
+    arithmetic, so summation order cannot perturb a bit).
 
     Scale: the per-label sums collapse the exploded (label, dim, q)
     relation map-side to O(labels × dims); centroids re-assemble to

@@ -503,7 +503,6 @@ def materialize_cdc_stream_partitioned(
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
         poll_seconds=poll_seconds,
-        output_mode="append",
     )
 
 
@@ -579,7 +578,6 @@ def materialize_cdc_stream(
         checkpoint_dir=checkpoint_dir,
         available_now=available_now,
         poll_seconds=poll_seconds,
-        output_mode="append",
     )
 
 

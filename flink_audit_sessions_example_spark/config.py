@@ -64,10 +64,10 @@ class AppConfig:
             if k.startswith("kafka.") and k != "kafka.topic"
         }
         cfg = cls(
-            audit_path=props["audit.path"],
-            audit_poll_seconds=int(props.get("audit.poll", "240")),
+            audit_path=props.get("audit.path", ""),
+            audit_poll_seconds=_seconds(props, "audit.poll", "240"),
             audit_min_date=props.get("audit.min_date"),
-            session_gap_seconds=int(props.get("session.duration", "600")),
+            session_gap_seconds=_seconds(props, "session.duration", "600"),
             session_output=props.get("session.output", "kafka"),
             kafka_topic=props.get("kafka.topic"),
             kafka_options=kafka_options,
@@ -79,6 +79,8 @@ class AppConfig:
     def validate(self) -> None:
         """Reject a config the job cannot run, so it fails before a JVM
         starts; ``from_properties`` and ``start_session_query`` call it."""
+        if not self.audit_path:
+            raise ValueError("audit.path is required")
         if self.audit_min_date is not None and not _is_basic_iso_date(
             self.audit_min_date
         ):
@@ -109,6 +111,15 @@ class AppConfig:
     @classmethod
     def from_properties_file(cls, path: str | Path) -> "AppConfig":
         return cls.from_properties(load_properties(path))
+
+
+def _seconds(props: dict[str, str], key: str, default: str) -> int:
+    """An integer property, parsed like ``Integer.parseInt``; a bad value
+    names its key instead of surfacing as ``int()``'s bare error."""
+    value = props.get(key, default)
+    if not re.fullmatch(r"[+-]?[0-9]+", value):
+        raise ValueError(f"{key} must be an integer, got {value!r}")
+    return int(value)
 
 
 def _is_basic_iso_date(value: str) -> bool:

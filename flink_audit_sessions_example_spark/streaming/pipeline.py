@@ -145,7 +145,6 @@ def write_kafka_file_twin(
         checkpoint_dir=checkpoint_dir,
         poll_seconds=poll_seconds,
         available_now=available_now,
-        output_mode="append",
     )
 
 
@@ -172,12 +171,12 @@ def write_foreach_batch(
     checkpoint_dir: str,
     poll_seconds: int | None = None,
     available_now: bool = False,
-    output_mode: str = "append",
 ) -> StreamingQuery:
     """``snk_foreach_batch`` — the escape-hatch sink for targets without
     a native streaming connector (JDBC upserts, multi-table fan-out,
     MERGE INTO): ``batch_fn(batch_df, batch_id)`` runs once per
-    micro-batch with a BATCH DataFrame, so any batch writer works.
+    micro-batch with a BATCH DataFrame of the rows appended in it, so
+    any batch writer works.
 
     Delivery is at-least-once (a failed batch re-runs with the SAME
     ``batch_id`` after restart from the checkpoint): the canonical
@@ -186,7 +185,7 @@ def write_foreach_batch(
     downstream consumers (``App.java:97``)."""
     writer = (
         df.writeStream.foreachBatch(batch_fn)
-        .outputMode(output_mode)
+        .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )
     return _start(df, writer, poll_seconds, available_now)

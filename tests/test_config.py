@@ -93,6 +93,10 @@ def test_defaults():
 @pytest.mark.parametrize(
     "key, value",
     [
+        ("audit.path", None),  # was a bare KeyError
+        ("audit.path", ""),
+        ("audit.poll", "4m"),  # int() errors did not name the key
+        ("session.duration", "10.5"),
         ("audit.min_date", "2024-03-28"),
         ("audit.min_date", "20241399"),
         ("audit.min_date", "2024328"),  # strptime alone accepts unpadded

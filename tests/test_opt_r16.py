@@ -1,5 +1,5 @@
 """Optimization round 16 gates: the pin-mode knob, the size-derived
-range-partition default, and the CC/pagerank loop reshapes."""
+range-partition default, and the CC loop reshape."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from extended_ops.operators import _pins
 from extended_ops.operators import dedup as D
-from extended_ops.operators.graph import pagerank
 from extended_ops.operators.quantiles import (
     _MAX_RANGE_PARTITIONS,
     _derived_range_partitions,
@@ -122,30 +121,10 @@ def test_cooccurrence_hot_token_stays_linear(spark):
 
 
 def test_cc_union_round_and_pagerank_union_iteration(spark):
-    """The r16 one-join round shapes are not silently wrong on the
-    smallest interesting graphs: a vertex with no in-edges in the
-    directed pagerank graph still gets its teleport rank (the union
-    zero-leg), and CC labeling is unchanged."""
+    """The r16 one-join CC round shape is not silently wrong on the
+    smallest interesting graph: CC labeling is unchanged."""
     got = {
         r.doc_id: r.cluster_id
         for r in D.near_dup_clusters(spark.createDataFrame(PAIRS)).collect()
     }
     assert got == EXPECT
-    # 1 -> 2 -> 3: vertex 1 has no in-edges; with the pre-r16 LEFT join
-    # gone, the union leg must still emit its (1-d) base rank
-    edges = spark.createDataFrame(
-        [Row(src=1, dst=2), Row(src=2, dst=3)]
-    )
-    ranks = {
-        r.vertex: r.rank
-        for r in pagerank(
-            edges, damping=0.85, max_iter=3, exact_scale=10**9
-        ).collect()
-    }
-    assert set(ranks) == {1, 2, 3}
-    # vertex 3 is dangling, so every vertex also receives a share of
-    # its mass; vertex 1 (no in-edges) gets ONLY teleport + that share
-    # — strictly the smallest, and present at all only via the zero-leg
-    assert ranks[1] == min(ranks.values())
-    assert sum(ranks.values()) == pytest.approx(3.0, abs=1e-3)
-    assert ranks[3] > ranks[2] > ranks[1] > 0

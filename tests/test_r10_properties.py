@@ -2,9 +2,8 @@
 correctness rests on a structural invariant rather than a golden:
 skyline dominance, SCD2 merge-equals-rebuild over random splits, and
 PIT-join interval membership. Each property is checked against an
-independent pure-Python formulation (the pagerank/heavy-hitters
-pattern), so a Spark-plan regression cannot hide behind a matching
-oracle bug."""
+independent pure-Python formulation (the heavy-hitters pattern), so
+a Spark-plan regression cannot hide behind a matching oracle bug."""
 
 from __future__ import annotations
 

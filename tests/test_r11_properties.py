@@ -1,6 +1,6 @@
 """Hypothesis property sweeps for the r13/r14 staged operators whose
 correctness rests on a structural invariant rather than a golden: gap
-sessionization, triangle counting, association-rule ratios, behavioral
+sessionization, association-rule ratios, behavioral
 regularity, leave-one-out k-NN classification and JSON schema
 profiling. Each property is checked against an INDEPENDENT
 pure-Python formulation (the r10 property-sweep pattern), so a
@@ -17,9 +17,6 @@ from hypothesis import strategies as st
 
 from extended_ops.operators.baskets import (
     association_rules,
-)
-from extended_ops.operators.graph import (
-    triangle_counts,
 )
 from extended_ops.operators.profile import (
     json_key_stats,
@@ -99,39 +96,6 @@ def test_gap_sessions_property(spark, streams, gap_minutes):
         ).collect()
     }
     assert got == _py_sessions(streams, gap_minutes * 60)
-
-
-@settings(**_SETTINGS)
-@given(
-    edges=st.sets(
-        st.tuples(
-            st.integers(min_value=0, max_value=9),
-            st.integers(min_value=0, max_value=9),
-        ).map(lambda p: (min(p), max(p))),
-        max_size=30,
-    )
-)
-def test_triangle_counts_property(spark, edges):
-    """Random small graphs: per-node triangle counts equal the
-    brute-force enumeration over all vertex triples."""
-    edges = {(a, b) for a, b in edges if a != b}
-    if not edges:
-        return
-    eset = set(edges)
-    nodes = sorted({v for e in edges for v in e})
-    expected: Counter = Counter()
-    for a, b, c in combinations(nodes, 3):
-        if (a, b) in eset and (b, c) in eset and (a, c) in eset:
-            expected[a] += 1
-            expected[b] += 1
-            expected[c] += 1
-    df = spark.createDataFrame(
-        sorted(edges), "id_a long, id_b long"
-    )
-    got = {
-        r.node: r.n_triangles for r in triangle_counts(df).collect()
-    }
-    assert got == dict(expected)
 
 
 @settings(**_SETTINGS)

@@ -1,6 +1,5 @@
 """Contract tests for the r14 staged operators (JSON schema profiling,
-triangle counts, bot-regularity audit, k-NN classification, association
-rules). DuckDB hash parity for the full registrations is pinned by
+bot-regularity audit, k-NN classification, association rules). DuckDB hash parity for the full registrations is pinned by
 tests/test_oracle_parity.py; these pin goldens, edge semantics, validation
 and the claimed plan topologies."""
 
@@ -14,9 +13,6 @@ from conftest import SF_DIR
 
 from extended_ops.operators.baskets import (
     association_rules,
-)
-from extended_ops.operators.graph import (
-    triangle_counts,
 )
 from extended_ops.operators.profile import (
     json_key_stats,
@@ -70,33 +66,6 @@ def test_json_key_stats_plan_is_jvm_side(spark):
     )
     assert "Python" not in final  # from_json + explode, no UDF
     assert "CartesianProduct" not in final
-
-
-# -- triangles ----------------------------------------------------------------
-
-
-def test_triangle_counts_golden(spark):
-    # K4 on {1,2,3,4} (4 triangles, each node in 3) + pendant edge 4-5
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)],
-        "id_a long, id_b long",
-    )
-    got = {
-        r.node: r.n_triangles
-        for r in triangle_counts(edges).collect()
-    }
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}  # 5 is triangle-free: absent
-
-
-def test_triangle_counts_single_triangle_and_direction(spark):
-    edges = spark.createDataFrame(
-        [(10, 20), (20, 30), (10, 30)], "id_a long, id_b long"
-    )
-    got = {
-        r.node: r.n_triangles
-        for r in triangle_counts(edges).collect()
-    }
-    assert got == {10: 1, 20: 1, 30: 1}
 
 
 # -- regularity ---------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Operator-level tests for the r17 staged families: CUSUM vs the
-direct recursion, Benford digit extraction edge cases, pagerank
-per-iteration quantization, backoff-tier/score consistency, and the
+direct recursion, Benford digit extraction edge cases,
+backoff-tier/score consistency, and the
 only-late-supplier qualification rules on constructed orders."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import datetime as dt
 
 import pytest
 
-from extended_ops.operators.graph import pagerank
 from extended_ops.operators.lm import (
     backoff_tier_counts,
     score_documents,
@@ -179,33 +178,6 @@ def test_benford_grouped_shares_sum_to_one(spark):
         by_g[r.g] += r.obs_share
     for g, s in by_g.items():
         assert s == pytest.approx(1.0, abs=1e-5), g
-
-
-# ------------------------------------------------------------- PageRank
-
-
-def test_pagerank_round_dp_close_to_unrounded_and_stable(spark):
-    edges = [(i, (i * 3 + 1) % 23) for i in range(23)] + [
-        (i, (i + 1) % 23) for i in range(23)
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    exact = {
-        r.vertex: r.rank for r in pagerank(df, max_iter=6).collect()
-    }
-    rounded = {
-        r.vertex: r.rank
-        for r in pagerank(df, max_iter=6, round_dp=9).collect()
-    }
-    assert set(exact) == set(rounded)
-    for v in exact:
-        # 6 iterations amplify the per-round 5e-10 quantization by at
-        # most the damping geometric series (~6.7x)
-        assert rounded[v] == pytest.approx(exact[v], abs=1e-8), v
-    again = {
-        r.vertex: r.rank
-        for r in pagerank(df, max_iter=6, round_dp=9).collect()
-    }
-    assert again == rounded
 
 
 # ------------------------------------------------------- LM tier counts

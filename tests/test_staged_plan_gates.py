@@ -20,7 +20,6 @@ from extended_ops.plans.staged_r18 import (
     q_win_ewma,
 )
 from extended_ops.plans.staged_r19 import (
-    q_graph_degree_stats,
     q_rel_small_quantity,
     q_win_zscore,
 )
@@ -83,11 +82,6 @@ def test_lm_tiers_stays_jvm_side(spark):
     plan = _plan(spark, q_lm_backoff_tiers)
     _no_python_no_cartesian(plan)
     assert "MapInPandas" not in plan
-
-
-def test_degree_stats_no_cartesian(spark):
-    plan = _plan(spark, q_graph_degree_stats)
-    _no_python_no_cartesian(plan)
 
 
 # -- r22/r23 staged keys (added r13) ----------------------------------------

@@ -18,8 +18,7 @@ def test_staged_r19_content_is_nonvacuous(spark):
     """Degenerate variants that would still hash-match a broken
     producer: an unsaturated merged sketch (the merge had nothing to
     cut), a Q17 relation with no qualifying lines, a weight table with
-    no real clusters, a z table that never flags, and a degree profile
-    missing a side."""
+    no real clusters, and a z table that never flags."""
     merged = STAGED_R19_QUERIES["agg_quantile_merge"](
         spark, SF_DIR
     ).collect()
@@ -52,14 +51,3 @@ def test_staged_r19_content_is_nonvacuous(spark):
             by_k.setdefault(r.event_type, []).append(r.z)
     for k, vals in by_k.items():
         assert abs(sum(vals)) < 0.01 * len(vals), k
-
-    deg = {
-        r.side: r
-        for r in STAGED_R19_QUERIES["graph_degree_stats"](
-            spark, SF_DIR
-        ).collect()
-    }
-    assert set(deg) == {"customer", "part"}
-    for side, r in deg.items():
-        assert r.min_degree >= 1 and r.max_degree >= r.min_degree, side
-        assert r.min_degree <= r.mean_degree <= r.max_degree, side

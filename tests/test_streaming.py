@@ -318,6 +318,47 @@ def test_session_shuffle_is_one_partition_per_core(spark, audit_tree):
     assert _state_partitions(query) == {cores}
 
 
+def test_failed_start_restores_caller_shuffle_partitions(spark, audit_tree):
+    """When ``writer.start()`` raises (here: a second memory sink under
+    an active query's name), the caller's ``spark.sql.shuffle.partitions``
+    is restored."""
+    from pyspark.errors import IllegalArgumentException
+
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    sessions = stream_denied_sessions(spark, _cfg(audit_tree))
+    active = write_memory(
+        sessions, query_name="t_start_fails", available_now=False
+    )
+    try:
+        with pytest.raises(IllegalArgumentException, match="t_start_fails"):
+            write_memory(sessions, query_name="t_start_fails")
+        assert spark.conf.get(key) == "7"
+    finally:
+        active.stop()
+        spark.conf.set(key, caller)
+
+
+def test_start_leaves_unset_shuffle_partitions_unset(spark, audit_tree):
+    """A caller that never set ``spark.sql.shuffle.partitions`` finds it
+    unset again after a stream starts."""
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key, None) is None
+        query = write_memory(
+            stream_denied_sessions(spark, _cfg(audit_tree)),
+            query_name="t_start_unset",
+        )
+        assert spark.conf.get(key, None) is None
+        query.awaitTermination(120)
+        assert query.exception() is None
+    finally:
+        spark.conf.set(key, caller)
+
+
 def test_kafka_option_contract_reference_passthrough(tmp_path):
     """No-broker contract test for the Kafka boundary (``App.java:112-124``
     parity): a reference-style properties file's ``kafka.``-prefixed keys
