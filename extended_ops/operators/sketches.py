@@ -755,12 +755,9 @@ def quantile_sketch_table(
 
     CALLER CONTRACT: ``key_col`` uniquely identifies each row (it is
     the row's content address — the whole sampling family's contract).
-    Violations stay deterministic here (duplicate keys draw identically
-    and tie-break by value, so repeated rows can occupy several sample
-    slots), but the STREAMING twin resolves a duplicate key to its
-    smallest value instead (it cannot distinguish a genuine duplicate
-    from an at-least-once re-delivery), so the stream-equals-batch
-    guarantee holds only under the contract.
+    Violations stay deterministic (duplicate keys draw identically and
+    tie-break by value, so repeated rows can occupy several sample
+    slots), but the sample is then no longer uniform over rows.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -768,8 +765,7 @@ def quantile_sketch_table(
 
     # NULL and NaN measurements are both excluded (a NaN would sort
     # last and poison high percentiles; the double cast turns any
-    # non-numeric junk into NULL) — the same value filter the streaming
-    # twin applies, keeping the stream-equals-batch contract exact
+    # non-numeric junk into NULL)
     vcast = F.col(value_col).cast("double")
     base = df.where(
         vcast.isNotNull()

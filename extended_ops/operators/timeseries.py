@@ -268,11 +268,7 @@ def time_decay_stats(
     decayed sums PROVABLY mergeable — moving the anchor forward by
     ``k`` buckets rescales every weight, hence the whole sum, by the
     single exact factor ``2^(-k)`` (an exponent shift; anchor-relative
-    nested floors decompose no such way). That exactness is what lets
-    the streaming twin (:func:`~..streaming.time_decay.
-    stream_time_decay`) carry O(1) state per key — (anchor bucket,
-    running sums) — and still be BIT-IDENTICAL to this batch fold
-    under per-key event-time order (pinned in tests), and what a
+    nested floors decompose no such way). That exactness is what a
     production partial-agg formulation at 10^9 events/key would
     exploit: partials anchored per task, rescaled and added at merge,
     every rescale exact.
@@ -294,7 +290,7 @@ def time_decay_stats(
     # Spark while DuckDB's list_sum skips NULLs — the one place the two
     # engines' sum semantics differ — and a NaN term poisons both; so
     # the contract is pinned here on both sides (the sketch family's
-    # NULL rule), and the streaming twin applies the IDENTICAL filter.
+    # NULL rule).
     # n_events therefore counts VALUED, TIMESTAMPED events.
     events = events.where(
         F.col(value_col).isNotNull()
@@ -482,8 +478,9 @@ def gap_sessions(
     with a session gap — reference `App.java:79-110`): the reference
     EMITS per-window aggregates on a stream; this operator materializes
     the same gap semantics as a table, the form analytics and
-    feature pipelines join against. The engine's streaming twin remains
-    ``operators/sessionize.py`` (same gap contract, watermarked).
+    feature pipelines join against. The engine's streaming form is the
+    audit package's ``operators/sessionize.py`` (same gap contract,
+    watermarked).
 
     Boundary semantics pinned cross-engine: the silence comparison is
     on INTEGER microseconds (``unix_micros``) with a STRICT ``>`` —
@@ -596,9 +593,8 @@ def event_transitions(
     for c in [type_col, *tiebreak_cols]:
         not_null = not_null & F.col(c).isNotNull()
         # a NaN type/tiebreak is as useless for ordering/labelling as a
-        # NULL one, and pandas-side folds (the streaming twin) cannot
-        # distinguish the two — exclude symmetrically so both twins
-        # pair the identical event sequence even for float columns
+        # NULL one — exclude both so the pairing sees the same event
+        # sequence for float columns as for any other
         if c in float_cols:
             not_null = not_null & ~F.isnan(c)
     pairs = (
@@ -814,7 +810,6 @@ def cusum_changepoints(
     key_col: str = "event_type",
     ts_col: str = "ts",
     bucket: str = "hour",
-    target_rate: "int | None" = None,
 ) -> DataFrame:
     """Level-shift detection per key — the classic CUSUM statistic over
     each key's bucketed count series: ``(key_col, n_buckets, mean_rate,
@@ -845,25 +840,10 @@ def cusum_changepoints(
     the exact-integer argmax with the earliest-peak tie rule — so both
     peaks come out of a single pass (a per-peak ranked-window + join
     formulation would make Catalyst re-run the whole pipeline per
-    branch; the plan gate pins one scan).
-
-    ``target_rate`` (must be an integer — the exact-arithmetic
-    contract): monitor drift against a FIXED reference rate instead of
-    the series' own mean — the industrial CUSUM configuration (the
-    reference comes from an SLO or a trained baseline, not from the
-    window under test), and the only configuration a SINGLE-PASS
-    stream can compute (the series mean needs the whole series; see
-    ``streaming/cusum.py::stream_cusum``, whose state folds to exactly
-    this mode's output). Deviations are then unscaled BIGINTs
-    (d_t = x_t − target) and ``mean_rate`` reports the target."""
+    branch; the plan gate pins one scan)."""
     if bucket not in _STEPS:
         raise ValueError(
             f"bucket must be one of {sorted(_STEPS)}; got {bucket!r}"
-        )
-    if target_rate is not None and target_rate != int(target_rate):
-        raise ValueError(
-            f"target_rate must be an integer (exact-arithmetic "
-            f"contract); got {target_rate!r}"
         )
     hourly = (
         events.where(
@@ -878,23 +858,13 @@ def cusum_changepoints(
     per_key = Window.partitionBy("_k")
     n_col = F.count(F.lit(1)).over(per_key)
     sum_col = F.sum("_x").over(per_key)
-    if target_rate is None:
-        # deviations from the series mean, integer-scaled by n
-        d_col = F.col("_x") * n_col - sum_col
-        div_col = n_col
-        mean_col = F.round(sum_col / n_col.cast("double"), 6)
-    else:
-        # fixed-reference mode: unscaled exact deviations
-        d_col = F.col("_x") - F.lit(int(target_rate))
-        div_col = F.lit(1).cast("long")
-        mean_col = F.lit(float(target_rate))
+    # deviations from the series mean, integer-scaled by n
     scaled = hourly.select(
         "_k",
         "_b",
         n_col.alias("_n"),
-        mean_col.alias("_mean"),
-        div_col.alias("_div"),
-        d_col.alias("_d"),
+        F.round(sum_col / n_col.cast("double"), 6).alias("_mean"),
+        (F.col("_x") * n_col - sum_col).alias("_d"),
     )
     ordered = Window.partitionBy("_k").orderBy("_b")
     pre = scaled.withColumn("_p", F.sum("_d").over(ordered))
@@ -903,7 +873,6 @@ def cusum_changepoints(
         "_b",
         "_n",
         "_mean",
-        "_div",
         # the running extremes include P_0 = 0 (the empty prefix):
         # S+_t = P_t - min_{0<=j<=t} P_j, so a first-bucket positive
         # deviation already registers as drift
@@ -926,7 +895,6 @@ def cusum_changepoints(
     agg = cus.groupBy("_k").agg(
         F.max("_n").alias("_n"),          # constant per key
         F.max("_mean").alias("_mean"),
-        F.max("_div").alias("_divc"),
         F.min(
             F.struct(
                 (-F.col("_su")).alias("neg"), F.col("_b").alias("b")
@@ -940,18 +908,17 @@ def cusum_changepoints(
     )
     # zero peak -> NULL bucket: "the drift never rose above 0" has no
     # argmax (the integer argmax would otherwise report the earliest
-    # bucket — an arbitrary answer the streaming twin, whose
-    # strictly-greater update never fires, correctly refuses to give)
+    # bucket, an arbitrary answer); peaks divide by n back to count units
     return agg.select(
         F.col("_k").alias(key_col),
         F.col("_n").alias("n_buckets"),
         F.col("_mean").alias("mean_rate"),
         F.round(
-            -F.col("_up.neg") / F.col("_divc").cast("double"), 6
+            -F.col("_up.neg") / F.col("_n").cast("double"), 6
         ).alias("cusum_up"),
         F.when(-F.col("_up.neg") > 0, F.col("_up.b")).alias("up_bucket"),
         F.round(
-            -F.col("_dn.neg") / F.col("_divc").cast("double"), 6
+            -F.col("_dn.neg") / F.col("_n").cast("double"), 6
         ).alias("cusum_down"),
         F.when(-F.col("_dn.neg") > 0, F.col("_dn.b")).alias(
             "down_bucket"

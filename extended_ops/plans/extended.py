@@ -3547,8 +3547,7 @@ def q_win_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle EVERY event row and sort each user partition by time. The
     single-exchange / no-Window shape is plan-gated in
     tests/test_plans.py. Purchase value sums as exact DECIMAL, cast
-    back to double at the end; the streaming twin is
-    ``streaming/attribution.py::stream_first_touch``."""
+    back to double at the end."""
     ev = load_table(spark, sf_dir, "events", spread=False)
     is_p = F.col("event_type") == "purchase"
     return (

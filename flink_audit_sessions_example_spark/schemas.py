@@ -44,11 +44,14 @@ AUDIT_SCHEMA = T.StructType(
     ]
 )
 
-#: ``from_json`` options reproducing the reference's lenient Jackson parse
+#: ``from_json`` options approximating the reference's lenient Jackson parse
 #: (``Audit.java:39-47``): PERMISSIVE mode ignores unknown keys and yields a
 #: null struct for malformed lines; the timestamp format matches
 #: ``Audit.java:17``, read in UTC as Jackson does (its ``@JsonFormat``
-#: default zone), not in ``spark.sql.session.timeZone``.
+#: default zone), not in ``spark.sql.session.timeZone``. Not exact: a field
+#: of the wrong type keeps the record with only that field null (Jackson
+#: drops the record), quoted or float scalars are not coerced, and a
+#: numeric ``evtTime`` reads as epoch seconds, not millis (ROADMAP item 2).
 AUDIT_JSON_OPTIONS = {
     "timestampFormat": "yyyy-MM-dd HH:mm:ss.SSS",
     "timeZone": "UTC",

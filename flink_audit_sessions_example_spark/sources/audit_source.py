@@ -171,12 +171,18 @@ def stream_audit_lines(
 def parse_audit_json(lines: DataFrame) -> DataFrame:
     """``xform_parse_json`` + ``flt_valid_user``.
 
-    ``from_json`` in PERMISSIVE mode reproduces the reference's lenient
-    Jackson config exactly (``Audit.java:40,44-45``): unknown keys ignored,
+    ``from_json`` in PERMISSIVE mode follows the reference's lenient
+    Jackson config (``Audit.java:40,44-45``): unknown keys ignored,
     malformed row → null struct, missing keys → null fields. The timestamp
     options preserve ``yyyy-MM-dd HH:mm:ss.SSS`` (``Audit.java:17``), read
     in UTC whatever the session time zone.
     Null records and null ``reqUser`` are dropped (``App.java:52-53``).
+
+    It is not exact (ROADMAP item 2): a field of the wrong type keeps the
+    record with only that field null, where Jackson drops the record;
+    quoted or float scalars (``"result":"1"``, ``2.7``) are not coerced
+    and read as null; and a numeric ``evtTime`` is read as epoch seconds,
+    where Jackson reads epoch millis.
     """
     parsed = lines.select(
         F.from_json(F.col("value"), AUDIT_SCHEMA, AUDIT_JSON_OPTIONS).alias(

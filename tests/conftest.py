@@ -31,36 +31,3 @@ def spark():
     )
     yield spark
     spark.stop()
-
-
-class FakeState:
-    """Minimal applyInPandasWithState GroupState stand-in for direct
-    state-fn unit drives — ONE definition (four near-identical copies
-    lived in the stream test files until review r11c; any future
-    contract change — e.g. timeout semantics — lands here once). The
-    superset of every drive's needs: seedable value, timeout flag,
-    remove/setTimeoutDuration recording."""
-
-    def __init__(self, value=None, timed_out=False):
-        self._value = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def remove(self):
-        self._value = None
-        self.removed = True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_set = ms

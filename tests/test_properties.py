@@ -14,14 +14,10 @@ import datetime as dt
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from extended_ops.operators.asof import asof_join
 from flink_audit_sessions_example_spark.operators.sessionize import (
     audit_denied_sessions,
-)
-from extended_ops.streaming.custom_state import (
-    _merge_sessions,
 )
 
 EPOCH = dt.datetime(2024, 1, 1)
@@ -166,29 +162,6 @@ def test_asof_join_matches_pandas_merge_asof(spark, data):
         for r in expected_df.itertuples()
     }
     assert got == expected
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 10_000), st.integers(0, 500), st.integers(0, 9)
-        ),
-        max_size=30,
-    ),
-    st.integers(1, 1000),
-)
-def test_merge_sessions_invariants(raw, gap_ms):
-    sessions = [[s, s + d, c] for s, d, c in raw]
-    merged = _merge_sessions([list(x) for x in sessions], gap_ms)
-    # counts conserved
-    assert sum(c for _, _, c in merged) == sum(c for _, _, c in sessions)
-    # output sorted, disjoint by more than gap, and interval-sane
-    for i, (s, l, _) in enumerate(merged):
-        assert s <= l
-        if i:
-            assert s > merged[i - 1][1] + gap_ms
-    # idempotent
-    assert _merge_sessions([list(x) for x in merged], gap_ms) == merged
 
 
 @given(

@@ -149,8 +149,7 @@ def test_plan_gates(spark):
 
 def test_nan_values_excluded_like_the_stream(spark):
     """Review r9: NaN passed isNotNull and would sort last, poisoning
-    high percentiles and diverging from the streaming twin (which
-    always skipped NaN) — both sides now exclude it."""
+    high percentiles — it is now excluded like NULL."""
     df = spark.createDataFrame(
         [(1, 1.0), (2, float("nan")), (3, 3.0)], "k bigint, v double"
     )

@@ -2,8 +2,8 @@
 correctness rests on a structural invariant rather than a golden:
 skyline dominance, SCD2 merge-equals-rebuild over random splits, and
 PIT-join interval membership. Each property is checked against an
-independent pure-Python formulation (the heavy-hitters pattern), so
-a Spark-plan regression cannot hide behind a matching oracle bug."""
+independent pure-Python formulation, so a Spark-plan regression cannot
+hide behind a matching oracle bug."""
 
 from __future__ import annotations
 
@@ -156,91 +156,3 @@ def test_pit_join_interval_membership_property(spark, boundaries, fact_hours):
             if vf <= t and (vt is None or t < vt):
                 want = state
         assert got[i] == want, (h, bs)
-
-
-@settings(**_SETTINGS)
-@given(
-    events=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=3),      # key
-            st.integers(min_value=0, max_value=2000),   # minutes offset
-            st.one_of(
-                st.none(),
-                st.floats(
-                    min_value=-1e6, max_value=1e6,
-                    allow_nan=False, allow_infinity=False,
-                ),
-            ),
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_time_decay_stream_equals_batch_random(spark, events):
-    """The O(1)-state stream fold equals the batch fold bit-for-bit on
-    RANDOM event streams delivered in event-time order — including NULL
-    values (excluded identically on both sides), same-bucket bursts and
-    multi-bucket gaps. Drives the state fn directly (one pdf per
-    micro-batch of 7) against the batch operator."""
-    import pandas as pd
-
-    from extended_ops.streaming.time_decay import (
-        _make_decay_fn,
-    )
-
-    base_ts = dt.datetime(2024, 1, 1)
-    rows = [
-        (k, base_ts + dt.timedelta(minutes=m), i, v)
-        for i, (k, m, v) in enumerate(events)
-    ]
-    rows.sort(key=lambda r: (r[1], r[2]))  # event-time order + seq tie
-    batch = {
-        r.k: (r.n_events, r.decayed_sum, r.decayed_weight)
-        for r in __import__(
-            "extended_ops.operators.timeseries",
-            fromlist=["time_decay_stats"],
-        ).time_decay_stats(
-            spark.createDataFrame(
-                rows, "k int, ts timestamp, seq int, v double"
-            ),
-            key_col="k", ts_col="ts", value_col="v",
-            tiebreak_cols=["seq"], half_life_hours=1,
-        ).collect()
-    }
-
-    class _State:
-        def __init__(self):
-            self._v = None
-
-        exists = property(lambda s: s._v is not None)
-        get = property(lambda s: s._v)
-
-        def update(self, v):
-            self._v = v
-
-    fn = _make_decay_fn(3600)
-    got = {}
-    for k in {r[0] for r in rows}:
-        mine = [r for r in rows if r[0] == k]
-        state = _State()
-        last = None
-        for i in range(0, len(mine), 7):
-            chunk = mine[i : i + 7]
-            pdf = pd.DataFrame(
-                {
-                    "_us": [
-                        int(pd.Timestamp(r[1]).value // 1_000)
-                        for r in chunk
-                    ],
-                    "_v": [r[3] for r in chunk],
-                }
-            )
-            for out in fn((k,), iter([pdf]), state):
-                last = out.iloc[0]
-        if last is not None:
-            got[k] = (
-                int(last["n_events"]),
-                float(last["decayed_sum"]),
-                float(last["decayed_weight"]),
-            )
-    assert got == batch

@@ -91,6 +91,8 @@ def test_cusum_flat_series_is_zero(spark):
     df = _hourly_events(spark, [4, 4, 4, 4])
     r = cusum_changepoints(df, key_col="event_type", ts_col="ts").collect()[0]
     assert r.cusum_up == 0.0 and r.cusum_down == 0.0
+    # a zero peak has no argmax: both buckets are NULL
+    assert r.up_bucket is None and r.down_bucket is None
 
 
 def test_cusum_null_keys_and_ts_excluded(spark):

@@ -416,175 +416,6 @@ def test_scan_side_ops_are_streaming_safe(spark, tmp_path):
         assert got == want, name
 
 
-def test_stream_first_touch_matches_batch_with_retroactive_event(spark, tmp_path):
-    """Stateful streaming first-touch: two micro-batches where the second
-    delivers an EARLIER event for user 1 (retroactive attribution change)
-    plus more purchases; the latest update row per user must equal the
-    batch min(struct)+rollup aggregate over the union."""
-    import datetime as dt
-
-    from extended_ops.streaming import (
-        stream_first_touch,
-    )
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    schema = "user_id bigint, ts timestamp, event_id bigint, event_type string, value double"
-
-    def t(*a):
-        return dt.datetime(*a)
-
-    b1 = [
-        (1, t(2024, 1, 2, 10), 10, "click", 0.0),
-        (1, t(2024, 1, 2, 11), 11, "purchase", 19.99),
-        (2, t(2024, 1, 1, 9), 12, "view", 0.0),
-    ]
-    b2 = [
-        (1, t(2024, 1, 1, 8), 13, "signup", 0.0),  # EARLIER: new first touch
-        (1, t(2024, 1, 3, 9), 14, "purchase", 5.005),
-        (2, t(2024, 1, 2, 9), 15, "purchase", 1.25),
-        # user 3: microsecond ordering within one millisecond — the
-        # higher event_id arrives EARLIER by 400µs and must win
-        (3, dt.datetime(2024, 1, 1, 7, 0, 0, 500), 21, "view", 0.0),
-        (3, dt.datetime(2024, 1, 1, 7, 0, 0, 900), 20, "click", 0.0),
-        # user 3's only purchase carries a NULL value: n_purchases=1,
-        # purchase_value NULL (batch SUM over all-NULL decimals)
-        (3, t(2024, 1, 2, 7), 22, "purchase", None),
-    ]
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pa_schema = pa.schema(
-        [
-            ("user_id", pa.int64()),
-            ("ts", pa.timestamp("us")),
-            ("event_id", pa.int64()),
-            ("event_type", pa.string()),
-            ("value", pa.float64()),
-        ]
-    )
-    for name, rows in (("b1.parquet", b1), ("b2.parquet", b2)):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [dict(zip(pa_schema.names, r)) for r in rows], pa_schema
-            ),
-            str(d / name),
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_first_touch(stream)
-        .writeStream.format("memory")
-        .queryName("t_first_touch")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    updates = spark.table("t_first_touch").collect()
-    assert len(updates) >= 3  # user 1 updated across batches
-    final = {}
-    for r in updates:  # memory sink appends update rows in batch order
-        final[r.user_id] = r
-    u1, u2 = final[1], final[2]
-    assert (u1.first_event_id, u1.first_event_type) == (13, "signup")
-    assert u1.n_purchases == 2 and u1.purchase_value == pytest.approx(
-        24.995, abs=1e-9
-    )
-    assert (u2.first_event_id, u2.n_purchases) == (12, 1)
-    u3 = final[3]
-    assert u3.first_event_id == 21  # earlier microsecond beats lower id
-    assert u3.first_ts.microsecond == 500  # no millisecond truncation
-    assert u3.n_purchases == 1 and u3.purchase_value is None
-
-    # equivalence with the batch aggregate over the union
-    batch = spark.createDataFrame(b1 + b2, schema)
-    agg = (
-        batch.groupBy("user_id")
-        .agg(
-            F.min(
-                F.struct(F.col("ts"), F.col("event_id"), F.col("event_type"))
-            ).alias("ft"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("n_purchases"),
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase",
-                    F.col("value").cast("decimal(18,6)"),
-                )
-            )
-            .cast("double")
-            .alias("purchase_value"),
-        )
-        .collect()
-    )
-    for r in agg:
-        f = final[r.user_id]
-        assert f.first_event_id == r.ft.event_id
-        assert f.n_purchases == r.n_purchases
-        assert (f.purchase_value is None) == (r.purchase_value is None)
-        if r.purchase_value is not None:
-            assert f.purchase_value == pytest.approx(
-                r.purchase_value, abs=1e-9
-            )
-
-
-def test_stream_minhash_candidates_cross_batch(spark, tmp_path):
-    """Streaming LSH dedup: a near-copy arriving in a LATER micro-batch
-    must pair with the original admitted in an earlier one (the
-    "seen-so-far" state), an exact copy estimates 1.0, and an unrelated
-    document pairs with nothing."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from extended_ops.streaming import (
-        stream_minhash_candidates,
-    )
-
-    d = tmp_path / "docs"
-    d.mkdir()
-    base = " ".join(f"tok{i}" for i in range(60))
-    near = " ".join(f"tok{i}" for i in range(55)) + " zzz yyy xxx www vvv"
-    other = " ".join(f"u{i}a u{i}b" for i in range(40))
-    pa_schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
-
-    def write(name, rows):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": i, "text": t} for i, t in rows], pa_schema
-            ),
-            str(d / name),
-        )
-
-    write("b1.parquet", [(1, base), (2, other)])
-    write("b2.parquet", [(3, base), (4, near), (5, "short text only")])
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_minhash_candidates(stream, threshold=0.5)
-        .writeStream.format("memory")
-        .queryName("t_stream_lsh")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table("t_stream_lsh").collect()
-    pairs = {}
-    for r in rows:  # at-least-once per band: dedup, est is deterministic
-        pairs[(r.id_a, r.id_b)] = r.est_jaccard
-    assert pairs[(1, 3)] == 1.0  # exact copy across batches
-    assert pairs[(1, 4)] >= 0.5 and pairs[(3, 4)] >= 0.5  # near copy
-    assert not any(5 in p or 2 in p for p in pairs), pairs
-
-
 def test_quality_tiers_boundaries_path_matches_registered(spark):
     """r5-verdict item: quality_tiers(boundaries=...) must produce the
     identical tiers as the registered compute-the-quartiles shape, via
@@ -615,8 +446,6 @@ def test_quality_tiers_boundaries_path_matches_registered(spark):
 
 
 def test_agg_mode_tie_breaks_lexicographically(spark):
-    from extended_ops.plans.extended import q_agg_mode
-
     # build a tiny events-shaped relation through the registered query's
     # operator shape: counts 2-2 tie between 'b' and 'a' -> 'a' wins
     ev = spark.createDataFrame(

@@ -1,231 +1,11 @@
-"""Round-8 behaviors: streaming LSH state TTL eviction + admit-once,
-banding validation, and the first-touch pandas-dtype normalization.
-
-The TTL test is the r7-verdict item 5 gate: with eviction enabled, the
-state-store row count must STABILIZE (final state ≪ cumulative buckets)
-while near-dups arriving INSIDE the horizon are still caught.
+"""Round-8 batch operators: n-gram novelty, the relative-quantile
+bound check, TF-IDF top terms and the funnel stages, each against its
+planted semantics and its DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
-
-from conftest import FakeState
-
-from extended_ops.streaming.attribution import (
-    _first_touch_fn,
-)
-from extended_ops.streaming.dedup_stream import (
-    _make_bucket_fn,
-    stream_minhash_candidates,
-)
-
-
-def _batch(rows):
-    return iter(
-        [pd.DataFrame({"id": [r[0] for r in rows], "sig": [r[1] for r in rows]})]
-    )
-
-
-SIG_A = list(range(8))
-SIG_A2 = list(range(7)) + [99]  # 7/8 agreement with SIG_A
-SIG_B = list(range(100, 108))
-
-
-def test_bucket_fn_admits_each_doc_once():
-    """An at-least-once source re-delivering a doc must not burn another
-    cap slot or re-emit pairs from a stored duplicate copy."""
-    fn = _make_bucket_fn(8, 0.5, cap=2)
-    state = FakeState()
-    assert list(fn(("k",), _batch([(1, SIG_A)]), state)) == []
-    # re-delivery of doc 1: state must still hold ONE member, leaving
-    # the second cap slot free
-    assert list(fn(("k",), _batch([(1, SIG_A)]), state)) == []
-    ids, flat = state.get
-    assert list(ids) == [1]
-    # the free slot admits a genuinely distinct doc and pairs it
-    out = list(fn(("k",), _batch([(2, SIG_A2)]), state))
-    assert len(out) == 1 and list(out[0]["id_a"]) == [1]
-    assert list(out[0]["est_jaccard"]) == [7 / 8]
-    ids, _ = state.get
-    assert list(ids) == [1, 2]
-
-
-def test_bucket_fn_timeout_removes_state():
-    fn = _make_bucket_fn(8, 0.5, cap=None, ttl_ms=60_000)
-    state = FakeState(value=([1], list(SIG_A)), timed_out=True)
-    assert list(fn(("k",), iter([]), state)) == []
-    assert state.removed and not state.exists
-
-
-def test_bucket_fn_sets_timeout_only_when_ttl_given():
-    state = FakeState()
-    list(_make_bucket_fn(8, 0.5, cap=None, ttl_ms=12_345)(
-        ("k",), _batch([(1, SIG_A)]), state
-    ))
-    assert state.timeout_set == 12_345
-    state2 = FakeState()
-    list(_make_bucket_fn(8, 0.5, cap=None)(("k",), _batch([(1, SIG_A)]), state2))
-    assert state2.timeout_set is None
-
-
-def test_stream_minhash_bands_must_divide_num_hashes(spark):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
-    with pytest.raises(ValueError, match="bands must divide"):
-        stream_minhash_candidates(df, num_hashes=64, bands=12)
-
-
-def _run_phases(spark, tmp_path, phases, ttl_ms):
-    """Run the LSH stream as one checkpointed query RESTARTED once per
-    phase (one new file each), returning the accumulated candidate
-    pairs and the last observed state-store row count.
-
-    Why restarts instead of one availableNow run over all files: TTL
-    eviction fires when a batch starts after a key's horizon expired,
-    so a single run's micro-batch spacing decides whether eviction
-    happens before the next document arrives — timing-dependent under
-    load (observed flaky in-suite). Each restart's first batch begins
-    well past any tiny TTL set in the previous phase, making "idle
-    across a phase boundary" deterministic. A TTL'd query also never
-    self-terminates under availableNow (Spark keeps scheduling
-    timeout-processing batches), so each phase polls for its input and
-    stops the query explicitly.
-    """
-    import time
-
-    d = tmp_path / "docs"
-    d.mkdir()
-    chk = str(tmp_path / "chk")
-    pa_schema = None
-    pairs: dict = {}
-    state_rows = None
-    for name, rows in phases:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if pa_schema is None:
-            pa_schema = pa.schema(
-                [("doc_id", pa.int64()), ("text", pa.string())]
-            )
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": i_, "text": t} for i_, t in rows], pa_schema
-            ),
-            str(d / name),
-        )
-        stream = spark.readStream.schema(
-            "doc_id bigint, text string"
-        ).parquet(str(d))
-
-        def sink(batch_df, _epoch):
-            for r in batch_df.collect():
-                pairs[(r.id_a, r.id_b)] = r.est_jaccard
-
-        # foreachBatch, not the memory sink: only foreachBatch supports
-        # restarting from the shared checkpoint (memory sink refuses)
-        q = (
-            stream_minhash_candidates(
-                stream, threshold=0.5, state_ttl_ms=ttl_ms
-            )
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                progress = q.recentProgress
-                seen = sum(p["numInputRows"] for p in progress)
-                if seen >= len(rows) and progress[-1].get("stateOperators"):
-                    state_rows = progress[-1]["stateOperators"][0][
-                        "numRowsTotal"
-                    ]
-                    break
-                if not q.isActive:
-                    for p in reversed(progress):
-                        if p.get("stateOperators"):
-                            state_rows = p["stateOperators"][0][
-                                "numRowsTotal"
-                            ]
-                            break
-                    break
-                time.sleep(0.3)
-        finally:
-            q.stop()
-    return pairs, state_rows
-
-
-def test_stream_minhash_ttl_evicts_idle_buckets(spark, tmp_path):
-    """With a tiny TTL, buckets idle for a whole micro-batch are evicted:
-    a later near-copy of an expired document finds no match (the
-    documented recall-beyond-horizon trade) and the final state-store
-    row count stays bounded by the recent horizon instead of growing
-    with every document ever seen."""
-    base = " ".join(f"tok{i}" for i in range(60))
-    filler = " ".join(f"f{i}x f{i}y" for i in range(40))
-    phases = [
-        ("b1.parquet", [(1, base)]),
-        ("b2.parquet", [(2, filler)]),  # doc 1 idle -> evicted here
-        ("b3.parquet", [(3, base)]),  # exact copy, but past the horizon
-    ]
-    pairs, state_rows = _run_phases(spark, tmp_path, phases, ttl_ms=1)
-    assert (1, 3) not in pairs, pairs
-    # only the LAST batch's buckets survive: 16 bands x 1 doc, minus
-    # within-doc band-key collisions -> at most 16 state rows (the
-    # lifetime variant below accumulates all three docs' buckets)
-    assert state_rows is not None and state_rows <= 16, state_rows
-
-
-def test_stream_minhash_ttl_in_horizon_pairs_still_caught(spark, tmp_path):
-    """A generous TTL (arrivals inside the horizon) must not change the
-    lifetime semantics: the cross-batch near-dup is still found and
-    state accumulates all live buckets."""
-    base = " ".join(f"tok{i}" for i in range(60))
-    filler = " ".join(f"f{i}x f{i}y" for i in range(40))
-    phases = [
-        ("b1.parquet", [(1, base)]),
-        ("b2.parquet", [(2, filler)]),
-        ("b3.parquet", [(3, base)]),
-    ]
-    pairs, state_rows = _run_phases(
-        spark, tmp_path, phases, ttl_ms=3_600_000
-    )
-    assert pairs.get((1, 3)) == 1.0, pairs
-    # all three docs' buckets still live
-    assert state_rows is not None and state_rows > 16, state_rows
-
-
-def test_first_touch_normalizes_non_ns_ts_dtype():
-    """pandas 2.x can hand the ts column over as datetime64[us]; the
-    first-touch fn must normalize BEFORE the int64 reinterpret (a bare
-    astype would be 1000x off, corrupting ordering and first_ts)."""
-    pdf = pd.DataFrame(
-        {
-            "ts": pd.array(
-                [
-                    pd.Timestamp("2024-01-02 00:00:00.000500"),
-                    pd.Timestamp("2024-01-01 00:00:00.000500"),
-                ],
-                dtype="datetime64[us]",
-            ),
-            "event_id": [7, 3],
-            "event_type": ["view", "click"],
-            "value": [None, None],
-        }
-    )
-    state = FakeState()
-    out = list(_first_touch_fn((42,), iter([pdf]), state))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert row["first_event_id"] == 3
-    assert pd.Timestamp(row["first_ts"]) == pd.Timestamp(
-        "2024-01-01 00:00:00.000500"
-    )
-    ft_us = state.get[0]
-    assert ft_us == 1_704_067_200_000_500  # epoch micros, not 1000x off
 
 
 def test_ngram_novelty_planted_semantics(spark):
@@ -290,44 +70,6 @@ def test_ngram_novelty_matches_duckdb(spark):
     FROM documents d LEFT JOIN per p USING (doc_id)
     """
     assert_parity(ngram_novelty_score(docs), sql, SF_DIR)
-
-
-def test_custom_state_session_fn_normalizes_non_ns_ts_dtype():
-    """Same guard as the first-touch fn: a datetime64[us] evtTime column
-    must yield epoch-MILLI session bounds, not second-of-milli values
-    1000x off."""
-    from extended_ops.streaming.custom_state import (
-        _make_session_fn,
-    )
-
-    class SessionFakeState(FakeState):
-        def getCurrentWatermarkMs(self):
-            return 10_000_000_000_000  # far future: every session closes
-
-        def setTimeoutTimestamp(self, ts):
-            self.timeout_set = ts
-
-    pdf = pd.DataFrame(
-        {
-            "evtTime": pd.array(
-                [
-                    pd.Timestamp("2024-01-01 00:00:00"),
-                    pd.Timestamp("2024-01-01 00:00:30"),
-                ],
-                dtype="datetime64[us]",
-            ),
-            "event_count": [1, 2],
-            "result": [0, 0],
-        }
-    )
-    state = SessionFakeState()
-    out = list(_make_session_fn(60)((u"alice",), iter([pdf]), state))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert row["denies"] == 3
-    assert pd.Timestamp(row["start"]) == pd.Timestamp("2024-01-01 00:00:00")
-    assert pd.Timestamp(row["end"]) == pd.Timestamp("2024-01-01 00:01:30")
-    assert state.removed  # everything flushed
 
 
 def test_rel_quantiles_approx_bound_check_shape(spark):
@@ -587,179 +329,6 @@ def test_funnel_stages_matches_duckdb_and_single_exchange(spark):
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange hashpartitioning") == 1, final
     assert final.count("Sort ") <= 1 or final.count("Sort [") == 1, final
-
-
-def test_stream_funnel_fn_advances_and_is_order_exact():
-    """Unit drive of the funnel state fn: advance across batches,
-    ignore wrong-stage / out-of-order rows, honor the conversion
-    window, emit only on advancement."""
-    from extended_ops.streaming.funnel import (
-        _make_funnel_fn,
-    )
-
-    def pdf(rows):
-        return pd.DataFrame(
-            {
-                "user_id": [r[0] for r in rows],
-                "event_id": [r[1] for r in rows],
-                "ts": pd.to_datetime([r[2] for r in rows]),
-                "event_type": [r[3] for r in rows],
-            }
-        )
-
-    fn = _make_funnel_fn(("view", "click", "purchase"), None)
-    state = FakeState()
-    out = list(
-        fn(
-            (7,),
-            iter([pdf([(7, 1, "2024-01-01 10:00", "view"),
-                       (7, 2, "2024-01-01 09:00", "purchase")])]),
-            state,
-        )
-    )
-    assert len(out) == 1 and out[0].iloc[0]["stages_completed"] == 1
-    # batch 2: a click after the view advances; purchase at the SAME ts
-    # as the click does not (strict >)
-    out = list(
-        fn(
-            (7,),
-            iter([pdf([(7, 3, "2024-01-01 11:00", "click"),
-                       (7, 4, "2024-01-01 11:00", "purchase")])]),
-            state,
-        )
-    )
-    assert out[0].iloc[0]["stages_completed"] == 2
-    # batch 3: nothing qualifying -> no emission
-    assert list(fn((7,), iter([pdf([(7, 5, "2024-01-01 10:30", "click")])]), state)) == []
-    # conversion window: purchase 3 days after the click stalls
-    fnw = _make_funnel_fn(("view", "click", "purchase"), 86_400_000_000)
-    st2 = FakeState(value=(list(state.get[0]),))
-    assert list(fnw((7,), iter([pdf([(7, 6, "2024-01-04 11:00", "purchase")])]), st2)) == []
-    out = list(fnw((7,), iter([pdf([(7, 7, "2024-01-02 10:59", "purchase")])]), st2))
-    assert out[0].iloc[0]["stages_completed"] == 3
-
-
-def test_stream_funnel_matches_batch_twin(spark, tmp_path):
-    """In-order cross-micro-batch streaming funnel must equal the batch
-    operator over the union of all batches (the module's exactness
-    contract), including the conversion window."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from extended_ops.operators.corpus import (
-        funnel_stages,
-    )
-    from extended_ops.streaming import (
-        stream_funnel_stages,
-    )
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    sch = pa.schema(
-        [("event_id", pa.int64()), ("user_id", pa.int64()),
-         ("ts", pa.timestamp("us")), ("event_type", pa.string())]
-    )
-    from datetime import datetime as dt
-
-    b1 = [(1, 1, dt(2024, 1, 1, 10), "view"),
-          (2, 2, dt(2024, 1, 1, 10), "view"),
-          (3, 2, dt(2024, 1, 1, 10, 30), "click")]
-    b2 = [(4, 1, dt(2024, 1, 2, 9), "click"),   # within 1 day of view
-          (5, 1, dt(2024, 1, 2, 10), "purchase"),
-          (6, 2, dt(2024, 1, 3, 11), "purchase")]  # > 1 day after click
-    for name, rows in (("b1.parquet", b1), ("b2.parquet", b2)):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [dict(zip(("event_id", "user_id", "ts", "event_type"), r))
-                 for r in rows],
-                sch,
-            ),
-            str(d / name),
-        )
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, ts timestamp, "
-            "event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    # foreachBatch accumulator + ASSERTED termination (not the memory
-    # sink): under concurrent JVM load the old awaitTermination(120)
-    # could lapse with the final micro-batch unflushed, and the test
-    # then failed on silently-partial results — the documented r8 flake
-    # (r8 verdict #7). A timeout now fails loudly as a timeout.
-    collected = []
-    q = (
-        stream_funnel_stages(
-            stream, ("view", "click", "purchase"), within="1 day"
-        )
-        .writeStream.foreachBatch(
-            lambda df, _id: collected.extend(df.collect())
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    terminated = q.awaitTermination(600)
-    assert terminated, "funnel stream did not drain within 600s"
-    latest = {}
-    for r in collected:
-        cur = latest.get(r.user_id)
-        if cur is None or r.stages_completed > cur.stages_completed:
-            latest[r.user_id] = r
-    batch = {
-        r.user_id: r
-        for r in funnel_stages(
-            spark.createDataFrame(
-                b1 + b2,
-                "event_id bigint, user_id bigint, ts timestamp, "
-                "event_type string",
-            ),
-            ("view", "click", "purchase"),
-            within="1 day",
-        ).collect()
-    }
-    assert set(latest) == set(batch)
-    for uid, b in batch.items():
-        srow = latest[uid]
-        assert srow.stages_completed == b.stages_completed, uid
-        for i in range(1, 4):
-            assert getattr(srow, f"reach_{i}") == getattr(b, f"reach_{i}"), (
-                uid,
-                i,
-            )
-
-
-def test_stream_funnel_rejects_calendar_intervals(spark):
-    """ADVICE r8 regression: the streaming funnel evaluates ONE fixed
-    microsecond width for the whole stream, so calendar units ('1
-    month' -> 31 days always) would silently diverge from the batch
-    twin's per-row INTERVAL arithmetic — they must be rejected up
-    front (the asof_nearest max_distance contract), as must
-    non-positive widths."""
-    import pytest
-
-    from extended_ops.streaming import (
-        stream_funnel_stages,
-    )
-
-    ev = spark.createDataFrame(
-        [],
-        "event_id bigint, user_id bigint, ts timestamp, event_type string",
-    )
-    for bad in ("1 month", "2 years"):
-        with pytest.raises(ValueError, match="day-time"):
-            stream_funnel_stages(ev, ("a", "b"), within=bad)
-    with pytest.raises(ValueError, match="positive"):
-        stream_funnel_stages(ev, ("a", "b"), within="-1 day")
-    # fixed-width durations parse fine on a (batch) frame: the
-    # validation path is independent of streaming-ness — and "1 week"
-    # is FIXED width (Spark: exactly 604800s), so it must be accepted
-    # (review r9: pandas Timedelta falsely rejects it)
-    assert stream_funnel_stages(ev, ("a", "b"), within="36 hours") is not None
-    assert stream_funnel_stages(ev, ("a", "b"), within="1 week") is not None
 
 
 def test_ngram_novelty_pin_plan_shape(spark):

@@ -43,7 +43,13 @@ def test_staged_r19_content_is_nonvacuous(spark):
 
     zs = STAGED_R19_QUERIES["win_zscore"](spark, SF_DIR).collect()
     assert any(r.is_anomaly for r in zs), "never flags"
-    assert all(r.z is not None for r in zs if r.n > 0) or True
+    # z is NULL exactly when the type's hourly counts are all equal
+    # (radicand 0, a constant series)
+    counts_by_k: dict = {}
+    for r in zs:
+        counts_by_k.setdefault(r.event_type, set()).add(r.n)
+    for r in zs:
+        assert (r.z is None) == (len(counts_by_k[r.event_type]) == 1), r
     # z-scores per key are standardized: they sum to ~0
     by_k: dict = {}
     for r in zs:

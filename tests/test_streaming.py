@@ -178,54 +178,6 @@ def test_foreach_batch_sink_collects_sessions(spark, audit_tree, tmp_path):
     assert sorted(seen) == [("bob", 2), ("carol", 3), ("wdyson", 10)]
 
 
-def test_custom_state_sessionizer_matches_builtin(spark, audit_tree):
-    """The applyInPandasWithState twin must produce the exact golden
-    sessions the built-in session_window path produces (same merge,
-    weighting, HAVING, and watermark-firing semantics)."""
-    from flink_audit_sessions_example_spark.sources.audit_source import (
-        stream_audits,
-    )
-    from flink_audit_sessions_example_spark.operators.sessionize import (
-        WATERMARK_DELAY,
-    )
-    from extended_ops.streaming import (
-        audit_denied_sessions_custom_state,
-    )
-
-    cfg = _cfg(audit_tree)
-    audits = stream_audits(
-        spark, cfg.audit_path, min_date=cfg.audit_min_date,
-        max_files_per_trigger=1,
-    )
-    sessions = audit_denied_sessions_custom_state(
-        audits, gap_seconds=cfg.session_gap_seconds,
-        watermark_delay=WATERMARK_DELAY,
-    )
-    query = write_memory(sessions, query_name="t_custom_state_sessions")
-    query.awaitTermination(120)
-    rows = {
-        r["reqUser"]: r for r in spark.table("t_custom_state_sessions").collect()
-    }
-    assert set(rows) == {"wdyson", "bob", "carol"}
-    w, b = rows["wdyson"], rows["bob"]
-    c = rows["carol"]
-    assert (c["denies"], c["start"], c["end"]) == (
-        3,
-        dt.datetime(2022, 9, 26, 10, 0, 0),
-        dt.datetime(2022, 9, 26, 10, 25, 0),
-    )
-    assert (w["denies"], w["start"], w["end"]) == (
-        10,
-        dt.datetime(2022, 9, 26, 10, 0, 0),
-        dt.datetime(2022, 9, 26, 10, 30, 0),
-    )
-    assert (b["denies"], b["start"], b["end"]) == (
-        2,
-        dt.datetime(2022, 9, 26, 10, 10, 0),
-        dt.datetime(2022, 9, 26, 10, 40, 0),
-    )
-
-
 def test_start_session_query_print_path(spark, audit_tree, tmp_path):
     """The full ``main`` dispatch (``App.java:150-159``), print branch,
     runs to completion on an availableNow trigger."""
@@ -710,81 +662,6 @@ def test_stream_dedup_drops_redeliveries(spark, tmp_path):
     assert unbounded.isStreaming
 
 
-def test_stream_interval_join_rejects_overlapping_columns(spark):
-    """The disjoint-columns contract is enforced up front (r4 ADVICE):
-    overlapping non-key columns would only fail later, ambiguously, when
-    a consumer references the duplicate name."""
-    import pytest
-
-    from extended_ops.streaming.joins import (
-        stream_interval_join,
-    )
-
-    left = spark.createDataFrame([], "u string, t timestamp, v int")
-    right = spark.createDataFrame([], "u string, t2 timestamp, v int")
-    with pytest.raises(ValueError, match="disjoint.*'v'|'v'.*disjoint"):
-        stream_interval_join(
-            left, right, key="u", left_time="t", right_time="t2",
-            bound_seconds=60, watermark_delay="1 hour",
-        )
-    with pytest.raises(ValueError, match="join key"):
-        stream_interval_join(
-            left, right.withColumnRenamed("u", "w"), key="u",
-            left_time="t", right_time="t2",
-            bound_seconds=60, watermark_delay="1 hour",
-        )
-
-
-def test_stream_stream_interval_join_matches_batch(spark, audit_tree, tmp_path):
-    """Watermarked stream-stream interval join (denied ⋈ allowed within
-    ±20 min per user) produces exactly the pairs the equivalent batch
-    join computes over the same files."""
-    from flink_audit_sessions_example_spark.sources import read_audits, stream_audits
-    from extended_ops.streaming.joins import (
-        denied_near_allowed,
-    )
-
-    stream = denied_near_allowed(
-        stream_audits(spark, str(audit_tree), min_date="20220101")
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("ssj")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["reqUser"], r["denied_time"], r["allowed_time"])
-        for r in spark.table("ssj").collect()
-    }
-
-    batch = read_audits(spark, str(audit_tree), min_date="20220101")
-    d = batch.where("result != 1").selectExpr(
-        "reqUser", "evtTime as denied_time"
-    )
-    a = batch.where("result = 1").selectExpr(
-        "reqUser as u2", "evtTime as allowed_time"
-    )
-    import pyspark.sql.functions as F
-
-    expected = {
-        (r["reqUser"], r["denied_time"], r["allowed_time"])
-        for r in d.join(
-            a,
-            (d.reqUser == a.u2)
-            & (a.allowed_time >= d.denied_time - F.expr("INTERVAL 1200 SECONDS"))
-            & (a.allowed_time <= d.denied_time + F.expr("INTERVAL 1200 SECONDS")),
-        ).collect()
-    }
-    assert got == expected
-    # the fixture guarantees at least one cross-result pair (wdyson's
-    # denied 10:00 event within 20 min of the 10:10 allowed event)
-    assert any(u == "wdyson" for u, _, _ in got)
-
-
 def test_stream_compact_latest_by_key_across_batches(spark, tmp_path):
     """``xform_compact``'s streaming twin needs NO custom operator: the
     same ``max(struct)`` aggregation runs as a streaming aggregation in
@@ -823,7 +700,7 @@ def test_stream_compact_latest_by_key_across_batches(spark, tmp_path):
             path,
         )
         # pin ascending mtimes: FileStreamSource orders batches by
-        # modification time (the stream_utils rule)
+        # modification time
         t = 1_700_000_000 + next(_seq) * 10
         os.utime(path, (t, t))
 
