@@ -589,9 +589,8 @@ def fuzzy_token_join(
     Plan — the asymmetric inverted-index shape, never a cross join:
     each side tokenizes ONCE into per-token posting lists of
     ``struct(id, n_tokens)`` (``n`` computed scan-side and carried in
-    the struct, so no sizes sub-join re-evaluates a side — the
-    ``dedup_minhash`` r5 lesson), the two posting relations equi-join
-    on the token, both lists explode into co-token pairs, one hash
+    the struct, so no sizes sub-join re-evaluates a side), the two
+    posting relations equi-join on the token, both lists explode into co-token pairs, one hash
     aggregation counts common tokens per pair, and the Jaccard filter
     is a pure projection. Shuffle volume = token postings, output
     volume = matching pairs.

@@ -101,8 +101,8 @@ def scd2_merge(
     """Incremental SCD2 maintenance: merge a NEW changelog batch into an
     ALREADY-BUILT SCD2 table and return the updated table — the nightly
     delta-maintenance step that keeps a dimension current without
-    replaying the full history (the ``incremental_minhash_pairs``
-    shape applied to :func:`scd2_history`).
+    replaying the full history (incremental maintenance of
+    :func:`scd2_history`).
 
     The from-scratch invariant (pinned in tests and by the staged
     registration's oracle, which re-derives the result from the FULL

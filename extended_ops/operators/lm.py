@@ -217,9 +217,9 @@ def _model_scored_tokens(
     the trigram and its context-bigram counts, ``_c2``/``_cu`` the
     bigram and its context-unigram counts, ``_c1`` the unigram count
     and ``_N`` the total token mass. All five lookups are LEFT joins on
-    the model relation, keyed by ``xxhash64(gram)`` — the dedup_ngram
-    lesson: the token-side relation is the widest in the job (five gram
-    columns per token), so shipping 8-byte hash keys instead of
+    the model relation, keyed by ``xxhash64(gram)``: the token-side
+    relation is the widest in the job (five gram columns per token),
+    so shipping 8-byte hash keys instead of
     up-to-trigram STRINGS cuts its shuffle volume ~20× (measured: the
     string formulation, not the model size, dominated the sf1 probe).
     A hash collision mis-counts one lookup with probability

@@ -43,15 +43,15 @@ def _collect_queries(queries: DataFrame, cols: list[str]) -> list:
         raise ValueError(
             f"query side exceeds {MAX_COLLECTED_QUERIES} rows: the "
             "broadcast-queries regime collects the query matrix to the "
-            "driver. For large query sets use the symmetric pair path "
-            "(cosine_pairs_above) or batch the queries."
+            "driver. For large query sets use the corpus-wide kNN graph "
+            "(knn_graph) or batch the queries."
         )
     return rows
 
 
 def _unit_rows(m):
     """Row-wise unit normalization with the zero-vector guard — ONE
-    definition (cosine_pairs_above, semantic_decontaminate): a zero
+    definition (semantic_decontaminate, knn_graph): a zero
     vector has no direction, so its norm is replaced with inf and every
     cosine involving it becomes 0 instead of a silent NaN row."""
     import numpy as np
@@ -219,87 +219,6 @@ def brute_force_topk(
             F.round("sim", 6).alias("sim"),
         )
     )
-
-
-def cosine_pairs_above(
-    vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float,
-    blocks: int = 8,
-) -> DataFrame:
-    """``dedup_embed`` — all pairs with cosine ≥ threshold (exact), via
-    blocked matrix multiplication.
-
-    The O(n²) work is unavoidable for an *exact* answer, so the design
-    goal is doing it at memory-bandwidth speed with bounded shuffle:
-    vectors are hashed into ``blocks`` groups; each vector is replicated
-    to the ``blocks`` block-pairs it participates in (shuffle = n·B rows,
-    NOT n²); each (block_i ≤ block_j) group computes its full pairwise
-    cosine matrix in one BLAS multiply inside ``applyInPandas`` and emits
-    only pairs above threshold. At 100 TB, ``blocks`` scales so a block
-    pair fits executor memory — per-task work stays dense-BLAS-bound.
-    The approximate companion is :func:`lsh_bucket_candidates` + verify.
-    """
-    import numpy as np
-    import pandas as pd
-
-    blk = F.pmod(F.xxhash64(F.col("id")), F.lit(blocks))
-    tagged = vectors.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).withColumn("blk", blk)
-    # replicate each vector to every block-pair group it belongs to:
-    # side 'a' when its block is the smaller group coordinate, 'b' otherwise
-    memberships = F.array(
-        *[
-            F.struct(
-                F.least(F.col("blk"), F.lit(o)).alias("ga"),
-                F.greatest(F.col("blk"), F.lit(o)).alias("gb"),
-                F.when(F.col("blk") <= o, F.lit("a")).otherwise(F.lit("b")).alias("side"),
-            )
-            for o in range(blocks)
-        ]
-    )
-    exploded = tagged.select(
-        "id", "v", F.explode(memberships).alias("m")
-    ).select("id", "v", "m.ga", "m.gb", "m.side")
-
-    def _unit(rows: "pd.Series") -> "np.ndarray":
-        return _unit_rows(np.array(rows.tolist(), dtype=np.float64))
-
-    def pairs(key, pdf):
-        ga, gb = key
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
-        a = pdf[pdf["side"] == "a"]
-        ids_a = a["id"].to_numpy(dtype=np.int64)
-        if ga == gb:
-            if len(ids_a) < 2:
-                return empty
-            ma = _unit(a["v"])
-            sims = ma @ ma.T
-            iu, ju = np.triu_indices(len(ids_a), k=1)
-            ids_b, sims = ids_a[ju], sims[iu, ju]
-            ids_a = ids_a[iu]
-        else:
-            b = pdf[pdf["side"] == "b"]
-            ids_b = b["id"].to_numpy(dtype=np.int64)
-            if len(ids_a) == 0 or len(ids_b) == 0:
-                return empty
-            sims = (_unit(a["v"]) @ _unit(b["v"]).T).ravel()
-            ids_a, ids_b = (
-                np.repeat(ids_a, len(ids_b)),
-                np.tile(ids_b, len(a)),
-            )
-        keep = sims >= threshold
-        ids_a, ids_b, sims = ids_a[keep], ids_b[keep], sims[keep]
-        lo, hi = np.minimum(ids_a, ids_b), np.maximum(ids_a, ids_b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "sim": sims})
-
-    out = exploded.groupBy("ga", "gb").applyInPandas(
-        pairs, "id_a long, id_b long, sim double"
-    )
-    return out.select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
 
 # --------------------------------------------------------------------------
@@ -1034,7 +953,7 @@ def semantic_decontaminate(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # the output id keeps the TRAIN id column's type — a hardcoded
     # 'long' breaks string/int ids at runtime with an opaque Arrow
-    # type mismatch (ADVICE r8; near_dup_clusters derives it the same way)
+    # type mismatch (ADVICE r8)
     id_type = train.schema[id_col].dataType.simpleString()
     out_schema = f"`{id_col}` {id_type}, max_sim double, n_eval_hits long"
     # NULL embeddings carry no geometry on either side — filtered, not
@@ -1417,9 +1336,9 @@ def knn_graph(
     connectivity-based dedup all start from — ``sim_topk`` answers a
     bounded QUERY set against the corpus; this is corpus × corpus.
 
-    Same blocked-BLAS frame as :func:`cosine_pairs_above` (every
-    unordered pair meets in exactly ONE block-pair group; shuffle is
-    n·B replication rows, never n²), plus the standard distributed
+    A blocked-BLAS frame (vectors hash into ``blocks`` groups and
+    every unordered pair meets in exactly ONE block-pair group; shuffle
+    is n·B replication rows, never n²), plus the standard distributed
     top-k refinement: each group emits each member's LOCAL top-k among
     the group's counterpart vectors — a superset of its global top-k
     contributions from that group, so the union over a vector's B
@@ -1427,8 +1346,8 @@ def knn_graph(
     WindowGroupLimit-able ranked window collapses the ≤ n·B·k candidate
     rows to the final graph. Per-task work is one dense matmul
     (memory-bandwidth-bound); candidate volume is k-bounded, NOT
-    threshold-dependent — the reason this beats running
-    ``cosine_pairs_above`` at a low threshold and ranking afterward.
+    threshold-dependent — the reason this beats an all-pairs
+    threshold join at a low threshold ranked afterward.
 
     Ranking determinism: both the local selection and the global window
     rank by ``(round(sim, 6) DESC, neighbor_id ASC)`` — the 6dp

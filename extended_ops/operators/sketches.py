@@ -1,8 +1,8 @@
 """Sketch aggregations — the 100 TB path for distinct counts and
 percentiles.
 
-The exact operators these approximate (``dedup_count``'s
-``count_distinct``, ``rel_quantiles``' sort-based ``percentile``) shuffle
+The exact operators these approximate (``count_distinct``,
+``rel_quantiles``' sort-based ``percentile``) shuffle
 or sort data proportional to the key cardinality; at 100 TB the sketch
 variants are the only sane default: HyperLogLog++ (``approx_count_distinct``)
 keeps a fixed ~KB register set per group and merges map-side, and the

@@ -48,8 +48,9 @@ def skyline_2d(
        hint is deliberately NOT forced (r10 advice #4): for a
        continuous/high-cardinality ``min_col`` domain the frontier is
        unbounded, and a forced ``F.broadcast`` would be a driver-OOM
-       risk — the same no-forced-hint rule ``incremental_minhash_pairs``
-       follows; AQE broadcasts it whenever it actually fits.
+       risk — the same no-forced-hint rule
+       :func:`~.dedup.bounded_posting_lists` follows; AQE broadcasts it
+       whenever it actually fits.
     """
     # rows with a NULL coordinate can neither dominate nor sit on the
     # frontier (dominance is undefined for them) — and Spark's window

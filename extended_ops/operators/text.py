@@ -339,7 +339,7 @@ def with_shingle_fingerprint(
     The minimum shingle hash is stable under small edits anywhere except
     the minimal shingle itself — a one-value sketch of the document used as
     a cheap near-dup pre-filter (full MinHash generalizes this to H
-    minima; see :mod:`.dedup`).
+    minima).
     """
     shingles = shingle_array(F.col(_WORDS), k)
     return (
@@ -449,9 +449,9 @@ def shingle_array(words: Column, k: int) -> Column:
 #: Exactly Java-regex ``\s`` (what Spark's ``split(_, '\\s+')`` matches
 #: without UNICODE_CHARACTER_CLASS): ASCII space, tab, LF, VT, FF, CR.
 #: Python's bare ``str.split()`` splits on ALL Unicode whitespace
-#: (U+00A0, U+2009, …) — using it here would make ``dedup_*``
-#: (shingle_rows) and ``text_*`` (:func:`_words`) tokenize non-ASCII
-#: documents differently. Pinning the exact character class keeps the
+#: (U+00A0, U+2009, …) — using it here would make :func:`shingle_rows`
+#: and ``text_*`` (:func:`_words`) tokenize non-ASCII documents
+#: differently. Pinning the exact character class keeps the
 #: two tokenizer paths bit-identical on any input.
 _JAVA_WS = " \t\n\x0b\f\r"
 
@@ -522,195 +522,6 @@ def shingle_rows(
     return df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
     ).mapInPandas(gen, schema)
-
-
-def positioned_shingle_rows(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int,
-) -> DataFrame:
-    """All word-``k``-shingle OCCURRENCES with token positions:
-    ``(id, pos, sh)`` rows, ``pos`` = 0-based index of the shingle's
-    first token.
-
-    Unlike :func:`shingle_rows` (DISTINCT shingles, for set-similarity),
-    every occurrence is kept — span-level dedup has to map duplicated
-    shingles back to WHERE they occur, and a shingle repeated within one
-    document marks two regions. Same Arrow-batched tokenizer, same token
-    semantics (lowercase, Java-``\\s`` runs — see ``_JAVA_WS``); docs
-    shorter than ``k`` words yield nothing.
-    """
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            poss: list = []
-            shingles: list = []
-            for i, w in _py_word_lists(pdf["_id"], pdf["_text"], k):
-                n = len(w) - k + 1
-                ids.extend([i] * n)
-                poss.extend(range(n))
-                shingles.extend(
-                    " ".join(w[j : j + k]) for j in range(n)
-                )
-            yield pd.DataFrame({"id": ids, "pos": poss, "sh": shingles})
-
-    return df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-    ).mapInPandas(gen, "id long, pos long, sh string")
-
-
-def hashed_shingle_rows(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int,
-    with_n: bool = False,
-) -> DataFrame:
-    """Distinct word-``k``-shingles pre-hashed to the md5 two-hash family
-    keys: ``(id, k1, k2)`` rows with ``k1``/``k2`` = the first/second
-    40 bits of ``md5(shingle)``.
-
-    Fuses the hash into the Arrow tokenizer pass: ``hashlib.md5`` runs at
-    C speed on bytes already in hand, replacing a JVM
-    ``conv(substring(md5(sh), …), 16, 10)`` expression pair per shingle
-    row — the dominant expression tax in the r2 ``dedup_minhash``
-    profile — and shrinks the shuffle rows from ~(8 B + shingle string)
-    to 24 B of fixed-width ints. Bit-identical to the SQL construction
-    (md5 of the UTF-8 shingle; hex digits 1-10 / 11-20 big-endian), so
-    DuckDB oracles reproduce it verbatim.
-
-    ``with_n=True`` adds the document's distinct-shingle count ``n`` to
-    every row (see :func:`shingle_rows`).
-    """
-    import hashlib
-
-    import pandas as pd
-
-    def gen(batches):
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids: list = []
-            k1s: list = []
-            k2s: list = []
-            ns: list = []
-            for i, w in _py_word_lists(pdf["_id"], pdf["_text"], k):
-                distinct = dict.fromkeys(
-                    " ".join(w[j : j + k]) for j in range(len(w) - k + 1)
-                )
-                for s in distinct:
-                    d = md5(s.encode()).digest()
-                    k1s.append(int.from_bytes(d[:5], "big"))
-                    k2s.append(int.from_bytes(d[5:10], "big"))
-                ids.extend([i] * len(distinct))
-                if with_n:
-                    ns.extend([len(distinct)] * len(distinct))
-            data = {"id": ids, "k1": k1s, "k2": k2s}
-            if with_n:
-                data["n"] = ns
-            yield pd.DataFrame(data)
-
-    schema = "id long, k1 long, k2 long" + (", n long" if with_n else "")
-    return df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-    ).mapInPandas(gen, schema)
-
-
-def minhash_doc_sigs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int,
-    num_hashes: int,
-    carry_col: str | None = None,
-) -> DataFrame:
-    """Per-document MinHash signature of the md5 two-hash affine family
-    (hᵢ = k1 + i·k2 over distinct word-``k``-shingles), computed WHOLLY
-    inside the Arrow tokenizer pass: each document is one input row, so
-    its shingle set — and therefore its complete signature — is local to
-    the map task. Output: ``(id, sig: array<bigint>[num_hashes], n_sh)``
-    rows for documents with ≥ ``k`` words (others yield nothing, like
-    :func:`hashed_shingle_rows`); ``carry_col`` (a STRING column, e.g. a
-    fingerprint) is passed through untouched.
-
-    This replaces the exploded-rows formulation (tokenize → 260k
-    ``(id, k1, k2)`` rows → ``groupBy(id)`` with ``num_hashes`` min
-    aggregates), which paid a corpus-wide shuffle plus a 65-buffer hash
-    aggregation for minima that never needed to leave the scan task —
-    measured 1.7 s → ~0.6 s at sf0.1 for the signature subtree. Minima
-    are exact int64 ``np.minimum.reduceat`` folds (k1 + i·k2 < 2⁴⁶, no
-    overflow), bit-identical to ``MIN(k1 + i*k2)`` in Spark or DuckDB —
-    the oracle construction is unchanged.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    cols = [F.col(id_col).alias("_id"), F.col(text_col).alias("_text")]
-    out_schema = f"id long, sig array<bigint>, n_sh long"
-    if carry_col is not None:
-        cols.append(F.col(carry_col).alias("_carry"))
-        out_schema += ", carry string"
-
-    def gen(batches):
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids: list = []
-            k1s: list = []
-            k2s: list = []
-            starts: list = []
-            ns: list = []
-            carries: list = []
-            has_carry = "_carry" in pdf.columns
-            carry_vals = pdf["_carry"].tolist() if has_carry else None
-            for pos, (i, t) in enumerate(zip(pdf["_id"], pdf["_text"])):
-                # tokenization identical to _py_word_lists / _words
-                if not t:
-                    continue
-                t = t.lower().strip(_JAVA_WS)
-                if not t:
-                    continue
-                w = _JAVA_WS_RE.split(t)
-                if len(w) < k:
-                    continue
-                distinct = dict.fromkeys(
-                    " ".join(w[j : j + k]) for j in range(len(w) - k + 1)
-                )
-                starts.append(len(k1s))
-                ids.append(i)
-                ns.append(len(distinct))
-                if has_carry:
-                    carries.append(carry_vals[pos])
-                for s in distinct:
-                    d = md5(s.encode()).digest()
-                    k1s.append(int.from_bytes(d[:5], "big"))
-                    k2s.append(int.from_bytes(d[5:10], "big"))
-            if not ids:
-                data = {"id": [], "sig": [], "n_sh": []}
-                if has_carry:
-                    data["carry"] = []
-                yield pd.DataFrame(data)
-                continue
-            a1 = np.asarray(k1s, dtype=np.int64)
-            a2 = np.asarray(k2s, dtype=np.int64)
-            st = np.asarray(starts, dtype=np.int64)
-            sig = np.empty((len(ids), num_hashes), dtype=np.int64)
-            # one vectorized affine fold + segmented min per hash: memory
-            # stays O(shingles-in-batch), never O(shingles × num_hashes)
-            for h in range(num_hashes):
-                sig[:, h] = np.minimum.reduceat(a1 + h * a2, st)
-            data = {"id": ids, "sig": list(sig), "n_sh": ns}
-            if has_carry:
-                data["carry"] = carries
-            yield pd.DataFrame(data)
-
-    return df.select(*cols).mapInPandas(gen, out_schema)
 
 
 def corpus_freq_score(
@@ -802,10 +613,10 @@ def ngram_novelty_score(
     document's distinct ``k``-shingle count and ``n_unique`` counts the
     shingles with corpus document-frequency exactly 1. Templated or
     mirrored documents score near 0 (every shingle shared), fresh prose
-    scores near 1 — the complement of the near-dup signal
-    ``minhash_near_dup_pairs`` detects pairwise, computed corpus-wide
-    in two aggregations instead of a quadratic join. All counts are
-    BIGINTs and the one division is a small-integer rational, so the
+    scores near 1 — the complement of the near-dup signal a pairwise
+    shingle join detects, computed corpus-wide in two aggregations
+    instead of a quadratic join. All counts are BIGINTs and the one
+    division is a small-integer rational, so the
     score is bit-identical on any engine and any partitioning (the same
     cross-engine contract as :func:`corpus_freq_score`; no logs, no
     order-dependent double sums).
@@ -815,8 +626,8 @@ def ngram_novelty_score(
     per-shingle document frequency; the df relation joins back to the
     (already distinct) shingle rows and collapses straight to per-doc
     counts. Shuffle volume is O(distinct (doc, shingle) pairs) for the
-    df aggregation — the same exchange the minhash banding pays — and
-    the join's shingle key carries at most ``df`` rows per shingle with
+    df aggregation — the same exchange an inverted-index pair join
+    pays — and the join's shingle key carries at most ``df`` rows per shingle with
     df's Zipf tail bounded exactly like ``corpus_freq_score``'s word
     key (broadcast regime first, AQE skew-split past it; see that
     docstring's residual-skew ledger). Docs with fewer than ``k`` words

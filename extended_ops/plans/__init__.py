@@ -20,7 +20,6 @@ from flink_audit_sessions_example_spark.plans.queries import (
 )
 from .extended import EXTENDED_ORACLES, EXTENDED_QUERIES
 from .round10 import ROUND10_ORACLES, ROUND10_QUERIES
-from .round12 import ROUND12_ORACLES, ROUND12_QUERIES
 from .staged import STAGED_ORACLES, STAGED_QUERIES
 from .staged_r11 import STAGED_R11_ORACLES, STAGED_R11_QUERIES
 from .staged_r12 import STAGED_R12_ORACLES, STAGED_R12_QUERIES
@@ -46,7 +45,6 @@ _BATCHES = [
     (EXTENDED_QUERIES, EXTENDED_ORACLES),
     (STAGED_QUERIES, STAGED_ORACLES),
     (ROUND10_QUERIES, ROUND10_ORACLES),
-    (ROUND12_QUERIES, ROUND12_ORACLES),
     (STAGED_R11_QUERIES, STAGED_R11_ORACLES),
     (STAGED_R12_QUERIES, STAGED_R12_ORACLES),
     (STAGED_R13_QUERIES, STAGED_R13_ORACLES),

@@ -1,4 +1,4 @@
-"""Extended query surface: dedup / similarity / text / multimodal /
+"""Extended query surface: similarity / text / multimodal /
 relational (SURVEY.md §2.2 — the LLM-data-pipeline operators the driver's
 north-star mandates beyond the reference's own operators).
 
@@ -34,7 +34,7 @@ from ..operators import text as X
 from ..sources.tables import load_table
 
 # --------------------------------------------------------------------------
-# Dedup
+# Shared text fragments
 # --------------------------------------------------------------------------
 
 #: Shared DuckDB fragments mirroring operators/text.py exactly.
@@ -56,292 +56,13 @@ def _sql_shingles(k: int) -> str:
     )
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_exact`` — content dedup: group by normalized-text md5
-    fingerprint, keep min doc_id (deterministic survivor). One shuffle,
-    map-side partial agg collapses local dups first.
-
-    ``spread=False``: the plan is scan → light projection → hash agg;
-    its first (and only) exchange is the agg shuffle, so the scan-spread
-    repartition is pure overhead (measured 2×: 0.51 → 0.26 s at sf0.1 —
-    the r3 "bench doubling" was this exchange, not the heavier data)."""
-    docs = X.with_fingerprint(
-        load_table(spark, sf_dir, "documents", spread=False)
-    )
-    return D.exact_dedup(docs, ["fingerprint"], "doc_id")
-
-
-_DEDUP_EXACT_ORACLE = """
-SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint,
-       MIN(doc_id) AS doc_id
-FROM documents GROUP BY 1
-"""
-
-
-def q_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup sizing pre-pass: total rows vs distinct texts.
-
-    ``spread=False``: pure scan-side aggregation — see ``q_dedup_exact``
-    (same measured 2× exchange tax)."""
-    return D.distinct_count(
-        load_table(spark, sf_dir, "documents", spread=False), ["text"]
-    )
-
-
-_DEDUP_COUNT_ORACLE = """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COUNT(DISTINCT text) AS BIGINT) AS n_distinct
-FROM documents
-"""
-
-
-#: Skew caps active in the REGISTERED dedup queries (and mirrored in their
-#: oracles): a shingle shared by more than MAX_SHINGLE_DF docs, or an LSH
-#: bucket larger than MAX_BUCKET_SIZE, is dropped before its quadratic pair
-#: explode — at corpus scale one boilerplate shingle would otherwise emit
-#: ~df² pairs from a single posting row.
+#: Skew caps active in the REGISTERED pair queries (and mirrored in their
+#: oracles): a shingle shared by more than MAX_SHINGLE_DF docs, or a
+#: blocking bucket larger than MAX_BUCKET_SIZE, is dropped before its
+#: quadratic pair explode — at corpus scale one boilerplate shingle would
+#: otherwise emit ~df² pairs from a single posting row.
 MAX_SHINGLE_DF = 1000
 MAX_BUCKET_SIZE = 200
-
-
-def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_ngram`` — exact 3-shingle Jaccard ≥ 0.5 near-dup pairs via
-    inverted-index join (no cross join; see operators/dedup.py), with the
-    ``max_shingle_df`` skew cap ACTIVE (a 100 TB run cannot ship without
-    it; the oracle applies the identical cap)."""
-    return D.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        k=3,
-        threshold=0.5,
-        max_shingle_df=MAX_SHINGLE_DF,
-    )
-
-
-_DEDUP_NGRAM_ORACLE = f"""
-WITH sh AS (
-  SELECT doc_id AS id, unnest({_sql_shingles(3)}) AS shingle FROM documents
-), sizes AS (
-  SELECT id, COUNT(*) AS n FROM sh GROUP BY id
-), keep AS (
-  SELECT shingle FROM sh GROUP BY shingle
-  HAVING COUNT(*) >= 2 AND COUNT(*) <= {MAX_SHINGLE_DF}
-), common AS (
-  SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS c
-  FROM sh a
-  JOIN keep k ON a.shingle = k.shingle
-  JOIN sh b ON b.shingle = a.shingle AND a.id < b.id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b, c / (sa.n + sb.n - c) AS jaccard
-FROM common
-JOIN sizes sa ON sa.id = common.id_a
-JOIN sizes sb ON sb.id = common.id_b
-WHERE c / (sa.n + sb.n - c) >= 0.5
-"""
-
-
-def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_cluster`` — connected components over the exact near-dup
-    pair graph (``dedup_ngram``'s output): every doc in a component is
-    labeled with the component's min doc id — the canonical survivor,
-    turning pairwise near-dup output into actionable "keep one, drop
-    the rest" groups (``operators/dedup.py::near_dup_clusters``:
-    iterative min-label propagation, checkpointed rounds, rounds =
-    component diameter ≈ 2-3 on clique-ish near-dup graphs). The DuckDB
-    oracle is the same fixpoint as a recursive transitive closure, so
-    the iterative Spark algorithm is hash-checked end-to-end."""
-    pairs = D.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        k=3,
-        threshold=0.5,
-        max_shingle_df=MAX_SHINGLE_DF,
-    )
-    return D.near_dup_clusters(pairs)
-
-
-_DEDUP_CLUSTER_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {_DEDUP_NGRAM_ORACLE}
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS id, src AS r FROM edges
-  UNION
-  SELECT e.src AS id, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst
-)
-SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-"""
-
-
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_minhash`` — exact-dup collapse → MinHash → LSH-band
-    candidates → exact-Jaccard verify *of candidates only* → dup-group
-    re-expansion (r5), registered with the md5 two-hash affine family so
-    the ENTIRE pipeline (fingerprint pre-pass, Arrow-fused signatures,
-    banding, bucket cap, candidates-restricted verify, expansion) is
-    reproduced by the DuckDB oracle and hash-checked. Signatures are
-    computed INSIDE the Arrow tokenizer pass (each doc is one row ⇒ its
-    signature is task-local; no shingle-row shuffle, no 65-buffer hash
-    agg — the r4 plan's dominant cost). Production default stays
-    ``hash_family='xxhash64'`` (cheaper; pytest-covered by the
-    recall/precision tests in tests/test_dedup_similarity.py); the LSH
-    bucket cap is active. Band keys are the affine integer fold (r3) —
-    no per-band md5/string tax. No persist: the r3 profile showed the
-    cached diamonds cost more than the recompute they save at this plan
-    shape, and an un-unpersisted cache would outlive the query in a
-    shared session (ADVICE r2)."""
-    return D.minhash_near_dup_pairs(
-        load_table(spark, sf_dir, "documents"),
-        k=3,
-        num_hashes=64,
-        bands=16,
-        threshold=0.5,
-        hash_family="md5",
-        max_bucket_size=MAX_BUCKET_SIZE,
-        max_shingle_df=MAX_SHINGLE_DF,
-        max_group_size=MAX_BUCKET_SIZE,
-    )
-
-
-def _sql_hex40(digest: str, offset: int) -> str:
-    """DuckDB twin of ``operators.dedup._hex40``: 10 hex digits → bigint."""
-    return f"CAST(('0x' || substr({digest}, {offset}, 10)) AS BIGINT)"
-
-
-def _minhash_oracle(
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    max_group_size: int = MAX_BUCKET_SIZE,
-) -> str:
-    """DuckDB twin of the registered ``dedup_minhash`` (md5 family, r5
-    pre-dedup semantics): exact-dup groups by normalized-text md5
-    fingerprint (rep = min id); the LSH pipeline — hᵢ = k1 + i·k2 from
-    one md5 per shingle, 16 BIGINT band keys (the affine polynomial fold
-    ``acc = (acc·P + hᵢ) mod 2⁴⁰`` seeded with the band index), bucket
-    cap, candidates-restricted exact-Jaccard verify with the shingle-df
-    cap — runs over REP docs only; verified rep pairs fan out across
-    their dup groups and multi-member shingle-able groups emit
-    intra-group pairs at Jaccard 1.0 — term-for-term the Spark plan."""
-    from ..operators.dedup import _AFFINE_M, _AFFINE_P
-
-    r = num_hashes // bands
-
-    def affine_key(b: int) -> str:
-        acc = f"CAST({b} AS BIGINT)"
-        for j in range(r):
-            acc = f"(({acc}) * {_AFFINE_P} + h{b * r + j}) % {_AFFINE_M}"
-        return acc
-
-    mins = ",\n    ".join(
-        f"MIN(k1 + {i} * k2) AS h{i}" for i in range(num_hashes)
-    )
-    band_selects = "\n  UNION ALL ".join(
-        f"SELECT id, {affine_key(b)} AS key FROM sig" for b in range(bands)
-    )
-    return f"""
-WITH fp AS (
-  SELECT doc_id AS id, text,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f,
-         len({_SQL_WORDS}) >= {k} AS sh_ok
-  FROM documents
-), grp AS (
-  SELECT f, MIN(id) AS rep, list_sort(list(id)) AS members,
-         COUNT(*) AS m, MAX(sh_ok) AS sh_ok
-  FROM fp GROUP BY f
-), repdocs AS (
-  SELECT fp.id AS doc_id, fp.text FROM fp JOIN grp ON grp.rep = fp.id
-), sh AS (
-  SELECT doc_id AS id, unnest({_sql_shingles(k)}) AS s FROM repdocs
-), hashed AS (
-  SELECT id, {_sql_hex40("d", 1)} AS k1, {_sql_hex40("d", 11)} AS k2
-  FROM (SELECT id, md5(s) AS d FROM sh) t
-), sig AS (
-  SELECT id,
-    {mins}
-  FROM hashed GROUP BY id
-), bands AS (
-  {band_selects}
-), buckets AS (
-  SELECT key FROM bands GROUP BY 1
-  HAVING COUNT(*) >= 2 AND COUNT(*) <= {MAX_BUCKET_SIZE}
-), cand AS (
-  SELECT DISTINCT a.id
-  FROM bands a JOIN buckets bk ON a.key = bk.key
-), vhash AS (
-  SELECT h.* FROM hashed h JOIN cand USING (id)
-), vsizes AS (
-  SELECT id, COUNT(*) AS n FROM vhash GROUP BY id
-), keep AS (
-  SELECT k1, k2 FROM vhash GROUP BY k1, k2
-  HAVING COUNT(*) >= 2 AND COUNT(*) <= {MAX_SHINGLE_DF}
-), common AS (
-  SELECT x.id AS id_a, y.id AS id_b, COUNT(*) AS cnt
-  FROM vhash x
-  JOIN keep kp ON kp.k1 = x.k1 AND kp.k2 = x.k2
-  JOIN vhash y ON y.k1 = x.k1 AND y.k2 = x.k2 AND x.id < y.id
-  GROUP BY 1, 2
-), rep_pairs AS (
-  SELECT c.id_a, c.id_b, ROUND(cnt / (sa.n + sb.n - cnt), 6) AS jaccard
-  FROM common c
-  JOIN vsizes sa ON sa.id = c.id_a
-  JOIN vsizes sb ON sb.id = c.id_b
-  WHERE cnt / (sa.n + sb.n - cnt) >= {threshold}
-), gx AS (
-  -- dup map mirror: groups over the size cap fall back to the rep alone
-  -- (max_group_size semantics — same trade as the LSH bucket cap)
-  SELECT rep,
-         CASE WHEN m BETWEEN 2 AND {max_group_size} THEN members
-              ELSE [rep] END AS members
-  FROM grp
-), expanded AS (
-  SELECT least(a.x, b.x) AS id_a, greatest(a.x, b.x) AS id_b, p.jaccard
-  FROM rep_pairs p
-  JOIN gx ga ON ga.rep = p.id_a
-  JOIN gx gb ON gb.rep = p.id_b
-  CROSS JOIN UNNEST(ga.members) AS a(x)
-  CROSS JOIN UNNEST(gb.members) AS b(x)
-), intra AS (
-  SELECT a.x AS id_a, b.x AS id_b, CAST(1.0 AS DOUBLE) AS jaccard
-  FROM grp g
-  CROSS JOIN UNNEST(g.members) AS a(x)
-  CROSS JOIN UNNEST(g.members) AS b(x)
-  WHERE a.x < b.x AND g.m >= 2 AND g.m <= {max_group_size} AND g.sh_ok
-)
-SELECT * FROM expanded UNION ALL SELECT * FROM intra
-"""
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_simhash`` — 32-bit SimHash fingerprint per document
-    (md5-bit votes over distinct tokens; operators/dedup.py)."""
-    return D.simhash(load_table(spark, sf_dir, "documents")).select(
-        F.col("id").alias("doc_id"), "simhash"
-    )
-
-
-def _simhash_oracle() -> str:
-    digit = lambda p: f"(instr('0123456789abcdef', substr(md5(tok), {p}, 1)) - 1)"
-    bit_sums = ",\n  ".join(
-        f"SUM((CAST(FLOOR({digit(j // 4 + 1)} / POW(2, {j % 4})) AS INT) % 2) * 2 - 1) AS s{j}"
-        for j in range(D.SIMHASH_BITS)
-    )
-    fp = " + ".join(
-        f"CASE WHEN s{j} > 0 THEN {2**j} ELSE 0 END"
-        for j in range(D.SIMHASH_BITS)
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id AS id, unnest(list_distinct({_SQL_WORDS})) AS tok FROM documents
-), sums AS (
-  SELECT id, {bit_sums}
-  FROM toks GROUP BY id
-)
-SELECT id AS doc_id, CAST({fp} AS BIGINT) AS simhash FROM sums
-"""
 
 
 # --------------------------------------------------------------------------
@@ -389,34 +110,6 @@ scored AS (
 )
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, ROUND(sim, 6) AS sim
 FROM ranked WHERE rank <= 10
-"""
-
-
-#: the dedup_embed cosine threshold — ONE definition for the pair query,
-#: its oracle, and the staged dedup_embed_cluster composite (a second
-#: literal would let the cluster query and its oracle drift on retune)
-DEDUP_EMBED_TAU = 0.35
-
-
-def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_embed`` — embedding-cosine near-dup pairs (cos ≥
-    ``DEDUP_EMBED_TAU``; exact at oracle scale, LSH path in
-    ``sim_topk_lsh``).
-
-    ``spread=False``: the blocked-BLAS scorer repartitions internally by
-    block key, so a scan-spread exchange upstream is pure overhead
-    (measured 1.11 → 0.84 s at sf0.1)."""
-    return S.cosine_pairs_above(
-        load_table(spark, sf_dir, "embeddings", spread=False),
-        threshold=DEDUP_EMBED_TAU,
-    )
-
-
-_DEDUP_EMBED_ORACLE = f"""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND({_sql_cos("a.embedding", "b.embedding")}, 6) AS sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_sql_cos("a.embedding", "b.embedding")} >= {DEDUP_EMBED_TAU}
 """
 
 
@@ -2857,41 +2550,6 @@ GROUP BY 1
 """
 
 
-def q_dedup_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_chunk`` — sub-document (paragraph-level) exact dedup:
-    repeated 20-word chunks are scrubbed corpus-wide, keeping the first
-    occurrence by (doc id, chunk index); see
-    ``operators/dedup.py::chunk_dedup`` for the plan-shape rationale."""
-    return D.chunk_dedup(
-        load_table(spark, sf_dir, "documents"), chunk_words=20
-    )
-
-
-_DEDUP_CHUNK_ORACLE = f"""
-WITH w AS (
-  SELECT doc_id AS id, {_SQL_WORDS} AS words FROM documents
-), ch AS (
-  SELECT id, i AS chunk_idx,
-         array_to_string(words[i*20+1 : i*20+20], ' ') AS chunk_text
-  FROM w, LATERAL (
-    SELECT unnest(generate_series(0,
-        CAST(ceil(len(words) / 20.0) AS INT) - 1)) AS i
-  ) s
-), r AS (
-  SELECT id, chunk_idx, chunk_text,
-         ROW_NUMBER() OVER (PARTITION BY chunk_text
-                            ORDER BY id, chunk_idx) AS rn
-  FROM ch
-)
-SELECT id AS doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_chunks,
-       CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       string_agg(CASE WHEN rn = 1 THEN chunk_text END, ' '
-                  ORDER BY chunk_idx) AS text_kept
-FROM r GROUP BY id
-"""
-
-
 def q_text_corpus_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``text_corpus_freq`` — unigram-LM-style quality score: each
     document's mean corpus unigram probability, aggregated entirely in
@@ -3729,8 +3387,8 @@ def q_rel_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin_keyed=False: the keyed subtree is a 2-column pruned scan + one
     # dedup shuffle — the recompute-cheap case SCALING.md's pin guidance
     # names (measured sf0.1 min-of-3: no-pin 1.65 s vs pin 1.72 s, and
-    # lineage stays intact for free). Contrast dedup_ngram, whose pinned
-    # subtree is the expensive Arrow tokenizer pass.
+    # lineage stays intact for free). Contrast text_containment, whose
+    # pinned subtree is the expensive Arrow tokenizer pass.
     posts = D.bounded_posting_lists(
         li,
         ["l_orderkey"],
@@ -4066,12 +3724,6 @@ EXTENDED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_filtered_scan": q_rel_filtered_scan,
     "pipeline_clean_corpus": q_pipeline_clean_corpus,
     "join_asof": q_join_asof,
-    "dedup_exact": q_dedup_exact,
-    "dedup_count": q_dedup_count,
-    "dedup_ngram": q_dedup_ngram,
-    "dedup_minhash": q_dedup_minhash,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_embed": q_dedup_embed,
     "sim_topk": q_sim_topk,
     "sim_topk_lsh": q_sim_topk_lsh,
     "sim_topk_ivf": q_sim_topk_ivf,
@@ -4107,7 +3759,6 @@ EXTENDED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "join_semi": q_join_semi,
     "rel_above_avg": q_rel_above_avg,
     "agg_multi_distinct": q_agg_multi_distinct,
-    "dedup_cluster": q_dedup_cluster,
     "rel_pivot": q_rel_pivot,
     "win_moving_avg": q_win_moving_avg,
     "rel_window_share": q_rel_window_share,
@@ -4119,7 +3770,6 @@ EXTENDED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "join_salted": q_join_salted,
     "rel_stats_corr": q_rel_stats_corr,
     "rel_histogram_bins": q_rel_histogram_bins,
-    "dedup_chunk": q_dedup_chunk,
     "text_corpus_freq": q_text_corpus_freq,
     "domain_mix": q_domain_mix,
     "join_range": q_join_range,
@@ -4157,12 +3807,6 @@ EXTENDED_ORACLES: dict[str, str] = {
     "rel_filtered_scan": _REL_FILTERED_ORACLE,
     "pipeline_clean_corpus": _pipeline_oracle(),
     "join_asof": _JOIN_ASOF_ORACLE,
-    "dedup_exact": _DEDUP_EXACT_ORACLE,
-    "dedup_count": _DEDUP_COUNT_ORACLE,
-    "dedup_ngram": _DEDUP_NGRAM_ORACLE,
-    "dedup_minhash": _minhash_oracle(),
-    "dedup_simhash": _simhash_oracle(),
-    "dedup_embed": _DEDUP_EMBED_ORACLE,
     "sim_topk": _SIM_TOPK_ORACLE,
     "sim_topk_lsh": _sim_lsh_oracle(nbits=40, bands=4),
     "sim_topk_ivf": _sim_ivf_oracle(n_centroids=32, nprobe=6),
@@ -4198,7 +3842,6 @@ EXTENDED_ORACLES: dict[str, str] = {
     "join_semi": _JOIN_SEMI_ORACLE,
     "rel_above_avg": _REL_ABOVE_AVG_ORACLE,
     "agg_multi_distinct": _AGG_MULTI_DISTINCT_ORACLE,
-    "dedup_cluster": _DEDUP_CLUSTER_ORACLE,
     "rel_pivot": _REL_PIVOT_ORACLE,
     "win_moving_avg": _WIN_MOVING_AVG_ORACLE,
     "rel_window_share": _REL_WINDOW_SHARE_ORACLE,
@@ -4208,7 +3851,6 @@ EXTENDED_ORACLES: dict[str, str] = {
     "join_salted": _JOIN_SALTED_ORACLE,
     "rel_stats_corr": _REL_STATS_CORR_ORACLE,
     "rel_histogram_bins": _REL_HISTOGRAM_BINS_ORACLE,
-    "dedup_chunk": _DEDUP_CHUNK_ORACLE,
     "text_corpus_freq": _TEXT_CORPUS_FREQ_ORACLE,
     "domain_mix": _domain_mix_oracle(DOMAIN_MIX_WEIGHTS),
     "join_range": _join_range_oracle(PRICE_BANDS),

@@ -158,8 +158,8 @@ CONTAINMENT_THRESHOLD = 0.4
 def q_text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``text_containment`` — 3-shingle containment ≥ 0.4 pairs
     (:func:`~..operators.dedup.ngram_containment_pairs`): the
-    quote-inclusion/subset-document signal Jaccard misses, on the
-    dedup_ngram inverted-index plan with the same boilerplate-shingle
+    quote-inclusion/subset-document signal Jaccard misses, on an
+    inverted-index plan with the ``MAX_SHINGLE_DF`` boilerplate-shingle
     cap."""
     return ngram_containment_pairs(
         load_table(spark, sf_dir, "documents"),

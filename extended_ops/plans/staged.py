@@ -601,7 +601,6 @@ from ..operators.corpus import (  # noqa: E402
     weighted_reservoir_sample,
     weighted_sample_k,
 )
-from ..operators.dedup import duplicated_spans  # noqa: E402
 from ..operators.profile import profile_columns  # noqa: E402
 from ..operators.quantiles import mad_outliers, winsorize  # noqa: E402
 from ..operators.runtime_filters import bloom_pruned_join  # noqa: E402
@@ -885,52 +884,7 @@ SELECT d.o_orderkey, d.o_orderpriority, d.o_totalprice,
 FROM dev d JOIN mad m ON d.o_orderpriority = m.g
 """
 
-# -- span dedup / layout / pattern match / sentences --------------------------
-
-SPANS_K = 8
-
-
-def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_spans`` — maximal duplicated token spans
-    (:func:`~..operators.dedup.duplicated_spans`): the substring-level
-    dedup doc-level operators miss; non-vacuous on this corpus's
-    planted boilerplate (45 spans at sf0.001)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return duplicated_spans(docs, k=SPANS_K)
-
-
-def _dedup_spans_oracle(k: int) -> str:
-    return f"""
-WITH ps AS (
-  SELECT doc_id,
-         unnest(generate_series(0, len({_SQL_WORDS})-{k})) AS pos,
-         unnest(list_transform(
-           generate_series(0, len({_SQL_WORDS})-{k}),
-           i -> array_to_string(({_SQL_WORDS})[i+1:i+{k}], ' '))) AS sh
-  FROM documents WHERE len({_SQL_WORDS}) >= {k}
-), dup AS (
-  SELECT sh FROM ps GROUP BY sh HAVING MIN(doc_id) <> MAX(doc_id)
-), hit AS (
-  SELECT p.doc_id, p.pos FROM ps p JOIN dup USING (sh)
-), lg AS (
-  SELECT doc_id, pos,
-         lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-  FROM hit
-), isl AS (
-  SELECT doc_id, pos,
-         SUM(CASE WHEN prev IS NULL OR pos > prev + {k}
-             THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM lg
-)
-SELECT doc_id,
-       MIN(pos) AS span_start,
-       MAX(pos) + {k} - 1 AS span_end,
-       MAX(pos) + {k} - MIN(pos) AS span_len,
-       COUNT(*) AS n_dup_shingles
-FROM isl GROUP BY doc_id, island
-"""
-
+# -- layout / pattern match / sentences ---------------------------------------
 
 ZORDER_BITS = 4
 
@@ -1268,7 +1222,6 @@ STAGED_QUERIES.update(
         "join_bloom": q_join_bloom,
         "xform_winsorize": q_xform_winsorize,
         "agg_mad_outliers": q_agg_mad_outliers,
-        "dedup_spans": q_dedup_spans,
         "layout_zorder": q_layout_zorder,
         "win_pattern_match": q_win_pattern_match,
         "text_split_sentences": q_text_split_sentences,
@@ -1294,7 +1247,6 @@ STAGED_ORACLES.update(
         "join_bloom": _JOIN_BLOOM_ORACLE,
         "xform_winsorize": _XFORM_WINSORIZE_ORACLE,
         "agg_mad_outliers": _AGG_MAD_OUTLIERS_ORACLE,
-        "dedup_spans": _dedup_spans_oracle(SPANS_K),
         "layout_zorder": _layout_zorder_oracle(ZORDER_BITS),
         "win_pattern_match": _win_pattern_match_oracle(),
         "text_split_sentences": _TEXT_SPLIT_SENTENCES_ORACLE,

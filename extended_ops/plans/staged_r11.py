@@ -1,13 +1,11 @@
-"""Registry batch r11: five capability families. Each key is a complete
+"""Registry batch r11: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity.
 
 Families: point-in-time join (feature-store enrichment against SCD2
 history), activity streaks (gaps-and-islands retention), word
-co-occurrence / lift (the GloVe-style pre-embedding artifact),
-expectations audit (rule-based data quality with planted violations),
-and keep-best dedup survivor election (cluster → representative by
-quality signal).
+co-occurrence / lift (the GloVe-style pre-embedding artifact), and
+expectations audit (rule-based data quality with planted violations).
 """
 
 from __future__ import annotations
@@ -17,14 +15,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
 from ..operators.asof import pit_join
 from ..operators.history import scd2_history
 from ..operators.quality import expectations_audit
 from ..operators.text import cooccurrence_pairs
 from ..operators.timeseries import activity_streaks
 from ..sources.tables import load_table
-from .extended import _DEDUP_CLUSTER_ORACLE, _SQL_WORDS, MAX_SHINGLE_DF
+from .extended import _SQL_WORDS
 from .round10 import _XFORM_SCD2_ORACLE
 
 # --------------------------------------------------------------------------
@@ -258,54 +255,12 @@ FROM fact
 """
 
 # --------------------------------------------------------------------------
-# dedup_keep_best — survivor election over near-dup clusters
-# --------------------------------------------------------------------------
-
-
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_keep_best`` — each near-dup cluster's survivor by
-    n_chars (longest copy ≈ most complete crawl), min id on ties
-    (:func:`~..operators.dedup.keep_best_per_cluster` over the
-    registered ``dedup_cluster`` pipeline): broadcast score join +
-    argmax-by-struct aggregation, never a ranked window. Iterative
-    construction (the cluster fixpoint) — the dedup_cluster bench
-    class."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(
-        docs, k=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF
-    )
-    clusters = D.near_dup_clusters(pairs)
-    return D.keep_best_per_cluster(
-        clusters, docs.select("doc_id", "n_chars"), score_col="n_chars"
-    )
-
-
-_DEDUP_KEEP_BEST_ORACLE = f"""
-WITH m AS (
-  SELECT c.cluster_id, c.doc_id, d.n_chars
-  FROM ({_DEDUP_CLUSTER_ORACLE}) c
-  JOIN documents d USING (doc_id)
-), r AS (
-  SELECT cluster_id, doc_id, n_chars,
-         ROW_NUMBER() OVER (
-           PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id
-         ) AS rn,
-         CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS nm
-  FROM m
-)
-SELECT cluster_id, doc_id AS keep_id, n_chars AS best_score,
-       nm AS n_members
-FROM r WHERE rn = 1
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R11_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "join_pit": q_join_pit,
     "win_streaks": q_win_streaks,
     "text_cooccurrence": q_text_cooccurrence,
     "dq_expectations": q_dq_expectations,
-    "dedup_keep_best": q_dedup_keep_best,
 }
 
 STAGED_R11_ORACLES: dict[str, str] = {
@@ -313,5 +268,4 @@ STAGED_R11_ORACLES: dict[str, str] = {
     "win_streaks": _WIN_STREAKS_ORACLE,
     "text_cooccurrence": _TEXT_COOCCURRENCE_ORACLE,
     "dq_expectations": _DQ_EXPECTATIONS_ORACLE,
-    "dedup_keep_best": _DEDUP_KEEP_BEST_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r12: five more registrations. Each key is a complete
+"""Registry batch r12: four more registrations. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity.
 
@@ -7,7 +7,6 @@ LM family goes oracle-checked; scoring stays pytest-gated — its
 log-likelihoods are libm territory), incremental SCD2 maintenance
 (registered THROUGH its from-scratch invariant: the query runs the
 incremental merge, the oracle rebuilds from the full changelog),
-embedding-side near-dup clusters (the semantic twin of dedup_cluster),
 OHLC time-series downsampling, and Flesch readability scoring.
 """
 
@@ -18,14 +17,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
-from ..operators import similarity as S
 from ..operators.history import scd2_history, scd2_merge
 from ..operators.lm import train_ngram_counts
 from ..operators.text import TOKEN_PATTERN, with_readability
 from ..operators.timeseries import ohlc_resample
 from ..sources.tables import load_table
-from .extended import DEDUP_EMBED_TAU, _DEDUP_EMBED_ORACLE, _SQL_WORDS
+from .extended import _SQL_WORDS
 from .round10 import _XFORM_SCD2_ORACLE
 
 # --------------------------------------------------------------------------
@@ -141,40 +138,6 @@ _XFORM_SCD2_MERGE_ORACLE = _XFORM_SCD2_ORACLE.replace(
 )
 
 # --------------------------------------------------------------------------
-# dedup_embed_cluster — semantic near-dup groups
-# --------------------------------------------------------------------------
-
-def q_dedup_embed_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_embed_cluster`` — connected components over the
-    embedding-cosine near-dup graph (the semantic twin of the text-side
-    ``dedup_cluster``: same iterative min-label propagation, fed by the
-    registered ``dedup_embed`` pair query). Turns pairwise semantic
-    dups into actionable keep/drop groups."""
-    emb = load_table(spark, sf_dir, "embeddings", spread=False)
-    pairs = S.cosine_pairs_above(emb, threshold=DEDUP_EMBED_TAU)
-    # near_dup_clusters names its id column for the text-side consumer;
-    # this relation's ids are vectors
-    return D.near_dup_clusters(pairs).withColumnRenamed(
-        "doc_id", "vec_id"
-    )
-
-
-_DEDUP_EMBED_CLUSTER_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {_DEDUP_EMBED_ORACLE}
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS id, src AS r FROM edges
-  UNION
-  SELECT e.src AS id, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst
-)
-SELECT id AS vec_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-"""
-
-# --------------------------------------------------------------------------
 # win_ohlc — per-(user, day) OHLC downsampling
 # --------------------------------------------------------------------------
 
@@ -261,7 +224,6 @@ FROM (
 STAGED_R12_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lm_train_counts": q_lm_train_counts,
     "xform_scd2_merge": q_xform_scd2_merge,
-    "dedup_embed_cluster": q_dedup_embed_cluster,
     "win_ohlc": q_win_ohlc,
     "text_readability": q_text_readability,
 }
@@ -269,7 +231,6 @@ STAGED_R12_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 STAGED_R12_ORACLES: dict[str, str] = {
     "lm_train_counts": _LM_TRAIN_ORACLE,
     "xform_scd2_merge": _XFORM_SCD2_MERGE_ORACLE,
-    "dedup_embed_cluster": _DEDUP_EMBED_CLUSTER_ORACLE,
     "win_ohlc": _WIN_OHLC_ORACLE,
     "text_readability": _TEXT_READABILITY_ORACLE,
 }

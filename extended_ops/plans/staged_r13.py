@@ -175,7 +175,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k; ranking on ROUND(sim, 6) in both engines so BLAS last-ulp
     noise cannot reorder ranks. ``spread=False``: the block-key
     repartition inside the operator makes an upstream scan-spread
-    exchange pure overhead (the dedup_embed precedent)."""
+    exchange pure overhead."""
     return knn_graph(
         load_table(spark, sf_dir, "embeddings", spread=False),
         k=KNN_K,

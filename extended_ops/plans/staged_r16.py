@@ -1,4 +1,4 @@
-"""Registry batch r16: five capability families. Each key is a complete
+"""Registry batch r16: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r16.py`` holds its content checks.
@@ -7,9 +7,8 @@ Families: domain-level curation stats (the per-host quality/dup table
 FineWeb-style crawl filtering keys on — composes the r15 URL
 canonicalizer), linear multi-touch attribution (the zero-self-join
 window formulation), rolling-window distinct entities (exact twin of
-the HLL-merge scale path), exactly-balanced stratified k-fold
-assignment, and the per-cluster dedup report (what a curator actually
-reads after ``dedup_cluster`` runs).
+the HLL-merge scale path), and exactly-balanced stratified k-fold
+assignment.
 """
 
 from __future__ import annotations
@@ -19,18 +18,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
 from ..operators.corpus import stratified_kfold
 from ..operators.text import _words, with_quality_score
 from ..operators.timeseries import next_touch_attribution, rolling_distinct
 from ..operators.web import canonicalize_urls
 from ..sources.tables import load_table
-from .extended import (
-    MAX_SHINGLE_DF,
-    _DEDUP_CLUSTER_ORACLE,
-    _QUALITY_EXPR,
-    _SQL_WORDS,
-)
+from .extended import _QUALITY_EXPR, _SQL_WORDS
 from .staged_r15 import _SQL_MESSY_URL, _messy_url
 
 # --------------------------------------------------------------------------
@@ -245,63 +238,12 @@ FROM documents WHERE doc_id IS NOT NULL
 """
 
 # --------------------------------------------------------------------------
-# dedup_cluster_stats — the per-cluster dedup report
-# --------------------------------------------------------------------------
-
-
-def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_cluster_stats`` — what a curator reads after
-    ``dedup_cluster``: one row per near-dup cluster with its member
-    count, distinct-source spread (a cluster spanning many sources is
-    syndication; one source is a crawler artifact), total characters at
-    stake, and mean quality of the members — the keep/drop ledger.
-    Iterative construction (the cluster fixpoint) — the dedup_cluster
-    bench class; everything after the fixpoint is one join + one
-    O(clusters) aggregation."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(
-        docs, k=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF
-    )
-    clusters = D.near_dup_clusters(pairs)
-    scored = with_quality_score(
-        docs.select("doc_id", "source", "text")
-    ).select("doc_id", "source", "quality", F.length("text").alias("_len"))
-    return (
-        clusters.join(scored, "doc_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_members"),
-            F.count_distinct("source").cast("bigint").alias("n_sources"),
-            F.sum("_len").cast("bigint").alias("total_chars"),
-            F.round(F.avg("quality"), 6).alias("avg_quality"),
-        )
-    )
-
-
-_DEDUP_CLUSTER_STATS_ORACLE = f"""
-WITH clusters AS (
-  {_DEDUP_CLUSTER_ORACLE}
-), scored AS (
-  SELECT doc_id, source, length(text) AS len, {_QUALITY_EXPR} AS quality
-  FROM documents
-)
-SELECT c.cluster_id,
-       CAST(COUNT(*) AS BIGINT) AS n_members,
-       CAST(COUNT(DISTINCT s.source) AS BIGINT) AS n_sources,
-       CAST(SUM(s.len) AS BIGINT) AS total_chars,
-       round(AVG(s.quality), 6) AS avg_quality
-FROM clusters c JOIN scored s USING (doc_id)
-GROUP BY 1
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R16_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "web_domain_stats": q_web_domain_stats,
     "win_attribution": q_win_attribution,
     "win_rolling_distinct": q_win_rolling_distinct,
     "xform_kfold": q_xform_kfold,
-    "dedup_cluster_stats": q_dedup_cluster_stats,
 }
 
 STAGED_R16_ORACLES: dict[str, str] = {
@@ -309,5 +251,4 @@ STAGED_R16_ORACLES: dict[str, str] = {
     "win_attribution": _WIN_ATTRIBUTION_ORACLE,
     "win_rolling_distinct": _WIN_ROLLING_DISTINCT_ORACLE,
     "xform_kfold": _XFORM_KFOLD_ORACLE,
-    "dedup_cluster_stats": _DEDUP_CLUSTER_STATS_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r18: five capability families. Each key is a complete
+"""Registry batch r18: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r18.py`` holds its content checks.
@@ -8,10 +8,9 @@ the sketch family was built for, registered as a bound check like
 ``agg_kmv_sketch``), BPE pair statistics (round 0 of tokenizer
 learning — the hash-checkable face of ``learn_bpe_merges``), an
 exact-fold EWMA smoother (both engines run the identical left fold,
-so the doubles match without tolerance games), a two-snapshot profile
-drift gate (the ingest-acceptance diff over ``profile_columns``), and
-image near-dup CLUSTERS (the phash pair relation closed under
-connected components — the multimodal twin of ``dedup_cluster``).
+so the doubles match without tolerance games), and a two-snapshot
+profile drift gate (the ingest-acceptance diff over
+``profile_columns``).
 """
 
 from __future__ import annotations
@@ -21,14 +20,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup as D
 from ..operators.bpe import END_TOKEN, bpe_pair_counts, word_freq_table
 from ..operators.profile import profile_drift
 from ..operators.sketches import kmv_intersect_estimate, kmv_table
 from ..operators.text import TOKEN_PATTERN
 from ..operators.timeseries import ewma_smooth
 from ..sources.tables import load_table
-from .extended import _MULTIMODAL_PHASH_PAIRS_ORACLE, q_multimodal_phash_pairs
 from .staged_r12 import SCD2_CUTOFF
 
 # --------------------------------------------------------------------------
@@ -331,47 +328,12 @@ FROM pb JOIN pn ON pb."column" = pn."column"
 """
 
 # --------------------------------------------------------------------------
-# multimodal_phash_cluster — image near-dup clusters
-# --------------------------------------------------------------------------
-
-
-def q_multimodal_phash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``multimodal_phash_cluster`` — connected components over the
-    registered ``multimodal_phash_pairs`` relation
-    (:func:`~..operators.dedup.near_dup_clusters`): every image in a
-    Hamming-≤3 component labeled with the component's minimum pair id —
-    the multimodal twin of ``dedup_cluster``, turning pairwise phash
-    output into keep/drop groups (iterative min-label propagation,
-    construction-inclusive bench class). The planted twins guarantee
-    ≥ n/TWIN_MOD two-member components at every SF, so the positive
-    path is never vacuous."""
-    pairs = q_multimodal_phash_pairs(spark, sf_dir)
-    return D.near_dup_clusters(pairs)
-
-
-_MULTIMODAL_PHASH_CLUSTER_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {_MULTIMODAL_PHASH_PAIRS_ORACLE}
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS id, src AS r FROM edges
-  UNION
-  SELECT e.src AS id, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst
-)
-SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R18_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "agg_kmv_intersect": q_agg_kmv_intersect,
     "text_bpe_pairs": q_text_bpe_pairs,
     "win_ewma": q_win_ewma,
     "dq_profile_drift": q_dq_profile_drift,
-    "multimodal_phash_cluster": q_multimodal_phash_cluster,
 }
 
 STAGED_R18_ORACLES: dict[str, str] = {
@@ -379,5 +341,4 @@ STAGED_R18_ORACLES: dict[str, str] = {
     "text_bpe_pairs": _TEXT_BPE_PAIRS_ORACLE,
     "win_ewma": _WIN_EWMA_ORACLE,
     "dq_profile_drift": _DQ_PROFILE_DRIFT_ORACLE,
-    "multimodal_phash_cluster": _MULTIMODAL_PHASH_CLUSTER_ORACLE,
 }

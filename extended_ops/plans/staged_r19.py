@@ -1,4 +1,4 @@
-"""Registry batch r19: four capability families. Each key is a complete
+"""Registry batch r19: three capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r19.py`` holds its content checks.
@@ -7,10 +7,7 @@ Families: the quantile-sketch MERGE invariant (merged per-group
 sketches hash-check row-for-row against a direct build over the union
 — the mergeability claim every rollup architecture rests on, proven
 cross-engine), the TPC-H Q17 small-quantity revenue shape in exact
-cent arithmetic, soft deduplication (per-document sampling weights
-1/|cluster| — the keep-all-downweight-duplicates policy pretraining
-mixtures actually use), and integer-exact per-bucket z-score
-anomalies.
+cent arithmetic, and integer-exact per-bucket z-score anomalies.
 """
 
 from __future__ import annotations
@@ -21,10 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators import dedup as D
 from ..operators import sketches as K
 from ..sources.tables import load_table
-from .extended import MAX_SHINGLE_DF, _DEDUP_NGRAM_ORACLE, _cents
+from .extended import _cents
 
 # --------------------------------------------------------------------------
 # agg_quantile_merge — the sketch mergeability invariant, cross-engine
@@ -150,70 +146,6 @@ GROUP BY p.p_brand
 """
 
 # --------------------------------------------------------------------------
-# corpus_soft_dedup — keep-all, downweight-duplicates sampling weights
-# --------------------------------------------------------------------------
-
-
-def q_corpus_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``corpus_soft_dedup`` — per-document sampling weight
-    ``1/|near-dup cluster|`` (docs outside any cluster weigh 1): the
-    soft alternative to dropping duplicates — every document stays
-    samplable, but a 12-copy boilerplate family contributes ONE
-    document's worth of probability mass to the training mixture (the
-    duplication-aware reweighting pretraining data curricula apply).
-    Composes the registered exact near-dup machinery: ngram pair graph
-    → min-label components (construction-inclusive — the
-    ``dedup_cluster`` fixpoint) → cluster sizes → one broadcast join
-    back to the corpus spine."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(
-        docs, k=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF
-    )
-    clusters = D.near_dup_clusters(pairs)
-    sizes = clusters.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("_sz")
-    )
-    labeled = clusters.join(sizes, "cluster_id")
-    return (
-        docs.select("doc_id")
-        .join(F.broadcast(labeled), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias(
-                "cluster_id"
-            ),
-            F.round(
-                F.lit(1.0) / F.coalesce(F.col("_sz"), F.lit(1)), 6
-            ).alias("weight"),
-        )
-    )
-
-
-_CORPUS_SOFT_DEDUP_ORACLE = f"""
-WITH RECURSIVE pairs AS (
-  {_DEDUP_NGRAM_ORACLE}
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS id, src AS r FROM edges
-  UNION
-  SELECT e.src AS id, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst
-), clusters AS (
-  SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
-), sizes AS (
-  SELECT cluster_id, COUNT(*) AS sz FROM clusters GROUP BY cluster_id
-)
-SELECT d.doc_id,
-       COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-       ROUND(CAST(1.0 AS DOUBLE) / COALESCE(s.sz, 1), 6) AS weight
-FROM documents d
-LEFT JOIN clusters c ON c.doc_id = d.doc_id
-LEFT JOIN sizes s ON s.cluster_id = c.cluster_id
-"""
-
-# --------------------------------------------------------------------------
 # win_zscore — integer-exact per-bucket anomaly scores
 # --------------------------------------------------------------------------
 
@@ -290,13 +222,11 @@ FROM zs
 STAGED_R19_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "agg_quantile_merge": q_agg_quantile_merge,
     "rel_small_quantity": q_rel_small_quantity,
-    "corpus_soft_dedup": q_corpus_soft_dedup,
     "win_zscore": q_win_zscore,
 }
 
 STAGED_R19_ORACLES: dict[str, str] = {
     "agg_quantile_merge": _AGG_QUANTILE_MERGE_ORACLE,
     "rel_small_quantity": _REL_SMALL_QUANTITY_ORACLE,
-    "corpus_soft_dedup": _CORPUS_SOFT_DEDUP_ORACLE,
     "win_zscore": _WIN_ZSCORE_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r26: five capabilities. Each key is a complete (query
+"""Registry batch r26: four capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r26.py`` holds its content checks.
@@ -15,12 +15,10 @@ router, all-integer by construction), head-rank Zipf ratios
 (``f(k)/f(2k)`` for doubling ranks — for a Zipf corpus the ratio is
 flat ≈ 2^s; computed from two exact BIGINTs and ONE IEEE division,
 so it is bit-identical across engines with no libm anywhere — the
-``text.py`` tfidf note's discipline), per-dimension embedding moments
-over micro-quantized components (dead/clipped-dimension QA for the
-vector pipeline: quantize each float to an exact BIGINT, sum exactly,
-divide once), and duplicate-prefix detection (documents sharing their
-first ``DEDUP_PREFIX_LEN`` characters — the shared-header/boilerplate
-screen ``dedup_exact`` misses because the TAILS differ).
+``text.py`` tfidf note's discipline), and per-dimension embedding
+moments over micro-quantized components (dead/clipped-dimension QA for
+the vector pipeline: quantize each float to an exact BIGINT, sum
+exactly, divide once).
 """
 
 from __future__ import annotations
@@ -384,63 +382,12 @@ FROM agg
 """
 
 # --------------------------------------------------------------------------
-# dedup_prefix — duplicate-prefix (shared boilerplate header) groups
-# --------------------------------------------------------------------------
-
-DEDUP_PREFIX_LEN = 16
-
-
-def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_prefix`` — document groups sharing their first
-    ``DEDUP_PREFIX_LEN`` characters: the shared-header/boilerplate
-    screen. ``dedup_exact`` misses these because the TAILS differ;
-    near-dup (MinHash) sees them only when the shared prefix dominates
-    the shingle set. Output: the prefix, the group size, and the
-    smallest member id (the canonical survivor, the ``dedup_exact``
-    convention).
-
-    100 TB plan: the prefix is a scan-side projection (the fact
-    column never shuffles — only the 16-char key and the id); one
-    hash aggregate to O(distinct prefixes), filtered to the
-    duplicated tail. For corpora where even the prefix relation is
-    huge, the same query runs on ``xxhash64(prefix)`` keys — the
-    string form is kept here because the ORACLE must see the same
-    values."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()
-    )
-    return (
-        docs.select(
-            F.substring("text", 1, DEDUP_PREFIX_LEN).alias("prefix"),
-            "doc_id",
-        )
-        .groupBy("prefix")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
-_DEDUP_PREFIX_ORACLE = f"""
-SELECT substr(text, 1, {DEDUP_PREFIX_LEN}) AS prefix,
-       COUNT(*) AS n_docs,
-       MIN(doc_id) AS keep_doc_id
-FROM documents
-WHERE text IS NOT NULL
-GROUP BY 1
-HAVING COUNT(*) > 1
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R26_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_part_promotion": q_rel_part_promotion,
     "lm_freq_profile": q_lm_freq_profile,
     "text_zipf_ratio": q_text_zipf_ratio,
     "embed_dim_stats": q_embed_dim_stats,
-    "dedup_prefix": q_dedup_prefix,
 }
 
 STAGED_R26_ORACLES: dict[str, str] = {
@@ -448,5 +395,4 @@ STAGED_R26_ORACLES: dict[str, str] = {
     "lm_freq_profile": _LM_FREQ_PROFILE_ORACLE,
     "text_zipf_ratio": _TEXT_ZIPF_RATIO_ORACLE,
     "embed_dim_stats": _EMBED_DIM_STATS_ORACLE,
-    "dedup_prefix": _DEDUP_PREFIX_ORACLE,
 }

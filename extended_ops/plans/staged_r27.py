@@ -1,4 +1,4 @@
-"""Registry batch r27: five capabilities. Each key is a complete (query
+"""Registry batch r27: four capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r27.py`` holds its content checks.
@@ -11,13 +11,11 @@ seasonal-naive forecast audit (per-type MAE of the
 must beat, integer error sums + one division), the int8-quantization
 residual histogram (the QA screen for ``embed_quantize``: residuals
 r = x/scale − round(x/scale) land in [−½, ½] and a healthy quantizer
-shows them spread, not massed at the clip points), duplicate-SUFFIX
-detection (shared trailing boilerplate — footers/signatures — the
-symmetric twin of ``dedup_prefix``; ``dedup_exact`` misses both
-because the other end differs), and the median inter-order gap per
-customer (the retention/cadence relation: exact type-7 median over
-integer day gaps via positional middle selection — no interpolation
-ambiguity, the ``agg_mad_outliers`` exact-selection discipline).
+shows them spread, not massed at the clip points), and the median
+inter-order gap per customer (the retention/cadence relation: exact
+type-7 median over integer day gaps via positional middle selection —
+no interpolation ambiguity, the ``agg_mad_outliers`` exact-selection
+discipline).
 """
 
 from __future__ import annotations
@@ -248,50 +246,6 @@ FROM r GROUP BY 1
 """
 
 # --------------------------------------------------------------------------
-# dedup_suffix — duplicate-suffix (shared footer/signature) groups
-# --------------------------------------------------------------------------
-
-DEDUP_SUFFIX_LEN = 16
-
-
-def q_dedup_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_suffix`` — document groups sharing their LAST
-    ``DEDUP_SUFFIX_LEN`` characters: the shared-footer/signature
-    screen, the symmetric twin of ``dedup_prefix`` (a scraped corpus
-    repeats footers at least as often as headers, and ``dedup_exact``
-    misses both because the other end differs).
-
-    100 TB plan: identical to the prefix twin — scan-side ``right()``
-    key projection (only the 16-char key and the id shuffle), one
-    hash aggregate to O(distinct suffixes), duplicated tail filter."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()
-    )
-    return (
-        docs.select(
-            F.expr(f"right(text, {DEDUP_SUFFIX_LEN})").alias("suffix"),
-            "doc_id",
-        )
-        .groupBy("suffix")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
-_DEDUP_SUFFIX_ORACLE = f"""
-SELECT right(text, {DEDUP_SUFFIX_LEN}) AS suffix,
-       COUNT(*) AS n_docs,
-       MIN(doc_id) AS keep_doc_id
-FROM documents
-WHERE text IS NOT NULL
-GROUP BY 1
-HAVING COUNT(*) > 1
-"""
-
-# --------------------------------------------------------------------------
 # rel_order_gap_median — median inter-order gap per customer
 # --------------------------------------------------------------------------
 
@@ -392,7 +346,6 @@ STAGED_R27_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lm_count_of_counts": q_lm_count_of_counts,
     "win_seasonal_error": q_win_seasonal_error,
     "embed_quantize_error": q_embed_quantize_error,
-    "dedup_suffix": q_dedup_suffix,
     "rel_order_gap_median": q_rel_order_gap_median,
 }
 
@@ -400,6 +353,5 @@ STAGED_R27_ORACLES: dict[str, str] = {
     "lm_count_of_counts": _LM_COUNT_OF_COUNTS_ORACLE,
     "win_seasonal_error": _WIN_SEASONAL_ERROR_ORACLE,
     "embed_quantize_error": _EMBED_QUANTIZE_ERROR_ORACLE,
-    "dedup_suffix": _DEDUP_SUFFIX_ORACLE,
     "rel_order_gap_median": _REL_ORDER_GAP_MEDIAN_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r28: five capabilities. Each key is a complete (query
+"""Registry batch r28: four capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r28.py`` holds its content checks.
@@ -13,13 +13,9 @@ from three exact integer moments, the cheapest bot/campaign screen
 next to ``dq_bot_regularity``'s modal-gap test), revenue
 concentration (the Pareto table: the top-1/5/10% customers' share of
 exact cent revenue, cutoffs by POSITIONAL rank so no percentile
-interpolation exists), vocabulary-identical
-document groups (the sorted word-SET fingerprint — the deterministic
-shuffle-duplicate screen; sentence-granular variants are structurally
-vacuous on this corpus, whose documents are single unterminated
-sentences), and the
-per-source document-length Gini (corpus length inequality from the
-sorted positional formula — exact BIGINT numerator, one division).
+interpolation exists), and the per-source document-length Gini
+(corpus length inequality from the sorted positional formula — exact
+BIGINT numerator, one division).
 """
 
 from __future__ import annotations
@@ -30,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.text import TOKEN_PATTERN, pattern_tokens
 from ..operators.timeseries import holt_smooth
 from ..sources.tables import load_table
 
@@ -284,67 +279,6 @@ WITH per AS (
 _REL_PARETO_SHARE_ORACLE = _pareto_oracle()
 
 # --------------------------------------------------------------------------
-# dedup_wordset — vocabulary-identical document groups
-# --------------------------------------------------------------------------
-
-
-def q_dedup_wordset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_wordset`` — document groups with the IDENTICAL distinct
-    word set (the sorted-set fingerprint): the shuffle-duplicate
-    screen. A document whose words were reordered, repeated, or
-    lightly re-punctuated keeps its vocabulary even as every exact,
-    prefix, and sentence signal changes — this is the deterministic
-    complement of ``dedup_minhash`` (which approximates set overlap;
-    this nails equality at far lower cost) and the standalone relation
-    behind ``dq_quality_calibration``'s dup label. Sentence-granular
-    variants were rejected against this corpus: the synthetic
-    documents are single unterminated sentences, so sentence-level
-    sharing is structurally zero while the word-set screen fires
-    (25 groups / 87 docs at sf0.001 — the planted shuffle-dups).
-
-    Output: the group fingerprint (md5 of the sorted distinct-word
-    join — a stable join key at any vocabulary size), group size, and
-    the smallest member id (the ``dedup_exact`` survivor convention).
-
-    100 TB plan: the fingerprint is a scan-side tokenize/sort/hash
-    projection (no shuffle carries text — only the 32-char digest and
-    the id); one hash aggregate to O(distinct fingerprints)."""
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()
-    )
-    fp = F.md5(
-        F.array_join(
-            F.array_sort(
-                F.array_distinct(pattern_tokens(F.col("text")))
-            ),
-            " ",
-        )
-    )
-    return (
-        docs.select(fp.alias("wordset_fp"), "doc_id")
-        .groupBy("wordset_fp")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
-_DEDUP_WORDSET_ORACLE = f"""
-SELECT md5(array_to_string(
-         list_sort(list_distinct(
-           regexp_extract_all(lower(text), '{TOKEN_PATTERN}')
-         )), ' ')) AS wordset_fp,
-       COUNT(*) AS n_docs,
-       MIN(doc_id) AS keep_doc_id
-FROM documents
-WHERE text IS NOT NULL
-GROUP BY 1
-HAVING COUNT(*) > 1
-"""
-
-# --------------------------------------------------------------------------
 # corpus_length_gini — per-source document-length inequality
 # --------------------------------------------------------------------------
 
@@ -416,7 +350,6 @@ STAGED_R28_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "win_holt": q_win_holt,
     "win_burstiness": q_win_burstiness,
     "rel_pareto_share": q_rel_pareto_share,
-    "dedup_wordset": q_dedup_wordset,
     "corpus_length_gini": q_corpus_length_gini,
 }
 
@@ -424,6 +357,5 @@ STAGED_R28_ORACLES: dict[str, str] = {
     "win_holt": _WIN_HOLT_ORACLE,
     "win_burstiness": _WIN_BURSTINESS_ORACLE,
     "rel_pareto_share": _REL_PARETO_SHARE_ORACLE,
-    "dedup_wordset": _DEDUP_WORDSET_ORACLE,
     "corpus_length_gini": _CORPUS_LENGTH_GINI_ORACLE,
 }

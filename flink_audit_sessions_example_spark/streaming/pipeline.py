@@ -93,20 +93,15 @@ def kafka_sink_options(
 
 
 def kafka_payload(df: DataFrame) -> DataFrame:
-    """The EXACT projection the Kafka sink serializes — Spark's Kafka
-    sink contract: a required ``value`` column plus an optional ``key``
-    (message key → partition routing), both cast to string here. The
-    reference serializes value-only (``App.java:89-96``, a
-    SimpleStringSchema over the formatted result). Shared by
-    :func:`start_session_query`'s Kafka sink and the no-broker file twin
+    """The EXACT projection the Kafka sink serializes: ``value`` alone,
+    cast to string, as the reference writes it (``App.java:89-96``, a
+    SimpleStringSchema over the formatted result). No message key, so
+    Kafka picks the partition. Shared by :func:`start_session_query`'s
+    Kafka sink and the no-broker file twin
     (:func:`write_kafka_file_twin`) so the two payloads can never
     drift — the twin's e2e test therefore pins the real sink's wire
     schema."""
-    cols = []
-    if "key" in df.columns:
-        cols.append(F.col("key").cast("string").alias("key"))
-    cols.append(F.col("value").cast("string").alias("value"))
-    return df.select(*cols)
+    return df.select(F.col("value").cast("string").alias("value"))
 
 
 def write_kafka_file_twin(

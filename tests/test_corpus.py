@@ -225,46 +225,6 @@ def test_domain_mix_rejects_bad_mode(spark):
         C.domain_mix(docs, domain_col="lang", weights={"en": 1.0}, mode="nope")
 
 
-def test_chunk_dedup_scrubs_planted_duplicates(spark):
-    from extended_ops.operators import dedup as D
-
-    chunk = " ".join(f"w{i}" for i in range(20))  # one full chunk
-    rows = [
-        Row(doc_id=1, text=chunk + " unique one"),
-        Row(doc_id=2, text=chunk + " other tail"),  # chunk repeated
-        Row(doc_id=3, text="totally distinct text"),
-        Row(doc_id=4, text="   "),  # whitespace-only: no chunks, no row
-    ]
-    out = {
-        r["doc_id"]: r
-        for r in D.chunk_dedup(
-            spark.createDataFrame(rows), chunk_words=20
-        ).collect()
-    }
-    assert 4 not in out
-    assert out[1]["n_chunks"] == 2 and out[1]["n_kept"] == 2
-    assert out[1]["text_kept"] == chunk + " unique one"
-    # doc 2 loses the repeated leading chunk, keeps its short tail
-    assert out[2]["n_chunks"] == 2 and out[2]["n_kept"] == 1
-    assert out[2]["text_kept"] == "other tail"
-    assert out[3]["n_kept"] == 1 and out[3]["text_kept"] == "totally distinct text"
-
-
-def test_chunk_dedup_all_chunks_duplicated_yields_null_text(spark):
-    from extended_ops.operators import dedup as D
-
-    body = " ".join(f"t{i}" for i in range(40))  # exactly two chunks
-    rows = [Row(doc_id=10, text=body), Row(doc_id=11, text=body)]
-    out = {
-        r["doc_id"]: r
-        for r in D.chunk_dedup(
-            spark.createDataFrame(rows), chunk_words=20
-        ).collect()
-    }
-    assert out[10]["n_kept"] == 2 and out[10]["text_kept"] == body
-    assert out[11]["n_kept"] == 0 and out[11]["text_kept"] is None
-
-
 def test_corpus_freq_score_orders_common_above_rare(spark):
     rows = [
         Row(doc_id=1, text="the the the the"),      # most common token

@@ -172,57 +172,6 @@ def test_xform_compact_partial_agg_before_single_exchange(spark):
     assert "Window" not in plan
 
 
-def test_ngram_dedup_single_scan_single_python_stage(spark):
-    """dedup_ngram plan gate, re-anchored for the r6 bounded-buffer pin
-    (r6 verdict item 1). Property protected: the corpus is scanned and
-    tokenized exactly ONCE, structurally. Two shapes to gate:
-
-    (a) UNCAPPED operator — exactly the subtree that
-        ``bounded_posting_lists`` pins when the cap is active: ONE
-        parquet scan + ONE Python stage in the finalized adaptive plan.
-    (b) REGISTERED capped query — the tokenizer output is pinned with a
-        lazy ``localCheckpoint`` (materialized once by RDD-checkpoint
-        semantics), so the post-pin plan must contain NO parquet scan
-        and NO Python stage in EITHER the final or initial section
-        (both the count pass and the list build read the pinned rows),
-        and the over-cap anti-join must sit BELOW the
-        ``partial_collect_list`` (buffer-bounding: hot keys are dropped
-        before the list buffer builds). Gate the join in the INITIAL
-        plan: at small SF the blacklist is empty, so AQE's
-        empty-relation propagation legitimately deletes the anti-join
-        from the final plan."""
-    from extended_ops.operators import dedup as D
-    from extended_ops.plans import QUERIES
-    from extended_ops.sources.tables import load_table
-
-    # (a) the pre-pin subtree, uncapped: structural single scan + stage
-    uncapped = D.ngram_jaccard_pairs(
-        load_table(spark, SF_DIR, "documents"),
-        k=3,
-        threshold=0.5,
-        max_shingle_df=None,
-    )
-    uncapped.collect()
-    plan = uncapped._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("MapInPandas") == 1, final.count("MapInPandas")
-    assert final.count("Scan parquet") == 1, final.count("Scan parquet")
-
-    # (b) the registered capped query: everything upstream of the pin —
-    # scan + tokenizer — lives inside the checkpointed lineage
-    out = QUERIES["dedup_ngram"](spark, SF_DIR)
-    out.collect()  # finalize the adaptive plan (noop-write inspects a clone)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 0, plan.count("MapInPandas")
-    assert plan.count("Scan parquet") == 0, plan.count("Scan parquet")
-    final, _, initial = plan.partition("== Initial Plan ==")
-    assert final.count("Scan ExistingRDD") >= 1, final
-    # buffer-bounding: anti-join strictly below the partial list build
-    # (tree prints parents first, so below == later in the string)
-    anti = initial.index("LeftAnti")
-    assert anti > initial.index("partial_collect_list"), initial
-
-
 def _final_plan(spark, key):
     """Finalized adaptive physical plan (post-AQE) — collect() first;
     explain/noop inspect a clone (memory: the r5 lesson)."""

@@ -370,80 +370,3 @@ def test_tfidf_top_terms_matches_reference(spark, texts, k):
     for rows in got.values():
         rows.sort(key=lambda t: t[4])
     assert got == _ref_tfidf(texts, k)
-
-
-def _ref_spans(texts: dict[int, str], k: int, scope: str = "cross"):
-    """Independent span-dedup reference: positioned shingles, duplicated
-    set (cross-doc via >= 2 distinct docs, or any repeat), coverage
-    islands merged at gap > k — duplicated_spans' exact contract."""
-    occ: list[tuple[int, int, str]] = []
-    for i, t in texts.items():
-        w = t.lower().split()
-        for p in range(len(w) - k + 1):
-            occ.append((i, p, " ".join(w[p : p + k])))
-    docs_of: dict[str, set] = {}
-    count: dict[str, int] = {}
-    for i, _p, sh in occ:
-        docs_of.setdefault(sh, set()).add(i)
-        count[sh] = count.get(sh, 0) + 1
-    dup = {
-        sh
-        for sh in count
-        if (count[sh] >= 2 if scope == "any" else len(docs_of[sh]) >= 2)
-    }
-    spans = {}
-    by_doc: dict[int, list[int]] = {}
-    for i, p, sh in occ:
-        if sh in dup:
-            by_doc.setdefault(i, []).append(p)
-    for i, ps in by_doc.items():
-        ps.sort()
-        cur = [ps[0], ps[0]]
-        islands = []
-        for p in ps[1:]:
-            if p > cur[1] + k:
-                islands.append(cur)
-                cur = [p, p]
-            else:
-                cur[1] = p
-        islands.append(cur)
-        for s, e in islands:
-            n = sum(1 for p in ps if s <= p <= e)
-            spans[(i, s)] = (e + k - 1, e + k - s, n)
-    return spans
-
-
-span_corpus = st.dictionaries(
-    keys=st.integers(min_value=0, max_value=5),
-    values=st.lists(
-        st.sampled_from(["a", "b", "c", "d", "e"]),
-        min_size=0,
-        max_size=14,
-    ).map(" ".join),
-    min_size=1,
-    max_size=6,
-)
-
-
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(texts=span_corpus, k=st.sampled_from([2, 3]), scope=st.sampled_from(["cross", "any"]))
-def test_duplicated_spans_matches_reference(spark, texts, k, scope):
-    """duplicated_spans against an independent pure-Python span merger
-    over a tiny alphabet (maximal shingle collisions): island boundary
-    arithmetic, scope semantics, within-doc repeats, sub-k docs."""
-    from extended_ops.operators.dedup import (
-        duplicated_spans,
-    )
-
-    df = spark.createDataFrame(
-        list(texts.items()), "doc_id bigint, text string"
-    )
-    got = {
-        (r.doc_id, r.span_start): (r.span_end, r.span_len, r.n_dup_shingles)
-        for r in duplicated_spans(df, k=k, scope=scope).collect()
-    }
-    assert got == _ref_spans(texts, k, scope)

@@ -13,9 +13,6 @@ import pytest
 from conftest import SF_DIR
 
 from extended_ops.operators.asof import pit_join
-from extended_ops.operators.dedup import (
-    keep_best_per_cluster,
-)
 from extended_ops.operators.quality import (
     expectations_audit,
 )
@@ -217,62 +214,6 @@ def test_expectations_one_scan_one_pass(spark):
 # -- keep best ---------------------------------------------------------------
 
 
-def test_keep_best_argmax_and_ties(spark):
-    clusters = spark.createDataFrame(
-        [(10, 1), (11, 1), (12, 1), (20, 2), (21, 2)],
-        "doc_id long, cluster_id long",
-    )
-    scores = spark.createDataFrame(
-        [(10, 5.0), (11, 9.0), (12, 9.0), (20, 1.0), (21, 1.0)],
-        "doc_id long, s double",
-    )
-    got = {
-        r.cluster_id: (r.keep_id, r.best_score, r.n_members)
-        for r in keep_best_per_cluster(
-            clusters, scores, score_col="s"
-        ).collect()
-    }
-    # cluster 1: tie 9.0 between 11 and 12 -> min id 11
-    assert got[1] == (11, 9.0, 3)
-    assert got[2] == (20, 1.0, 2)
-
-
-def test_keep_best_no_window_plan(spark):
-    final = _final_plan(STAGED_R11_QUERIES["dedup_keep_best"](spark, SF_DIR))
-    # survivor election is an aggregation, never a ranked window over
-    # members (the agg_mode argmin rule)
-    tail = final[final.index("HashAggregate(keys=[cluster_id"):] if (
-        "HashAggregate(keys=[cluster_id" in final
-    ) else final
-    assert "partial_min(struct" in final
-    assert "row_number" not in tail
-
-
-def test_keep_best_string_ids(spark):
-    """The min-id tiebreak must work for NON-numeric id types (r10
-    advice #1: the old arithmetic-negation tiebreak failed analysis on
-    string doc ids): ascending-id leg is native, so string ids order
-    lexicographically."""
-    clusters = spark.createDataFrame(
-        [("doc-b", 1), ("doc-a", 1), ("doc-c", 1), ("doc-z", 2)],
-        "doc_id string, cluster_id long",
-    )
-    scores = spark.createDataFrame(
-        [("doc-b", 9.0), ("doc-a", 9.0), ("doc-c", 5.0)],
-        "doc_id string, s double",
-    )
-    got = {
-        r.cluster_id: (r.keep_id, r.best_score, r.n_members)
-        for r in keep_best_per_cluster(
-            clusters, scores, score_col="s"
-        ).collect()
-    }
-    # tie at 9.0 -> lexicographically smallest id wins
-    assert got[1] == ("doc-a", 9.0, 3)
-    # all-unscored cluster still elects its min string id
-    assert got[2] == ("doc-z", None, 1)
-
-
 # -- review-round fixes (r10 review) ------------------------------------------
 
 
@@ -328,27 +269,6 @@ def test_time_decay_null_values_excluded_like_oracle(spark):
     assert r.n_events == 2          # valued events only
     assert r.decayed_sum == 40.0    # both within one half-life step
     assert r.decayed_weight == 2.0
-
-
-def test_keep_best_unscored_members_counted_and_fallback(spark):
-    """LEFT score join (review r10): unscored members count in
-    n_members; a scored member always beats an unscored one; an
-    entirely-unscored cluster elects min id with NULL best_score."""
-    clusters = spark.createDataFrame(
-        [(10, 1), (11, 1), (12, 1), (30, 3), (31, 3)],
-        "doc_id long, cluster_id long",
-    )
-    scores = spark.createDataFrame(
-        [(10, 1.0)], "doc_id long, s double"  # 11,12,30,31 unscored
-    )
-    got = {
-        r.cluster_id: (r.keep_id, r.best_score, r.n_members)
-        for r in keep_best_per_cluster(
-            clusters, scores, score_col="s"
-        ).collect()
-    }
-    assert got[1] == (10, 1.0, 3)      # scored beats unscored
-    assert got[3] == (30, None, 2)     # all-unscored: min id, NULL score
 
 
 def test_cooccurrence_single_arrow_pass(spark):

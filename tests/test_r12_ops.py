@@ -1,8 +1,7 @@
 """Contract tests for the r12 staged operators (incremental SCD2
-merge, OHLC resample, readability; lm_train_counts and
-dedup_embed_cluster are compositions of operators already under their
-own suites). Hash parity for the registrations is pinned by
-tests/test_oracle_parity.py."""
+merge, OHLC resample, readability; lm_train_counts is a composition
+of operators already under their own suites). Hash parity for the
+registrations is pinned by tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 

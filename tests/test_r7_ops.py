@@ -214,41 +214,6 @@ def test_phash_near_dup_pairs_banded_hamming(spark):
     assert [(r.id_a, r.id_b, r.hamming) for r in pairs] == [(10, 11, 0)]
 
 
-def test_phash_pairs_compose_into_image_dedup_clusters(spark):
-    """End-to-end image dedup: perceptual_hash → banded Hamming pairs →
-    near_dup_clusters. Two planted groups (one transitive A≈B≈C chain
-    via 1-bit steps, one exact pair) cluster to their min-id
-    representatives; the outlier image forms no cluster."""
-    from extended_ops.operators.dedup import (
-        near_dup_clusters,
-    )
-    from extended_ops.operators.multimodal import (
-        phash_near_dup_pairs,
-    )
-
-    base = dict(hb0=0x1234, hb1=0x00FF, hb2=0xABCD, hb3=0x0F0F)
-    rows = [
-        Row(doc_id=1, **base),
-        Row(doc_id=2, **{**base, "hb0": base["hb0"] ^ 1}),  # 1 bit from 1
-        Row(doc_id=3, **{**base, "hb0": base["hb0"] ^ 3}),  # 2 bits from 1
-        Row(doc_id=7, **base),  # exact dup of 1
-        Row(
-            doc_id=9,
-            hb0=0xFFFF ^ base["hb0"],
-            hb1=0xFFFF ^ base["hb1"],
-            hb2=0xFFFF ^ base["hb2"],
-            hb3=0xFFFF ^ base["hb3"],
-        ),  # far from everything
-    ]
-    pairs = phash_near_dup_pairs(
-        spark.createDataFrame(rows), max_hamming=3
-    )
-    clusters = near_dup_clusters(pairs)
-    got = {r.doc_id: r.cluster_id for r in clusters.collect()}
-    # 1,2,3,7 all within hamming 3 of doc 1 (and 2≈3 transitively chain)
-    assert got == {1: 1, 2: 1, 3: 1, 7: 1}
-
-
 def test_multimodal_on_error_null_survives_corrupt_payload(spark):
     """100 TB robustness: one corrupt blob must not kill the stage.
     With on_error='null' every decode op keeps the corrupt row with

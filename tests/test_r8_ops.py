@@ -332,7 +332,7 @@ def test_funnel_stages_matches_duckdb_and_single_exchange(spark):
 
 
 def test_ngram_novelty_pin_plan_shape(spark):
-    """Novelty pin gate (the dedup_ngram model): with the pin, the
+    """Novelty pin gate: with the pin, the
     consumer plan reads the checkpointed shingle rows (no parquet scan
     of documents except the doc_id base relation, no Python stage —
     the tokenizer ran once inside the pinned lineage); without the

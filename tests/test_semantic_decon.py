@@ -83,7 +83,7 @@ def test_planted_paraphrase_and_edges(spark):
 
 def test_string_ids_keep_their_type(spark):
     """ADVICE r8 regression: the output id schema is derived from the
-    TRAIN id column (near_dup_clusters pattern), so string ids survive —
+    TRAIN id column, so string ids survive —
     the old hardcoded '{id} long' failed at runtime with an Arrow type
     mismatch. Also covers the empty-eval early return's schema."""
     evals = spark.createDataFrame(

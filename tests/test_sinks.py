@@ -150,17 +150,16 @@ def test_write_sized_parquet_bounds_files_per_partition(spark, tmp_path):
 
 
 def test_kafka_payload_schema(spark):
-    """The wire contract of Spark's Kafka sink: required string
-    ``value``, optional string ``key`` — and nothing else reaches the
-    topic."""
+    """The reference's wire contract (``App.java:89-96``): a string
+    ``value`` and nothing else reaches the topic, not even a ``key``
+    column of the input."""
     from flink_audit_sessions_example_spark.streaming.pipeline import (
         kafka_payload,
     )
 
     keyed = spark.createDataFrame([(7, "a")], "key int, value string")
     out = kafka_payload(keyed)
-    assert out.columns == ["key", "value"]
-    assert [t for _, t in out.dtypes] == ["string", "string"]
+    assert out.dtypes == [("value", "string")]
 
     value_only = spark.createDataFrame([(5,)], "value int")
     out2 = kafka_payload(value_only)

@@ -350,18 +350,6 @@ def test_dim_stats_one_scan_one_exchange(spark):
     _no_python_no_cartesian(plan)
 
 
-def test_dedup_prefix_one_scan_one_exchange(spark):
-    from extended_ops.plans.staged_r26 import (
-        q_dedup_prefix,
-    )
-
-    plan = _plan(spark, q_dedup_prefix)
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Window" not in plan
-    _no_python_no_cartesian(plan)
-
-
 def test_count_of_counts_single_gram_scan(spark):
     """lm_count_of_counts (r27): rides train_ngram_counts' one-scan
     gram relation; the count-of-counts re-aggregation is O(vocab)."""
@@ -394,18 +382,6 @@ def test_quantize_error_one_scan_one_exchange(spark):
     )
 
     plan = _plan(spark, q_embed_quantize_error)
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Window" not in plan
-    _no_python_no_cartesian(plan)
-
-
-def test_dedup_suffix_one_scan_one_exchange(spark):
-    from extended_ops.plans.staged_r27 import (
-        q_dedup_suffix,
-    )
-
-    plan = _plan(spark, q_dedup_suffix)
     assert plan.count("FileScan parquet") == 1
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Window" not in plan
@@ -460,18 +436,6 @@ def test_pareto_share_windows_ride_the_dimension(spark):
 
     plan = _plan(spark, q_rel_pareto_share)
     assert plan.count("FileScan parquet") == 1
-    _no_python_no_cartesian(plan)
-
-
-def test_wordset_one_scan_one_exchange(spark):
-    from extended_ops.plans.staged_r28 import (
-        q_dedup_wordset,
-    )
-
-    plan = _plan(spark, q_dedup_wordset)
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Window" not in plan
     _no_python_no_cartesian(plan)
 
 

@@ -14,9 +14,8 @@ from extended_ops.plans.staged_r16 import (
 
 def test_staged_r16_content_is_nonvacuous(spark):
     """All-zero variants would hash-match a broken producer: the
-    attribution table must credit at least one conversion, the domain
-    table must see real duplicates, and the cluster report must cover
-    multi-member clusters from more than one source fingerprint."""
+    attribution table must credit at least one conversion, and the
+    domain table must see real duplicates."""
     attr = {
         r.event_type: r
         for r in STAGED_R16_QUERIES["win_attribution"](
@@ -27,8 +26,3 @@ def test_staged_r16_content_is_nonvacuous(spark):
     assert all(r.n_touches >= r.n_last_touch for r in attr.values())
     dom = STAGED_R16_QUERIES["web_domain_stats"](spark, SF_DIR).collect()
     assert sum(r.n_dups for r in dom) >= 1
-    stats = STAGED_R16_QUERIES["dedup_cluster_stats"](
-        spark, SF_DIR
-    ).collect()
-    assert all(r.n_members >= 2 for r in stats)
-    assert len(stats) >= 1

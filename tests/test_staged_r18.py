@@ -17,8 +17,7 @@ def test_staged_r18_content_is_nonvacuous(spark):
     """Degenerate variants that would still hash-match a broken
     producer: an unsaturated sketch (exact fallback, estimator not
     under test), a pair table with no sentinel or no letter pairs, an
-    EWMA that never smooths, an empty snapshot half, and a cluster
-    table with no multi-member component."""
+    EWMA that never smooths, and an empty snapshot half."""
     kmv = STAGED_R18_QUERIES["agg_kmv_intersect"](
         spark, SF_DIR
     ).collect()[0]
@@ -48,13 +47,3 @@ def test_staged_r18_content_is_nonvacuous(spark):
     assert len(drift) == 3
     assert all(r.n_rows_base > 0 and r.n_rows_new > 0 for r in drift)
     assert all(r.null_rate_delta is not None for r in drift)
-
-    clusters = STAGED_R18_QUERIES["multimodal_phash_cluster"](
-        spark, SF_DIR
-    ).collect()
-    by_c = {}
-    for r in clusters:
-        by_c.setdefault(r.cluster_id, []).append(r.doc_id)
-    assert any(len(m) >= 2 for m in by_c.values())
-    # min-label invariant: the cluster id IS a member and the minimum
-    assert all(c == min(m) for c, m in by_c.items())

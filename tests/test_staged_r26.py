@@ -8,7 +8,6 @@ from __future__ import annotations
 from conftest import SF_DIR
 
 from extended_ops.plans.staged_r26 import (
-    DEDUP_PREFIX_LEN,
     FREQ_PROFILE_NTILES,
     ZIPF_KS,
     STAGED_R26_QUERIES,
@@ -19,9 +18,8 @@ def test_staged_r26_content_is_nonvacuous(spark):
     """Degenerate variants that would still hash-match a broken
     producer: a Q20 dominance test that qualifies every supplier (no
     semi-join), a frequency profile that lost token mass or collapsed
-    into one decile, Zipf ratios from a non-descending rank order, a
-    moment table with dead dimensions everywhere, and a prefix-dup
-    table with singleton groups."""
+    into one decile, Zipf ratios from a non-descending rank order,
+    and a moment table with dead dimensions everywhere."""
     from pyspark.sql import functions as F
 
     from extended_ops.operators.text import (
@@ -82,10 +80,3 @@ def test_staged_r26_content_is_nonvacuous(spark):
     assert len(ns) == 1, "dimensions saw different row counts"
     assert all(r.variance > 0 for r in dims), "a dead dimension"
     assert all(-0.5 < r.mean < 0.5 for r in dims)
-
-    pre = STAGED_R26_QUERIES["dedup_prefix"](spark, SF_DIR).collect()
-    assert len(pre) >= 1
-    assert all(r.n_docs >= 2 for r in pre)
-    assert all(len(r.prefix) <= DEDUP_PREFIX_LEN for r in pre)
-    # SELECTIVE: duplicated prefixes are the exception, not the rule
-    assert sum(r.n_docs for r in pre) < docs.count()

@@ -10,7 +10,6 @@ from conftest import SF_DIR
 from extended_ops.plans.staged_r27 import (
     CC_MAX_R,
     CC_ORDER,
-    DEDUP_SUFFIX_LEN,
     RESIDUAL_BUCKETS_PER_UNIT,
     STAGED_R27_QUERIES,
 )
@@ -21,8 +20,8 @@ def test_staged_r27_content_is_nonvacuous(spark):
     producer: a count-of-counts with no singleton mass (N_1 drives
     every discount), a seasonal audit that scores zero days or finds
     zero error everywhere, a residual histogram massed in one cell or
-    outside [−½, ½], suffix groups of one, and a gap median that is
-    negative or ignores even-count interpolation."""
+    outside [−½, ½], and a gap median that is negative or ignores
+    even-count interpolation."""
     from pyspark.sql import functions as F
 
     from extended_ops.sources.tables import load_table
@@ -62,11 +61,6 @@ def test_staged_r27_content_is_nonvacuous(spark):
         F.sum(F.size("embedding")).alias("n")
     ).collect()[0].n
     assert sum(r.n for r in hist) == n_elem  # corpus has no zero vectors
-
-    suf = STAGED_R27_QUERIES["dedup_suffix"](spark, SF_DIR).collect()
-    assert len(suf) >= 1
-    assert all(r.n_docs >= 2 for r in suf)
-    assert all(len(r.suffix) <= DEDUP_SUFFIX_LEN for r in suf)
 
     med = STAGED_R27_QUERIES["rel_order_gap_median"](
         spark, SF_DIR

@@ -596,72 +596,6 @@ def test_foreach_batch_redelivers_failed_batch_with_same_id(spark, tmp_path):
     assert list(delivered.values()) == [[("alice", 7)]]
 
 
-def test_stream_dedup_drops_redeliveries(spark, tmp_path):
-    """``dedup_stream``: an at-least-once upstream re-delivers audit
-    records (same `id`) in a later micro-batch; the watermark-bounded
-    dedup keeps the first arrival only. Batch path degrades to plain
-    dropDuplicates."""
-    from extended_ops.operators.dedup import (
-        stream_dedup,
-    )
-    from flink_audit_sessions_example_spark.sources.audit_source import (
-        stream_audits,
-    )
-
-    d1 = tmp_path / "20220926"
-    d2 = tmp_path / "20220927"
-    d1.mkdir(), d2.mkdir()
-    (d1 / "a.log").write_text(
-        "\n".join(
-            [
-                _line("u1", 0, 1, "2022-09-26 10:00:00.000", id="e-1"),
-                _line("u2", 0, 2, "2022-09-26 10:01:00.000", id="e-2"),
-            ]
-        )
-        + "\n"
-    )
-    # redelivery of e-1 (same id, same payload) plus one new record
-    (d2 / "b.log").write_text(
-        "\n".join(
-            [
-                _line("u1", 0, 1, "2022-09-26 10:00:00.000", id="e-1"),
-                _line("u3", 0, 3, "2022-09-27 09:00:00.000", id="e-3"),
-            ]
-        )
-        + "\n"
-    )
-    audits = stream_audits(spark, str(tmp_path), max_files_per_trigger=1)
-    deduped = stream_dedup(
-        audits, ["id"], time_col="evtTime", watermark_delay="2 days"
-    )
-    q = write_memory(
-        deduped.select("id", "reqUser"), query_name="t_stream_dedup"
-    )
-    q.awaitTermination(120)
-    rows = spark.table("t_stream_dedup").collect()
-    assert sorted((r.id, r.reqUser) for r in rows) == [
-        ("e-1", "u1"),
-        ("e-2", "u2"),
-        ("e-3", "u3"),
-    ]
-
-    # batch twin: plain dropDuplicates
-    from flink_audit_sessions_example_spark.sources.audit_source import (
-        read_audits,
-    )
-
-    batch = stream_dedup(read_audits(spark, str(tmp_path)), ["id"])
-    assert batch.count() == 3
-
-    # streaming WITHOUT time_col = unbounded state: explicit opt-in only
-    import pytest
-
-    with pytest.raises(ValueError, match="unbounded"):
-        stream_dedup(audits, ["id"])
-    unbounded = stream_dedup(audits, ["id"], allow_unbounded_state=True)
-    assert unbounded.isStreaming
-
-
 def test_stream_compact_latest_by_key_across_batches(spark, tmp_path):
     """``xform_compact``'s streaming twin needs NO custom operator: the
     same ``max(struct)`` aggregation runs as a streaming aggregation in

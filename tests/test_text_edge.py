@@ -82,14 +82,12 @@ def test_text_quality_oracle_parity_on_edge_corpus(spark):
 
 
 def test_tokenizer_parity_on_unicode_whitespace(spark):
-    """``shingle_rows`` / ``hashed_shingle_rows`` (Python tokenizer) must
-    split on EXACTLY the characters Java-regex ``\\s`` matches, like
-    :func:`X._words` (Catalyst). U+00A0 (no-break space) and U+2009 (thin
-    space) are NOT Java ``\\s`` — a bare Python ``str.split()`` would
-    split on them and the dedup family would disagree with the text
-    family on any real (non-ASCII) corpus."""
-    import hashlib
-
+    """``shingle_rows`` (Python tokenizer) must split on EXACTLY the
+    characters Java-regex ``\\s`` matches, like :func:`X._words`
+    (Catalyst). U+00A0 (no-break space) and U+2009 (thin space) are NOT
+    Java ``\\s`` — a bare Python ``str.split()`` would split on them and
+    the shingle consumers would disagree with the text family on any
+    real (non-ASCII) corpus."""
     docs = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -123,21 +121,6 @@ def test_tokenizer_parity_on_unicode_whitespace(spark):
         for j in range(len(w) - 1)
     }
     assert got == want
-
-    # hashed_shingle_rows must be md5(shingle) of the same shingles
-    hashed = {
-        (r.id, r.k1, r.k2)
-        for r in X.hashed_shingle_rows(
-            docs, id_col="doc_id", text_col="text", k=2
-        ).collect()
-    }
-    want_hashed = set()
-    for i, sh in want:
-        d = hashlib.md5(sh.encode()).digest()
-        want_hashed.add(
-            (i, int.from_bytes(d[:5], "big"), int.from_bytes(d[5:10], "big"))
-        )
-    assert hashed == want_hashed
 
 
 def test_text_langid_oracle_parity_on_edge_corpus(spark):
