@@ -4,8 +4,8 @@ audit pipeline.
 The audit package (:mod:`flink_audit_sessions_example_spark`) holds only
 what the reference pipeline reaches: the file source, the sessionizer,
 the streaming job and the 11 SURVEY.md §2 registry keys. Everything
-else the engine grew — similarity / text / corpus / sketch /
-time-series operators, their 194 registry keys, the CDC/SCD stream
+else the engine grew — text / corpus / sketch / time-series
+operators, their 180 registry keys, the CDC/SCD stream
 materializer and the parquet sinks — lives here, imports the audit
 package but is never imported by it.
 

@@ -120,9 +120,8 @@ def zorder_key(
       long-tail distributions — most rows in one cell, no pruning).
     - **One construction-time pass, O(1) driver state**: boundaries come
       from a single ``approx_percentile`` aggregate (t-digest-style
-      sketch, map-side mergeable) collecting cols × (2^bits − 1) doubles
-      — the same bounded construction-collect contract as the IVF seed
-      centroids. Pass ``boundaries`` explicitly to reuse a layout across
+      sketch, map-side mergeable) collecting cols × (2^bits − 1)
+      doubles. Pass ``boundaries`` explicitly to reuse a layout across
       incremental writes (stable keys need stable edges).
     - **O(bits) per-row bucket math**: the binary-search ``when`` tree +
       bit interleave are pure codegen'd integer/compare expressions —

@@ -164,8 +164,7 @@ def pack_by_count(
 #: ~350 MB, comfortably under Spark's broadcast ceiling. Above the cap
 #: the plan falls back to a shuffled join (or raises, see ``on_large``)
 #: instead of silently shipping a corpus-sized broadcast to every
-#: executor — the same misuse guard as ``MAX_COLLECTED_QUERIES`` on the
-#: similarity side.
+#: executor.
 MAX_BROADCAST_EVAL_DOCS = 10_000
 
 
@@ -842,8 +841,7 @@ def reservoir_sample(df: DataFrame, *, key_col: str, k: int) -> DataFrame:
     TakeOrderedAndProject — each task keeps a k-row heap and the driver
     merges tasks×k rows; there is NO global sort exchange and no
     single-partition window. The driver merge is the bound: k is capped
-    (1M) with an explicit error, the same misuse contract as the
-    broadcast-queries guard in ``operators/similarity.py``.
+    (1M) with an explicit error.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

@@ -1,5 +1,5 @@
-"""Posting-list pair emission, keyed latest-state collapse, and the two
-blocked pair operators built on them.
+"""Posting-list pair emission, keyed latest-state collapse, and the
+blocked pair operator built on them.
 
 - **Pairs from postings.** :func:`bounded_posting_lists` groups keyed
   rows into sorted per-key id lists with the skew cap applied before
@@ -13,8 +13,7 @@ blocked pair operators built on them.
   the streaming CDC materializer (``streaming/cdc.py``) share it;
   :func:`snapshot_diff` is the key-level diff of two versions.
 - **Blocked pairs.** :func:`ngram_containment_pairs`
-  (``text_containment``) and :func:`edit_distance_pairs`
-  (``sim_edit_pairs``) emit their candidate pairs from bounded posting
+  (``text_containment``) emits its candidate pairs from bounded posting
   lists.
 """
 
@@ -425,81 +424,4 @@ def ngram_containment_pairs(
         .select(
             "id_a", "id_b", F.round("containment", 6).alias("containment")
         )
-    )
-
-
-def edit_distance_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_dist: int = 20,
-    prefix_len: int = 16,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """``sim_edit_pairs`` — all document pairs within Levenshtein
-    distance ``max_dist``, under PREFIX BLOCKING: only pairs agreeing
-    on their first ``prefix_len`` characters are compared. The
-    character-level near-dup signal shingle methods miss (a one-char
-    typo flips every shingle it touches; edit distance counts it as 1)
-    — the standard key-dedup for titles, product names, and template
-    pages differing by substitutions.
-
-    Blocking contract, stated plainly: recall is BOUNDED — a pair
-    edited inside its first ``prefix_len`` characters lands in two
-    buckets and is never compared (the "length+prefix buckets, never
-    cross" discipline: exact edit-distance joins have no LSH, so SOME
-    blocking key is the price of never going O(n²); callers needing
-    prefix-edit recall run a second pass blocked on a suffix). Within
-    a bucket the length filter ``|len(a) − len(b)| ≤ max_dist`` (a
-    hard lower bound on edit distance) prunes before any distance is
-    computed, and
-    Spark's bounded ``levenshtein(a, b, threshold)`` early-exits any
-    row exceeding ``max_dist`` in O(len·max_dist) instead of O(len²).
-
-    Plan: ONE ``groupBy(prefix)`` via :func:`bounded_posting_lists`
-    (``max_bucket_size`` caps boilerplate prefixes — the stopword rule;
-    buffer bound = cap × text length) and in-place pair emission;
-    everything downstream is a codegen'd projection + filter over the
-    pair rows. Shuffle O(docs), pair work O(Σ bucket²) bounded by the
-    cap. Output ``(id_a, id_b, edit_distance)`` with ``id_a < id_b``.
-    """
-    if max_dist < 0:
-        raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    if prefix_len < 1:
-        raise ValueError(f"prefix_len must be >= 1, got {prefix_len}")
-    rows = df.where(
-        F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
-    ).select(
-        F.substring(F.col(text_col), 1, prefix_len).alias("pfx"),
-        F.struct(
-            F.col(id_col).alias("id"), F.col(text_col).alias("txt")
-        ).alias("pay"),
-    )
-    buckets = bounded_posting_lists(
-        rows, ["pfx"], F.col("pay"), max_size=max_bucket_size,
-        pin_keyed=False,
-    )
-    pairs = (
-        buckets.select(F.explode(_pair_explode()).alias("p"))
-        .select(
-            F.col("p.id_a.id").alias("id_a"),
-            F.col("p.id_a.txt").alias("_ta"),
-            F.col("p.id_b.id").alias("id_b"),
-            F.col("p.id_b.txt").alias("_tb"),
-        )
-        .where(
-            F.abs(F.length("_ta") - F.length("_tb")) <= F.lit(max_dist)
-        )
-    )
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            F.levenshtein("_ta", "_tb", max_dist)
-            .cast("bigint")
-            .alias("edit_distance"),
-        )
-        # the bounded form returns -1 for pairs past the threshold
-        .where(F.col("edit_distance") >= 0)
     )

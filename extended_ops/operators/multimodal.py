@@ -26,15 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Metadata carried next to every binary payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha", T.StringType()),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

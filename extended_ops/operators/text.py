@@ -322,31 +322,12 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     ``md5(normalized text)`` where normalization = lowercase + collapse
     whitespace + trim: the canonical cheap exact-dedup key (casing /
-    spacing variants collapse to one fingerprint). A content-defined
-    rolling-hash variant is in :func:`with_shingle_fingerprint`.
+    spacing variants collapse to one fingerprint).
     """
     normalized = F.trim(
         F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     )
     return df.withColumn("fingerprint", F.md5(normalized))
-
-
-def with_shingle_fingerprint(
-    df: DataFrame, text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Winnowing-style fingerprint: min md5 over word ``k``-shingles.
-
-    The minimum shingle hash is stable under small edits anywhere except
-    the minimal shingle itself — a one-value sketch of the document used as
-    a cheap near-dup pre-filter (full MinHash generalizes this to H
-    minima).
-    """
-    shingles = shingle_array(F.col(_WORDS), k)
-    return (
-        _with_words(df, text_col)
-        .withColumn("min_shingle_md5", F.array_min(F.transform(shingles, F.md5)))
-        .drop(_WORDS)
-    )
 
 
 def with_repetition_ratio(

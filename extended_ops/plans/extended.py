@@ -1,11 +1,11 @@
-"""Extended query surface: similarity / text / multimodal /
-relational (SURVEY.md §2.2 — the LLM-data-pipeline operators the driver's
+"""Extended query surface: text / multimodal / relational
+(SURVEY.md §2.2 — the LLM-data-pipeline operators the driver's
 north-star mandates beyond the reference's own operators).
 
 Oracle notes (hard-won cross-engine parity rules):
 
 - Spark ``aggregate`` folds sequentially; DuckDB ``list_sum`` matches it
-  element-for-element, so double dot products are bit-identical — no
+  element-for-element, so double folds are bit-identical — no
   rounding games needed (``round(x, 6)`` is additionally safe because a
   double can never be an exact 6-decimal tie: 5·10⁻⁷ is not dyadic).
 - Double *column* sums are order-dependent → money aggregates cast each
@@ -28,7 +28,6 @@ from ..operators import corpus as C
 from ..operators import dedup as D
 from ..operators import groupsets as G
 from ..operators import multimodal as M
-from ..operators import similarity as S
 from ..operators import sketches as K
 from ..operators import text as X
 from ..sources.tables import load_table
@@ -56,231 +55,11 @@ def _sql_shingles(k: int) -> str:
     )
 
 
-#: Skew caps active in the REGISTERED pair queries (and mirrored in their
-#: oracles): a shingle shared by more than MAX_SHINGLE_DF docs, or a
-#: blocking bucket larger than MAX_BUCKET_SIZE, is dropped before its
-#: quadratic pair explode — at corpus scale one boilerplate shingle would
-#: otherwise emit ~df² pairs from a single posting row.
+#: Skew cap active in the REGISTERED pair queries (and mirrored in their
+#: oracles): a shingle shared by more than MAX_SHINGLE_DF docs is dropped
+#: before its quadratic pair explode — at corpus scale one boilerplate
+#: shingle would otherwise emit ~df² pairs from a single posting row.
 MAX_SHINGLE_DF = 1000
-MAX_BUCKET_SIZE = 200
-
-
-# --------------------------------------------------------------------------
-# Similarity
-# --------------------------------------------------------------------------
-
-_SQL_DOT = (
-    "list_sum(list_transform(list_zip({a}, {b}), "
-    "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-)
-
-
-def _sql_cos(a: str, b: str) -> str:
-    d = _SQL_DOT.format(a=a, b=b)
-    na = f"sqrt({_SQL_DOT.format(a=a, b=a)})"
-    nb = f"sqrt({_SQL_DOT.format(a=b, b=b)})"
-    return f"({d} / ({na} * {nb}))"
-
-
-def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_topk`` — exact cosine top-10 for query vectors
-    (vec_id % 50 == 0) against the full corpus; broadcast the queries,
-    stream the corpus.
-
-    ``spread=False``: the BLAS batch scorer is fast enough that the
-    scan-spread exchange dominates at bench scale (measured 1.44 →
-    0.78 s — the r3 "bench doubling" was the repartition, not the
-    regenerated embeddings); at production split counts spread is a
-    no-op either way."""
-    emb = load_table(spark, sf_dir, "embeddings", spread=False)
-    return S.brute_force_topk(
-        emb, emb.where(F.col("vec_id") % 50 == 0), k=10
-    )
-
-
-_SIM_TOPK_ORACLE = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_sql_cos("q.qv", "e.embedding")} AS sim
-  FROM q JOIN embeddings e ON e.vec_id <> q.query_id
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, ROUND(sim, 6) AS sim
-FROM ranked WHERE rank <= 10
-"""
-
-
-def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_topk_ivf`` — the IVF ANN scale path: coarse quantizer →
-    inverted lists → nprobe-list probing → exact verify on candidates.
-
-    Registered with the deterministic-seed quantizer (centroids = first
-    ``n_centroids`` corpus vectors in md5 order) and fold-exact scoring,
-    so the whole pipeline is hash-checked against a DuckDB oracle that
-    derives the SAME centroids from the table. The k-means-trained
-    variant (``S.ivf_topk``) is the production path — same join
-    topology, better centroids, pytest-covered recall (iterative numpy
-    training is the one genuinely non-SQL step).
-
-    Operating point (r4): nc=32, nprobe=6 — a SELECTIVE plan: measured
-    candidate fraction 0.17-0.19 of the corpus per query (driver data,
-    both SFs; r3's nc=16/nprobe=8 probed a structural 50%), with
-    planted-neighbor recall 0.975 on the clustered fixture
-    (``tests/test_ann_clustered.py`` pins both as regression floors).
-    On the driver's isotropic-noise embeddings recall@10 is 0.44-0.45 —
-    the honest ANN worst case; no selective point can do better there
-    (SCALING.md recall table). nc sits at ≈√n for the test scales
-    (√500≈22, √2000≈45); at production n, re-size nc≈√n so
-    nprobe/nc — and with it the per-query fraction — keeps shrinking."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_topk_expr(
-        emb,
-        emb.where(F.col("vec_id") % 50 == 0),
-        k=10,
-        n_centroids=32,
-        nprobe=6,
-    )
-
-
-def _sim_ivf_oracle(k: int = 10, n_centroids: int = 16, nprobe: int = 4) -> str:
-    """DuckDB twin of the registered ``sim_topk_ivf``: same md5-ordered
-    seed centroids (derived from the table, not literals), same
-    fold-exact assignment argmax / probe ranking / candidate verify."""
-    dot_ec = _SQL_DOT.format(a="e.embedding", b="c.cv")
-    dot_qc = _SQL_DOT.format(a="q.embedding", b="c.cv")
-    dot_cc = _SQL_DOT.format(a="embedding", b="embedding")
-    return f"""
-WITH seeds AS (
-  SELECT vec_id, embedding FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-), cent AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cluster,
-         embedding AS cv,
-         sqrt({dot_cc}) AS nc
-  FROM seeds
-), assign AS (
-  SELECT neighbor_id, cluster FROM (
-    SELECT e.vec_id AS neighbor_id, c.cluster,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot_ec} / c.nc DESC, c.cluster ASC) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, cluster FROM (
-    SELECT q.vec_id AS query_id, c.cluster,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {dot_qc} / c.nc DESC, c.cluster ASC) AS rn
-    FROM embeddings q CROSS JOIN cent c
-    WHERE q.vec_id % 50 = 0
-  ) WHERE rn <= {nprobe}
-), cands AS (
-  SELECT p.query_id, a.neighbor_id
-  FROM assign a JOIN probes p ON a.cluster = p.cluster
-  WHERE a.neighbor_id <> p.query_id
-), scored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         {_sql_cos("q.embedding", "c.embedding")} AS sim
-  FROM cands cd
-  JOIN embeddings q ON q.vec_id = cd.query_id
-  JOIN embeddings c ON c.vec_id = cd.neighbor_id
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, ROUND(sim, 6) AS sim
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def q_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_topk_lsh`` — the ANN scale path: random-hyperplane sketch →
-    banded multi-probe bucket join → exact cosine on candidates only.
-
-    Registered with ``impl='expr'``: sketch sign bits and candidate
-    cosines are sequential-fold Catalyst expressions that DuckDB
-    reproduces bit-for-bit, so the whole approximate pipeline —
-    hyperplanes, banding, probing, verify, top-k — is hash-checked
-    against the oracle (which embeds the same hyperplane literals).
-    Production default is ``impl='blas'`` (numpy per Arrow batch; same
-    joins), pytest-pinned equal to the expr twin at sf0.01.
-
-    Operating point (r4): nbits=40, bands=4 — 10-bit bands, a SELECTIVE
-    plan: measured candidate fraction 0.047-0.050 of the corpus per
-    query at both SFs (r3's 4-bit bands collided ~40% of unrelated
-    pairs structurally and scanned 94%), with planted-neighbor recall
-    1.0 on the clustered fixture (``tests/test_ann_clustered.py`` pins
-    both as regression floors). On the driver's isotropic-noise
-    embeddings recall@10 is 0.13-0.21 — the honest ANN worst case:
-    without a distance gap no selective point can recall there
-    (SCALING.md recall table), and a "high-recall" setting would just
-    be a disguised exhaustive scan. Exact top-k at small n is
-    ``sim_topk``."""
-    emb = load_table(spark, sf_dir, "embeddings", spread=False)
-    return S.lsh_topk(
-        emb,
-        emb.where(F.col("vec_id") % 50 == 0),
-        dim=64,
-        k=10,
-        nbits=40,
-        bands=4,
-        impl="expr",
-    )
-
-
-def _sql_lit_list(vals: list[float]) -> str:
-    return "[" + ", ".join(repr(v) for v in vals) + "]"
-
-
-def _sim_lsh_oracle(
-    dim: int = 64, k: int = 10, nbits: int = 16, bands: int = 4, seed: int = 7
-) -> str:
-    """DuckDB twin of the registered ``sim_topk_lsh``: the same
-    ``_hyperplane(dim, seed+i)`` literals, sign-bit sketch via the
-    sequential list_sum dot (bit-identical to Spark's fold), banded keys,
-    Hamming-1 multi-probe on the query side, exact cosine + top-k on
-    candidates."""
-    width = nbits // bands
-    mask = (1 << width) - 1
-    bit_terms = "\n      + ".join(
-        f"(CASE WHEN {_SQL_DOT.format(a='embedding', b=_sql_lit_list(S._hyperplane(dim, seed + i)))}"
-        f" > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(nbits)
-    )
-    probe_vals = ", ".join(
-        ["val"] + [f"xor(val, {1 << j})" for j in range(width)]
-    )
-    return f"""
-WITH sk AS (
-  SELECT vec_id, CAST({bit_terms} AS BIGINT) AS sketch
-  FROM embeddings
-), ck AS (
-  SELECT vec_id AS neighbor_id, band, (sketch >> (band * {width})) & {mask} AS val
-  FROM sk CROSS JOIN (SELECT unnest([{", ".join(str(b) for b in range(bands))}]) AS band) b
-), qk AS (
-  SELECT query_id, band, unnest([{probe_vals}]) AS val
-  FROM (SELECT vec_id AS query_id, band, (sketch >> (band * {width})) & {mask} AS val
-        FROM sk CROSS JOIN (SELECT unnest([{", ".join(str(b) for b in range(bands))}]) AS band) b
-        WHERE vec_id % 50 = 0) t
-), cands AS (
-  SELECT DISTINCT q.query_id, c.neighbor_id
-  FROM ck c JOIN qk q ON c.band = q.band AND c.val = q.val
-  WHERE c.neighbor_id <> q.query_id
-), scored AS (
-  SELECT cd.query_id, cd.neighbor_id,
-         {_sql_cos("q.embedding", "c.embedding")} AS sim
-  FROM cands cd
-  JOIN embeddings q ON q.vec_id = cd.query_id
-  JOIN embeddings c ON c.vec_id = cd.neighbor_id
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, ROUND(sim, 6) AS sim
-FROM ranked WHERE rank <= {k}
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1419,49 +1198,6 @@ WITH sh AS (
 )
 SELECT doc_id, CAST(COUNT(DISTINCT eval_id) AS BIGINT) AS n_eval_hits
 FROM hits GROUP BY doc_id
-"""
-
-
-def q_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``cluster_profile`` — corpus composition by embedding cluster:
-    nearest deterministic-seed centroid per vector (fold-exact argmax
-    projection), one hash agg; mean similarity via exact DECIMAL sums.
-
-    ``spread=False``: the argmax projection is codegen over ≤16 literal
-    centroids — scan-side work light enough that the spread exchange is
-    net negative (measured 0.87× without it at sf0.1)."""
-    return S.cluster_profile(
-        load_table(spark, sf_dir, "embeddings", spread=False), n_centroids=16
-    )
-
-
-def _cluster_profile_oracle(n_centroids: int = 16) -> str:
-    dot_ec = _SQL_DOT.format(a="e.embedding", b="c.cv")
-    dot_cc = _SQL_DOT.format(a="embedding", b="embedding")
-    dot_ee = _SQL_DOT.format(a="e.embedding", b="e.embedding")
-    return f"""
-WITH seeds AS (
-  SELECT vec_id, embedding FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
-), cent AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cluster,
-         embedding AS cv,
-         sqrt({dot_cc}) AS nc
-  FROM seeds
-), assigned AS (
-  SELECT neighbor_id, cluster, s / nv AS sim FROM (
-    SELECT e.vec_id AS neighbor_id, c.cluster,
-           {dot_ec} / c.nc AS s,
-           sqrt({dot_ee}) AS nv,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot_ec} / c.nc DESC, c.cluster ASC) AS rn
-    FROM embeddings e CROSS JOIN cent c
-  ) WHERE rn = 1
-)
-SELECT CAST(cluster AS INTEGER) AS cluster,
-       CAST(COUNT(*) AS BIGINT) AS n_vectors,
-       ROUND(CAST(SUM(CAST(sim AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 6) AS mean_sim
-FROM assigned GROUP BY cluster
 """
 
 
@@ -3068,49 +2804,6 @@ FROM s
 """
 
 
-def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``embed_quantize`` — symmetric int8 quantization of the embedding
-    table (see :func:`~..operators.similarity.quantize_embeddings`):
-    scan-side per-element expressions, no shuffle, no Python.
-
-    Registered output serializes the codes as ``qvec_csv`` (the int8
-    codes joined with ','): the production operator returns the raw
-    ``array<int>`` column, but the driver's pandas canonicalizer cannot
-    sort/hash Python-list cells (r7: ``TypeError: unhashable type:
-    'list'``), so the REGISTERED projection is the scalar-only shape —
-    same information, one deterministic string per vector, zero extra
-    cost (the join is scan-side like everything else here)."""
-    q = S.quantize_embeddings(load_table(spark, sf_dir, "embeddings"))
-    return q.select(
-        "vec_id",
-        "scale",
-        F.array_join(
-            F.transform(F.col("qvec"), lambda v: v.cast("string")), ","
-        ).alias("qvec_csv"),
-    )
-
-
-_EMBED_QUANTIZE_ORACLE = """
-WITH x AS (
-  SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xs
-  FROM embeddings
-), s AS (
-  SELECT vec_id, xs,
-         list_max(list_transform(xs, v -> abs(v))) / 127.0 AS scale
-  FROM x
-)
-SELECT vec_id, ROUND(scale, 6) AS scale,
-       array_to_string(
-         CASE WHEN scale = 0
-              THEN list_transform(xs, v -> '0')
-              ELSE list_transform(
-                     xs, v -> CAST(CAST(ROUND(v / scale) AS INTEGER)
-                                   AS VARCHAR))
-         END, ',') AS qvec_csv
-FROM s
-"""
-
-
 def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``agg_mode`` — per-user modal event type (most frequent;
     lexicographically-smallest tie-break). Scale shape: the (user,
@@ -3540,9 +3233,9 @@ def q_text_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Registered output serializes the vector as ``features_csv`` (counts
     joined with ',') — the raw ``array<bigint>`` column is the
-    production shape but, like ``embed_quantize``'s ``qvec``, is not
-    sortable by the driver's pandas canonicalizer. ``n_feature_words``
-    (total bucketed words) rides along as the scalar checksum."""
+    production shape but is not sortable by the driver's pandas
+    canonicalizer. ``n_feature_words`` (total bucketed words) rides
+    along as the scalar checksum."""
     docs = load_table(spark, sf_dir, "documents", spread=False).select(
         "doc_id", "text"
     )
@@ -3724,9 +3417,6 @@ EXTENDED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_filtered_scan": q_rel_filtered_scan,
     "pipeline_clean_corpus": q_pipeline_clean_corpus,
     "join_asof": q_join_asof,
-    "sim_topk": q_sim_topk,
-    "sim_topk_lsh": q_sim_topk_lsh,
-    "sim_topk_ivf": q_sim_topk_ivf,
     "text_stats": q_text_stats,
     "text_langid": q_text_langid,
     "text_quality": q_text_quality,
@@ -3746,7 +3436,6 @@ EXTENDED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "xform_split": q_xform_split,
     "pack_sequences": q_pack_sequences,
     "decontaminate": q_decontaminate,
-    "cluster_profile": q_cluster_profile,
     "rel_shipping_priority": q_rel_shipping_priority,
     "join_anti": q_join_anti,
     "win_user_gaps": q_win_user_gaps,
@@ -3782,7 +3471,6 @@ EXTENDED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_min_cost_supplier": q_rel_min_cost_supplier,
     "rel_global_sales_prospects": q_rel_global_sales_prospects,
     "xform_chunk_overlap": q_xform_chunk_overlap,
-    "embed_quantize": q_embed_quantize,
     "agg_mode": q_agg_mode,
     "text_token_count": q_text_token_count,
     "win_first_touch": q_win_first_touch,
@@ -3807,9 +3495,6 @@ EXTENDED_ORACLES: dict[str, str] = {
     "rel_filtered_scan": _REL_FILTERED_ORACLE,
     "pipeline_clean_corpus": _pipeline_oracle(),
     "join_asof": _JOIN_ASOF_ORACLE,
-    "sim_topk": _SIM_TOPK_ORACLE,
-    "sim_topk_lsh": _sim_lsh_oracle(nbits=40, bands=4),
-    "sim_topk_ivf": _sim_ivf_oracle(n_centroids=32, nprobe=6),
     "text_stats": _TEXT_STATS_ORACLE,
     "text_langid": _langid_oracle(),
     "text_quality": _TEXT_QUALITY_ORACLE,
@@ -3830,7 +3515,6 @@ EXTENDED_ORACLES: dict[str, str] = {
     "join_fuzzy": _join_fuzzy_oracle(),
     "pack_sequences": _PACK_ORACLE,
     "decontaminate": _DECONTAMINATE_ORACLE,
-    "cluster_profile": _cluster_profile_oracle(),
     "rel_shipping_priority": _REL_SHIPPING_PRIORITY_ORACLE,
     "join_anti": _JOIN_ANTI_ORACLE,
     "win_user_gaps": _WIN_USER_GAPS_ORACLE,
@@ -3869,7 +3553,6 @@ EXTENDED_ORACLES: dict[str, str] = {
     "rel_min_cost_supplier": _REL_MIN_COST_SUPPLIER_ORACLE,
     "rel_global_sales_prospects": _REL_GLOBAL_SALES_PROSPECTS_ORACLE,
     "xform_chunk_overlap": _XFORM_CHUNK_OVERLAP_ORACLE,
-    "embed_quantize": _EMBED_QUANTIZE_ORACLE,
     "agg_mode": _AGG_MODE_ORACLE,
     "text_token_count": _TEXT_TOKEN_COUNT_ORACLE,
     "win_first_touch": _WIN_FIRST_TOUCH_ORACLE,

@@ -18,7 +18,6 @@ from ..operators import sketches as K
 from ..operators import text as X
 from ..operators.asof import interval_join
 from ..operators.dedup import cdc_apply, latest_by_key, snapshot_diff
-from ..operators.similarity import semantic_decontaminate
 from ..sources.tables import load_table
 from .extended import _SQL_WORDS
 
@@ -384,47 +383,6 @@ FROM c GROUP BY 1, 2
 """
 
 # --------------------------------------------------------------------------
-# decontaminate_semantic
-# --------------------------------------------------------------------------
-
-DECON_TAU = 0.98
-
-
-def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``decontaminate_semantic`` — embedding-space benchmark-overlap
-    gate (:func:`~..operators.similarity.semantic_decontaminate`):
-    broadcast eval matrix + one Arrow BLAS pass, zero shuffle. evals =
-    every 17th vector, train = the whole corpus (the realistic leak:
-    the benchmark is a subset of the crawl) — every eval's identical
-    twin fires at cosine 1.0, non-vacuous by construction. max_sim
-    rounds to 5dp; the oracle casts to DOUBLE[] because DuckDB's
-    list_cosine_similarity computes FLOAT[] inputs in float32."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    evals = emb.where("vec_id % 17 = 0")
-    return semantic_decontaminate(emb, evals, threshold=DECON_TAU).select(
-        "vec_id", F.round("max_sim", 5).alias("max_sim"), "n_eval_hits"
-    )
-
-
-_DECONTAMINATE_SEMANTIC_ORACLE = f"""
-WITH ev AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 17 = 0
-), tr AS (
-  SELECT vec_id, embedding FROM embeddings
-), sims AS (
-  SELECT tr.vec_id,
-         list_cosine_similarity(tr.embedding::DOUBLE[],
-                                ev.embedding::DOUBLE[]) AS sim
-  FROM tr CROSS JOIN ev
-)
-SELECT vec_id, round(max(sim), 5) AS max_sim,
-       count(*) FILTER (WHERE sim >= {DECON_TAU}) AS n_eval_hits
-FROM sims GROUP BY vec_id HAVING max(sim) >= {DECON_TAU}
-"""
-
-# --------------------------------------------------------------------------
 # text_clean
 # --------------------------------------------------------------------------
 
@@ -567,7 +525,6 @@ STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "join_interval": q_join_interval,
     "corpus_balanced_shards": q_corpus_balanced_shards,
     "text_chunk_sentences": q_text_chunk_sentences,
-    "decontaminate_semantic": q_decontaminate_semantic,
     "text_tfidf_topk": q_text_tfidf_topk,
     "win_funnel_stages": q_win_funnel_stages,
     "text_clean": q_text_clean,
@@ -580,7 +537,6 @@ STAGED_ORACLES: dict[str, str] = {
     "join_interval": _JOIN_INTERVAL_ORACLE,
     "corpus_balanced_shards": _CORPUS_BALANCED_SHARDS_ORACLE,
     "text_chunk_sentences": _TEXT_CHUNK_SENTENCES_ORACLE,
-    "decontaminate_semantic": _DECONTAMINATE_SEMANTIC_ORACLE,
     "text_tfidf_topk": _TEXT_TFIDF_ORACLE,
     "win_funnel_stages": _WIN_FUNNEL_ORACLE,
     "text_clean": _text_clean_oracle(),
@@ -1258,117 +1214,3 @@ STAGED_ORACLES.update(
         "agg_kmv_sketch": _AGG_KMV_SKETCH_ORACLE,
     }
 )
-
-# --------------------------------------------------------------------------
-# sim_topk_pq (staging batch 3 — the PQ member of the ANN family)
-# --------------------------------------------------------------------------
-
-from ..operators.similarity import pq_codebooks, pq_encode, pq_topk  # noqa: E402
-
-PQ_M, PQ_NCODES, PQ_K = 8, 16, 10
-
-
-def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_topk_pq`` — asymmetric-distance top-k over product-quantized
-    vectors (:func:`~..operators.similarity.pq_codebooks` /
-    ``pq_encode`` / ``pq_topk``): 64 floats compress to 8 one-byte
-    codes; search is m table lookups per pair instead of dim multiplies.
-    Deterministic-seed codebooks (the ivf_topk_expr pattern) + fold-exact
-    encode + j-ordered ADC sum make the WHOLE pipeline hash-checkable —
-    the only compressed-domain ANN in the registry with a value oracle.
-    Registered as the exhaustive compressed-domain scan (queries =
-    every 50th vector); the production composite feeds
-    ``ivf_probe_candidates`` into ``candidates=`` (FAISS IVFPQ shape,
-    pytest-gated in ``tests/test_pq.py``).
-
-    Construction collects the ``n_codes`` seed rows — the
-    "small trainer state on the driver" contract the LIVE
-    ``sim_topk_ivf`` registration already carries (`_seed_centroids`):
-    the codebooks must be driver literals to build the encode/LUT
-    plans, unlike ``q_agg_count_min``'s N, which is relational and
-    therefore stays lazy."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    cbs = pq_codebooks(emb, m=PQ_M, n_codes=PQ_NCODES)
-    codes = pq_encode(emb, cbs)
-    return pq_topk(
-        codes, emb.where("vec_id % 50 = 0"), cbs, k=PQ_K
-    )
-
-
-def _sim_topk_pq_oracle(m: int = PQ_M, n_codes: int = PQ_NCODES,
-                        k: int = PQ_K) -> str:
-    """DuckDB twin: same md5-ordered seed codebooks derived FROM the
-    table, same per-subspace argmin encode (dist ASC, code ASC), and
-    the ADC sum evaluated as a j-ORDERED ``list_sum`` fold — the
-    bit-exact mirror of the Spark left-to-right term sum, so ranking on
-    the unrounded doubles agrees and only the OUTPUT rounds to 6dp."""
-    sub = 64 // m
-    subsq = (
-        "list_sum(list_transform(generate_series(1, {sub}), i -> "
-        "(CAST({vec}[{off} + i] AS DOUBLE) - CAST({cv}[i] AS DOUBLE)) * "
-        "(CAST({vec}[{off} + i] AS DOUBLE) - CAST({cv}[i] AS DOUBLE))))"
-    )
-    enc_dist = subsq.format(
-        sub=sub, vec="e.embedding", off="cb.j * " + str(sub), cv="cb.cv"
-    )
-    adc_term = subsq.format(
-        sub=sub,
-        vec="q.embedding",
-        off=f"j * {sub}",
-        cv="cb3[j + 1][cl[j + 1] + 1]",
-    )
-    return f"""
-WITH seeds AS (
-  SELECT embedding,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-           - 1 AS code
-  FROM (
-    SELECT vec_id, embedding FROM embeddings
-    WHERE embedding IS NOT NULL
-    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_codes}
-  )
-), cb AS (
-  SELECT s.j, seeds.code,
-         embedding[s.j * {sub} + 1 : s.j * {sub} + {sub}] AS cv
-  FROM seeds CROSS JOIN (
-    SELECT unnest(generate_series(0, {m - 1})) AS j
-  ) s
-), enc AS (
-  SELECT vec_id, j, code FROM (
-    SELECT e.vec_id, cb.j, cb.code,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id, cb.j
-             ORDER BY {enc_dist} ASC, cb.code ASC) AS rn
-    FROM embeddings e CROSS JOIN cb
-    WHERE e.embedding IS NOT NULL
-  ) WHERE rn = 1
-), codes AS (
-  SELECT vec_id, array_agg(code ORDER BY j) AS cl FROM enc GROUP BY vec_id
-), cbj AS (
-  SELECT j, array_agg(cv ORDER BY code) AS cvs FROM cb GROUP BY j
-), cbl AS (
-  SELECT array_agg(cvs ORDER BY j) AS cb3 FROM cbj
-), scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(0, {m - 1}), j ->
-           {adc_term})) AS adist
-  FROM embeddings q
-  CROSS JOIN codes c
-  CROSS JOIN cbl
-  WHERE q.vec_id % 50 = 0 AND q.embedding IS NOT NULL
-    AND q.vec_id <> c.vec_id
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC
-  ) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank,
-       ROUND(adist, 6) AS adist
-FROM ranked WHERE rank <= {k}
-"""
-
-
-STAGED_QUERIES["sim_topk_pq"] = q_sim_topk_pq
-STAGED_ORACLES["sim_topk_pq"] = _sim_topk_pq_oracle()

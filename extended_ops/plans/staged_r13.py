@@ -1,4 +1,4 @@
-"""Registry batch r13: five capability families. Each key is a complete
+"""Registry batch r13: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity.
 
@@ -7,8 +7,7 @@ reference's session-window semantics — flink-audit-sessions-example
 `App.java:79-110` keys by user and windows with a session gap; this
 materializes the same gap contract as a table), temperature mixture
 sampling (the α=0.5 source-rebalancing of multilingual pretraining),
-data-freshness audit (planted-stale feeds), the exact corpus k-NN
-graph (blocked-BLAS + distributed top-k), and the first-order Markov
+data-freshness audit (planted-stale feeds), and the first-order Markov
 transition matrix of the event stream.
 """
 
@@ -21,10 +20,8 @@ from pyspark.sql import functions as F
 
 from ..operators.corpus import mixture_sample
 from ..operators.quality import freshness_audit
-from ..operators.similarity import knn_graph
 from ..operators.timeseries import event_transitions, gap_sessions
 from ..sources.tables import load_table
-from .extended import _sql_cos
 
 # --------------------------------------------------------------------------
 # win_gap_sessions — gap-based sessionization of the event stream
@@ -162,44 +159,6 @@ FROM per_key, anchor
 """
 
 # --------------------------------------------------------------------------
-# sim_knn_graph — the exact corpus k-NN graph
-# --------------------------------------------------------------------------
-
-KNN_K = 5
-
-
-def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_knn_graph`` — every vector's exact top-5 cosine neighbors
-    (:func:`~..operators.similarity.knn_graph`): blocked-BLAS block
-    pairs (shuffle n·B, never n²) + local-then-global distributed
-    top-k; ranking on ROUND(sim, 6) in both engines so BLAS last-ulp
-    noise cannot reorder ranks. ``spread=False``: the block-key
-    repartition inside the operator makes an upstream scan-spread
-    exchange pure overhead."""
-    return knn_graph(
-        load_table(spark, sf_dir, "embeddings", spread=False),
-        k=KNN_K,
-    )
-
-
-_SIM_KNN_GRAPH_ORACLE = f"""
-WITH pairs AS (
-  SELECT a.vec_id AS src_id, b.vec_id AS neighbor_id,
-         ROUND({_sql_cos("a.embedding", "b.embedding")}, 6) AS sim
-  FROM embeddings a
-  JOIN embeddings b ON b.vec_id <> a.vec_id
-  WHERE a.embedding IS NOT NULL AND b.embedding IS NOT NULL
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY src_id ORDER BY sim DESC, neighbor_id
-  ) AS rank
-  FROM pairs
-)
-SELECT src_id, neighbor_id, CAST(rank AS BIGINT) AS rank, sim
-FROM ranked WHERE rank <= {KNN_K}
-"""
-
-# --------------------------------------------------------------------------
 # win_transitions — first-order Markov transition matrix
 # --------------------------------------------------------------------------
 
@@ -248,7 +207,6 @@ STAGED_R13_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "win_gap_sessions": q_win_gap_sessions,
     "corpus_mixture_sample": q_corpus_mixture_sample,
     "dq_freshness": q_dq_freshness,
-    "sim_knn_graph": q_sim_knn_graph,
     "win_transitions": q_win_transitions,
 }
 
@@ -256,6 +214,5 @@ STAGED_R13_ORACLES: dict[str, str] = {
     "win_gap_sessions": _WIN_GAP_SESSIONS_ORACLE,
     "corpus_mixture_sample": _CORPUS_MIXTURE_ORACLE,
     "dq_freshness": _DQ_FRESHNESS_ORACLE,
-    "sim_knn_graph": _SIM_KNN_GRAPH_ORACLE,
     "win_transitions": _WIN_TRANSITIONS_ORACLE,
 }

@@ -1,12 +1,11 @@
-"""Registry batch r14: four capability families. Each key is a complete
+"""Registry batch r14: three capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity.
 
 Families: JSON schema profiling (key/cardinality discovery over
-semi-structured payloads), behavioral-regularity
-audit (planted periodic bots), leave-one-out k-NN classification (the
-embedding-quality evaluation, consuming the r13 k-NN graph), and
-size-2 association rules (support/confidence/lift over order baskets).
+semi-structured payloads), behavioral-regularity audit (planted
+periodic bots), and size-2 association rules
+(support/confidence/lift over order baskets).
 """
 
 from __future__ import annotations
@@ -16,12 +15,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import similarity as S
 from ..operators.baskets import association_rules
 from ..operators.profile import json_key_stats
 from ..operators.quality import regularity_audit
 from ..sources.tables import load_table
-from .staged_r13 import KNN_K, _SIM_KNN_GRAPH_ORACLE
 
 # --------------------------------------------------------------------------
 # xform_props_schema — JSON key/cardinality discovery
@@ -211,45 +208,6 @@ JOIN hs ON hs.user_id IS NOT DISTINCT FROM ev.user_id
 """
 
 # --------------------------------------------------------------------------
-# sim_knn_classify — leave-one-out majority vote over the k-NN graph
-# --------------------------------------------------------------------------
-
-
-def q_sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_knn_classify`` — each vector's majority label among its
-    exact top-5 cosine neighbors
-    (:func:`~..operators.similarity.knn_classify`): the r13 k-NN graph
-    consumed by one broadcast label join + an argmin-by-struct vote
-    (ties to the smallest label). The standard embedding-quality
-    evaluation, hash-checked end to end."""
-    return S.knn_classify(
-        load_table(spark, sf_dir, "embeddings", spread=False),
-        k=KNN_K,
-    )
-
-
-_SIM_KNN_CLASSIFY_ORACLE = f"""
-WITH g AS (
-  {_SIM_KNN_GRAPH_ORACLE}
-), votes AS (
-  SELECT g.src_id, e.label AS lbl, CAST(COUNT(*) AS BIGINT) AS v
-  FROM g JOIN embeddings e ON e.vec_id = g.neighbor_id
-  WHERE e.label IS NOT NULL
-  GROUP BY 1, 2
-), best AS (
-  SELECT src_id, lbl, v,
-         ROW_NUMBER() OVER (
-           PARTITION BY src_id ORDER BY v DESC, lbl
-         ) AS rn,
-         CAST(SUM(v) OVER (PARTITION BY src_id) AS BIGINT) AS nn
-  FROM votes
-)
-SELECT src_id AS vec_id, lbl AS predicted_label,
-       v AS n_votes, nn AS n_neighbors
-FROM best WHERE rn = 1
-"""
-
-# --------------------------------------------------------------------------
 # rel_assoc_rules — size-2 association rules over order baskets
 # --------------------------------------------------------------------------
 
@@ -319,13 +277,11 @@ CROSS JOIN nb
 STAGED_R14_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "xform_props_schema": q_xform_props_schema,
     "dq_bot_regularity": q_dq_bot_regularity,
-    "sim_knn_classify": q_sim_knn_classify,
     "rel_assoc_rules": q_rel_assoc_rules,
 }
 
 STAGED_R14_ORACLES: dict[str, str] = {
     "xform_props_schema": _XFORM_PROPS_SCHEMA_ORACLE,
     "dq_bot_regularity": _DQ_BOT_REGULARITY_ORACLE,
-    "sim_knn_classify": _SIM_KNN_CLASSIFY_ORACLE,
     "rel_assoc_rules": _REL_ASSOC_RULES_ORACLE,
 }

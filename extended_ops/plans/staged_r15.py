@@ -1,18 +1,16 @@
-"""Registry batch r15: five capability families. Each key is a complete
+"""Registry batch r15: four capability families. Each key is a complete
 (query callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py``
 replays every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r15.py`` holds its content checks.
 
 Families: URL canonicalization (crawl curation's first join key),
 HTML/boilerplate stripping (regex-only, the ``clean_text``
-dialect-intersection discipline), the banded edit-distance similarity
-join (character-level near-dup — the signal shingle methods miss),
-windowed rate-anomaly auditing (``mad_outliers`` composed over
-tumbling counts, with a planted burst so detection itself is
-hash-checked), and the labeled quality-calibration relation (score
-deciles × a derivable dup label — the "is my quality score actually
-predictive" table every filtering pipeline builds before trusting a
-threshold).
+dialect-intersection discipline), windowed rate-anomaly auditing
+(``mad_outliers`` composed over tumbling counts, with a planted burst
+so detection itself is hash-checked), and the labeled
+quality-calibration relation (score deciles × a derivable dup label —
+the "is my quality score actually predictive" table every filtering
+pipeline builds before trusting a threshold).
 
 Oracle strategy note: the two constructed-input registrations
 (``xform_url_canonical``, ``text_strip_html``) deliberately do NOT
@@ -30,16 +28,13 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import edit_distance_pairs
 from ..operators.quantiles import mad_outliers
 from ..operators.text import _words, with_quality_score
 from ..operators.web import canonicalize_urls, strip_html
 from ..sources.tables import load_table
 from .extended import (
-    MAX_BUCKET_SIZE,
     _QUALITY_EXPR,
     _SQL_WORDS,
-    _sql_shingles,  # noqa: F401  (re-export parity with sibling queues)
 )
 
 # --------------------------------------------------------------------------
@@ -178,46 +173,6 @@ WITH gt AS (
 SELECT doc_id, clean_text,
        CAST(length(clean_text) AS BIGINT) AS n_chars_clean
 FROM gt
-"""
-
-# --------------------------------------------------------------------------
-# sim_edit_pairs — banded edit-distance similarity join
-# --------------------------------------------------------------------------
-
-EDIT_MAX_DIST = 20
-EDIT_PREFIX_LEN = 16
-
-
-def q_sim_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_edit_pairs`` — document pairs within Levenshtein distance
-    20 under 16-char prefix blocking
-    (:func:`~..operators.dedup.edit_distance_pairs`): one
-    ``groupBy(prefix)`` posting-list build (bucket-capped), in-place
-    pair emission, length-difference prune, bounded levenshtein."""
-    return edit_distance_pairs(
-        load_table(spark, sf_dir, "documents"),
-        id_col="doc_id",
-        text_col="text",
-        max_dist=EDIT_MAX_DIST,
-        prefix_len=EDIT_PREFIX_LEN,
-        max_bucket_size=MAX_BUCKET_SIZE,
-    )
-
-
-_SIM_EDIT_PAIRS_ORACLE = f"""
-WITH b AS (
-  SELECT doc_id, text, substr(text, 1, {EDIT_PREFIX_LEN}) AS pfx
-  FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL
-), ok AS (
-  SELECT pfx FROM b GROUP BY 1
-  HAVING COUNT(*) >= 2 AND COUNT(*) <= {MAX_BUCKET_SIZE}
-)
-SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-       CAST(levenshtein(x.text, y.text) AS BIGINT) AS edit_distance
-FROM b x JOIN ok USING (pfx)
-JOIN b y ON y.pfx = x.pfx AND x.doc_id < y.doc_id
-WHERE abs(length(x.text) - length(y.text)) <= {EDIT_MAX_DIST}
-  AND levenshtein(x.text, y.text) <= {EDIT_MAX_DIST}
 """
 
 # --------------------------------------------------------------------------
@@ -397,7 +352,6 @@ GROUP BY 1
 STAGED_R15_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "xform_url_canonical": q_xform_url_canonical,
     "text_strip_html": q_text_strip_html,
-    "sim_edit_pairs": q_sim_edit_pairs,
     "dq_rate_anomaly": q_dq_rate_anomaly,
     "dq_quality_calibration": q_dq_quality_calibration,
 }
@@ -405,7 +359,6 @@ STAGED_R15_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 STAGED_R15_ORACLES: dict[str, str] = {
     "xform_url_canonical": _XFORM_URL_CANONICAL_ORACLE,
     "text_strip_html": _TEXT_STRIP_HTML_ORACLE,
-    "sim_edit_pairs": _SIM_EDIT_PAIRS_ORACLE,
     "dq_rate_anomaly": _DQ_RATE_ANOMALY_ORACLE,
     "dq_quality_calibration": _DQ_QUALITY_CALIBRATION_ORACLE,
 }

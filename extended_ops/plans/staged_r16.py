@@ -24,7 +24,7 @@ from ..operators.timeseries import next_touch_attribution, rolling_distinct
 from ..operators.web import canonicalize_urls
 from ..sources.tables import load_table
 from .extended import _QUALITY_EXPR, _SQL_WORDS
-from .staged_r15 import _SQL_MESSY_URL, _messy_url
+from .staged_r15 import _messy_url
 
 # --------------------------------------------------------------------------
 # web_domain_stats — per-host curation table

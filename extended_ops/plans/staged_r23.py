@@ -1,4 +1,4 @@
-"""Registry batch r23: five capabilities. Each key is a complete (query
+"""Registry batch r23: four capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r23.py`` holds its content checks.
@@ -10,12 +10,9 @@ hapax statistics (the vocabulary-tail health check next to
 two time halves (the distribution-shift screen ``dq_profile_drift``
 does for columns, done for a categorical's SHAPE — per-category exact
 counts, each χ² contribution a pure projection from integers so no
-cross-row float sum exists to diverge), silence-run detection over
-the WAV frame features (gaps-and-islands on the audio modality), and
-nearest-centroid assignment over quantized embeddings (k-means'
-assignment step in EXACT integer arithmetic — integer centroids,
-integer squared distances, deterministic argmin — reported as the
-label-vs-centroid confusion matrix)."""
+cross-row float sum exists to diverge), and silence-run detection
+over the WAV frame features (gaps-and-islands on the audio
+modality)."""
 
 from __future__ import annotations
 
@@ -424,148 +421,12 @@ GROUP BY t.doc_id
 """
 
 # --------------------------------------------------------------------------
-# sim_centroid_assign — exact-integer nearest-centroid assignment
-# --------------------------------------------------------------------------
-
-#: embedding quantization scale: floor(x · 1024) — components measured
-#: in [−0.6, 0.6], so |q| ≤ 615 and every squared distance fits BIGINT
-#: with ~9 orders of headroom (64 dims × (2·615)² ≈ 10^8).
-CENTROID_QSCALE = 1024
-
-
-def q_sim_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_centroid_assign`` — the k-means ASSIGNMENT step in exact
-    integer arithmetic, reported as the label-vs-centroid confusion
-    matrix ``(label, assigned_label, n)``: embeddings quantize to
-    integer grids (``floor(x·1024)``), per-label centroids are
-    round-half-up integer means (computed as ``floor((2s+n)/(2n))``
-    from exact BIGINT sums — the division is two exact integers whose
-    quotient is ≥ 1/(2n) away from any other integer, so the floored
-    double cannot straddle a boundary), and each vector goes to the
-    centroid minimizing the exact BIGINT squared distance (ties to the
-    smaller label — deterministic argmin, the cusum rule). No float
-    enters any comparison: parity is by construction (scaled-integer
-    arithmetic, so summation order cannot perturb a bit).
-
-    Scale: the per-label sums collapse the exploded (label, dim, q)
-    relation map-side to O(labels × dims); centroids re-assemble to
-    O(labels) array rows and BROADCAST against the vector relation
-    (the vocabulary-relation trick), where the distance fold and
-    argmin are one projection + one min-struct aggregation per vector
-    — the corpus never reshuffles, and the confusion rollup collapses
-    map-side to O(labels²)."""
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull() & F.col("label").isNotNull()
-    )
-    q = emb.select(
-        "vec_id",
-        "label",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x * CENTROID_QSCALE).cast("long"),
-        ).alias("_q"),
-    )
-    dims = q.select(
-        "label",
-        F.posexplode(F.col("_q")).alias("_dim", "_v"),
-    )
-    sums = dims.groupBy("label", "_dim").agg(
-        F.sum("_v").alias("_s"), F.count(F.lit(1)).alias("_n")
-    )
-    # round-half-up integer mean via floored double division of exact
-    # integers (see docstring for why the floor cannot straddle)
-    cent_val = F.floor(
-        (2 * F.col("_s") + F.col("_n"))
-        / (2 * F.col("_n")).cast("double")
-    ).cast("long")
-    centroids = (
-        sums.select("label", "_dim", cent_val.alias("_c"))
-        .groupBy(F.col("label").alias("_clabel"))
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("_dim", F.col("_c")))
-                ),
-                lambda s: s["_c"],
-            ).alias("_cv")
-        )
-    )
-    scored = q.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "label",
-        "_clabel",
-        F.aggregate(
-            F.zip_with(
-                F.col("_q"),
-                F.col("_cv"),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + e,
-        ).alias("_dist"),
-    )
-    assigned = scored.groupBy("vec_id", "label").agg(
-        F.min(F.struct(F.col("_dist"), F.col("_clabel"))).alias("_a")
-    )
-    return (
-        assigned.select(
-            "label", F.col("_a._clabel").alias("assigned_label")
-        )
-        .groupBy("label", "assigned_label")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-_SIM_CENTROID_ASSIGN_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id, label,
-         list_transform(
-           embedding,
-           x -> CAST(FLOOR(x * {CENTROID_QSCALE}) AS BIGINT)
-         ) AS qv
-  FROM embeddings
-  WHERE embedding IS NOT NULL AND label IS NOT NULL
-), dims AS (
-  SELECT label, i AS dim, qv[i + 1] AS v
-  FROM q, UNNEST(generate_series(0, len(qv) - 1)) AS t(i)
-), sums AS (
-  SELECT label, dim, CAST(SUM(v) AS BIGINT) AS s, COUNT(*) AS n
-  FROM dims GROUP BY 1, 2
-), cent AS (
-  SELECT label AS clabel,
-         list(CAST(FLOOR((2 * s + n) / CAST(2 * n AS DOUBLE)) AS BIGINT)
-              ORDER BY dim) AS cv
-  FROM sums GROUP BY 1
-), scored AS (
-  SELECT q.vec_id, q.label, c.clabel,
-         CAST(list_sum(
-           list_transform(
-             generate_series(1, len(q.qv)),
-             i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i])
-           )
-         ) AS BIGINT) AS dist
-  FROM q CROSS JOIN cent c
-), assigned AS (
-  SELECT vec_id, label, clabel AS assigned_label FROM (
-    SELECT vec_id, label, clabel,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY dist ASC, clabel ASC
-           ) AS rn
-    FROM scored
-  ) WHERE rn = 1
-)
-SELECT label, assigned_label, COUNT(*) AS n
-FROM assigned GROUP BY 1, 2
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R23_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_market_share": q_rel_market_share,
     "text_hapax_rate": q_text_hapax_rate,
     "dq_category_drift": q_dq_category_drift,
     "multimodal_audio_silence": q_multimodal_audio_silence,
-    "sim_centroid_assign": q_sim_centroid_assign,
 }
 
 STAGED_R23_ORACLES: dict[str, str] = {
@@ -573,5 +434,4 @@ STAGED_R23_ORACLES: dict[str, str] = {
     "text_hapax_rate": _TEXT_HAPAX_RATE_ORACLE,
     "dq_category_drift": _DQ_CATEGORY_DRIFT_ORACLE,
     "multimodal_audio_silence": _MULTIMODAL_AUDIO_SILENCE_ORACLE,
-    "sim_centroid_assign": _SIM_CENTROID_ASSIGN_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r24: five capabilities. Each key is a complete (query
+"""Registry batch r24: four capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r24.py`` holds its content checks.
@@ -10,11 +10,9 @@ emits), the session-length histogram (session QUALITY next to
 one integer relation), n-gram head-coverage curves (what fraction of
 trigram OCCURRENCES the top-k distinct trigrams cover — the
 compression/memorization screen, TakeOrderedAndProject at every k),
-ordered string aggregation (top-parts-per-nation as a deterministic
-csv — the presentation-layer contract that collect_list order must
-NOT leak into), and the embedding L2-norm histogram (the vector-QA
-screen for un-normalized batches before any cosine math trusts
-them)."""
+and ordered string aggregation (top-parts-per-nation as a
+deterministic csv — the presentation-layer contract that collect_list
+order must NOT leak into)."""
 
 from __future__ import annotations
 
@@ -26,7 +24,7 @@ from pyspark.sql.window import Window
 
 from ..operators.text import TOKEN_PATTERN, pattern_tokens
 from ..sources.tables import load_table
-from .extended import _SQL_DOT, _cents
+from .extended import _cents
 
 # --------------------------------------------------------------------------
 # rel_disjunctive_revenue — the TPC-H Q19 shape
@@ -378,65 +376,12 @@ GROUP BY nation
 """
 
 # --------------------------------------------------------------------------
-# embed_norm_hist — embedding L2-norm histogram
-# --------------------------------------------------------------------------
-
-#: 1/100 resolution: the corpus embeddings are near-unit (norm² in
-#: ~[0.9, 1.1]), so coarser buckets collapse the histogram into two
-#: cells and the QA screen sees nothing.
-NORM_BUCKET_SCALE = 100
-
-
-def q_embed_norm_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``embed_norm_hist`` — the squared-L2-norm histogram of the
-    embedding column, bucketed at ``1/NORM_BUCKET_SCALE`` resolution:
-    ``(norm2_bucket, n)``. The vector-QA screen run before any cosine
-    math is trusted — un-normalized batches, zero vectors, and
-    fp-overflow artifacts all show up as histogram mass where none
-    belongs. The norm fold is the ``sim_topk`` dot-product machinery
-    applied to (x, x): a fixed left-to-right fold over the array, the
-    same order on both engines.
-
-    Scale: one projection per vector (no shuffle) + one counting
-    aggregation into O(buckets) rows."""
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    return (
-        emb.select(
-            F.floor(norm2 * NORM_BUCKET_SCALE)
-            .cast("bigint")
-            .alias("norm2_bucket")
-        )
-        .groupBy("norm2_bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-_EMBED_NORM_HIST_ORACLE = f"""
-SELECT CAST(FLOOR(
-         {_SQL_DOT.format(a="embedding", b="embedding")}
-         * {NORM_BUCKET_SCALE}
-       ) AS BIGINT) AS norm2_bucket,
-       COUNT(*) AS n
-FROM embeddings
-WHERE embedding IS NOT NULL
-GROUP BY 1
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R24_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_disjunctive_revenue": q_rel_disjunctive_revenue,
     "win_session_lengths": q_win_session_lengths,
     "text_ngram_coverage": q_text_ngram_coverage,
     "rel_top_parts_concat": q_rel_top_parts_concat,
-    "embed_norm_hist": q_embed_norm_hist,
 }
 
 STAGED_R24_ORACLES: dict[str, str] = {
@@ -444,5 +389,4 @@ STAGED_R24_ORACLES: dict[str, str] = {
     "win_session_lengths": _WIN_SESSION_LENGTHS_ORACLE,
     "text_ngram_coverage": _TEXT_NGRAM_COVERAGE_ORACLE,
     "rel_top_parts_concat": _REL_TOP_PARTS_CONCAT_ORACLE,
-    "embed_norm_hist": _EMBED_NORM_HIST_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r26: four capabilities. Each key is a complete (query
+"""Registry batch r26: three capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r26.py`` holds its content checks.
@@ -11,14 +11,11 @@ through an AGGREGATED lineitem relation — this catalog has no
 semi-join-over-aggregate shape the spec exercises), the per-document
 token-frequency-decile profile (which corpus-frequency strata a
 document draws its tokens from — the OCR-garbage / boilerplate
-router, all-integer by construction), head-rank Zipf ratios
+router, all-integer by construction), and head-rank Zipf ratios
 (``f(k)/f(2k)`` for doubling ranks — for a Zipf corpus the ratio is
 flat ≈ 2^s; computed from two exact BIGINTs and ONE IEEE division,
 so it is bit-identical across engines with no libm anywhere — the
-``text.py`` tfidf note's discipline), and per-dimension embedding
-moments over micro-quantized components (dead/clipped-dimension QA for
-the vector pipeline: quantize each float to an exact BIGINT, sum
-exactly, divide once).
+``text.py`` tfidf note's discipline).
 """
 
 from __future__ import annotations
@@ -305,94 +302,15 @@ JOIN ranked b ON b.rank = 2 * ks.k
 """
 
 # --------------------------------------------------------------------------
-# embed_dim_stats — per-dimension quantized moments
-# --------------------------------------------------------------------------
-
-#: micro-quantization scale: components sit in (−0.5, 0.5), so
-#: |q| ≤ 5·10⁵ and the BIGINT square-sum bound is n ≤ 2⁶³/q² ≈ 3.7e7
-#: rows per dimension — beyond that the partial sums must widen to
-#: DECIMAL(38,0) (documented, not needed at bench scale).
-EMBED_Q_SCALE = 1_000_000
-
-
-def q_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``embed_dim_stats`` — per-dimension moments of the embedding
-    matrix over micro-quantized components: each float becomes the
-    exact BIGINT ``round(x · EMBED_Q_SCALE)``, so the sums are
-    order-independent INTEGER math and the derived mean/variance are
-    a fixed two-operation IEEE sequence — hash-stable with zero
-    accumulation drift (a raw float SUM would hash differently per
-    partitioning). The vector-QA screen: a dead dimension shows
-    var ≈ 0, a clipped or un-centered batch shows displaced means.
-
-    100 TB plan: posexplode is a projection (no shuffle); the
-    per-dimension aggregate collapses map-side to O(dims) rows.
-    Output: one row per dimension."""
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    # the multiply must run in DOUBLE on BOTH engines: a float32 ×
-    # int product kept in float32 rounds to a different integer than
-    # the double product for ~1-ulp-from-half values (observed as an
-    # off-by-one sum_q), so the cast is the parity contract, not style
-    q = F.round(F.col("_x").cast("double") * EMBED_Q_SCALE).cast("bigint")
-    exploded = emb.select(
-        F.posexplode("embedding").alias("dim", "_x")
-    ).select(F.col("dim").cast("bigint").alias("dim"), q.alias("_q"))
-    agg = exploded.groupBy("dim").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("_q").alias("sum_q"),
-        F.sum(F.col("_q") * F.col("_q")).alias("sum_q2"),
-    )
-    mean_q = F.col("sum_q") / F.col("n").cast("double")
-    var_q = F.col("sum_q2") / F.col("n").cast("double") - mean_q * mean_q
-    return agg.select(
-        "dim",
-        "n",
-        "sum_q",
-        F.round(mean_q / EMBED_Q_SCALE, 9).alias("mean"),
-        F.round(var_q / (EMBED_Q_SCALE * float(EMBED_Q_SCALE)), 9).alias(
-            "variance"
-        ),
-    )
-
-
-_EMBED_DIM_STATS_ORACLE = f"""
-WITH e AS (
-  SELECT CAST(t.i - 1 AS BIGINT) AS dim,
-         CAST(ROUND(CAST(embedding[t.i] AS DOUBLE) * {EMBED_Q_SCALE})
-              AS BIGINT) AS q
-  FROM embeddings,
-       UNNEST(generate_series(1, len(embedding))) AS t(i)
-  WHERE embedding IS NOT NULL
-), agg AS (
-  SELECT dim, COUNT(*) AS n,
-         CAST(SUM(q) AS BIGINT) AS sum_q,
-         CAST(SUM(q * q) AS BIGINT) AS sum_q2
-  FROM e GROUP BY 1
-)
-SELECT dim, n, sum_q,
-       ROUND((sum_q / CAST(n AS DOUBLE)) / {EMBED_Q_SCALE}, 9) AS mean,
-       ROUND((sum_q2 / CAST(n AS DOUBLE)
-              - (sum_q / CAST(n AS DOUBLE))
-                * (sum_q / CAST(n AS DOUBLE)))
-             / ({EMBED_Q_SCALE} * {float(EMBED_Q_SCALE)}), 9)
-         AS variance
-FROM agg
-"""
-
-# --------------------------------------------------------------------------
 
 STAGED_R26_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rel_part_promotion": q_rel_part_promotion,
     "lm_freq_profile": q_lm_freq_profile,
     "text_zipf_ratio": q_text_zipf_ratio,
-    "embed_dim_stats": q_embed_dim_stats,
 }
 
 STAGED_R26_ORACLES: dict[str, str] = {
     "rel_part_promotion": _REL_PART_PROMOTION_ORACLE,
     "lm_freq_profile": _LM_FREQ_PROFILE_ORACLE,
     "text_zipf_ratio": _TEXT_ZIPF_RATIO_ORACLE,
-    "embed_dim_stats": _EMBED_DIM_STATS_ORACLE,
 }

@@ -1,4 +1,4 @@
-"""Registry batch r27: four capabilities. Each key is a complete (query
+"""Registry batch r27: three capabilities. Each key is a complete (query
 callable, DuckDB oracle) pair; ``tests/test_oracle_parity.py`` replays
 every pair with hash parity + non-vacuity, and
 ``tests/test_staged_r27.py`` holds its content checks.
@@ -8,10 +8,7 @@ ingredient — how many distinct n-grams occur exactly r times; the
 hash-exact face of LM discount estimation, all integers), the
 seasonal-naive forecast audit (per-type MAE of the
 "same day last week" predictor — the baseline every real forecaster
-must beat, integer error sums + one division), the int8-quantization
-residual histogram (the QA screen for ``embed_quantize``: residuals
-r = x/scale − round(x/scale) land in [−½, ½] and a healthy quantizer
-shows them spread, not massed at the clip points), and the median
+must beat, integer error sums + one division), and the median
 inter-order gap per customer (the retention/cadence relation: exact
 type-7 median over integer day gaps via positional middle selection —
 no interpolation ambiguity, the ``agg_mad_outliers`` exact-selection
@@ -167,85 +164,6 @@ GROUP BY 1
 """
 
 # --------------------------------------------------------------------------
-# embed_quantize_error — int8 quantization residual histogram
-# --------------------------------------------------------------------------
-
-#: residuals r = x/scale − round(x/scale) ∈ [−½, ½]; ×20 buckets give
-#: a 21-cell histogram — fine enough to see clip-point massing, coarse
-#: enough that every cell is populated at sf0.001.
-RESIDUAL_BUCKETS_PER_UNIT = 20
-
-
-def q_embed_quantize_error(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """``embed_quantize_error`` — the QA screen for ``embed_quantize``
-    (same formula: per-vector ``scale = max|x|/127``, codes
-    ``round(x/scale)``): the histogram of per-element quantization
-    residuals ``r = x/scale − round(x/scale)``, bucketed at
-    1/``RESIDUAL_BUCKETS_PER_UNIT``. A healthy symmetric quantizer
-    spreads residuals across [−½, ½]; mass at the edges means
-    systematic half-way rounding (a biased encoder), an empty tail
-    means the scale is wrong. Every residual is a fixed per-element
-    IEEE sequence over the double-cast array (float→double exact, the
-    quantizer's own discipline), so the integer buckets are
-    hash-stable.
-
-    100 TB plan: pure scan-side projections + one O(buckets) counting
-    aggregate — runs at parquet-scan speed like the quantizer itself.
-    Zero vectors (scale = 0) have no defined residual and are skipped
-    element-wise, exactly as the quantizer zero-codes them."""
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    xs = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    staged = emb.select(xs.alias("_xs")).select(
-        "_xs",
-        (
-            F.array_max(F.transform(F.col("_xs"), F.abs)) / F.lit(127.0)
-        ).alias("_scale"),
-    )
-    nonzero = staged.where(F.col("_scale") > 0)
-    resid = F.explode(
-        F.transform(
-            F.col("_xs"),
-            lambda x: x / F.col("_scale")
-            - F.round(x / F.col("_scale")),
-        )
-    )
-    return (
-        nonzero.select(resid.alias("_r"))
-        .select(
-            F.floor(F.col("_r") * RESIDUAL_BUCKETS_PER_UNIT)
-            .cast("bigint")
-            .alias("res_bucket")
-        )
-        .groupBy("res_bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-_EMBED_QUANTIZE_ERROR_ORACLE = f"""
-WITH x AS (
-  SELECT list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xs
-  FROM embeddings WHERE embedding IS NOT NULL
-), s AS (
-  SELECT xs,
-         list_max(list_transform(xs, v -> abs(v))) / 127.0 AS scale
-  FROM x
-), r AS (
-  SELECT unnest(list_transform(
-           xs, v -> v / scale - ROUND(v / scale)
-         )) AS res
-  FROM s WHERE scale > 0
-)
-SELECT CAST(FLOOR(res * {RESIDUAL_BUCKETS_PER_UNIT}) AS BIGINT)
-         AS res_bucket,
-       COUNT(*) AS n
-FROM r GROUP BY 1
-"""
-
-# --------------------------------------------------------------------------
 # rel_order_gap_median — median inter-order gap per customer
 # --------------------------------------------------------------------------
 
@@ -345,13 +263,11 @@ GROUP BY 1
 STAGED_R27_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lm_count_of_counts": q_lm_count_of_counts,
     "win_seasonal_error": q_win_seasonal_error,
-    "embed_quantize_error": q_embed_quantize_error,
     "rel_order_gap_median": q_rel_order_gap_median,
 }
 
 STAGED_R27_ORACLES: dict[str, str] = {
     "lm_count_of_counts": _LM_COUNT_OF_COUNTS_ORACLE,
     "win_seasonal_error": _WIN_SEASONAL_ERROR_ORACLE,
-    "embed_quantize_error": _EMBED_QUANTIZE_ERROR_ORACLE,
     "rel_order_gap_median": _REL_ORDER_GAP_MEDIAN_ORACLE,
 }

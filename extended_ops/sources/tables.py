@@ -13,13 +13,13 @@ from flink_audit_sessions_example_spark.sources.tables import (
 )
 
 #: Tables whose downstream operators are compute-bound per row (Arrow
-#: tokenizer passes, BLAS scoring, per-doc text expressions). Their
-#: parquet files are small enough at test SFs to arrive as a SINGLE scan
-#: split, which would serialize every mapInPandas / codegen pass on one
-#: core of a local[32] runner — so `load_table` spreads them to cluster
+#: tokenizer passes, per-doc text expressions). Their parquet files are
+#: small enough at test SFs to arrive as a SINGLE scan split, which
+#: would serialize every mapInPandas / codegen pass on one core of a
+#: local[32] runner — so `load_table` spreads them to cluster
 #: parallelism. At production scale the input already has ≥ parallelism
 #: splits and the spread is a no-op (no exchange is added).
-_COMPUTE_HEAVY = ("documents", "embeddings")
+_COMPUTE_HEAVY = ("documents",)
 
 
 def load_table(

@@ -14,8 +14,7 @@ from decimal import Decimal
 import duckdb
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from extended_ops.operators import corpus as C
-from extended_ops.operators import similarity as S
 from extended_ops.operators import text as X
 from extended_ops.sources.tables import load_table
 
@@ -145,18 +144,6 @@ def test_decontaminate_shuffle_fallback_equals_broadcast(spark):
     assert "ResolvedHint" not in fallback._jdf.queryExecution().logical().toString()
     assert {(r.doc_id, r.n_eval_hits) for r in fallback.collect()} == base
     assert len(base) > 0  # the slice genuinely contains planted overlap
-
-
-def test_cluster_profile_partitions_the_corpus(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    out = S.cluster_profile(emb, n_centroids=16).collect()
-    assert sum(r.n_vectors for r in out) == emb.count()
-    assert {r.cluster for r in out} <= set(range(16))
-    for r in out:
-        assert -1.0 <= r.mean_sim <= 1.0
-    # seed vectors sit in their own cluster with sim 1 to themselves, so
-    # every cluster's mean stays meaningfully positive on random data
-    assert all(r.n_vectors >= 1 for r in out)
 
 
 def test_domain_mix_exact_quotas_and_proportions(spark):

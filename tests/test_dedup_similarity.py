@@ -1,6 +1,6 @@
-"""Behavioral tests for posting-list / similarity / multimodal operators —
-properties the DuckDB parity harness can't express (ANN recall, the
-posting-list cap's null keys, stub decode plumbing)."""
+"""Behavioral tests for posting-list / multimodal operators — properties
+the DuckDB parity harness can't express (the posting-list cap's null
+keys, stub decode plumbing)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import Row, functions as F
 
 from extended_ops.operators import dedup as D
 from extended_ops.operators import multimodal as M
-from extended_ops.operators import similarity as S
 from extended_ops.sources.tables import load_table
 
 from conftest import SF_DIR
@@ -36,145 +35,9 @@ def test_bounded_posting_lists_caps_null_keys(spark):
     assert {r.k for r in out2} == {None, 1}
 
 
-def test_lsh_topk_agrees_with_brute_force_on_top1(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    exact = {
-        r.query_id: r.neighbor_id
-        for r in S.brute_force_topk(emb, queries, k=1).collect()
-    }
-    approx_rows = S.lsh_topk(
-        emb, queries, dim=64, k=10, nbits=16, bands=4
-    ).collect()
-    approx_sets = {}
-    for r in approx_rows:
-        approx_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    # every query got candidates
-    assert set(exact) == set(approx_sets)
-    # the verify stage computes EXACT cosines: any (q, n) the LSH path
-    # returns must carry the same sim as brute force
-    bf = {
-        (r.query_id, r.neighbor_id): r.sim
-        for r in S.brute_force_topk(emb, queries, k=499).collect()
-    }
-    for r in approx_rows:
-        assert bf[(r.query_id, r.neighbor_id)] == pytest.approx(r.sim, abs=1e-6)
-    # recall floor — these embeddings are weakly similar (max cos ≈ 0.44,
-    # per-bit collision p ≈ 0.645), where multi-probe banding still gives
-    # ≈0.96 expected per-query hit prob; the exact twin `sim_topk` is the
-    # hash-checked one
-    hits = sum(1 for q, n in exact.items() if n in approx_sets[q])
-    assert hits / len(exact) >= 0.6
-
-
-def test_lsh_topk_blas_matches_expr_twin(spark):
-    """The production BLAS sketch/verify path returns exactly what the
-    oracle-reproducible Catalyst-fold twin returns: both compute the same
-    hyperplane sign bits (a near-zero dot could in principle flip between
-    summation orders — this pins that it doesn't on real data) and the
-    same candidate top-k."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    kw = dict(dim=64, k=10, nbits=16, bands=4)
-    blas = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.lsh_topk(emb, queries, impl="blas", **kw).collect()
-    }
-    expr = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.lsh_topk(emb, queries, impl="expr", **kw).collect()
-    }
-    assert blas == expr
-
-
-def test_lsh_topk_finds_planted_duplicates(spark):
-    """Deterministic recall: a scaled copy of a vector has the identical
-    hyperplane sketch (sign(2v·h) = sign(v·h)), so LSH MUST bucket it with
-    its original and the exact-cosine verify MUST rank it #1 (cos = 1)."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    planted = queries.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(planted)
-    top1 = {
-        r.query_id: (r.neighbor_id, r.sim)
-        for r in S.lsh_topk(corpus, queries, dim=64, k=1, nbits=16, bands=4)
-        .collect()
-    }
-    for qid, (nid, sim) in top1.items():
-        assert nid == qid + 100000
-        assert sim == pytest.approx(1.0, abs=1e-6)
-
-
-def test_ivf_topk_finds_planted_duplicates_and_recall(spark):
-    """Deterministic: a scaled copy has the same nearest centroid, so IVF
-    must return it at rank 1 with cos=1; plus a recall floor vs brute
-    force on the real corpus (nprobe=4 of 16 lists)."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    planted = queries.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(planted)
-    top1 = {
-        r.query_id: (r.neighbor_id, r.sim)
-        for r in S.ivf_topk(corpus, queries, k=1).collect()
-    }
-    for qid, (nid, sim) in top1.items():
-        assert nid == qid + 100000
-        assert sim == pytest.approx(1.0, abs=1e-6)
-
-    exact = {
-        r.query_id: r.neighbor_id
-        for r in S.brute_force_topk(emb, queries, k=1).collect()
-    }
-    approx = {}
-    for r in S.ivf_topk(emb, queries, k=10).collect():
-        approx.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(1 for q, n in exact.items() if n in approx.get(q, set()))
-    assert hits / len(exact) >= 0.4
-
-
-def test_ivf_topk_expr_planted_duplicates_and_recall(spark):
-    """The deterministic-seed (oracle-checked) IVF twin: any fixed coarse
-    quantizer assigns a scaled copy to its original's list, so planted
-    dups must surface at rank 1; recall floor vs brute force as for the
-    k-means variant."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    planted = queries.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0)).alias("embedding"),
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(planted)
-    top1 = {
-        r.query_id: (r.neighbor_id, r.sim)
-        for r in S.ivf_topk_expr(corpus, queries, k=1).collect()
-    }
-    for qid, (nid, sim) in top1.items():
-        assert nid == qid + 100000
-        assert sim == pytest.approx(1.0, abs=1e-6)
-
-    exact = {
-        r.query_id: r.neighbor_id
-        for r in S.brute_force_topk(emb, queries, k=1).collect()
-    }
-    approx = {}
-    for r in S.ivf_topk_expr(emb, queries, k=10).collect():
-        approx.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(1 for q, n in exact.items() if n in approx.get(q, set()))
-    assert hits / len(exact) >= 0.4
-
-
 def test_pnm_codec_roundtrip():
     """The dependency-free PNM codec is real: it parses headers it wrote,
     rejects garbage, and nearest-neighbor resize picks the exact pixels."""
-    import numpy as np
-    import pytest as _pytest
-
     raster = bytes(range(12))  # 4x3 grayscale
     img = b"P5\n4 3\n255\n" + raster
     assert M.pnm_decode(img) == (4, 3, 1)
@@ -190,9 +53,9 @@ def test_pnm_codec_roundtrip():
     rgb = b"P6\n2 1\n255\n" + bytes([10, 20, 30, 40, 50, 60])
     assert M.pnm_decode(rgb) == (2, 1, 1)
     assert M.pnm_resize(rgb, 1, 1) == b"P6\n1 1\n255\n" + bytes([10, 20, 30])
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         M.pnm_decode(b"JFIF not a pnm")
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         M.pnm_decode(b"P5\n4 3\n255\nshort")  # truncated raster
 
 
@@ -237,63 +100,6 @@ def test_frame_sample_reconstructs_prefix(spark):
     joined = b"".join(bytes(r.frame_bytes) for r in frames).decode()
     assert src.text.startswith(joined)
     assert len(frames) <= 16
-
-
-def test_ann_recall_floors(spark):
-    """The REGISTERED operating points on the driver's near-random
-    embeddings — the ANN worst case, where selectivity and recall trade
-    off degenerately. What is pinned here: the points stay SELECTIVE
-    (candidate fraction ceilings — the r4 fix over r3's 0.94/0.50
-    near-exhaustive points) and keep their measured worst-case recall
-    (r4: LSH 0.13, IVF 0.45 at sf0.01). The floors that make these
-    points GOOD plans live in test_ann_clustered.py, on a corpus with
-    real neighbor structure."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    n = emb.count()
-    nq = queries.count()
-
-    def topk_set(df):
-        out: dict = {}
-        for r in df.collect():
-            out.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return out
-
-    exact = topk_set(S.brute_force_topk(emb, queries, k=10))
-    assert exact
-
-    def recall(approx):
-        num = sum(len(approx.get(q, set()) & e) for q, e in exact.items())
-        return num / sum(len(e) for e in exact.values())
-
-    lsh_frac = S.lsh_probe_candidates(
-        emb, queries, dim=64, nbits=40, bands=4
-    ).count() / (nq * (n - 1))
-    assert lsh_frac <= 0.10
-    lsh = topk_set(
-        S.lsh_topk(emb, queries, dim=64, k=10, nbits=40, bands=4)
-    )
-    assert recall(lsh) >= 0.10
-    ivf_frac = S.ivf_probe_candidates(
-        emb, queries, n_centroids=32, nprobe=6
-    ).count() / (nq * (n - 1))
-    assert ivf_frac <= 0.25
-    ivf = topk_set(
-        S.ivf_topk_expr(emb, queries, k=10, n_centroids=32, nprobe=6)
-    )
-    assert recall(ivf) >= 0.35
-
-
-def test_query_collect_oom_guard(spark, monkeypatch):
-    """The broadcast-queries regime refuses to collect an oversized query
-    side (misuse that would otherwise OOM the driver silently) with an
-    actionable error naming the alternative."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    monkeypatch.setattr(S, "MAX_COLLECTED_QUERIES", 100)
-    with pytest.raises(ValueError, match="knn_graph"):
-        S.brute_force_topk(emb, emb, k=1)
-    with pytest.raises(ValueError, match="batch the queries"):
-        S.ivf_topk(emb, emb, k=1)
 
 
 def test_extract_features_hand_computed(spark):

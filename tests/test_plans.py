@@ -214,14 +214,11 @@ def test_r7_single_agg_no_window_shapes(spark):
 
 
 def test_r7_scan_side_ops_zero_hash_exchange(spark):
-    """xform_chunk_overlap / embed_quantize / text_token_count scale
-    gate: pure scan-side projections — no hash-partitioned exchange
-    anywhere (the only exchange allowed is load_table's round-robin
-    spread), and embed_quantize's scale fold is STAGED (array_max
-    appears once; an inlined alias would replicate it per element)."""
-    for key in ("xform_chunk_overlap", "embed_quantize", "text_token_count"):
+    """xform_chunk_overlap / text_token_count scale gate: pure
+    scan-side projections — no hash-partitioned exchange anywhere (the
+    only exchange allowed is load_table's round-robin spread)."""
+    for key in ("xform_chunk_overlap", "text_token_count"):
         assert "Exchange hashpartitioning" not in _final_plan(spark, key), key
-    assert _final_plan(spark, "embed_quantize").count("array_max") == 1
 
 
 def test_r7_sample_per_group_window_group_limit(spark):

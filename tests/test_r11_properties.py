@@ -1,10 +1,9 @@
 """Hypothesis property sweeps for the r13/r14 staged operators whose
 correctness rests on a structural invariant rather than a golden: gap
-sessionization, association-rule ratios, behavioral
-regularity, leave-one-out k-NN classification and JSON schema
-profiling. Each property is checked against an INDEPENDENT
-pure-Python formulation (the r10 property-sweep pattern), so a
-Spark-plan regression cannot hide behind a matching oracle bug."""
+sessionization, association-rule ratios, behavioral regularity and
+JSON schema profiling. Each property is checked against an
+INDEPENDENT pure-Python formulation (the r10 property-sweep pattern),
+so a Spark-plan regression cannot hide behind a matching oracle bug."""
 
 from __future__ import annotations
 
@@ -23,9 +22,6 @@ from extended_ops.operators.profile import (
 )
 from extended_ops.operators.quality import (
     regularity_audit,
-)
-from extended_ops.operators.similarity import (
-    knn_classify,
 )
 from extended_ops.operators.timeseries import (
     gap_sessions,
@@ -175,76 +171,6 @@ def test_regularity_modal_share_property(spark, gaps):
     assert r.is_suspect == (
         len(offs) >= 2 and max(c.values()) / len(gaps) > 0.5
     )
-
-
-@settings(**_SETTINGS)
-@given(
-    data=st.lists(
-        st.tuples(
-            st.lists(
-                st.floats(
-                    min_value=-1, max_value=1,
-                    allow_nan=False, allow_infinity=False,
-                ),
-                min_size=4, max_size=4,
-            ),
-            st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
-        ),
-        min_size=3,
-        max_size=25,
-    )
-)
-def test_knn_classify_property(spark, data):
-    """Random labeled vector sets: predicted labels equal the
-    brute-force leave-one-out majority vote (round-6 cosine ranking,
-    neighbor-id ties, unlabeled abstention, smallest-label vote tie) —
-    the independent Python formulation of the whole contract."""
-    import math
-
-    from hypothesis import assume
-
-    rows = [
-        (i, list(v), lbl)
-        for i, (v, lbl) in enumerate(data)
-        if any(abs(x) > 1e-9 for x in v)  # zero vectors have no angle
-    ]
-    assume(len(rows) >= 3)
-    k = 3
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    got = {
-        r.vec_id: (r.predicted_label, r.n_votes, r.n_neighbors)
-        for r in knn_classify(df, k=k, blocks=2).collect()
-    }
-
-    def unit(v):
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v]
-
-    sims = {
-        (a, b): round(
-            sum(x * y for x, y in zip(unit(va), unit(vb))), 6
-        )
-        for a, va, _ in rows
-        for b, vb, _ in rows
-        if a != b
-    }
-    labels = {i: l for i, _, l in rows}
-    expected = {}
-    for i, _, _ in rows:
-        neigh = sorted(
-            (j for j, _, _ in rows if j != i),
-            key=lambda j: (-sims[(i, j)], j),
-        )[:k]
-        votes = Counter(
-            labels[j] for j in neigh if labels[j] is not None
-        )
-        if not votes:
-            continue  # no labeled neighbors: no classification row
-        best = min(votes.items(), key=lambda kv: (-kv[1], kv[0]))
-        expected[i] = (best[0], best[1], sum(votes.values()))
-    assert got == expected
 
 
 @settings(**_SETTINGS)

@@ -1,6 +1,6 @@
 """Contract tests for the r13 staged operators (gap sessionization,
-temperature mixture sampling, freshness audit, exact k-NN graph, event
-transition matrix). DuckDB hash parity for the full registrations is
+temperature mixture sampling, freshness audit, event transition
+matrix). DuckDB hash parity for the full registrations is
 pinned by tests/test_oracle_parity.py; these pin goldens, edge semantics,
 validation and the claimed plan topologies."""
 
@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 
@@ -17,9 +16,6 @@ from extended_ops.operators.corpus import (
 )
 from extended_ops.operators.quality import (
     freshness_audit,
-)
-from extended_ops.operators.similarity import (
-    knn_graph,
 )
 from extended_ops.operators.timeseries import (
     event_transitions,
@@ -184,75 +180,6 @@ def test_freshness_planted_defect_detected(spark):
     assert all(out[u] for u in planted)
 
 
-# -- knn graph ----------------------------------------------------------------
-
-
-def test_knn_graph_exact_vs_bruteforce(spark):
-    """The blocked local-then-global top-k must equal the brute-force
-    k-NN graph computed driver-side (round-6 sims, ties by id) — the
-    exactness claim, checked on a corpus spanning several blocks."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    n, dim, k = 60, 8, 4
-    vecs = rng.randn(n, dim).astype(np.float64)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r.src_id, r.rank): (r.neighbor_id, r.sim)
-        for r in knn_graph(df, k=k, blocks=4).collect()
-    }
-    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-    sims = np.round(unit @ unit.T, 6)
-    for i in range(n):
-        order = sorted(
-            (j for j in range(n) if j != i),
-            key=lambda j: (-sims[i, j], j),
-        )[:k]
-        for rank, j in enumerate(order, start=1):
-            nid, s = got[(i, rank)]
-            assert nid == j, (i, rank, nid, j)
-            assert s == pytest.approx(sims[i, j], abs=2e-6)
-    assert len(got) == n * k
-    with pytest.raises(ValueError, match="k must be"):
-        knn_graph(df, k=0)
-    with pytest.raises(ValueError, match="blocks must be"):
-        # blocks=0 used to silently return an empty graph (review r11)
-        knn_graph(df, k=2, blocks=0)
-
-
-def test_knn_graph_null_id_and_null_vector_excluded(spark):
-    """NULL ids crashed the Arrow int64 conversion mid-job while the
-    oracle's equi-join silently dropped them (review r11): both NULL
-    ids and NULL vectors are now excluded up front on both engines."""
-    df = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [0.9, 0.1]),
-            (2, [0.0, 1.0]),
-            (None, [1.0, 0.0]),   # NULL id
-            (3, None),            # NULL vector
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = knn_graph(df, k=2, blocks=2).collect()
-    ids = {r.src_id for r in out} | {r.neighbor_id for r in out}
-    assert None not in ids and 3 not in ids
-    assert {r.src_id for r in out} == {0, 1, 2}
-
-
-def test_knn_graph_candidate_volume_is_k_bounded(spark):
-    """Shuffle sanity: the ranked window's input is at most n·B·k
-    candidate rows, never the n² pair stream."""
-    emb = STAGED_R13_QUERIES["sim_knn_graph"](spark, SF_DIR)
-    final = _final_plan(emb)
-    assert "CartesianProduct" not in final
-    # one applyInPandas stage (the block-pair scorer) feeds the window
-    assert final.count("FlatMapGroupsInPandas") == 1
-
-
 # -- transitions --------------------------------------------------------------
 
 
@@ -347,15 +274,3 @@ def test_transitions_null_and_nan_tiebreak_excluded(spark):
         ).collect()
     }
     assert got_f == {("a", "c")}
-
-
-def test_knn_graph_rejects_non_integer_id(spark):
-    """The pandas kernel carries ids as int64 (output schema 'src_id
-    long'); a string id must fail at plan time with a clear message,
-    not mid-job inside an Arrow cast (review r12a)."""
-    df = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
-        "vec_id string, embedding array<double>",
-    )
-    with pytest.raises(TypeError, match="integer id"):
-        knn_graph(df, id_col="vec_id", vec_col="embedding", k=1)

@@ -1,7 +1,7 @@
 """Contract tests for the r14 staged operators (JSON schema profiling,
-bot-regularity audit, k-NN classification, association rules). DuckDB hash parity for the full registrations is pinned by
-tests/test_oracle_parity.py; these pin goldens, edge semantics, validation
-and the claimed plan topologies."""
+bot-regularity audit, association rules). DuckDB hash parity for the
+full registrations is pinned by tests/test_oracle_parity.py; these pin
+goldens, edge semantics, validation and the claimed plan topologies."""
 
 from __future__ import annotations
 
@@ -18,9 +18,6 @@ from extended_ops.operators.profile import (
 )
 from extended_ops.operators.quality import (
     regularity_audit,
-)
-from extended_ops.operators.similarity import (
-    knn_classify,
 )
 from extended_ops.plans.staged_r14 import (
     STAGED_R14_QUERIES,
@@ -134,53 +131,6 @@ def test_regularity_registered_plants_detected(spark):
     assert len(bots) == 3 and all(out[u] for u in bots)
     # and no real user trips the threshold on microsecond-messy gaps
     assert not any(v for u, v in out.items() if u < 900000)
-
-
-# -- knn classify -------------------------------------------------------------
-
-
-def test_knn_classify_majority_and_abstention(spark):
-    # two tight clusters in 2D; one unlabeled vector abstains from
-    # voting but still gets classified by its labeled neighbors
-    rows = [
-        (0, [1.0, 0.0], 7),
-        (1, [0.99, 0.01], 7),
-        (2, [0.98, 0.02], 7),
-        (3, [0.97, 0.03], None),   # unlabeled: abstains as a voter
-        (10, [0.0, 1.0], 9),
-        (11, [0.01, 0.99], 9),
-        (12, [0.02, 0.98], 9),
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    got = {
-        r.vec_id: (r.predicted_label, r.n_votes)
-        for r in knn_classify(df, k=3, blocks=2).collect()
-    }
-    assert got[0][0] == 7 and got[10][0] == 9
-    assert got[3][0] == 7      # classified despite having no label
-    # k=3 neighbors of 0 include unlabeled 3 -> only 2 labeled votes
-    assert got[0][1] == 2
-
-
-def test_knn_classify_tie_breaks_to_smallest_label(spark):
-    # vector 0's two nearest neighbors carry labels 5 and 3 (1 vote
-    # each with k=2): the tie must resolve to 3
-    rows = [
-        (0, [1.0, 0.0], 1),
-        (1, [0.99, 0.01], 5),
-        (2, [0.98, 0.02], 3),
-        (3, [-1.0, 0.0], 8),
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    got = {
-        r.vec_id: r.predicted_label
-        for r in knn_classify(df, k=2, blocks=2).collect()
-    }
-    assert got[0] == 3
 
 
 # -- association rules --------------------------------------------------------

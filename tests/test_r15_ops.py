@@ -1,19 +1,14 @@
 """Contract tests for the r15 staged operators (URL canonicalization,
-HTML stripping, banded edit-distance join) and the composed audit
-relations. DuckDB hash parity for the full registrations is pinned by
-tests/test_staged_r15.py; these pin goldens, edge semantics, validation
-and the claimed plan topologies."""
+HTML stripping) and the composed audit relations. DuckDB hash parity
+for the full registrations is pinned by tests/test_staged_r15.py; these
+pin goldens, edge semantics and the claimed plan topologies."""
 
 from __future__ import annotations
 
-import pytest
 from conftest import SF_DIR
 
 import pyspark.sql.functions as F
 
-from extended_ops.operators.dedup import (
-    edit_distance_pairs,
-)
 from extended_ops.operators.web import (
     canonicalize_urls,
     strip_html,
@@ -95,53 +90,6 @@ def test_web_ops_zero_shuffle_scan_side(spark):
         assert plan.count("FileScan parquet") == 1
 
 
-def test_edit_distance_pairs_golden(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps"),
-            (2, "the quick brown fox jumped"),   # dist 2 (s->ed)
-            (3, "the quick brown cat sleeps"),   # dist vs 1: fox/jumps
-            (4, "a totally different prefix"),   # other bucket
-            (5, None),                           # excluded
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        (r.id_a, r.id_b): r.edit_distance
-        for r in edit_distance_pairs(
-            df, max_dist=10, prefix_len=16
-        ).collect()
-    }
-    assert got[(1, 2)] == 2
-    assert got[(1, 3)] == 7   # fox jumps -> cat sleeps
-    assert got[(2, 3)] == 9
-    assert set(got) == {(1, 2), (1, 3), (2, 3)}
-    # prefix blocking: an edit INSIDE the prefix separates the pair
-    df2 = spark.createDataFrame(
-        [(1, "abcdefghijklmnop same tail"), (2, "Xbcdefghijklmnop same tail")],
-        "doc_id long, text string",
-    )
-    assert (
-        edit_distance_pairs(df2, max_dist=10, prefix_len=16).count() == 0
-    )
-    with pytest.raises(ValueError, match="max_dist"):
-        edit_distance_pairs(df, max_dist=-1)
-    with pytest.raises(ValueError, match="prefix_len"):
-        edit_distance_pairs(df, prefix_len=0)
-
-
-def test_edit_distance_bucket_cap(spark):
-    """A boilerplate prefix bigger than the cap emits NO pairs (the
-    bounded_posting_lists contract), other buckets unaffected."""
-    rows = [(i, "common prefix shared by all " + str(i)) for i in range(10)]
-    rows += [(100, "rare prefix a"), (101, "rare prefix b")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = edit_distance_pairs(
-        df, max_dist=30, prefix_len=12, max_bucket_size=5
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in got} == {(100, 101)}
-
-
 def test_rate_anomaly_flags_only_burst_hour_like_windows(spark):
     """The planted burst windows (weighted 25x) are flagged; their
     robust_z is large and positive where MAD > 0."""
@@ -166,26 +114,3 @@ def test_quality_calibration_partition_of_corpus(spark):
         .count()
     )
     assert sum(r.n_docs for r in out) == n
-
-
-def test_edit_distance_blocking_recall_measured(spark):
-    """MEASURED blocking recall at the gate SF: the registered
-    prefix-16 blocking finds every true lev<=20 pair the unblocked
-    brute force finds on this corpus (the bounded-recall contract's
-    measured point — prefix-edited pairs would lower it, and the
-    docstring says so; this pins that the corpus's planted dups do not
-    live in that blind spot)."""
-    import duckdb
-
-    truth = duckdb.sql(
-        f"""
-WITH d AS (SELECT doc_id, text FROM '{SF_DIR}/documents.parquet'
-           WHERE text IS NOT NULL)
-SELECT COUNT(*) FROM d x JOIN d y ON x.doc_id < y.doc_id
-WHERE abs(length(x.text) - length(y.text)) <= 20
-  AND levenshtein(x.text, y.text) <= 20
-"""
-    ).fetchone()[0]
-    got = STAGED_R15_QUERIES["sim_edit_pairs"](spark, SF_DIR).count()
-    assert truth >= 1  # the ground truth itself must be non-vacuous
-    assert got == truth, f"blocking lost pairs: {got}/{truth}"

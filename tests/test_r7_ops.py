@@ -1,7 +1,6 @@
 """Behavioral edge tests for the r7 operators (chunk_overlap,
-quantize_embeddings, with_token_counts, agg_mode / win_first_touch
-tie-break semantics) — properties worth pinning beyond the DuckDB
-parity harness."""
+with_token_counts, agg_mode / win_first_touch tie-break semantics) —
+properties worth pinning beyond the DuckDB parity harness."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from extended_ops.operators import corpus as C
-from extended_ops.operators import similarity as S
 from extended_ops.operators import text as X
 
 
@@ -55,28 +53,6 @@ def test_chunk_overlap_rejects_bad_geometry(spark):
         C.chunk_overlap(df, chunk_size=5, stride=6)
     with pytest.raises(ValueError):
         C.chunk_overlap(df, chunk_size=5, stride=0)
-
-
-def test_quantize_embeddings_roundtrip_and_zero_vector(spark):
-    df = spark.createDataFrame(
-        [
-            Row(vec_id=1, embedding=[1.0, -2.0, 0.5, 4.0]),
-            Row(vec_id=2, embedding=[0.0, 0.0, 0.0, 0.0]),
-        ],
-        "vec_id bigint, embedding array<float>",
-    )
-    out = {r.vec_id: r for r in S.quantize_embeddings(df).collect()}
-    # max|x| maps to ±q_max exactly; signs preserved
-    assert out[1].qvec[3] == 127
-    assert out[1].qvec[1] == round(-2.0 / (4.0 / 127))
-    assert out[1].scale == pytest.approx(4.0 / 127, abs=1e-6)
-    # zero vector: scale 0, all-zero codes, no division blow-up
-    assert out[2].scale == 0.0 and out[2].qvec == [0, 0, 0, 0]
-    # dequantization error bounded by scale/2 per element
-    scale = 4.0 / 127
-    deq = [q * scale for q in out[1].qvec]
-    for a, b in zip(deq, [1.0, -2.0, 0.5, 4.0]):
-        assert abs(a - b) <= scale / 2 + 1e-12
 
 
 def test_token_counts_classes_sum_and_fertility(spark):

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pyspark.sql.functions as F
 import pytest
 from conftest import SF_DIR
 

@@ -137,20 +137,6 @@ def test_market_share_broadcasts_every_dim(spark):
     _no_python_no_cartesian(plan)
 
 
-def test_centroid_assign_broadcasts_centroids_and_stays_jvm(spark):
-    from extended_ops.plans.staged_r23 import (
-        q_sim_centroid_assign,
-    )
-
-    plan = _plan(spark, q_sim_centroid_assign)
-    # the O(labels) centroid relation broadcasts against the vector
-    # relation; the distance fold is JVM higher-order functions, not
-    # Python
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "MapInPandas" not in plan
-    _no_python_no_cartesian(plan)
-
-
 # -- r24 staged keys (added r13) ----------------------------------------
 
 
@@ -203,17 +189,6 @@ def test_top_parts_concat_prunes_topk_partial_side(spark):
     plan = _plan(spark, q_rel_top_parts_concat)
     assert "WindowGroupLimit" in plan
     assert plan.count("BroadcastHashJoin") == 2
-    _no_python_no_cartesian(plan)
-
-
-def test_norm_hist_is_one_scan_one_exchange(spark):
-    from extended_ops.plans.staged_r24 import (
-        q_embed_norm_hist,
-    )
-
-    plan = _plan(spark, q_embed_norm_hist)
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
     _no_python_no_cartesian(plan)
 
 
@@ -338,18 +313,6 @@ def test_zipf_ratio_head_is_per_task_heap(spark):
     _no_python_no_cartesian(plan)
 
 
-def test_dim_stats_one_scan_one_exchange(spark):
-    from extended_ops.plans.staged_r26 import (
-        q_embed_dim_stats,
-    )
-
-    plan = _plan(spark, q_embed_dim_stats)
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Window" not in plan
-    _no_python_no_cartesian(plan)
-
-
 def test_count_of_counts_single_gram_scan(spark):
     """lm_count_of_counts (r27): rides train_ngram_counts' one-scan
     gram relation; the count-of-counts re-aggregation is O(vocab)."""
@@ -373,18 +336,6 @@ def test_seasonal_error_fact_scanned_once(spark):
 
     plan = _plan(spark, q_win_seasonal_error)
     assert plan.count("events.parquet") <= 1
-    _no_python_no_cartesian(plan)
-
-
-def test_quantize_error_one_scan_one_exchange(spark):
-    from extended_ops.plans.staged_r27 import (
-        q_embed_quantize_error,
-    )
-
-    plan = _plan(spark, q_embed_quantize_error)
-    assert plan.count("FileScan parquet") == 1
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Window" not in plan
     _no_python_no_cartesian(plan)
 
 

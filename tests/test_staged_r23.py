@@ -17,9 +17,8 @@ def test_staged_r23_content_is_nonvacuous(spark):
     """Degenerate variants that would still hash-match a broken
     producer: an all-zero (or all-one) market share, a hapax table
     that never sees the tail, a drift table whose halves are empty or
-    whose χ² never registers, a silence table that never finds a
-    quiet frame (or calls everything quiet), and a confusion matrix
-    that is empty off-diagonal AND on-diagonal."""
+    whose χ² never registers, and a silence table that never finds a
+    quiet frame (or calls everything quiet)."""
     share = STAGED_R23_QUERIES["rel_market_share"](
         spark, SF_DIR
     ).collect()
@@ -61,11 +60,3 @@ def test_staged_r23_content_is_nonvacuous(spark):
         r.n_quiet < r.n_frames for r in sil
     ), "everything quiet (threshold degenerate)"
     assert any(r.longest_quiet_run >= 2 for r in sil), "runs never form"
-
-    conf = STAGED_R23_QUERIES["sim_centroid_assign"](
-        spark, SF_DIR
-    ).collect()
-    assert sum(r.n for r in conf) == 500  # every vector assigned once
-    assert any(
-        r.label == r.assigned_label and r.n > 0 for r in conf
-    ), "centroids never recover their own label"

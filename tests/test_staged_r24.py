@@ -19,8 +19,7 @@ def test_staged_r24_content_is_nonvacuous(spark):
     """Degenerate variants that would still hash-match a broken
     producer: a disjunct with a dead leg (or 'any' double-counting), a
     histogram with no bounces or no depth, a coverage curve that is
-    flat or non-monotone, a csv that lost its rank order, and a norm
-    histogram collapsed into one bucket."""
+    flat or non-monotone, and a csv that lost its rank order."""
     q19 = {
         r.bracket: r.revenue
         for r in STAGED_R24_QUERIES["rel_disjunctive_revenue"](
@@ -71,48 +70,3 @@ def test_staged_r24_content_is_nonvacuous(spark):
     assert any(
         len(r.top_parts.split(",")) == TOP_PARTS_K for r in top
     )
-
-    norm = STAGED_R24_QUERIES["embed_norm_hist"](spark, SF_DIR).collect()
-    assert sum(r.n for r in norm) == 500
-    # corpus fact, pinned: the embeddings are UNIT-normalized, so all
-    # mass sits within float noise of norm² = 1.0 — exactly what the
-    # QA screen should report for a clean corpus (spread detection is
-    # exercised on the constructed frame below)
-    assert len(norm) >= 2
-    assert all(95 <= r.norm2_bucket <= 105 for r in norm)
-
-
-def test_embed_norm_hist_flags_unnormalized_batches(spark):
-    """The screen's point: an UN-normalized batch spreads across
-    buckets and a zero vector lands in bucket 0 — run the same
-    operator body on a constructed frame."""
-    from pyspark.sql import functions as F
-
-    from extended_ops.plans.staged_r24 import (
-        NORM_BUCKET_SCALE,
-    )
-
-    rows = [
-        (1, [1.0, 0.0]),       # norm2 = 1.0   -> bucket 100
-        (2, [2.0, 0.0]),       # norm2 = 4.0   -> bucket 400
-        (3, [0.0, 0.0]),       # norm2 = 0.0   -> bucket 0
-        (4, [0.5, 0.5]),       # norm2 = 0.5   -> bucket 50
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    got = {
-        r.norm2_bucket: r.n
-        for r in df.select(
-            F.floor(norm2 * NORM_BUCKET_SCALE)
-            .cast("bigint")
-            .alias("norm2_bucket")
-        )
-        .groupBy("norm2_bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == {100: 1, 400: 1, 0: 1, 50: 1}

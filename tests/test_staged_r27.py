@@ -10,7 +10,6 @@ from conftest import SF_DIR
 from extended_ops.plans.staged_r27 import (
     CC_MAX_R,
     CC_ORDER,
-    RESIDUAL_BUCKETS_PER_UNIT,
     STAGED_R27_QUERIES,
 )
 
@@ -19,9 +18,8 @@ def test_staged_r27_content_is_nonvacuous(spark):
     """Degenerate variants that would still hash-match a broken
     producer: a count-of-counts with no singleton mass (N_1 drives
     every discount), a seasonal audit that scores zero days or finds
-    zero error everywhere, a residual histogram massed in one cell or
-    outside [−½, ½], and a gap median that is negative or ignores
-    even-count interpolation."""
+    zero error everywhere, and a gap median that is negative or
+    ignores even-count interpolation."""
     from pyspark.sql import functions as F
 
     from extended_ops.sources.tables import load_table
@@ -44,23 +42,6 @@ def test_staged_r27_content_is_nonvacuous(spark):
         0 <= r.total_abs_err and r.total_actual >= r.n_days_scored
         for r in se
     )
-
-    hist = STAGED_R27_QUERIES["embed_quantize_error"](
-        spark, SF_DIR
-    ).collect()
-    half = RESIDUAL_BUCKETS_PER_UNIT // 2
-    assert all(-half <= r.res_bucket <= half for r in hist), (
-        "residual outside [-1/2, 1/2]"
-    )
-    assert len(hist) >= 5, "residuals massed in few cells"
-    # mass conservation: every element of every nonzero vector lands
-    emb = load_table(spark, SF_DIR, "embeddings").where(
-        F.col("embedding").isNotNull()
-    )
-    n_elem = emb.select(
-        F.sum(F.size("embedding")).alias("n")
-    ).collect()[0].n
-    assert sum(r.n for r in hist) == n_elem  # corpus has no zero vectors
 
     med = STAGED_R27_QUERIES["rel_order_gap_median"](
         spark, SF_DIR
