@@ -13,9 +13,7 @@ from decimal import Decimal
 
 import duckdb
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents"
-).split()
+TABLES = ("events",)
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
