@@ -90,8 +90,8 @@ def expectations_audit(
     Plan: ONE aggregation pass over ONE scan — every rule compiles to a
     conditional count in the same aggregate (column pruning still
     reaches parquet: only columns referenced by some rule are read),
-    then the one-row wide result melts to tall via the UNPIVOT
-    ``Expand`` (:mod:`.reshape`'s zero-shuffle generate). The per-rule
+    then the one-row wide result melts to tall via Spark's native
+    UNPIVOT ``Expand``, a zero-shuffle generate. The per-rule
     union alternative scans the table once PER RULE; at 100 TB the
     audit must cost one pass no matter how many rules ride it.
     """

@@ -1,11 +1,11 @@
-"""Round-10 registrations — seven new capability families.
+"""Round-10 registrations — six capability families.
 
 Each entry is a complete driver registration (query callable + DuckDB
 oracle), registered live in ``plans/__init__.py`` the session it lands
 (the r10 window had exactly these slots free after the staged-queue
 drain). Families: SCD2 dimension history, skyline/Pareto, exponential
 time-decay aggregates, n-gram containment near-dup, referential-
-integrity audit, char-distribution quality scoring, unpivot/melt.
+integrity audit, char-distribution quality scoring.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from ..operators.dedup import ngram_containment_pairs
 from ..operators.history import scd2_history
 from ..operators.quality import referential_audit
-from ..operators.reshape import unpivot_metrics
 from ..operators.skyline import skyline_2d
 from ..operators.text import char_diversity_rows
 from ..operators.timeseries import time_decay_stats
@@ -346,34 +345,6 @@ FROM documents WHERE text IS NULL OR length(text) = 0
 """
 
 # --------------------------------------------------------------------------
-# xform_unpivot — melt lineitem metrics to tall form
-# --------------------------------------------------------------------------
-
-UNPIVOT_METRICS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-
-def q_xform_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``xform_unpivot`` — melt four lineitem metric columns into
-    ``(metric, value)`` rows (:func:`~..operators.reshape.
-    unpivot_metrics`, Spark's native ANSI-UNPIVOT expansion): pure
-    scan-side generate, zero shuffles, column pruning intact."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", *UNPIVOT_METRICS
-    )
-    return unpivot_metrics(
-        li,
-        id_cols=["l_orderkey", "l_linenumber"],
-        value_cols=list(UNPIVOT_METRICS),
-    )
-
-
-_XFORM_UNPIVOT_ORACLE = "\nUNION ALL\n".join(
-    f"SELECT l_orderkey, l_linenumber, '{m}' AS metric, "
-    f"CAST({m} AS DOUBLE) AS value FROM lineitem"
-    for m in UNPIVOT_METRICS
-)
-
-# --------------------------------------------------------------------------
 
 ROUND10_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "xform_scd2": q_xform_scd2,
@@ -382,7 +353,6 @@ ROUND10_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "text_containment": q_text_containment,
     "dq_referential": q_dq_referential,
     "text_char_diversity": q_text_char_diversity,
-    "xform_unpivot": q_xform_unpivot,
 }
 
 ROUND10_ORACLES: dict[str, str] = {
@@ -392,5 +362,4 @@ ROUND10_ORACLES: dict[str, str] = {
     "text_containment": _TEXT_CONTAINMENT_ORACLE,
     "dq_referential": _DQ_REFERENTIAL_ORACLE,
     "text_char_diversity": _TEXT_CHAR_DIVERSITY_ORACLE,
-    "xform_unpivot": _XFORM_UNPIVOT_ORACLE,
 }

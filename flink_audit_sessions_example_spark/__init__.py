@@ -22,6 +22,10 @@ Package layout:
 - :mod:`.functions`  — the sink-side result formatting
 - :mod:`.streaming`  — streaming pipeline assembly + sinks
 - :mod:`.plans`      — the 11 reference keys exported via ``__spark_entry__``
+
+The extended operator surface lives outside this package, in the
+top-level ``extended_ops`` package, which imports this one and is never
+imported by it.
 """
 
 __version__ = "0.1.0"

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import SparkSession
 
 SF_DIR = "/root/testdata/sf0.001"
+SF_DIR_001 = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")

@@ -13,7 +13,9 @@ from decimal import Decimal
 
 import duckdb
 
-TABLES = ("events",)
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents"
+).split()
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

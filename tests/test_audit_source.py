@@ -10,6 +10,7 @@ from urllib.parse import unquote
 import pytest
 
 from flink_audit_sessions_example_spark.sources import (
+    parse_audit_json,
     read_audit_lines,
     read_audits,
     with_file_date,

@@ -1,6 +1,6 @@
 """Unit + plan gates for the round-10 capability families (SCD2,
-skyline, time decay, containment, referential audit, char diversity,
-unpivot). Hash parity vs DuckDB for each registered query is covered
+skyline, time decay, containment, referential audit, char
+diversity). Hash parity vs DuckDB for each registered query is covered
 per-key by tests/test_oracle_parity.py; these tests pin the operator
 CONTRACTS (goldens, edge cases, validation) and the claimed plan
 topologies."""
@@ -18,9 +18,6 @@ from extended_ops.operators.dedup import (
 from extended_ops.operators.history import scd2_history
 from extended_ops.operators.quality import (
     referential_audit,
-)
-from extended_ops.operators.reshape import (
-    unpivot_metrics,
 )
 from extended_ops.operators.skyline import skyline_2d
 from extended_ops.operators.text import (
@@ -283,30 +280,3 @@ def test_char_diversity_zero_shuffle_plan(spark):
     final = _final_plan(ROUND10_QUERIES["text_char_diversity"](spark, SF_DIR))
     assert "Exchange" not in final
     assert "MapInPandas" in final
-
-
-# -- unpivot -----------------------------------------------------------------
-
-
-def test_unpivot_shape_and_nulls(spark):
-    df = spark.createDataFrame(
-        [(1, 2.0, None), (2, 4.0, 5.0)], "id int, m1 double, m2 double"
-    )
-    out = unpivot_metrics(df, id_cols=["id"], value_cols=["m1", "m2"])
-    rows = {(r.id, r.metric): r.value for r in out.collect()}
-    # nulls are KEPT: tall count == rows x metrics
-    assert len(rows) == 4
-    assert rows[(1, "m2")] is None and rows[(2, "m2")] == 5.0
-    with pytest.raises(ValueError, match="value_cols"):
-        unpivot_metrics(df, id_cols=["id"], value_cols=[])
-    with pytest.raises(ValueError, match="not in relation"):
-        unpivot_metrics(df, id_cols=["id"], value_cols=["nope"])
-
-
-def test_unpivot_zero_shuffle_plan(spark):
-    df = ROUND10_QUERIES["xform_unpivot"](spark, SF_DIR)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Exchange" not in final
-    assert "Expand" in final

@@ -597,6 +597,101 @@ def test_foreach_batch_redelivers_failed_batch_with_same_id(spark, tmp_path):
     assert list(delivered.values()) == [[("alice", 7)]]
 
 
+def test_stream_compact_latest_by_key_across_batches(spark, tmp_path):
+    """``xform_compact``'s streaming twin needs NO custom operator: the
+    same ``max(struct)`` aggregation runs as a streaming aggregation in
+    update mode — the state store keeps exactly one (key → max struct)
+    row per key, and a later micro-batch's newer event replaces the
+    key's state. State is unbounded by design here: the per-key current
+    state IS the product (changelog → materialized view), bounded by
+    key cardinality, not stream length."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from extended_ops.operators.dedup import latest_by_key
+
+    d = tmp_path / "ev"
+    d.mkdir()
+    t = dt.datetime
+    schema = pa.schema(
+        [
+            ("user_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("event_id", pa.int64()),
+            ("event_type", pa.string()),
+        ]
+    )
+
+    _seq = iter(range(100))
+
+    def write(name, rows):
+        import os
+
+        path = str(d / name)
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema),
+            path,
+        )
+        # pin ascending mtimes: FileStreamSource orders batches by
+        # modification time
+        t = 1_700_000_000 + next(_seq) * 10
+        os.utime(path, (t, t))
+
+    write("b1.parquet", [
+        (1, t(2024, 1, 1, 10), 1, "login"),
+        (2, t(2024, 1, 1, 11), 2, "view"),
+    ])
+    write("b2.parquet", [
+        (1, t(2024, 1, 2, 10), 3, "logout"),   # newer: must replace u1's state
+        (3, t(2024, 1, 1, 12), 4, "signup"),
+        (2, t(2023, 12, 1, 0), 5, "stale"),    # older: must NOT replace u2's
+    ])
+
+    stream = (
+        spark.readStream.schema(
+            "user_id long, ts timestamp, event_id long, event_type string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d))
+    )
+    compacted = latest_by_key(
+        stream,
+        key_cols=["user_id"],
+        order_cols=["ts", "event_id"],
+        payload_cols=["event_type"],
+    )
+    q = (
+        compacted.writeStream.format("memory")
+        .queryName("t_stream_compact")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    updates = spark.table("t_stream_compact").collect()
+    # the sink log must show u1 being updated across batches
+    assert len(updates) > 3
+    # final state = per-key max over the update log; equals the batch answer
+    final = {}
+    for r in updates:
+        cur = (r["ts"], r["event_id"], r["event_type"])
+        if r["user_id"] not in final or cur > final[r["user_id"]]:
+            final[r["user_id"]] = cur
+    batch = {
+        r["user_id"]: (r["ts"], r["event_id"], r["event_type"])
+        for r in latest_by_key(
+            spark.read.parquet(str(d)),
+            key_cols=["user_id"],
+            order_cols=["ts", "event_id"],
+            payload_cols=["event_type"],
+        ).collect()
+    }
+    assert final == batch
+    assert batch[1][2] == "logout" and batch[2][2] == "view"
+
+
 def test_processing_time_multi_trigger_watermark_drops_late_event(
     spark, tmp_path
 ):
